@@ -1,10 +1,5 @@
 package sbspark;
 
-import java.io.IOException;
-import java.nio.ByteBuffer;
-import java.nio.channels.FileChannel;
-import java.nio.file.Paths;
-import java.nio.file.StandardOpenOption;
 import java.util.ArrayList;
 import java.util.List;
 import java.util.concurrent.ConcurrentHashMap;
@@ -21,7 +16,7 @@ import java.util.concurrent.ConcurrentHashMap;
  * Spec string: "cap;hex,hex,...[;tag=i:j:...[;tag=...]]" — hit cap,
  * then the pattern byte strings hex-encoded in engine order, then
  * optional trailer sections naming pattern indices whose hits the
- * evidence-path UDFs validate through ScanGates (tags: m3 = mp3
+ * one-pass evidence scan validates through ScanGates (tags: m3 = mp3
  * 3-valid-frames rule, bm = bmp header cascade, ic = ico directory
  * prefix — each a hoisted prefix of its carver's own rejection
  * cascade). A tag may carry a numeric parameter ("bm@200=i:j", r14):
@@ -34,11 +29,6 @@ import java.util.concurrent.ConcurrentHashMap;
  */
 public final class Ac {
   private static final ConcurrentHashMap<String, Ac> CACHE = new ConcurrentHashMap<>();
-  private static final ConcurrentHashMap<String, FileChannel> FILES = new ConcurrentHashMap<>();
-  static final int IO_WINDOW = 4 << 20; // streaming read window
-
-  private static final ThreadLocal<ByteBuffer> BUF =
-      ThreadLocal.withInitial(() -> ByteBuffer.allocate(IO_WINDOW));
 
   // dense goto flattened to one row-major array; entries are the next
   // state, with the sign bit set when that state has outputs — the hot
@@ -47,7 +37,7 @@ public final class Ac {
   final int[][] out; // merged pattern indices ending at state
   final int[] patLen;
   final int cap;
-  final byte[] gateKind; // per pattern: ScanGates kind (NONE/MP3/BMP/ICO) for evidence UDFs
+  final byte[] gateKind; // per pattern: ScanGates kind (NONE/MP3/BMP/ICO) for the evidence scan
   final long[] gateParam; // per pattern: gate parameter (bm: min_size), 0 = none
   final boolean anyGate;
   private static final int OUT_BIT = 1 << 31;
@@ -181,12 +171,7 @@ public final class Ac {
     return b;
   }
 
-  /** Scan buf[0,len): append packed (offset<<16|patIdx) hits; returns new state. */
-  int scanInto(byte[] buf, int len, long base, int state, List<Long> hits) {
-    return scanRange(buf, 0, len, base, state, hits);
-  }
-
-  /** Scan buf[from,to): emitted offsets are base + (i - from). */
+  /** Scan buf[from,to): append packed (offset<<16|patIdx) hits at base + (i - from). */
   int scanRange(byte[] buf, int from, int len, long base, int state, List<Long> hits) {
     final int[] f = this.flat;
     final long shift = base - from;
@@ -217,65 +202,7 @@ public final class Ac {
 
   public List<Long> scanBytes(byte[] data) {
     List<Long> hits = new ArrayList<>();
-    scanInto(data, data.length, 0, 0, hits);
+    scanRange(data, 0, data.length, 0, 0, hits);
     return hits;
-  }
-
-  /**
-   * Positioned streaming scan of [start, start+length) of a raw evidence
-   * file. Automaton state carries across read windows, so matches that
-   * straddle window boundaries are found without any overlap re-read.
-   * FileChannel positional reads are thread-safe; channels cache per
-   * path for the executor lifetime.
-   */
-  public List<Long> scanFile(String path, long start, long length) throws IOException {
-    FileChannel ch = channel(path);
-    List<Long> hits = new ArrayList<>();
-    ByteBuffer bb = BUF.get();
-    byte[] arr = bb.array();
-    long pos = 0;
-    int state = 0;
-    while (pos < length && hits.size() < cap) {
-      int want = (int) Math.min(IO_WINDOW, length - pos);
-      bb.clear();
-      bb.limit(want);
-      int got = 0;
-      while (got < want) {
-        int n = ch.read(bb, start + pos + got);
-        if (n <= 0) break; // EOF: plan read_length may exceed file tail
-        got += n;
-      }
-      if (got == 0) break;
-      state = scanInto(arr, got, pos, state, hits);
-      pos += got;
-    }
-    return hits;
-  }
-
-  static FileChannel channel(String path) throws IOException {
-    FileChannel ch = FILES.get(path);
-    if (ch == null) {
-      ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ);
-      FileChannel prev = FILES.putIfAbsent(path, ch);
-      if (prev != null) {
-        ch.close();
-        ch = prev;
-      }
-    }
-    return ch;
-  }
-
-  /** Positioned read via the cached per-path channel (short at EOF) — ScanGates' raw source. */
-  static byte[] readAt(String path, long pos, int len) throws IOException {
-    FileChannel ch = channel(path);
-    byte[] out = new byte[len];
-    ByteBuffer bb = ByteBuffer.wrap(out);
-    int got = 0;
-    while (got < len) {
-      int n = ch.read(bb, pos + got);
-      if (n <= 0) break;
-      got += n;
-    }
-    return got == len ? out : java.util.Arrays.copyOfRange(out, 0, got);
   }
 }

@@ -18,8 +18,8 @@ import java.util.zip.Inflater;
  * (swiftbeaver_spark/ewf.py; 13-byte segment header, 76-byte section
  * descriptors with Adler-32, `volume` geometry, `sectors` chunk data
  * zlib-compressed or raw+Adler-32, `table` chunk index with MSB
- * compression flag). Metadata parses once per executor; scans stream
- * decompressed chunks straight into the Aho-Corasick automaton, so E01
+ * compression flag). Metadata parses once per executor; readAt serves
+ * the one-pass scan's positioned reads from decompressed chunks, so E01
  * evidence takes the fast JVM path end to end.
  */
 final class EwfImage {
@@ -301,7 +301,7 @@ final class EwfImage {
     byte[] raw = scratch(RAW_BUF, cs + 4096);
     {
       // positional FileChannel reads are thread-safe; channels cache per
-      // segment path for the executor lifetime (same pattern as Ac)
+      // segment path for the executor lifetime
       java.nio.channels.FileChannel f = channel(chunkPath[idx]);
       // compressed: zlib never grows a chunk past cs + slack; raw may be
       // a shared scratch larger than this image's geometry, so bound the
@@ -372,32 +372,5 @@ final class EwfImage {
       copied += take;
     }
     return copied == len ? dst : java.util.Arrays.copyOfRange(dst, 0, copied);
-  }
-
-  /**
-   * Stream-scan decompressed media [start, start+length): automaton
-   * state carries across chunk boundaries, offsets are region-local —
-   * identical semantics to Ac.scanFile on a raw image.
-   */
-  List<Long> scan(Ac ac, long start, long length) throws IOException {
-    List<Long> hits = new ArrayList<>();
-    if (start >= mediaSize || length <= 0) return hits;
-    length = Math.min(length, mediaSize - start);
-    byte[] out = scratch(OUT_BUF, (int) chunkSize);
-    long pos = start;
-    long end = start + length;
-    int state = 0;
-    int idx = (int) (pos / chunkSize);
-    while (pos < end && idx < chunkPath.length && hits.size() < ac.cap) {
-      int valid = chunk(idx, out);
-      int lo = (int) (pos - idx * chunkSize);
-      int hi = (int) Math.min(valid, Math.min(chunkSize, end - idx * chunkSize));
-      if (hi > lo) {
-        state = ac.scanRange(out, lo, hi, pos - start, state, hits);
-      }
-      pos = (idx + 1L) * chunkSize;
-      idx++;
-    }
-    return hits;
   }
 }

@@ -18,16 +18,16 @@ import org.apache.spark.sql.api.java.UDF4;
  *
  * ONE positioned read per sub-chunk feeds all three evidence scans —
  * the signature scan (Ac), the string-span scan (Strs, continuation-
- * aware) and the entropy window scan (Ent) — instead of each stage
- * re-reading the evidence (3x corpus egress at object-store scale).
- * The sub-chunk block [start - backMargin, start + valid_length +
- * overlap) loads once into a BlockIo; the three kernels run unchanged
- * against it (Strs' rare backward-barrier / forward-extension reads
- * outside the block fall through to the underlying source, so
- * semantics are byte-identical to the standalone paths — pinned by
- * differential tests in tests/test_fused_scan.py).
+ * aware) and the entropy window scan (Ent) — so each chunk of evidence
+ * is read once (3x less corpus egress at object-store scale than one
+ * pass per scan). The sub-chunk block [start - backMargin, start +
+ * valid_length + overlap) loads once into a BlockIo; the three kernels
+ * run unchanged against it (Strs' rare backward-barrier / forward-
+ * extension reads outside the block fall through to the underlying
+ * source). Rows equal the chunk-table scans' (differential-pinned in
+ * tests/test_fused_scan.py).
  *
- * Per-kernel semantics parity:
+ * Per-kernel semantics:
  *  - hits: packed (localOffset &lt;&lt; 16 | patIdx) with offsets relative
  *    to the SUB-CHUNK start; the scan covers [start, start+vlen+
  *    overlap) with a fresh automaton state, and the caller's
@@ -37,13 +37,14 @@ import org.apache.spark.sql.api.java.UDF4;
  *    parent path's own cross-boundary requirement). The Ac hit cap
  *    applies per sub-chunk here vs per chunk there — divergent only
  *    past 1e6 hits per sub-chunk.
- *  - spans: Strs.scanEvidence on the same (start, vlen) rows the
- *    strings path plans — identical by construction.
- *  - ents: Ent.scanEvidence — identical when the sub-chunk tiling is
- *    window-aligned (the Python wrapper gates on that).
+ *  - spans: Strs.scanEvidence, continuation-aware, so rows stay pinned
+ *    to the chunk_size geometry whatever the sub-chunk tiling.
+ *  - ents: Ent.scanEvidence — identical because the Python planner
+ *    tiles sub-chunks at entropy-window multiples.
  *
- * Spec: acSpec + "\n" + strsSpec + "\n" + entSpec (none of the three
- * sub-specs can contain a newline).
+ * Spec: overlap + "\n" + acSpec + "\n" + strsSpec + "\n" + entSpec
+ * (no sub-spec contains a newline). An empty strsSpec / entSpec skips
+ * that scan and returns empty spans / ents.
  */
 public class ScanAllEvidenceUdf implements UDF4<String, Long, Long, String, Row> {
   private static final ConcurrentHashMap<String, Boolean> IS_EWF = new ConcurrentHashMap<>();
@@ -129,15 +130,13 @@ public class ScanAllEvidenceUdf implements UDF4<String, Long, Long, String, Row>
 
   @Override
   public Row call(String path, Long start, Long validLength, String spec) throws Exception {
-    int nl1 = spec.indexOf('\n');
-    int nl2 = spec.indexOf('\n', nl1 + 1);
-    Ac ac = Ac.get(spec.substring(0, nl1));
-    Strs strs = Strs.get(spec.substring(nl1 + 1, nl2));
-    // empty third line = entropy detection disabled: skip the Ent
-    // sub-scan and return empty ents (the Python wrapper then omits
-    // the entropy tables entirely)
-    String entSpec = spec.substring(nl2 + 1);
-    Ent ent = entSpec.isEmpty() ? null : Ent.get(entSpec);
+    String[] lines = spec.split("\n", -1);
+    long overlap = Long.parseLong(lines[0]);
+    Ac ac = Ac.get(lines[1]);
+    // empty line = scan disabled (string scan off / entropy detection
+    // off): skip that kernel and return an empty array
+    Strs strs = lines[2].isEmpty() ? null : Strs.get(lines[2]);
+    Ent ent = lines[3].isEmpty() ? null : Ent.get(lines[3]);
 
     Boolean ewf = IS_EWF.get(path);
     if (ewf == null) {
@@ -145,22 +144,29 @@ public class ScanAllEvidenceUdf implements UDF4<String, Long, Long, String, Row>
       IS_EWF.putIfAbsent(path, ewf);
     }
     if (ewf) {
-      return scanAll(new EwfSrc(EwfImage.get(path)), ac, strs, ent, start, validLength);
+      EwfSrc src = new EwfSrc(EwfImage.get(path));
+      return scanAll(src, overlap, ac, strs, ent, start, validLength);
     }
-    // per-call channel, same fd-leak rationale as StringScanEvidenceUdf
+    // per-call channel: each call scans a whole sub-chunk (>= MiBs),
+    // which amortizes the open; an unbounded per-path cache would leak
+    // one fd per evidence file for the executor lifetime (a directory
+    // sweep over thousands of images hits ulimit). EwfImage stays
+    // cached: its value is the parsed chunk TABLE, and image counts
+    // are small.
     try (FileChannel ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)) {
-      return scanAll(new RawSrc(ch), ac, strs, ent, start, validLength);
+      return scanAll(new RawSrc(ch), overlap, ac, strs, ent, start, validLength);
     }
   }
 
   private static Row scanAll(
-      Src src, Ac ac, Strs strs, Ent ent, long start, long vlen) throws IOException {
+      Src src, long overlap, Ac ac, Strs strs, Ent ent, long start, long vlen)
+      throws IOException {
     long total = src.length();
-    long blockStart = Math.max(0, start - BACK_MARGIN);
-    // overlap from the strings spec: the parent-geometry read margin
-    // shared by the hit scan (cross-boundary matches) and most of the
-    // span scan's forward window
-    long blockEnd = Math.min(start + vlen + strs.overlap, total);
+    // only the span scan's backward barrier walk reads before start
+    long blockStart = strs == null ? start : Math.max(0, start - BACK_MARGIN);
+    // overlap: the parent-geometry read margin shared by the hit scan
+    // (cross-boundary matches) and most of the span scan's forward window
+    long blockEnd = Math.min(start + vlen + overlap, total);
     byte[] block =
         blockEnd > blockStart ? src.read(blockStart, (int) (blockEnd - blockStart)) : new byte[0];
     BlockIo io = new BlockIo(src, block, blockStart);
@@ -179,7 +185,8 @@ public class ScanAllEvidenceUdf implements UDF4<String, Long, Long, String, Row>
       hits = ScanGates.filter(ac, io::read, start, hits, vlen);
     }
 
-    List<Row> spans = strs.scanEvidence(io, total, start, vlen);
+    List<Row> spans =
+        strs == null ? new ArrayList<>() : strs.scanEvidence(io, total, start, vlen);
     List<Row> ents =
         ent == null ? new ArrayList<>() : ent.scanEvidence(io, total, start, vlen);
     return RowFactory.create(hits, spans, ents);

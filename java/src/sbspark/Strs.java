@@ -139,7 +139,7 @@ final class Strs {
    * [base, base+blob.length) of the evidence. eCap = parent read end
    * (runs truncate there); io enables UTF-8 forward extension past the
    * window (null on the bytes path, where the blob IS the parent read).
-   * Mirrors strings_scan._subchunk_spans / _blob_spans exactly.
+   * Rows equal strings_scan._blob_spans over the parent chunk blob.
    */
   List<Row> scanWindow(byte[] blob, long base, long ownStart, long ownEnd, long eCap, Io io)
       throws IOException {
@@ -361,7 +361,20 @@ final class Strs {
     }
   }
 
-  // ---- evidence-path windowing (mirrors _subchunk_spans) ---------------
+  // ---- evidence-path windowing (sub-chunk continuation) ---------------
+  //
+  // The one-pass scan plans ~16 MiB sub-chunks, but row semantics stay
+  // pinned to the chunkSize geometry (the chunk-table path and the
+  // reference's build_chunks anchor runs and maxLen piece grids at chunk
+  // starts): a sub-chunk starting mid-run must not re-emit the run's
+  // tail as a fresh fragment. Each sub-chunk therefore (a) extends its
+  // window backward to a position no run can cross (a byte outside every
+  // run alphabet, or a 00 00 pair), capped at the parent chunk start,
+  // (b) scans the extended window with the same run/piece code, and (c)
+  // emits only pieces starting in [start, start+vlen). UTF-8 runs carry
+  // run-global checks (strict decode + printability), so a run touching
+  // the window end extends forward to its true end, capped at the parent
+  // read end.
 
   /** Barrier-aware backward window start (no run crosses w0-1 -> w0). */
   long findWindowStart(Io io, long p, long loCap, long total) throws IOException {

@@ -227,7 +227,7 @@ def carve_hits_with_evidence(
     bucket index, the rest per-hit. The r12 shape (one filtered branch
     per family unioned with the rest) re-evaluated the upstream hits
     plan once per branch when it was uncached -- three evidence
-    signature scans on the multi-pass path."""
+    signature scans when the hits came straight off the evidence."""
 
     # shuffle width scales with evidence bytes, floored at parallelism
     # (r14, the shared evidence-path rule): hit density is roughly

@@ -17,18 +17,18 @@ from dataclasses import dataclass, field, replace
 
 DEFAULT_CHUNK_SIZE = 512 * 1024 * 1024  # reference src/constants.rs:22
 DEFAULT_OVERLAP = 64 * 1024  # reference src/constants.rs:25
-# sub-range size for the PYTHON-side fused scans (strings, entropy):
-# the I/O chunk size is tuned for JVM scan + carve streaming, but a
-# Python kernel at ~1 s per 4 MiB needs many more plan rows than
-# ceil(size / 512 MiB) to use a cluster (round-9 1 GiB stress: the
-# strings stage ran on 2 of 32 cores, 121 s -> 11 s at this granule)
-PY_SCAN_GRANULE = 16 * 1024 * 1024
+# sub-chunk size for the one-pass evidence scan (fused_scan.py): the
+# I/O chunk size is tuned for carve streaming, but the scan needs many
+# more plan rows than ceil(size / 512 MiB) to use a cluster (round-9
+# 1 GiB stress: the strings stage ran on 2 of 32 cores, 121 s -> 11 s
+# at this granule)
+SUBCHUNK_GRANULE = 16 * 1024 * 1024
 MIB = 1024 * 1024
 GIB = 1024 * MIB
-# evidence bytes per scan partition (r14): every evidence-path stage
-# scales its partition count with scan bytes, floored at the session
-# parallelism — a fixed defaultParallelism split hands each task (and,
-# on the one-pass path, each persisted cache block) corpus/N bytes, a
+# evidence bytes per scan partition (r14): the evidence scan and carve
+# scale their partition counts with scan bytes, floored at the session
+# parallelism — a fixed defaultParallelism split hands each task (and
+# each persisted one-pass cache block) corpus/N bytes, a
 # hidden corpus-proportional memory/elasticity term that OOMed 20 GiB
 # at a heap 10 GiB survived (BENCH_SCALE_r14; SCALE.md round 14)
 EVIDENCE_PARTITION_BYTES = 128 * MIB

@@ -4,12 +4,14 @@ Reference lifecycle (src/pipeline/mod.rs:168-524): chunk reader ->
 scan workers -> carve workers -> metadata writer, over bounded
 channels. Spark trace of the same plan (SURVEY §3.2):
 
-    chunks = ingest(evidence)                  # mapInPandas ranged reads
-    hits = scan(chunks) |> normalize           # mapInPandas + where/select
+    raw = scan_all(evidence)                   # one read per sub-chunk feeds
+    hits/strings/entropy = project(raw)        #   all three scans (JVM UDF)
     carved = carve(hits)                       # mapInPandas per hit
-    strings/entropy = scan(chunks)             # same single pass over chunks
     browser_* = parse(carved sqlite)           # sqlite3-in-UDF + joins
     sinks: parquet/jsonl/csv per table
+
+Without the JVM kernel (or with chunk_join) the three scans run over a
+cached chunk table instead (mapInPandas ranged reads), same rows.
 
 Thread boundaries become stage boundaries; bounded-channel
 backpressure becomes Spark scheduling; the single-writer metadata
@@ -176,7 +178,7 @@ class Engine:
     Arrow conversions on top of the 4 GiB cache). This is the CLUSTER
     strategy — the budget is per-executor on a many-node cluster
     (100 TB / 1000 nodes = 100 GB/node, disk-backed) — single-JVM
-    local runs should use the default fused/positioned path, which
+    local runs should use the default one-pass path, which
     never materializes chunk bytes. The chunk path bounds each
     in-flight hit's window at carve_op._WINDOW_CAP_LIMIT (1.5 GiB):
     per-type windows above that are rejected at plan time, and a carve
@@ -252,105 +254,66 @@ class Engine:
         evidence_bytes: bytes | None = None,
         chunk_join: bool = False,
         cache_intermediates: bool = False,
-        one_pass: bool | None = None,
     ) -> RunResult:
-        """`cache_intermediates=True` persists each stage output
+        """Scan path: with `evidence_path` and the JVM kernel active, the
+        one-pass multi-scan (fused_scan.scan_all_from_evidence): ONE
+        positioned read per sub-chunk feeds signature + strings +
+        entropy, and carving does targeted positioned reads. Otherwise —
+        `chunk_join=True`, `evidence_bytes`, or a host without the
+        kernel (JRE-only, or SPARK_GRAFT_NO_VEC_KERNEL set) — the scans
+        run over the cached chunk table. On that path `evidence_path`
+        runs still carve from positioned reads (no window cap);
+        `chunk_join=True` carves from the chunk table itself. Every
+        path yields the same rows (differential-pinned in
+        tests/test_engine_one_pass.py and tests/test_fused_scan.py),
+        except that only the one-pass scan drops loose-signature hits
+        at scan time (scanner.scan_gate_indexes) — hits the carver
+        rejects anyway, so carved_files is the same.
+
+        `cache_intermediates=True` persists each stage output
         (MEMORY_AND_DISK — recomputable on executor loss, unlike
         localCheckpoint) so multi-consumer reads evaluate each stage
         ONCE: the reference's single pass computes its run counters
         for free, but the Spark analog's run_summary otherwise
-        re-derives every consumed subtree — on the fused evidence
-        path that is a second full evidence scan through the Python
-        strings kernel (measured: 32.5 s of a 61 s 1 GiB end-to-end
-        run). The setting for full runs that drive several tables
-        (write_tables, the stress bench); OFF by default so
-        single-table uses stay cache-free. Stage outputs are metadata
-        rows (spans/hits/carves), orders of magnitude smaller than
-        evidence. Under one-pass the string_spans table is NOT
-        re-persisted — it is a projection of the already-persisted raw
-        frame, and double-storing the span content bytes OOMed an
-        8 GiB heap at 10 GiB evidence (r13). The caches are
-        CALLER-owned: call RunResult.unpersist() when done, or
-        repeated runs in one session accumulate executor storage.
+        re-derives every consumed subtree. The setting for full runs
+        that drive several tables (write_tables, the stress bench);
+        OFF by default so single-table uses stay cache-free. Stage
+        outputs are metadata rows (spans/hits/carves), orders of
+        magnitude smaller than evidence. On the one-pass path the raw
+        metadata frame is always persisted (that persist is what makes
+        the read happen once) and string_spans is NOT re-persisted — it
+        is a projection of that frame, and double-storing the span
+        content bytes OOMed an 8 GiB heap at 10 GiB evidence (r13).
+        The caches are CALLER-owned: call RunResult.unpersist() when
+        done, or repeated runs in one session accumulate executor
+        storage."""
+        from swiftbeaver_spark.jvm import vec_kernel_active
 
-        `one_pass=True` runs the scans through the fused one-pass
-        multi-scan (fused_scan.scan_all_from_evidence): ONE positioned
-        read per sub-chunk feeds signature + strings + entropy, instead
-        of each scan re-reading the evidence — 3x less corpus egress at
-        object-store scale and, on E01, 3x less re-decompression (the
-        round-11 measurement: each pass on compressed containers pays
-        the full inflate again, which is why default-path E01 ran ~2x
-        raw). Requires the JVM kernel and entropy-window-aligned
-        geometry (ValueError otherwise — same loud contract as the
-        fused module). The raw metadata frame persists for the
-        RunResult's lifetime (it is what makes the read happen once);
-        RunResult.unpersist() frees it. `one_pass=None` (default)
-        resolves via _one_pass_auto: one-pass whenever the
-        preconditions hold (raw AND EWF — the r12 cold-cache A/B
-        measured 0.16-0.27x the multi-pass walls with no regime where
-        multi-pass wins), multi-pass otherwise (JRE-only hosts, the
-        kernel escape hatch, misaligned geometry, string scan off).
-        Results are byte-identical either way (differential-pinned in
-        tests/test_fused_scan.py and tests/test_engine_one_pass.py)."""
-        if one_pass and (evidence_path is None or chunk_join):
-            raise ValueError(
-                "one_pass=True requires evidence_path and excludes "
-                "chunk_join (the one-pass scan reads the evidence "
-                "directly; the chunk-table strategy materializes bytes)"
-            )
-        if evidence_path is not None and not chunk_join:
-            use_one_pass = one_pass
-            if use_one_pass is None:
-                use_one_pass = self._one_pass_auto(evidence_path)
-            if use_one_pass:
-                return self._run_one_pass(evidence_path, cache_intermediates)
-        if evidence_path is not None and not chunk_join:
-            # fused path: the chunk *plan* (arithmetic rows) distributes;
-            # each scan reads its own byte ranges — chunk bytes never
-            # cross the JVM<->Python boundary nor get cached
-            from swiftbeaver_spark.chunking import plan_chunks
-            from swiftbeaver_spark.entropy import entropy_regions_from_evidence
-            from swiftbeaver_spark.scanner import scan_evidence
-            from swiftbeaver_spark.strings_scan import spans_from_evidence
-
+        positioned = evidence_path is not None and not chunk_join
+        if positioned and vec_kernel_active(self.spark):
+            return self._run_one_pass(evidence_path, cache_intermediates)
+        if evidence_path is not None:
             from swiftbeaver_spark.source import evidence_length
 
+            chunks = self.chunks_from_file(evidence_path)
             total = evidence_length(evidence_path)
-            plan = plan_chunks(self.spark, total, self.cfg.chunk_size, self.cfg.overlap)
-            if self.cfg.max_bytes is not None:
-                plan = plan.where(F.col("start") < int(self.cfg.max_bytes))
-            if self.cfg.max_chunks is not None:
-                plan = plan.where(F.col("chunk_id") < int(self.cfg.max_chunks))
-            hits = scan_evidence(self.spark, evidence_path, self.cfg, plan=plan)
-            carved = self.carve(hits, evidence_path=evidence_path)
-            tables = {"chunks": plan, "hits": hits, "carved_files": carved}
-            if self.cfg.enable_string_scan:
-                spans = spans_from_evidence(self.spark, evidence_path, self.cfg)
-                tables["string_spans"] = spans
-                tables["string_artefacts"] = scan_string_artefacts(spans, self.cfg)
-            if self.cfg.enable_entropy_detection:
-                tables["entropy_regions"] = entropy_regions_from_evidence(
-                    self.spark, evidence_path, self.cfg
-                )
+        elif evidence_bytes is not None:
+            chunks = self.chunks_from_bytes(evidence_bytes)
+            total = len(evidence_bytes)
         else:
-            if evidence_path is not None:
-                from swiftbeaver_spark.source import evidence_length
+            raise ValueError("need evidence_path or evidence_bytes")
+        chunks = chunks.cache()  # one pass feeds scan, strings, entropy, carve
 
-                chunks = self.chunks_from_file(evidence_path)
-                total = evidence_length(evidence_path)
-            elif evidence_bytes is not None:
-                chunks = self.chunks_from_bytes(evidence_bytes)
-                total = len(evidence_bytes)
-            else:
-                raise ValueError("need evidence_path or evidence_bytes")
-            chunks = chunks.cache()  # one pass feeds scan, strings, entropy, carve
-
-            hits = self.hits(chunks)
-            # evidence_len from the plan's arithmetic — no aggregation job.
-            # Scan limits truncate the chunk table, so the byte horizon for
-            # over_cap-vs-EOF attribution is the last INCLUDED chunk's end,
-            # not the full media length (else a limit-cut carve would claim
-            # withheld-by-cap bytes that were never scanned).
+        hits = self.hits(chunks)
+        if positioned:
+            carved = self.carve(hits, evidence_path=evidence_path)
+        else:
+            # evidence_len from the plan's arithmetic — no aggregation
+            # job. Scan limits truncate the chunk table, so the byte
+            # horizon for over_cap-vs-EOF attribution is the last
+            # INCLUDED chunk's end, not the full media length (else a
+            # limit-cut carve would claim withheld-by-cap bytes that
+            # were never scanned).
             horizon = total
             if self.cfg.max_bytes is not None and self.cfg.max_bytes < total:
                 last = (max(self.cfg.max_bytes, 1) - 1) // self.cfg.chunk_size
@@ -358,48 +321,14 @@ class Engine:
             if self.cfg.max_chunks is not None:
                 horizon = min(horizon, self.cfg.max_chunks * self.cfg.chunk_size)
             carved = self.carve(hits, chunks=chunks, evidence_len=horizon)
-            tables = {"chunks": chunks, "hits": hits, "carved_files": carved}
-            if self.cfg.enable_string_scan:
-                spans = scan_string_spans(chunks, self.cfg)
-                tables["string_spans"] = spans
-                tables["string_artefacts"] = scan_string_artefacts(spans, self.cfg)
-            if self.cfg.enable_entropy_detection:
-                tables["entropy_regions"] = entropy_regions(chunks, self.cfg)
+        tables = {"chunks": chunks, "hits": hits, "carved_files": carved}
+        if self.cfg.enable_string_scan:
+            spans = scan_string_spans(chunks, self.cfg)
+            tables["string_spans"] = spans
+            tables["string_artefacts"] = scan_string_artefacts(spans, self.cfg)
+        if self.cfg.enable_entropy_detection:
+            tables["entropy_regions"] = entropy_regions(chunks, self.cfg)
         return self._finish(tables, evidence_path, cache_intermediates)
-
-    def _one_pass_auto(self, evidence_path: str) -> bool:
-        """Auto rule for run(one_pass=None): one-pass IS the default
-        strategy whenever its preconditions hold (JVM kernel, entropy-
-        window-aligned geometry, string scan on) — for BOTH raw and EWF
-        evidence. The r12 cold-cache A/B (drop_caches before every run,
-        alternating modes in one session, 2 GiB) measured one-pass at
-        0.16x multi-pass on raw and 0.27x on E01 — the object-store
-        regime where every pass is real egress — while warm-page-cache
-        runs tie within host noise; there is no regime where multi-pass
-        wins, so it is the fallback, not the default. Results are
-        byte-identical (differential-pinned). Warns once per process
-        (warnings module default dedup) so the strategy is never
-        switched silently — the IVF auto-switch contract; pass
-        one_pass=False to force the multi-pass path."""
-        from swiftbeaver_spark.fused_scan import one_pass_geometry_ok
-        from swiftbeaver_spark.jvm import vec_kernel_active
-
-        if not self.cfg.enable_string_scan:
-            # the fused UDF always runs the span kernel; no spec form
-            # disables it, so string-scan-off runs keep the default path
-            return False
-        if not (one_pass_geometry_ok(self.cfg) and vec_kernel_active(self.spark)):
-            return False
-        import warnings
-
-        warnings.warn(
-            "evidence run: using the one-pass multi-scan (one positioned "
-            "read feeds signature+strings+entropy; measured 2.6-6x the "
-            "multi-pass path on a cold cache, a wash warm). Pass "
-            "one_pass=False to force the multi-pass path.",
-            stacklevel=3,
-        )
-        return True
 
     def _run_one_pass(self, evidence_path: str, cache_intermediates: bool) -> RunResult:
         """One-pass table graph: scan_all_from_evidence's raw metadata
@@ -410,11 +339,6 @@ class Engine:
         from swiftbeaver_spark.fused_scan import scan_all_from_evidence
         from swiftbeaver_spark.source import evidence_length
 
-        if not self.cfg.enable_string_scan:
-            raise ValueError(
-                "one_pass=True requires enable_string_scan (the fused "
-                "UDF always runs the span kernel); use the default path"
-            )
         total = evidence_length(evidence_path)
         scans = scan_all_from_evidence(
             self.spark,
@@ -444,9 +368,10 @@ class Engine:
         hits = scans["hits"]
         carved = self.carve(hits, evidence_path=evidence_path)
         tables = {"chunks": plan, "hits": hits, "carved_files": carved}
-        spans = scans["string_spans"]
-        tables["string_spans"] = spans
-        tables["string_artefacts"] = scan_string_artefacts(spans, self.cfg)
+        if self.cfg.enable_string_scan:
+            spans = scans["string_spans"]
+            tables["string_spans"] = spans
+            tables["string_artefacts"] = scan_string_artefacts(spans, self.cfg)
         if self.cfg.enable_entropy_detection:
             tables["entropy_regions"] = scans["entropy_regions"]
         return self._finish(

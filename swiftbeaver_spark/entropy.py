@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from swiftbeaver_spark.config import PY_SCAN_GRANULE, EngineConfig
+from swiftbeaver_spark.config import EngineConfig
 from swiftbeaver_spark.parallel import spread
 
 WINDOW_SCHEMA = StructType(
@@ -75,8 +75,8 @@ def shannon_entropy(window: np.ndarray) -> float:
 
 def _entropy_all_windows(mat: np.ndarray, window_size: int) -> np.ndarray:
     """Entropy of every row of `mat` (n_windows x window_size uint8) —
-    the per-window numpy bincount fold, shared by the chunk-table and
-    fused-evidence paths (the pinned fallback below the JVM kernel).
+    the per-window numpy bincount fold of the chunk-table scan (the
+    pinned fallback below the JVM kernel).
 
     Deliberately a Python loop over windows: the per-window bincount IS
     the C-speed kernel, and the "vectorize all windows at once" form
@@ -309,101 +309,4 @@ def entropy_regions(chunks: DataFrame, cfg: EngineConfig) -> DataFrame:
     # merge sees ~islands instead of ~windows (identical regions)
     return merge_regions(
         entropy_windows(chunks, cfg, merged=True), cfg.entropy_window_size
-    )
-
-
-def entropy_windows_from_evidence(
-    spark, path: str, cfg: EngineConfig, merged: bool = False
-) -> DataFrame:
-    """Fused fetch+entropy off the evidence file (valid regions only)."""
-    from swiftbeaver_spark.chunking import plan_chunks
-    from swiftbeaver_spark.source import evidence_length, open_evidence
-
-    window_size = cfg.entropy_window_size
-    threshold = cfg.entropy_threshold
-    total = evidence_length(path)
-    # Python-kernel granule (see strings_scan.spans_from_evidence): a
-    # 512 MiB-chunk plan leaves all but ceil(size/512MiB) cores idle.
-    # The granule is rounded to a window_size multiple so the absolute
-    # window grid (start is always a chunk_size multiple) is unchanged.
-    granule = max(
-        window_size, (PY_SCAN_GRANULE // window_size) * window_size
-    )
-    plan = plan_chunks(spark, total, min(cfg.chunk_size, granule), cfg.overlap)
-    # scan limits (r12): match the chunk-table path, where windows come
-    # only from the truncated chunk table. The included-parents byte
-    # horizon is a cfg.chunk_size multiple; plan rows clamp to it (the
-    # granule plan may tile parents unevenly, so filter + clamp rather
-    # than a parent-id filter). The horizon is window-aligned whenever
-    # the grids coincide at all (window_size | chunk_size), so the
-    # clamped window set equals the chunk-table set exactly.
-    horizon = total
-    if cfg.max_bytes is not None:
-        import math
-
-        horizon = min(
-            horizon, math.ceil(cfg.max_bytes / cfg.chunk_size) * cfg.chunk_size
-        )
-    if cfg.max_chunks is not None:
-        horizon = min(horizon, cfg.max_chunks * cfg.chunk_size)
-    if horizon < total:
-        plan = plan.where(F.col("start") < horizon).withColumn(
-            "valid_length",
-            F.least(F.col("valid_length"), F.lit(horizon) - F.col("start")),
-        )
-    # partition count scales with scan bytes, floored at parallelism
-    # (r14, the shared evidence-path rule — config.
-    # EVIDENCE_PARTITION_BYTES): a fixed split hands each task
-    # corpus/N bytes, losing retry/straggler granularity as the
-    # corpus grows
-    from swiftbeaver_spark.config import EVIDENCE_PARTITION_BYTES
-
-    n_parts = max(
-        spark.sparkContext.defaultParallelism,
-        1,
-        -(-horizon // EVIDENCE_PARTITION_BYTES),
-    )
-
-    from swiftbeaver_spark.jvm import vec_kernel_active
-
-    if vec_kernel_active(spark):
-        # fused positioned-read + fold inside the executor JVM (raw or
-        # EWF); window grid identical — granule is window-size-aligned
-        rows = F.call_udf(
-            "sb_entropy",
-            F.lit(path),
-            F.col("start").cast("long"),
-            F.col("valid_length").cast("long"),
-            F.lit(_entropy_spec(cfg, merged)),
-        )
-        return plan.repartition(n_parts).select(F.inline(rows))
-
-    def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        reader = open_evidence(path)
-        try:
-            for pdf in batches:
-                rows = []
-                for start, vlen in zip(pdf["start"], pdf["valid_length"]):
-                    blob = np.frombuffer(reader.read_at(int(start), int(vlen)), dtype=np.uint8)
-                    n_windows = blob.size // window_size
-                    if n_windows == 0:
-                        continue
-                    mat = blob[: n_windows * window_size].reshape(n_windows, window_size)
-                    ents = _entropy_all_windows(mat, window_size)
-                    rows.extend(
-                        _qualifying_rows(
-                            int(start), ents, window_size, threshold, merged
-                        )
-                    )
-                yield pd.DataFrame(rows, columns=["win_start", "win_end", "entropy"])
-        finally:
-            reader.close()
-
-    return plan.repartition(n_parts).mapInPandas(fused, WINDOW_SCHEMA)
-
-
-def entropy_regions_from_evidence(spark, path: str, cfg: EngineConfig) -> DataFrame:
-    return merge_regions(
-        entropy_windows_from_evidence(spark, path, cfg, merged=True),
-        cfg.entropy_window_size,
     )

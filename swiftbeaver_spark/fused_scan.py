@@ -1,37 +1,33 @@
 """One-pass multi-scan over evidence: a single positioned read per
 sub-chunk feeds the signature scan, the string-span scan AND the
-entropy window scan (java/src/sbspark/ScanAllEvidenceUdf.java).
+entropy window scan (java/src/sbspark/ScanAllEvidenceUdf.java) — the
+reference's ScanChunk loop, where one buffer feeds every scanner.
 
-Why: the default fused engine path runs each scan as its own
-positioned-read pass, so a full run reads the evidence three times —
-free on a page-cached local image, 3x corpus egress against object
-storage at 100 TB. The chunk-table strategy (`Engine.run(chunk_join=
-True)`) removes the re-reads by materializing chunk BYTES, which costs
-executor memory (see the Engine docstring's heap-economics note). This
-module is the third point on that trade-off curve: ONE read per
-sub-chunk, NO chunk-byte materialization — the UDF returns the three
-stages' METADATA rows (packed hits, span rows, entropy islands) in one
-struct, and callers persist that small frame instead of the bytes.
+This is the evidence-path scan of every `Engine.run(evidence_path=...)`
+on a host where the JVM kernel registers. It avoids both costs of the
+alternatives: no evidence byte is read twice (one pass per scan would
+be 3x corpus egress against object storage, and 3x re-decompression
+on E01), and no chunk BYTES are materialized (the chunk-table strategy,
+`Engine.run(chunk_join=True)`, caches them — see the Engine docstring's
+heap-economics note). The UDF returns the three stages' METADATA rows
+(packed hits, span rows, entropy islands) in one struct, and callers
+persist that small frame instead of the bytes.
 
-Semantics are byte-identical to the three standalone paths (pinned by
+Rows equal the chunk-table scans over cfg.chunk_size chunks (pinned by
 tests/test_fused_scan.py differentials on raw + E01 evidence):
 
 - hits: fresh-state Aho-Corasick over [start, start+vlen+overlap) per
   sub-chunk with ownership dedup (local_offset < valid_length) — the
   parent-geometry chunk scan's own cross-boundary rule, so the union
-  over sub-chunks equals scanner.scan_evidence. Reference parity: the
-  same scan loop as src/scanner/cpu.rs:40-69.
-- spans: Strs.scanEvidence on the identical subchunk_plan rows that
-  strings_scan.spans_from_evidence drives — identical by construction
-  (continuation-aware sub-chunk semantics included).
-- ents: Ent.scanEvidence per sub-chunk. Identical to
-  entropy.entropy_windows_from_evidence when the sub-chunk tiling is
-  window-aligned — `scan_all_from_evidence` verifies the geometry and
-  raises otherwise (entropy windows must not straddle plan boundaries,
-  else the dropped-partial-window set differs between tilings).
-
-Opt-in in round 11 (the engine's default path is unchanged); the
-natural consumer is a full multi-table run over remote evidence.
+  over sub-chunks equals scanner.scan_chunks (before the scan-time
+  gates, which only drop hits the carver rejects). Reference parity:
+  the same scan loop as src/scanner/cpu.rs:40-69.
+- spans: Strs.scanEvidence, continuation-aware (backward barrier walk,
+  forward UTF-8 run extension), so rows stay pinned to cfg.chunk_size
+  geometry whatever the sub-chunk tiling.
+- ents: Ent.scanEvidence per sub-chunk. Sub-chunks tile each parent at
+  an entropy-window multiple (`subchunk_plan`'s `align`), so the window
+  grid is the chunk table's by construction.
 """
 
 from __future__ import annotations
@@ -43,7 +39,7 @@ from pyspark.sql import functions as F
 
 from swiftbeaver_spark.config import (
     EVIDENCE_PARTITION_BYTES,
-    PY_SCAN_GRANULE,
+    SUBCHUNK_GRANULE,
     EngineConfig,
 )
 
@@ -54,26 +50,33 @@ from swiftbeaver_spark.config import (
 # fully-text corpus, span content ~ evidence bytes) a ~150 MiB block:
 # small enough that a block under construction is a footnote against
 # the storage pool, large enough that a 10 GiB image still packs its
-# scan into ~3 task waves at 32 threads. Shared with the standalone
-# strings/entropy evidence paths via config.EVIDENCE_PARTITION_BYTES.
+# scan into ~3 task waves at 32 threads.
 ONE_PASS_PARTITION_BYTES = EVIDENCE_PARTITION_BYTES
 
 
-def one_pass_geometry_ok(cfg: EngineConfig, granule: int | None = None) -> bool:
-    """True when the sub-chunk tiling is entropy-window aligned (the
-    scan_all_from_evidence precondition) — shared with Engine.run's
-    auto-switch so the quiet fallback and the loud ValueError can
-    never disagree about the same geometry. Trivially True when
-    entropy detection is off (the fused scan then skips the Ent
-    sub-scan entirely and returns no entropy tables)."""
-    if not cfg.enable_entropy_detection:
-        return True
-    g = granule if granule is not None else PY_SCAN_GRANULE
-    g = min(cfg.chunk_size, g)
-    n_sub = max(1, math.ceil(cfg.chunk_size / g))
-    g2 = math.ceil(cfg.chunk_size / n_sub)
-    ws = cfg.entropy_window_size
-    return g2 % ws == 0 and cfg.chunk_size % ws == 0
+def subchunk_plan(
+    spark, total: int, chunk_size: int, granule: int, align: int = 1
+) -> DataFrame:
+    """Sub-chunks tiling each parent chunk exactly (pure range
+    arithmetic): ~granule-sized, their size rounded up to a multiple of
+    `align`, with a ragged last sub-chunk, so ownership ranges never
+    straddle a parent boundary and every sub-chunk starts at an
+    `align` multiple from its parent's start."""
+    n_sub = max(1, math.ceil(chunk_size / granule))
+    g2 = math.ceil(math.ceil(chunk_size / n_sub) / align) * align
+    n_parents = max(0, math.ceil(total / chunk_size))
+    ids = spark.range(0, n_parents * n_sub)
+    j = F.col("id") % n_sub
+    start = F.floor(F.col("id") / n_sub).cast("long") * chunk_size + j * g2
+    return (
+        ids.select(
+            start.alias("start"),
+            F.least(
+                F.lit(g2), F.lit(chunk_size) - j * g2, F.lit(total) - start
+            ).alias("valid_length"),
+        )
+        .where(F.col("valid_length") > 0)
+    )
 
 
 def scan_all_from_evidence(
@@ -84,8 +87,8 @@ def scan_all_from_evidence(
     max_bytes: int | None = None,
     max_chunks: int | None = None,
 ) -> dict[str, DataFrame]:
-    """Build the one-pass multi-scan frame and its three derived stage
-    tables. Returns {"raw", "hits", "string_spans", "entropy_windows",
+    """Build the one-pass multi-scan frame and its derived stage tables.
+    Returns {"raw", "hits", "string_spans", "entropy_windows",
     "entropy_regions"}; `raw` holds one row per sub-chunk with the
     three metadata arrays — PERSIST IT (the caller owns the lifetime)
     before driving more than one derived table, or each table's action
@@ -99,23 +102,18 @@ def scan_all_from_evidence(
             tables["raw"].unpersist()
 
     `max_bytes`/`max_chunks` truncate the PARENT chunk plan exactly as
-    Engine.run's fused path does (a parent whose start clears the byte
-    limit is included whole), so the derived tables match the standalone
-    limit-filtered paths row for row.
+    the chunk table does (a parent whose start clears the byte limit is
+    included whole), so the derived tables match the limit-filtered
+    chunk-table scans row for row.
 
-    With `cfg.enable_entropy_detection` False the Ent sub-scan is
-    skipped inside the UDF (empty third spec line) and the returned
-    dict has NO entropy tables — previously they were built anyway
-    while the alignment gate was off, the silent-divergence hazard the
-    gate exists to prevent (ADVICE r11).
+    With `cfg.enable_string_scan` / `cfg.enable_entropy_detection`
+    False the UDF skips that kernel (empty spec line) and the returned
+    dict has no span / entropy tables.
 
-    Requires the JVM kernel (this is the scale path — there is no
-    Python fallback; the three standalone paths serve that role) and
-    entropy-window-aligned sub-chunk geometry; raises ValueError on
-    either precondition so misuse is loud, never silently divergent.
-    The SPARK_GRAFT_NO_VEC_KERNEL incident hatch disables this path
-    the same loud way (ADVICE r11): there is no fallback to mix in,
-    so under the hatch callers must run the standalone paths.
+    Requires the JVM kernel — a host without it (or with the
+    SPARK_GRAFT_NO_VEC_KERNEL hatch set) scans the cached chunk table
+    instead, which Engine.run selects on its own; calling this there
+    raises ValueError.
     """
     from swiftbeaver_spark.entropy import _entropy_spec, merge_regions
     from swiftbeaver_spark.jvm import spec_for, vec_kernel_active
@@ -124,46 +122,35 @@ def scan_all_from_evidence(
         _decode_packed_hits,
         compile_patterns,
         normalize_hits,
+        scan_gate_indexes,
     )
     from swiftbeaver_spark.source import evidence_length
-    from swiftbeaver_spark.strings_scan import _strings_spec, subchunk_plan
+    from swiftbeaver_spark.strings_scan import _strings_spec
 
     if not vec_kernel_active(spark):
         raise ValueError(
             "scan_all_from_evidence requires the JVM kernel (and is "
-            "disabled by SPARK_GRAFT_NO_VEC_KERNEL — there is no Python "
-            "fallback); use the standalone scan_evidence/"
-            "spans_from_evidence/entropy_*_from_evidence paths"
+            "disabled by SPARK_GRAFT_NO_VEC_KERNEL); scan the chunk "
+            "table instead (Engine.run does)"
         )
     total = evidence_length(path)
-    g = granule if granule is not None else PY_SCAN_GRANULE
-    g = min(cfg.chunk_size, g)
-    # entropy-grid gate: sub-chunks tile each parent at g2 boundaries;
-    # windows must not straddle them (or the dropped-partial set would
-    # differ from the entropy path's own tiling)
-    if not one_pass_geometry_ok(cfg, granule):
-        n_sub = max(1, math.ceil(cfg.chunk_size / g))
-        g2 = math.ceil(cfg.chunk_size / n_sub)
-        raise ValueError(
-            f"sub-chunk granule {g2} / chunk_size {cfg.chunk_size} are not "
-            f"entropy-window ({cfg.entropy_window_size}) aligned; run the "
-            "standalone entropy path for this geometry"
-        )
-
-    from swiftbeaver_spark.scanner import scan_gate_indexes
-
+    g = min(cfg.chunk_size, granule if granule is not None else SUBCHUNK_GRANULE)
+    # entropy windows restart at each parent start (the chunk table's
+    # grid); sub-chunks starting at window multiples keep that grid
+    align = cfg.entropy_window_size if cfg.enable_entropy_detection else 1
     patterns = compile_patterns(cfg)
     spec = "\n".join(
         [
+            str(cfg.overlap),
             spec_for(patterns, MAX_HITS_PER_CHUNK, scan_gate_indexes(cfg)),
-            _strings_spec(cfg),
+            _strings_spec(cfg) if cfg.enable_string_scan else "",
             _entropy_spec(cfg, merged=True) if cfg.enable_entropy_detection else "",
         ]
     )
-    plan = subchunk_plan(spark, total, cfg.chunk_size, g)
-    # parent-chunk limit rules, identical to Engine.run's fused path:
-    # the parent plan keeps chunks with start < max_bytes / chunk_id <
-    # max_chunks, so sub-chunks filter on their PARENT's start/id
+    plan = subchunk_plan(spark, total, cfg.chunk_size, g, align)
+    # parent-chunk limit rules, identical to the chunk table's: it keeps
+    # chunks with start < max_bytes / chunk_id < max_chunks, so
+    # sub-chunks filter on their PARENT's start/id
     if max_bytes is not None:
         plan = plan.where(
             F.floor(F.col("start") / cfg.chunk_size) * cfg.chunk_size
@@ -213,8 +200,9 @@ def scan_all_from_evidence(
         F.col("r.hits").alias("hits"),
     )
     hits = normalize_hits(_decode_packed_hits(hit_cols, F.col("hits"), patterns))
-    spans = raw.select(F.inline("r.spans"))
-    out = {"raw": raw, "hits": hits, "string_spans": spans}
+    out = {"raw": raw, "hits": hits}
+    if cfg.enable_string_scan:
+        out["string_spans"] = raw.select(F.inline("r.spans"))
     if cfg.enable_entropy_detection:
         ents = raw.select(F.inline("r.ents"))
         out["entropy_windows"] = ents

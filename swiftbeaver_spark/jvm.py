@@ -17,9 +17,11 @@ src/strings/cpu.rs:42-216, and src/entropy.rs:19-91.
 
 The jar compiles lazily with the JDK that ships in the image (javac
 against pyspark's own jars) and registers into ANY session via
-ADD JAR + registerJavaFunction; every entry point falls back to the
-Python kernel if compilation or registration fails, so the engine
-keeps working on JRE-only machines.
+ADD JAR + registerJavaFunction. The three scans run fused in
+sb_scan_all (one positioned read per sub-chunk, fused_scan.py) on
+evidence runs. If compilation or registration fails, every entry point
+falls back to its Python kernel — evidence runs scan the cached chunk
+table instead — so the engine keeps working on JRE-only machines.
 """
 
 from __future__ import annotations
@@ -41,7 +43,6 @@ _SOURCES = (
     "DotsUdf.java",
     "Ent.java",
     "EntropyBytesUdf.java",
-    "EntropyEvidenceUdf.java",
     "EwfImage.java",
     "JaccardUdf.java",
     "MinHashUdf.java",
@@ -49,10 +50,8 @@ _SOURCES = (
     "SqDistsUdf.java",
     "ScanAllEvidenceUdf.java",
     "ScanBytesUdf.java",
-    "ScanEvidenceUdf.java",
     "SimHashUdf.java",
     "StringScanBytesUdf.java",
-    "StringScanEvidenceUdf.java",
     "Strs.java",
     "SubwordUdf.java",
 )
@@ -145,9 +144,10 @@ def kernel_jar() -> str | None:
 
 
 def ensure_kernel(spark: SparkSession) -> bool:
-    """Register sb_scan_bytes / sb_scan_evidence into this session.
-    Works on sessions we did not create (driver harness) via ADD JAR;
-    returns False — Python fallback — on any failure."""
+    """Register the kernel UDFs (sb_scan_bytes, sb_scan_all, the
+    strings/entropy/vector kernels) into this session. Works on
+    sessions we did not create (an outside harness) via ADD JAR; returns
+    False — Python fallback — on any failure."""
     cached = getattr(spark, _MARKER, None)
     if cached is not None:
         return cached
@@ -158,9 +158,6 @@ def ensure_kernel(spark: SparkSession) -> bool:
             spark.sql(f"ADD JAR '{jar_path}'")
             spark.udf.registerJavaFunction(
                 "sb_scan_bytes", "sbspark.ScanBytesUdf", "array<bigint>"
-            )
-            spark.udf.registerJavaFunction(
-                "sb_scan_evidence", "sbspark.ScanEvidenceUdf", "array<bigint>"
             )
             spark.udf.registerJavaFunction(
                 "sb_minhash", "sbspark.MinHashUdf", "array<bigint>"
@@ -182,13 +179,7 @@ def ensure_kernel(spark: SparkSession) -> bool:
                 "sb_scan_strings_bytes", "sbspark.StringScanBytesUdf", _SPAN_ROWS_TYPE
             )
             spark.udf.registerJavaFunction(
-                "sb_scan_strings", "sbspark.StringScanEvidenceUdf", _SPAN_ROWS_TYPE
-            )
-            spark.udf.registerJavaFunction(
                 "sb_entropy_bytes", "sbspark.EntropyBytesUdf", _ENT_ROWS_TYPE
-            )
-            spark.udf.registerJavaFunction(
-                "sb_entropy", "sbspark.EntropyEvidenceUdf", _ENT_ROWS_TYPE
             )
             spark.udf.registerJavaFunction(
                 "sb_scan_all", "sbspark.ScanAllEvidenceUdf", _SCAN_ALL_TYPE

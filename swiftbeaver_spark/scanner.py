@@ -19,7 +19,6 @@ backstop against pathological inputs.
 
 from __future__ import annotations
 
-import functools
 from collections.abc import Iterator
 
 import pandas as pd
@@ -75,19 +74,18 @@ def mp3_gate_indexes(cfg: EngineConfig) -> list[int]:
 
 
 def scan_gate_indexes(cfg: EngineConfig) -> dict[str, list[int]]:
-    """Scan-time hit-validation assignments for the evidence-backed
-    scans: {spec tag: [compile_patterns indices]}. Loose signatures
+    """Scan-time hit-validation assignments for the one-pass evidence
+    scan: {spec tag: [compile_patterns indices]}. Loose signatures
     (mp3's 11-bit sync, bmp's 2-byte "BM", ico's low-entropy type
     words) emit thousands of false hits per GiB that exist only to be
     rejected by the handler's first header reads — each gate hoists a
     PREFIX of its carver's own rejection cascade to hit time
-    (ScanGates.java / the _gate_ok mirror below), so those rows are
-    never shipped, shuffled or Python-crossed. A gate drops a hit only
-    when the evidence bytes prove the carver would return None, so
-    carved output is identical with gates on or off (pytest-pinned).
-    Chunk-table scans (scan_chunks) have no evidence reader for the
-    lookahead and stay unfiltered — the carver remains the authority
-    there."""
+    (ScanGates.java), so those rows are never shipped, shuffled or
+    Python-crossed. A gate drops a hit only when the evidence bytes
+    prove the carver would return None, so carved output is identical
+    with gates on or off (pytest-pinned). Chunk-table scans
+    (scan_chunks) have no evidence reader for the lookahead and stay
+    unfiltered — the carver remains the authority there."""
     gates: dict[str, list[int]] = {"m3": mp3_gate_indexes(cfg)}
     ic = []
     idx = 0
@@ -108,71 +106,6 @@ def scan_gate_indexes(cfg: EngineConfig) -> dict[str, list[int]]:
             idx += 1
     gates["ic"] = ic
     return {tag: idxs for tag, idxs in gates.items() if idxs}
-
-
-def _mp3_sync_ok(reader, off: int) -> bool:
-    """Python mirror of ScanGates.mp3Valid (JVM) — same reads, same
-    verdicts, so the fallback scan path stays hit-identical."""
-    from swiftbeaver_spark.carvers.media import _mp3_frame_size
-
-    h = reader.read_at(off, 4)
-    size = _mp3_frame_size(h)
-    if size is None:
-        return False
-    total, frames = size, 1
-    while frames < 3:
-        fh = reader.read_at(off + total, 4)
-        if len(fh) < 4:
-            return False
-        if fh[:3] == b"TAG":
-            return False
-        s = _mp3_frame_size(fh)
-        if s is None:
-            return False
-        total += s
-        frames += 1
-    return True
-
-
-def _bmp_ok(reader, off: int, min_size: int = 0) -> bool:
-    """carve_bmp's accept rule IS a pure function of one header read,
-    so the Python side gates through the handler itself — zero drift
-    by construction (max_size only affects truncation, never
-    None-vs-outcome). min_size (r14) mirrors ScanGates.bmpValid's
-    hoisted finalize() rejection: the carved size can only shrink the
-    declared file_size, so declared < min_size proves the pipeline
-    would drop the hit anyway (carvers/base.py:219)."""
-    from swiftbeaver_spark.carvers.images import carve_bmp
-
-    out = carve_bmp(reader, off, 0)
-    if out is None:
-        return False
-    return (out.end - off) >= min_size
-
-
-def _ico_prefix_ok(reader, off: int) -> bool:
-    """Python mirror of ScanGates.icoPrefixValid — the first checks of
-    carve_ico's cascade (count bounds + first directory entry sanity);
-    reserved/type bytes are guaranteed by the hit patterns."""
-    from swiftbeaver_spark.carvers.images import _ICO_MAX_ENTRIES, _ICO_MAX_IMAGE
-
-    h = reader.read_at(off, 6)
-    if len(h) < 6:
-        return False
-    count = h[4] | (h[5] << 8)
-    if count == 0 or count > _ICO_MAX_ENTRIES:
-        return False
-    d = reader.read_at(off + 6, 16)
-    if len(d) < 16:
-        return False
-    size = int.from_bytes(d[8:12], "little")
-    img_off = int.from_bytes(d[12:16], "little")
-    if size == 0 or img_off < 6 + count * 16 or size > _ICO_MAX_IMAGE:
-        return False
-    return True
-
-
-_GATE_CHECKS = {"m3": _mp3_sync_ok, "bm": _bmp_ok, "ic": _ico_prefix_ok}
 
 
 def find_all(data: bytes, pattern: bytes, cap: int = MAX_HITS_PER_CHUNK) -> list[int]:
@@ -444,100 +377,3 @@ def normalize_hits(raw_hits: DataFrame) -> DataFrame:
 
 def scan_and_normalize(chunks: DataFrame, cfg: EngineConfig) -> DataFrame:
     return normalize_hits(scan_chunks(chunks, cfg))
-
-
-def scan_evidence(spark, path: str, cfg: EngineConfig, plan: DataFrame | None = None) -> DataFrame:
-    """Fused fetch+scan straight off the evidence file: the chunk *plan*
-    (pure arithmetic rows) distributes, each task does positioned reads
-    and scans in the same Python pass — chunk bytes never cross the
-    JVM<->Python boundary (2x less serialization than fetch-then-scan;
-    the dominant cost at local scale, and still the right shape on a
-    cluster with shared storage)."""
-    from swiftbeaver_spark.chunking import plan_chunks
-    from swiftbeaver_spark.jvm import ensure_kernel, spec_for
-    from swiftbeaver_spark.source import evidence_length, open_evidence
-
-    patterns = compile_patterns(cfg)
-    if plan is None:
-        total = evidence_length(path)
-        plan = plan_chunks(spark, total, cfg.chunk_size, cfg.overlap)
-        if cfg.max_bytes is not None:
-            plan = plan.where(F.col("start") < int(cfg.max_bytes))
-        if cfg.max_chunks is not None:
-            plan = plan.where(F.col("chunk_id") < int(cfg.max_chunks))
-
-    gates = scan_gate_indexes(cfg)
-    # partition count scales with corpus bytes, floored at parallelism
-    # (r14, same rule as the one-pass path): a fixed defaultParallelism
-    # split hands each task corpus/N bytes — no straggler rebalancing
-    # and no retry granularity once the corpus outgrows N chunks. ~2
-    # parent chunks (1 GiB of evidence) per task keeps tasks coarse
-    # enough to amortize automaton setup and fine enough to reschedule.
-    span = evidence_length(path)
-    if cfg.max_bytes is not None:
-        span = min(span, int(cfg.max_bytes))
-    n_parts = max(
-        plan.sparkSession.sparkContext.defaultParallelism,
-        1,
-        -(-span // (2 * cfg.chunk_size)),
-    )
-    # JVM fast path: positioned read + one automaton pass per chunk
-    # inside the executor JVM, streamed through a bounded window. E01
-    # containers decompress chunk-by-chunk straight into the automaton
-    # (EwfImage.java). No Python workers.
-    if ensure_kernel(plan.sparkSession):
-        spec = spec_for(patterns, MAX_HITS_PER_CHUNK, gates)
-        hits = F.call_udf(
-            "sb_scan_evidence",
-            F.lit(path),
-            F.col("start").cast("long"),
-            F.col("read_length").cast("long"),
-            F.col("valid_length").cast("long"),
-            F.lit(spec),
-        )
-        raw = _decode_packed_hits(plan.repartition(n_parts), hits, patterns)
-        return normalize_hits(raw)
-
-    gated = {}
-    for tag, idxs in gates.items():
-        base, _, param = tag.partition("@")
-        check = _GATE_CHECKS[base]
-        if param:
-            check = functools.partial(check, min_size=int(param))
-        for i in idxs:
-            gated[(patterns[i][1], patterns[i][2])] = check
-
-    def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        reader = open_evidence(path)
-        try:
-            for pdf in batches:
-                rows = []
-                for cid, start, vlen, rlen in zip(
-                    pdf["chunk_id"], pdf["start"], pdf["valid_length"], pdf["read_length"]
-                ):
-                    blob = reader.read_at(int(start), int(rlen))
-                    for off, pat_id, ft_id in scan_blob(blob, patterns):
-                        # overlap-tail hits (off >= valid_length) skip
-                        # validation — normalize_hits discards them
-                        check = gated.get((pat_id, ft_id))
-                        if (
-                            check is not None
-                            and off < int(vlen)
-                            and not check(reader, int(start) + off)
-                        ):
-                            continue
-                        rows.append(
-                            (int(cid), int(start), int(vlen), off, pat_id, ft_id)
-                        )
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "chunk_id", "start", "valid_length",
-                        "local_offset", "pattern_id", "file_type_id",
-                    ],
-                )
-        finally:
-            reader.close()
-
-    raw = plan.repartition(n_parts).mapInPandas(fused, RAW_HITS_SCHEMA)
-    return normalize_hits(raw)

@@ -3,8 +3,7 @@
 Reference parity: evidence open dispatch (src/evidence.rs open_source —
 raw file vs libewf handle behind one EvidenceSource trait). Spark
 design: every distributed operator that positioned-reads evidence
-(fused scan, strings, entropy, carve, browser extraction, multimodal
-fetch) opens its OWN reader inside the task via `open_evidence`, so an
+(chunk-table ingest, carve, browser extraction, multimodal fetch) opens its OWN reader inside the task via `open_evidence`, so an
 E01 container is a first-class distributed source — no ingest-time
 full-image conversion, each executor decompresses only the chunks its
 reads touch. Container metadata (section/table parse) is a few KiB per

@@ -4,9 +4,11 @@ Reference parity: src/strings/cpu.rs (ascii/utf8/utf16 span scans,
 hint flags), src/strings/mod.rs:100-322 (regexes, normalizers,
 decode_span, artefact building).
 
-Spark design: the span scan is a single Arrow mapInPandas pass over
-chunks (same pass shape as the signature scan — at scale the two can
-share one cached chunk read). Artefact extraction is *gated by the
+Spark design: on evidence runs the span scan is the JVM Strs kernel
+inside the one-pass scan (fused_scan.py), sharing each sub-chunk read
+with the signature and entropy scans. Over a chunk table it is one pass
+per chunk — the JVM bytes kernel, or the Python kernel below on hosts
+without it. Artefact extraction is *gated by the
 cheap hint flags* exactly like the reference (predicate gating,
 SURVEY §4): the regex only runs on spans whose flag is set, expressed
 as a DataFrame `where` before the extraction UDF so Catalyst prunes
@@ -24,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from swiftbeaver_spark import schemas
-from swiftbeaver_spark.config import PY_SCAN_GRANULE, EngineConfig
+from swiftbeaver_spark.config import EngineConfig
 from swiftbeaver_spark.parallel import spread
 
 _ASCII_RE_TMPL = rb"[\t\x20-\x7E]{%d,}"
@@ -276,8 +278,9 @@ _SPAN_COLUMNS = [
 def _blob_spans(
     blob: bytes, start: int, vlen: int, min_len: int, max_len: int, scan_utf16: bool
 ) -> list[tuple]:
-    """All span rows for one chunk blob (shared by the chunk-table and
-    fused-evidence paths so their semantics cannot drift)."""
+    """All span rows for one chunk blob — the Python chunk-table kernel
+    and the reference rows the JVM kernels are differential-tested
+    against."""
     found: list[tuple[int, bytes, str]] = []
     for pos, raw in _scan_ascii(blob, min_len, max_len):
         found.append((pos, raw, "ascii"))
@@ -297,7 +300,7 @@ def _blob_spans(
 
 
 def _span_row(global_start: int, raw: bytes, enc: str) -> tuple:
-    """One STRING_SPANS row: decode + hint flags (shared by every path)."""
+    """One STRING_SPANS row: decode + hint flags."""
     if enc.startswith("utf-16"):
         flag_src = raw[0::2] if enc == "utf-16le" else raw[1::2]
     else:
@@ -349,8 +352,8 @@ def scan_string_artefacts(spans: DataFrame, cfg: EngineConfig) -> DataFrame:
     ONE pass: every enabled kind extracts inside a single mapInPandas
     over the flag-filtered spans. The earlier form built one
     filter+mapInPandas branch PER KIND and unioned them — three
-    branches each re-evaluating the whole spans subtree, which for the
-    fused evidence path means three full evidence scans (measured:
+    branches each re-evaluating the whole spans subtree, which for an
+    uncached evidence scan means three full evidence scans (measured:
     the 64 MiB full-pipeline stress spent ~3x its span-scan cost
     here; same pathology classify_documents_subword's four-branch
     weight union had in round 8). Row content is identical — the
@@ -457,311 +460,3 @@ def enrich_phones(artefacts: DataFrame) -> DataFrame:
         F.lit("span").alias("source_detail"),
         F.lit(1.0).alias("certainty"),
     )
-
-
-# --- continuation-aware sub-chunk scanning ---------------------------------
-#
-# The fused evidence path plans at a PYTHON-KERNEL granule (16 MiB), not
-# the 512 MiB I/O chunk size — a 1 GiB image planned at cfg.chunk_size
-# is TWO plan rows, two busy cores of 32 (round-9 measurement: 121 s vs
-# 11 s). Row SEMANTICS, however, stay pinned to cfg.chunk_size geometry
-# (the chunk-table path and the reference's build_chunks both anchor run
-# detection and max_len piece grids at chunk starts): a sub-chunk whose
-# start is mid-run must NOT re-emit the run's tail as a fresh fragment,
-# and must anchor piece splits at the TRUE run start. Each sub-chunk
-# therefore (a) extends its scan window backward to a position no run
-# can cross (a byte outside every run alphabet, or a 00 00 pair — no
-# encoding's run contains two consecutive NULs — capped at the parent
-# chunk start, where the parent blob itself re-anchors), (b) scans the
-# extended window with the SAME run/piece functions, and (c) emits only
-# pieces whose start falls in its ownership range [start, start+vlen).
-# UTF-8 runs additionally carry run-GLOBAL properties (whole-run strict
-# decode + printability) and a char-grid, so a run touching the window
-# end extends forward to its true structural end (capped at the parent
-# read end, where the parent blob truncates it too).
-
-# bytes that can appear INSIDE some encoding's run: \t + printable ascii
-# (all encodings), utf-8 continuations \x80-\xBF + leads \xC2-\xF4, and
-# (utf-16 only) \x00. Anything else is a barrier: no run crosses it.
-@functools.lru_cache(maxsize=4)
-def _runish_table(utf16: bool):
-    import numpy as np
-
-    t = np.zeros(256, dtype=bool)
-    t[0x09] = True
-    t[0x20:0x7F] = True
-    t[0x80:0xC0] = True
-    t[0xC2:0xF5] = True
-    if utf16:
-        t[0x00] = True
-    return t
-
-
-def _find_window_start(reader, p: int, lo_cap: int, utf16: bool) -> int:
-    """Largest w0 in [lo_cap, p] such that no run crosses w0-1 -> w0:
-    byte w0-1 is outside every run alphabet, or bytes (w0-1, w0) are
-    both NUL (no encoding's run contains 00 00 — utf-16 pairs alternate
-    printable/NUL). Backward block scan, vectorized; real content hits
-    a barrier within a few bytes (newlines, zero fill, high bytes)."""
-    import numpy as np
-
-    table = _runish_table(utf16)
-    block = 256 * 1024
-    hi = p
-    while hi > lo_cap:
-        lo = max(lo_cap, hi - block)
-        # one extra byte past hi so the 00 00 pair rule sees (hi-1, hi)
-        buf = np.frombuffer(reader.read_at(lo, hi - lo + 1), dtype=np.uint8)
-        cur = buf[: hi - lo]
-        bad = ~table[cur]
-        if utf16 and buf.size > cur.size:
-            nxt = buf[1 : cur.size + 1]
-            bad |= (cur[: nxt.size] == 0) & (nxt == 0)
-        idx = np.flatnonzero(bad)
-        if idx.size:
-            return lo + int(idx[-1]) + 1
-        hi = lo
-        block = min(block * 2, 64 * 1024 * 1024)
-    return lo_cap
-
-
-def _extend_utf8_run(reader, run_g: int, tail: bytes, e_cap: int) -> bytes:
-    """Extend a structural UTF-8 run that touches the window end forward
-    to its true end (capped at the parent read end e_cap). Doubling
-    blocks + re-match keep total work ~2x the final run length.
-
-    A re-match that stops short of the buffer end is only a structural
-    run end when the remainder is NOT a dangling multibyte prefix: a
-    read boundary that cuts a unit in half leaves a lead byte
-    (0xC2-0xF4) with < 4 bytes after it, and the run may continue once
-    the unit reassembles from the next read — truncating there made the
-    run-global printability check cover only a prefix (ADVICE r10: a
-    >1 MiB run with a Cf char past the cut emitted pieces the other
-    kernels reject). JVM parity: Strs.extendRun's truncated-trailing-
-    unit re-read (Strs.java:298-300)."""
-    buf = bytearray(tail)
-    step = 1 << 20
-    end = len(buf)  # `tail` arrives as a structural match
-    while run_g + len(buf) < e_cap:
-        more = reader.read_at(run_g + len(buf), min(step, e_cap - run_g - len(buf)))
-        if not more:
-            break
-        buf += more
-        m = _UTF8_RUN.match(bytes(buf))
-        end = m.end() if m else 0
-        if end < len(buf):
-            dangling = (
-                len(buf) - end < 4
-                and 0xC2 <= buf[end] <= 0xF4
-                and all(0x80 <= c <= 0xBF for c in buf[end + 1 :])
-            )
-            if not dangling:
-                break  # the run's true structural end
-            # else: read more — the re-match reassembles the unit (an
-            # invalid reassembly just ends the match here next round,
-            # when >= 4 remainder bytes flip `dangling` off)
-        step = min(step * 2, 64 << 20)
-    # truncate any unverified remainder (true end, or a dangling prefix
-    # left at e_cap/EOF — the parent-geometry scan drops it there too)
-    return bytes(buf[:end])
-
-
-def _utf8_owned_rows(
-    blob: bytes,
-    w0: int,
-    p: int,
-    own_end: int,
-    e_cap: int,
-    reader,
-    min_len: int,
-    max_len: int,
-) -> list[tuple]:
-    """UTF-8 pieces owned by [p, own_end), with run-global checks over
-    the FULL run (same checks as _scan_utf8, anchored at true starts)."""
-    rows: list[tuple] = []
-    for m in _UTF8_RUN.finditer(blob):
-        rs, re_ = m.span()
-        if w0 + rs >= own_end:
-            break
-        if w0 + re_ <= p:
-            continue
-        # owned pieces start >= p, so their bytes (and any multibyte
-        # char that could make them emittable) lie in [p, run end);
-        # no multibyte lead there => nothing to emit => skip before
-        # paying for forward extension (kills the all-ASCII flood case)
-        if not _HAS_MB.search(blob[max(rs, p - w0) : re_]):
-            continue
-        raw = m.group(0)
-        run_g = w0 + rs
-        # forward-extend when the run reaches the window end OR ends
-        # within 3 bytes of it: a multibyte unit STRADDLING the window
-        # cut leaves a dangling lead/continuation prefix the structural
-        # match excludes, but the parent-geometry run continues through
-        # it — the extension re-reads from the file so the straddling
-        # unit reassembles (an invalid dangling tail just ends the
-        # re-match where the run truly ends)
-        if w0 + len(blob) < e_cap and len(blob) - re_ <= 3:
-            raw = _extend_utf8_run(reader, run_g, raw, e_cap)
-        if not _HAS_MB.search(raw):
-            continue
-        try:
-            text = raw.decode("utf-8")
-        except UnicodeDecodeError:
-            continue
-        if not all(c == "\t" or c.isprintable() for c in text):
-            continue
-        pos_chars = 0
-        byte_pos = run_g
-        while pos_chars < len(text) and byte_pos < own_end:
-            piece = text[pos_chars : pos_chars + max_len]
-            piece_bytes = piece.encode("utf-8")
-            if byte_pos >= p and len(piece) >= min_len and _HAS_MB.search(piece_bytes):
-                rows.append(_span_row(byte_pos, piece_bytes, "utf-8"))
-            byte_pos += len(piece_bytes)
-            pos_chars += max_len
-    return rows
-
-
-def _subchunk_spans(
-    reader, p: int, vlen: int, total: int, cfg: EngineConfig
-) -> list[tuple]:
-    """All span rows owned by sub-chunk [p, p+vlen), bit-identical to
-    the rows a cfg.chunk_size-geometry _blob_spans scan would emit for
-    starts in that range (pytest parity + differential fuzz).
-
-    Pathological bound (barrier-free content — e.g. one newline-less
-    printable region spanning a whole parent chunk): the backward
-    extension walks to the parent start, so per-task window memory
-    tops out at chunk_size+overlap — the SAME per-task bound the
-    chunk-table path always has — and the parent's bytes are re-read/
-    re-scanned up to n_sub times (32x at the default geometry; ~4 s of
-    vectorized numpy per 512 MiB parent). Real evidence terminates the
-    walk in a few bytes (newlines, NULs, and ~17% of random bytes are
-    barriers). A correct sub-chunk scan cannot avoid knowing the true
-    run start — only the parent-sized-task fallback (granule >=
-    chunk_size) trades the amplification back for parallelism."""
-    min_len, max_len = cfg.string_min_len, cfg.string_max_len
-    utf16 = cfg.string_scan_utf16
-    s_par, v_par = cfg.chunk_size, cfg.overlap
-    c_par = (p // s_par) * s_par
-    e_cap = min(c_par + s_par + v_par, total)
-    own_end = p + vlen
-    # forward margin: any owned piece fits (utf-8 worst case 4 bytes per
-    # char); max(overlap) keeps the degenerate one-sub-chunk-per-parent
-    # case reading exactly the parent blob
-    w1 = min(own_end + max(v_par, 4 * max_len), e_cap)
-    w0 = _find_window_start(reader, p, c_par, utf16) if p > c_par else p
-    blob = reader.read_at(w0, w1 - w0)
-    rows: list[tuple] = []
-    for pos, raw in _scan_ascii(blob, min_len, max_len):
-        g = w0 + pos
-        if p <= g < own_end:
-            rows.append(_span_row(g, raw, "ascii"))
-    rows.extend(
-        _utf8_owned_rows(blob, w0, p, own_end, e_cap, reader, min_len, max_len)
-    )
-    if utf16:
-        for le in (True, False):
-            enc = "utf-16le" if le else "utf-16be"
-            for pos, raw in _scan_utf16(blob, min_len, max_len, le):
-                g = w0 + pos
-                if p <= g < own_end:
-                    rows.append(_span_row(g, raw, enc))
-    return rows
-
-
-def subchunk_plan(
-    spark, total: int, chunk_size: int, granule: int
-) -> DataFrame:
-    """Sub-chunks tiling each parent chunk exactly (pure range
-    arithmetic): ragged last sub-chunk when granule does not divide
-    chunk_size, so ownership ranges never straddle a parent boundary."""
-    import math
-
-    n_sub = max(1, math.ceil(chunk_size / granule))
-    g2 = math.ceil(chunk_size / n_sub)
-    n_parents = max(0, math.ceil(total / chunk_size))
-    ids = spark.range(0, n_parents * n_sub)
-    j = F.col("id") % n_sub
-    start = F.floor(F.col("id") / n_sub).cast("long") * chunk_size + j * g2
-    return (
-        ids.select(
-            start.alias("start"),
-            F.least(
-                F.lit(g2), F.lit(chunk_size) - j * g2, F.lit(total) - start
-            ).alias("valid_length"),
-        )
-        .where(F.col("valid_length") > 0)
-    )
-
-
-def spans_from_evidence(
-    spark, path: str, cfg: EngineConfig, granule: int | None = None
-) -> DataFrame:
-    """Fused fetch+span-scan off the evidence file (no chunk bytes across
-    the JVM boundary; see scanner.scan_evidence for the rationale).
-    Plans at the Python-kernel granule for parallelism; row semantics
-    stay pinned to cfg.chunk_size geometry via the continuation-aware
-    sub-chunk scan above (identical rows to the chunk-table path).
-    Dispatches to the JVM kernel (sb_scan_strings — positioned read +
-    scan inside the executor JVM, same continuation semantics) when
-    registered; Python below is the pinned fallback."""
-    from swiftbeaver_spark.jvm import vec_kernel_active
-    from swiftbeaver_spark.source import evidence_length, open_evidence
-
-    total = evidence_length(path)
-    g = granule if granule is not None else PY_SCAN_GRANULE
-    plan = subchunk_plan(spark, total, cfg.chunk_size, min(cfg.chunk_size, g))
-    # scan limits: the chunk-table path derives spans from the truncated
-    # chunk table, so the evidence path filters sub-chunks by the same
-    # PARENT rules (a parent whose start clears max_bytes is scanned
-    # whole; sub-chunks never straddle parents by construction) —
-    # previously limits silently applied to hits but not spans (r12)
-    if cfg.max_bytes is not None:
-        plan = plan.where(
-            F.floor(F.col("start") / cfg.chunk_size) * cfg.chunk_size
-            < int(cfg.max_bytes)
-        )
-    if cfg.max_chunks is not None:
-        plan = plan.where(F.floor(F.col("start") / cfg.chunk_size) < int(cfg.max_chunks))
-    # partition count scales with scan bytes, floored at parallelism
-    # (r14, the shared evidence-path rule — config.
-    # EVIDENCE_PARTITION_BYTES)
-    from swiftbeaver_spark.config import EVIDENCE_PARTITION_BYTES
-
-    horizon = total
-    if cfg.max_bytes is not None:
-        horizon = min(
-            horizon, -(-int(cfg.max_bytes) // cfg.chunk_size) * cfg.chunk_size
-        )
-    if cfg.max_chunks is not None:
-        horizon = min(horizon, int(cfg.max_chunks) * cfg.chunk_size)
-    n_parts = max(
-        spark.sparkContext.defaultParallelism,
-        1,
-        -(-horizon // EVIDENCE_PARTITION_BYTES),
-    )
-    if vec_kernel_active(spark):
-        rows = F.call_udf(
-            "sb_scan_strings",
-            F.lit(path),
-            F.col("start").cast("long"),
-            F.col("valid_length").cast("long"),
-            F.lit(_strings_spec(cfg)),
-        )
-        return plan.repartition(n_parts).select(F.inline(rows))
-
-    def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        reader = open_evidence(path)
-        try:
-            for pdf in batches:
-                rows = []
-                for start, vlen in zip(pdf["start"], pdf["valid_length"]):
-                    rows.extend(
-                        _subchunk_spans(reader, int(start), int(vlen), total, cfg)
-                    )
-                yield pd.DataFrame(rows, columns=_SPAN_COLUMNS)
-        finally:
-            reader.close()
-
-    return plan.repartition(n_parts).mapInPandas(fused, schemas.STRING_SPANS)

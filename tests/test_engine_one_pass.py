@@ -1,13 +1,14 @@
-"""Engine one-pass adoption (round 12, VERDICT r11 task 1) + ADVICE
-r11 closures.
+"""Engine.run's evidence scan path.
 
-Engine.run(one_pass=True) must produce IDENTICAL tables to the default
-multi-pass fused path on raw and E01 evidence (the scans are the
-differential-pinned fused kernels; this file pins the ENGINE wiring:
-table graph, limits, persist lifetime, auto-switch rule), and the
-fused module must honor enable_entropy_detection=False (no entropy
-tables, no alignment gate — ADVICE r11) and the
-SPARK_GRAFT_NO_VEC_KERNEL hatch (loud ValueError — ADVICE r11).
+With the JVM kernel active, Engine.run(evidence_path=...) always runs
+the one-pass multi-scan; without it (a JRE-only host, or the
+SPARK_GRAFT_NO_VEC_KERNEL hatch) it scans the cached chunk table. Both
+must produce IDENTICAL tables to the chunk-table strategy
+(chunk_join=True) on raw and E01 evidence — with scan limits, with
+string scan on and off, and with entropy windows that divide neither
+the sub-chunk granule nor chunk_size. This file pins the ENGINE wiring
+(table graph, limits, persist lifetime, path selection); the scan
+kernels themselves are differential-pinned in tests/test_fused_scan.py.
 """
 
 from __future__ import annotations
@@ -31,9 +32,8 @@ def require_kernel(spark):
     assert ensure_kernel(spark), "JVM kernel must register in the test env"
 
 
-# engine geometry: PY_SCAN_GRANULE (16 MiB) >= chunk_size, so the
-# sub-chunk tiling degenerates to one sub-chunk per parent — window
-# aligned for any window size dividing chunk_size
+# engine geometry: SUBCHUNK_GRANULE (16 MiB) >= chunk_size, so the
+# sub-chunk tiling degenerates to one sub-chunk per parent
 CFG = dataclasses.replace(FUSED_CFG, chunk_size=2 << 20)
 
 TABLES = (
@@ -50,88 +50,118 @@ TABLES = (
 def _tables(result):
     out = {}
     for name in TABLES:
-        out[name] = sorted(map(tuple, result[name].collect()))
+        if name not in result.tables:
+            continue
+        df = result[name]
+        if name == "chunks":  # plan rows vs byte rows: compare geometry
+            df = df.select("chunk_id", "start", "valid_length")
+        out[name] = sorted(map(tuple, df.collect()))
     return out
 
 
+def _evidence(tmp_path, kind: str, seed: int, size: int) -> str:
+    data = build_image(seed, size)
+    if kind == "e01":
+        from swiftbeaver_spark.ewf import write_ewf
+
+        p = str(tmp_path / "ev.E01")
+        write_ewf(p, data, sectors_per_chunk=8)
+        return p
+    p = tmp_path / "ev.raw"
+    p.write_bytes(data)
+    return str(p)
+
+
 def _assert_same_run(spark, path, cfg=CFG):
+    """run(evidence_path) goes one-pass and equals run(chunk_join=True)."""
     eng = Engine(spark, cfg)
-    one = eng.run(evidence_path=path, one_pass=True)
+    one = eng.run(evidence_path=path)
     assert one.persisted, "one-pass must persist the raw metadata frame"
     try:
         got = _tables(one)
     finally:
         one.unpersist()
-    base = _tables(eng.run(evidence_path=path, one_pass=False))
-    for name in TABLES:
-        assert got[name] == base[name], name
-    assert got["hits"] and got["carved_files"] and got["entropy_regions"]
+    base = _tables(eng.run(evidence_path=path, chunk_join=True))
+    assert got == base
+    assert got["hits"] and got["carved_files"]
+    return got
 
 
 def test_one_pass_matches_default_raw(spark, tmp_path):
-    p = tmp_path / "ev.raw"
-    p.write_bytes(build_image(11, 7 << 20))
-    _assert_same_run(spark, str(p))
+    got = _assert_same_run(spark, _evidence(tmp_path, "raw", 11, 7 << 20))
+    assert got["entropy_regions"] and got["string_spans"]
 
 
 def test_one_pass_matches_default_e01(spark, tmp_path):
-    from swiftbeaver_spark.ewf import write_ewf
-
-    p = str(tmp_path / "ev.E01")
-    write_ewf(p, build_image(12, 5 << 20), sectors_per_chunk=8)
-    _assert_same_run(spark, p)
+    got = _assert_same_run(spark, _evidence(tmp_path, "e01", 12, 5 << 20))
+    assert got["entropy_regions"] and got["string_spans"]
 
 
 def test_one_pass_matches_default_with_limits(spark, tmp_path):
-    p = tmp_path / "ev.raw"
-    p.write_bytes(build_image(13, 7 << 20))
-    cfg = dataclasses.replace(CFG, max_bytes=3 << 20, max_chunks=3)
-    _assert_same_run(spark, str(p), cfg)
+    p = _evidence(tmp_path, "raw", 13, 7 << 20)
+    for strings in (True, False):
+        cfg = dataclasses.replace(
+            CFG, max_bytes=3 << 20, max_chunks=3, enable_string_scan=strings
+        )
+        _assert_same_run(spark, p, cfg)
+
+
+@pytest.mark.parametrize("kind", ["raw", "e01"])
+def test_string_scan_off_runs_one_pass(spark, tmp_path, kind):
+    """The CLI default (no --enable-string-scan) takes the one-pass
+    scan too: the UDF skips the span kernel, the run has no string
+    tables, and hits/carves/entropy equal the chunk-table run."""
+    cfg = dataclasses.replace(CFG, enable_string_scan=False)
+    got = _assert_same_run(spark, _evidence(tmp_path, kind, 16, 5 << 20), cfg)
+    assert "string_spans" not in got and "string_artefacts" not in got
+    assert got["entropy_regions"]
+
+
+@pytest.mark.parametrize("kind", ["raw", "e01"])
+def test_misaligned_entropy_window_runs_one_pass(spark, tmp_path, kind):
+    """entropy_window_size=3000 divides neither the granule nor
+    chunk_size; the sub-chunk tiling aligns to it on its own."""
+    cfg = dataclasses.replace(CFG, entropy_window_size=3000)
+    got = _assert_same_run(spark, _evidence(tmp_path, kind, 17, 5 << 20), cfg)
+    assert got["entropy_regions"]
+
+
+@pytest.mark.parametrize("kind", ["raw", "e01"])
+def test_no_kernel_runs_chunk_table(spark, tmp_path, monkeypatch, kind):
+    """Under SPARK_GRAFT_NO_VEC_KERNEL (the JRE-only path) run(evidence_
+    path) scans the cached chunk table — nothing persisted, the chunk
+    table carrying bytes — and yields the kernel run's tables."""
+    p = _evidence(tmp_path, kind, 18, 5 << 20)
+    eng = Engine(spark, CFG)
+    base = _tables(eng.run(evidence_path=p, chunk_join=True))
+    monkeypatch.setenv("SPARK_GRAFT_NO_VEC_KERNEL", "1")
+    res = eng.run(evidence_path=p)
+    assert not res.persisted and "data" in res["chunks"].columns
+    try:
+        assert _tables(res) == base
+    finally:
+        res["chunks"].unpersist()
 
 
 def test_auto_selects_one_pass_when_ready(spark, tmp_path):
-    """r12 rule: one-pass is the DEFAULT whenever the preconditions
-    hold — raw and E01 alike (the cold-cache A/B showed no regime
-    where multi-pass wins); misaligned geometry falls back quietly."""
-    import warnings as warnings_mod
-
-    from swiftbeaver_spark.ewf import write_ewf
-
-    raw = tmp_path / "ev.raw"
-    raw.write_bytes(build_image(14, 2 << 20))
-    eng = Engine(spark, CFG)
-    with warnings_mod.catch_warnings():
-        warnings_mod.simplefilter("always")  # defeat once-per-process dedup
-        with pytest.warns(UserWarning, match="one-pass"):
-            res = eng.run(evidence_path=str(raw))
-    assert res.persisted  # raw auto-selects one-pass too
-    res.unpersist()
-    e01 = str(tmp_path / "ev.E01")
-    write_ewf(e01, build_image(14, 2 << 20), sectors_per_chunk=8)
-    res = eng.run(evidence_path=e01)
-    assert res.persisted
-    res.unpersist()
-    # misaligned entropy geometry: quiet multi-pass fallback
-    bad = Engine(spark, dataclasses.replace(CFG, entropy_window_size=3000))
-    res = bad.run(evidence_path=str(raw))
-    assert not res.persisted
-
-
-def test_one_pass_true_rejects_other_strategies(spark, tmp_path):
-    eng = Engine(spark, CFG)
-    with pytest.raises(ValueError, match="one_pass"):
-        eng.run(evidence_bytes=b"\x00" * 1024, one_pass=True)
-    p = tmp_path / "ev.raw"
-    p.write_bytes(b"\x00" * (1 << 20))
-    with pytest.raises(ValueError, match="one_pass"):
-        eng.run(evidence_path=str(p), chunk_join=True, one_pass=True)
+    """With the kernel active every evidence run goes one-pass — raw
+    and E01, string scan off, any entropy window."""
+    raw = _evidence(tmp_path, "raw", 14, 2 << 20)
+    e01 = _evidence(tmp_path, "e01", 14, 2 << 20)
+    for path, cfg in (
+        (raw, CFG),
+        (e01, CFG),
+        (raw, dataclasses.replace(CFG, enable_string_scan=False)),
+        (raw, dataclasses.replace(CFG, entropy_window_size=3000)),
+    ):
+        res = Engine(spark, cfg).run(evidence_path=path)
+        assert res.persisted
+        res.unpersist()
 
 
 def test_detection_off_omits_entropy_tables(spark, tmp_path):
     """ADVICE r11: with enable_entropy_detection False the fused scan
-    must not return entropy tables (previously they were built anyway,
-    with the alignment gate off — silent divergence), and misaligned
-    geometry must be accepted since no entropy windows are computed."""
+    must not return entropy tables (the UDF skips the Ent kernel)."""
     p = tmp_path / "ev.raw"
     p.write_bytes(build_image(15, 3 << 20))
     cfg = dataclasses.replace(
@@ -145,21 +175,19 @@ def test_detection_off_omits_entropy_tables(spark, tmp_path):
         assert t["string_spans"].count() > 0
     finally:
         t["raw"].unpersist()
-    # engine auto-switch also declines (no string scan -> default path)
-    eng = Engine(spark, dataclasses.replace(CFG, enable_string_scan=False))
-    assert not eng._one_pass_auto(str(p))
 
 
 def test_no_vec_kernel_hatch_disables_fused(spark, tmp_path, monkeypatch):
     """ADVICE r11: the whole-kernel-family escape hatch must disable
-    sb_scan_all loudly (no Python fallback exists to mix in)."""
+    sb_scan_all loudly (no Python fallback exists to mix in); Engine.run
+    routes around it to the chunk table."""
     p = tmp_path / "ev.raw"
     p.write_bytes(b"\x00" * (1 << 20))
     monkeypatch.setenv("SPARK_GRAFT_NO_VEC_KERNEL", "1")
     with pytest.raises(ValueError, match="JVM kernel"):
         scan_all_from_evidence(spark, str(p), CFG, granule=GRANULE)
-    eng = Engine(spark, CFG)
-    assert not eng._one_pass_auto(str(p))
+    res = Engine(spark, CFG).run(evidence_path=str(p))
+    assert not res.persisted
 
 
 def test_zip_bucket_cache_batch_split_parity(spark, tmp_path):
@@ -170,7 +198,6 @@ def test_zip_bucket_cache_batch_split_parity(spark, tmp_path):
     import zipfile
 
     from swiftbeaver_spark.carve_op import carve_hits_with_evidence
-    from swiftbeaver_spark.scanner import scan_evidence
 
     def mk_zip(tag: bytes) -> bytes:
         bio = io.BytesIO()
@@ -190,7 +217,7 @@ def test_zip_bucket_cache_batch_split_parity(spark, tmp_path):
             ft for ft in DEFAULT_CONFIG.file_types if ft.type_id == "zip"
         ),
     )
-    hits = scan_evidence(spark, str(p), cfg)
+    hits = scan_all_from_evidence(spark, str(p), cfg)["hits"]
     base = sorted(map(tuple, carve_hits_with_evidence(hits, str(p), cfg).collect()))
     assert len(base) == 5
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
@@ -220,7 +247,7 @@ def test_one_pass_jpeg_png_carve_content(spark, tmp_path):
     p = tmp_path / "ev.raw"
     p.write_bytes(bytes(buf))
     eng = Engine(spark, CFG)
-    res = eng.run(evidence_path=str(p), one_pass=True)
+    res = eng.run(evidence_path=str(p))
     try:
         rows = {
             r["file_type"]: r

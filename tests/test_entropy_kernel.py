@@ -19,11 +19,8 @@ import pytest
 
 from swiftbeaver_spark.chunking import chunks_from_bytes
 from swiftbeaver_spark.config import DEFAULT_CONFIG
-from swiftbeaver_spark.entropy import (
-    entropy_regions,
-    entropy_windows,
-    entropy_windows_from_evidence,
-)
+from swiftbeaver_spark.entropy import entropy_regions, entropy_windows
+from swiftbeaver_spark.fused_scan import scan_all_from_evidence
 from swiftbeaver_spark.jvm import ensure_kernel
 
 
@@ -113,31 +110,38 @@ def test_threshold_filter_identical(spark, monkeypatch):
     assert jvm == _rows(entropy_windows(chunks, cfg))
 
 
+def _evidence_islands(spark, path: str, data: bytes, cfg, monkeypatch):
+    """Islands from the one-pass evidence scan (JVM) and from the
+    chunk-table scan under both kernels (JVM, then numpy)."""
+    fused = _rows(scan_all_from_evidence(spark, path, cfg)["entropy_windows"])
+    chunks = chunks_from_bytes(spark, data, cfg.chunk_size, cfg.overlap)
+    jvm = _rows(entropy_windows(chunks, cfg, merged=True))
+    _py(monkeypatch)
+    return fused, jvm, _rows(entropy_windows(chunks, cfg, merged=True))
+
+
 def test_evidence_raw_bit_exact(spark, monkeypatch, tmp_path):
-    cfg = _cfg(256, 0.0)
+    # mid threshold: islands split on the mixture's low-entropy parts,
+    # so many island maxima are compared bit for bit
+    cfg = _cfg(256, 4.5)
     data = mixed_blob(9, 1 << 19)
     p = tmp_path / "evidence.bin"
     p.write_bytes(data)
-    jvm = _rows(entropy_windows_from_evidence(spark, str(p), cfg))
-    _py(monkeypatch)
-    py = _rows(entropy_windows_from_evidence(spark, str(p), cfg))
-    assert jvm == py
-    # and the evidence path equals the chunk-table path (same grid)
-    monkeypatch.delenv("SPARK_GRAFT_NO_VEC_KERNEL")
-    chunks = chunks_from_bytes(spark, data, cfg.chunk_size, cfg.overlap)
-    assert jvm == _rows(entropy_windows(chunks, cfg))
+    fused, jvm, py = _evidence_islands(spark, str(p), data, cfg, monkeypatch)
+    assert fused == jvm == py
+    assert len(fused) > 10
 
 
 def test_evidence_ewf_bit_exact(spark, monkeypatch, tmp_path):
     from swiftbeaver_spark.ewf import write_ewf
 
-    cfg = _cfg(256, 0.0)
+    cfg = _cfg(256, 4.5)
     data = mixed_blob(11, 1 << 18)
     p = str(tmp_path / "evidence.E01")
     write_ewf(p, data)
-    jvm = _rows(entropy_windows_from_evidence(spark, p, cfg))
-    _py(monkeypatch)
-    assert jvm == _rows(entropy_windows_from_evidence(spark, p, cfg))
+    fused, jvm, py = _evidence_islands(spark, p, data, cfg, monkeypatch)
+    assert fused == jvm == py
+    assert len(fused) > 10
 
 
 def test_trailing_partial_window_dropped(spark, monkeypatch):

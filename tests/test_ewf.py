@@ -188,10 +188,11 @@ def test_multi_segment_roundtrip(tmp_path):
 
 def test_multi_segment_jvm_scan_matches(spark, tmp_path):
     """The Java EWF reader must handle segment chains identically:
-    sb_scan_evidence over an E01+E02 image == scan of the raw bytes."""
+    sb_scan_all over an E01+E02 image == scan of the raw bytes."""
     from swiftbeaver_spark.config import DEFAULT_CONFIG
     from swiftbeaver_spark.jvm import ensure_kernel, spec_for
     from swiftbeaver_spark.scanner import MAX_HITS_PER_CHUNK, compile_patterns
+    from tests.fixtures import scan_all_hits
 
     assert ensure_kernel(spark)
     data = bytearray(mixed_data(300_000))
@@ -213,10 +214,7 @@ def test_multi_segment_jvm_scan_matches(spark, tmp_path):
     spec = spec_for(patterns, MAX_HITS_PER_CHUNK)
 
     def hits(path):
-        [row] = spark.sql(
-            f"SELECT sb_scan_evidence('{path}', 0L, {len(data)}L, {len(data)}L, '{spec}') AS h"
-        ).collect()
-        return sorted(int(h) for h in row["h"])
+        return scan_all_hits(spark, path, len(data), spec)
 
     assert hits(e01) == hits(raw) != []
     offs = {h >> 16 for h in hits(e01)}
@@ -248,6 +246,7 @@ def test_short_final_chunk_roundtrip(spark, tmp_path):
     from swiftbeaver_spark.config import DEFAULT_CONFIG
     from swiftbeaver_spark.jvm import ensure_kernel, spec_for
     from swiftbeaver_spark.scanner import MAX_HITS_PER_CHUNK, compile_patterns
+    from tests.fixtures import scan_all_hits
 
     # 5.5 chunks of media; tail random (raw storage) to hit the
     # raw+short+Adler path, plus a compressible variant
@@ -269,7 +268,5 @@ def test_short_final_chunk_roundtrip(spark, tmp_path):
         p2 = str(tmp_path / f"short2_{variant}.E01")
         write_ewf(p2, bytes(planted), pad_final=False)
         spec = spec_for(compile_patterns(DEFAULT_CONFIG), MAX_HITS_PER_CHUNK)
-        [row] = spark.sql(
-            f"SELECT sb_scan_evidence('{p2}', 0L, {len(planted)}L, {len(planted)}L, '{spec}') AS h"
-        ).collect()
-        assert (len(data) - 100) in {int(h) >> 16 for h in row["h"]}
+        hits = scan_all_hits(spark, p2, len(planted), spec)
+        assert (len(data) - 100) in {h >> 16 for h in hits}

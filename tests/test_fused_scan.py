@@ -1,12 +1,12 @@
-"""One-pass multi-scan differentials (round 11, fused_scan.py).
+"""One-pass multi-scan differentials (fused_scan.py).
 
 scan_all_from_evidence must produce BYTE-IDENTICAL results to the
-three standalone evidence paths it fuses — signature hits
-(scanner.scan_evidence), string spans (strings_scan.
-spans_from_evidence) and entropy regions (entropy.
-entropy_regions_from_evidence) — on raw and EWF/E01 evidence, across
-content engineered to cross every sub-chunk boundary class (runs,
-patterns and high-entropy regions straddling granule edges).
+three chunk-table scans over cfg.chunk_size chunks — signature hits
+(scanner.scan_and_normalize), string spans (strings_scan.
+scan_string_spans) and entropy regions (entropy.entropy_regions) — on
+raw and EWF/E01 evidence, across content engineered to cross every
+sub-chunk boundary class (runs, patterns and high-entropy regions
+straddling granule edges).
 """
 
 from __future__ import annotations
@@ -16,12 +16,13 @@ import dataclasses
 import numpy as np
 import pytest
 
+from swiftbeaver_spark.chunking import chunks_from_file
 from swiftbeaver_spark.config import DEFAULT_CONFIG
-from swiftbeaver_spark.entropy import entropy_regions_from_evidence
+from swiftbeaver_spark.entropy import entropy_regions
 from swiftbeaver_spark.fused_scan import scan_all_from_evidence
 from swiftbeaver_spark.jvm import ensure_kernel
-from swiftbeaver_spark.scanner import scan_evidence
-from swiftbeaver_spark.strings_scan import spans_from_evidence
+from swiftbeaver_spark.scanner import scan_and_normalize
+from swiftbeaver_spark.strings_scan import scan_string_spans
 
 from tests.fixtures import mk_jpeg, mk_png, mk_sqlite
 
@@ -79,25 +80,25 @@ def build_image(seed: int, size: int) -> bytes:
     return bytes(buf)
 
 
-def _cmp(spark, path):
-    t = scan_all_from_evidence(spark, path, CFG, granule=GRANULE)
+def _rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()))
+
+
+def _cmp(spark, path, cfg=CFG):
+    """Fused scan vs the chunk-table scans over the same evidence."""
+    t = scan_all_from_evidence(spark, path, cfg, granule=GRANULE)
+    chunks = chunks_from_file(spark, path, cfg.chunk_size, cfg.overlap).cache()
     t["raw"].persist()
     try:
-        fused_hits = sorted(map(tuple, t["hits"].collect()))
-        base_hits = sorted(map(tuple, scan_evidence(spark, path, CFG).collect()))
-        assert fused_hits == base_hits and fused_hits
-        fused_spans = sorted(map(tuple, t["string_spans"].collect()))
-        base_spans = sorted(
-            map(tuple, spans_from_evidence(spark, path, CFG, granule=GRANULE).collect())
-        )
-        assert fused_spans == base_spans and fused_spans
-        fr = sorted(map(tuple, t["entropy_regions"].collect()))
-        br = sorted(
-            map(tuple, entropy_regions_from_evidence(spark, path, CFG).collect())
-        )
-        assert fr == br and fr
+        fused_hits = _rows(t["hits"])
+        assert fused_hits == _rows(scan_and_normalize(chunks, cfg)) and fused_hits
+        fused_spans = _rows(t["string_spans"])
+        assert fused_spans == _rows(scan_string_spans(chunks, cfg)) and fused_spans
+        fr = _rows(t["entropy_regions"])
+        assert fr == _rows(entropy_regions(chunks, cfg)) and fr
     finally:
         t["raw"].unpersist()
+        chunks.unpersist()
 
 
 @pytest.mark.parametrize("seed", [1, 2])
@@ -117,12 +118,19 @@ def test_fused_equals_standalone_e01(spark, tmp_path):
     _cmp(spark, p)
 
 
-def test_misaligned_entropy_geometry_raises(spark, tmp_path):
+def test_misaligned_entropy_window_tiles_aligned(spark, tmp_path):
+    """A window size dividing neither the granule nor chunk_size: the
+    sub-chunks tile at window multiples, so every table still equals
+    the chunk-table scans (windows restart at each parent start)."""
+    from swiftbeaver_spark.fused_scan import subchunk_plan
+
+    cfg = dataclasses.replace(CFG, entropy_window_size=3000)
+    plan = subchunk_plan(spark, 9 << 20, cfg.chunk_size, GRANULE, 3000)
+    starts = [r.start % cfg.chunk_size for r in plan.collect()]
+    assert all(s % 3000 == 0 for s in starts) and len(set(starts)) == 8
     p = tmp_path / "ev.raw"
-    p.write_bytes(b"\x00" * (1 << 20))
-    bad = dataclasses.replace(CFG, entropy_window_size=3000)  # !| granule
-    with pytest.raises(ValueError, match="aligned"):
-        scan_all_from_evidence(spark, str(p), bad, granule=GRANULE)
+    p.write_bytes(build_image(4, 9 << 20))
+    _cmp(spark, str(p), cfg)
 
 
 def test_requires_jvm_kernel(spark, tmp_path):

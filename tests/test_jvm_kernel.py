@@ -1,4 +1,4 @@
-"""JVM Aho-Corasick kernel equivalence: sb_scan_bytes / sb_scan_evidence
+"""JVM Aho-Corasick kernel equivalence: sb_scan_bytes / sb_scan_all
 must produce exactly the Python kernel's hits (overlapping matches,
 shared-prefix patterns, window-straddling matches, chunk geometry).
 
@@ -20,12 +20,12 @@ from swiftbeaver_spark.scanner import (
     MAX_HITS_PER_CHUNK,
     compile_patterns,
     find_all,
+    scan_and_normalize,
     scan_chunks,
     scan_chunks_jvm,
-    scan_evidence,
 )
 
-from tests.fixtures import ALL_FIXTURES
+from tests.fixtures import ALL_FIXTURES, scan_all_hits
 
 PATTERNS = compile_patterns(DEFAULT_CONFIG)
 
@@ -81,53 +81,62 @@ def test_bytes_udf_overlap_and_shared_prefix(spark):
 
 
 def test_evidence_udf_streams_across_io_windows(spark, tmp_path):
-    """A match straddling the kernel's 4 MiB read window must be found
-    (automaton state carries across refills)."""
+    """A match straddling a sub-chunk or parent-chunk read window must
+    be found exactly once: the block's overlap tail covers it, the
+    ownership rule drops the repeat."""
+    import dataclasses
+
+    from swiftbeaver_spark.fused_scan import scan_all_from_evidence
+
     assert ensure_kernel(spark)
-    win = 4 << 20
+    win = 1 << 20  # sub-chunk granule; parents are 4 windows
     sig = bytes.fromhex("FFD8FF")
-    buf = bytearray(win + 64)
-    buf[win - 1 : win + 2] = sig  # 1 byte before the boundary, 2 after
+    buf = bytearray(4 * win + 64)
     buf[10:13] = sig
+    buf[win - 1 : win + 2] = sig  # sub-chunk edge: 1 byte before, 2 after
+    buf[4 * win - 2 : 4 * win + 1] = sig  # parent edge
     path = str(tmp_path / "ev.bin")
     with open(path, "wb") as fh:
         fh.write(bytes(buf))
-    spec = spec_for(PATTERNS, MAX_HITS_PER_CHUNK)
-    [row] = spark.sql(
-        f"SELECT sb_scan_evidence('{path}', 0L, {len(buf)}L, {len(buf)}L, '{spec}') AS h"
-    ).collect()
-    offs = {int(h) >> 16 for h in row["h"] if PATTERNS[int(h) & 0xFFFF][1] == "jpeg_soi"}
-    assert {10, win - 1} <= offs
+    cfg = dataclasses.replace(DEFAULT_CONFIG, chunk_size=4 * win, overlap=4096)
+    hits = scan_all_from_evidence(spark, path, cfg, granule=win)["hits"]
+    offs = [r.global_offset for r in hits.collect() if r.pattern_id == "jpeg_soi"]
+    assert sorted(offs) == [10, win - 1, 4 * win - 2]
+
+
+def _hit_set(df) -> set[tuple[int, str, str]]:
+    return {(r.global_offset, r.pattern_id, r.file_type_id) for r in df.collect()}
 
 
 def test_scan_evidence_jvm_equals_python(spark, tmp_path):
-    """Full fused operator: JVM path output == Python path output on the
-    same evidence + chunk geometry (including overlap dedup)."""
+    """Full fused operator: the one-pass JVM scan's hits == the Python
+    chunk-table kernel's (the JRE-only path) on the same chunk geometry
+    (including overlap dedup at sub-chunk and parent edges), except the
+    loose-signature hits the scan-time gates drop."""
+    import dataclasses
+
+    from swiftbeaver_spark.chunking import chunks_from_file
+    from swiftbeaver_spark.fused_scan import scan_all_from_evidence
+
     blob = planted_blob(99, size=300_000)
     path = str(tmp_path / "ev.bin")
     with open(path, "wb") as fh:
         fh.write(blob)
-    import dataclasses
-
     cfg = dataclasses.replace(DEFAULT_CONFIG, chunk_size=64 * 1024, overlap=4096)
-
-    got_jvm = {
-        (r.global_offset, r.pattern_id, r.file_type_id)
-        for r in scan_evidence(spark, path, cfg).collect()
-    }
-    # force the Python path by monkeypatching availability
+    got_jvm = _hit_set(scan_all_from_evidence(spark, path, cfg, granule=16 * 1024)["hits"])
+    # force the Python kernel by monkeypatching availability
     import swiftbeaver_spark.jvm as jvm_mod
 
     saved = getattr(spark, jvm_mod._MARKER, None)
     try:
         setattr(spark, jvm_mod._MARKER, False)
-        got_py = {
-            (r.global_offset, r.pattern_id, r.file_type_id)
-            for r in scan_evidence(spark, path, cfg).collect()
-        }
+        chunks = chunks_from_file(spark, path, cfg.chunk_size, cfg.overlap)
+        got_py = _hit_set(scan_and_normalize(chunks, cfg))
     finally:
         setattr(spark, jvm_mod._MARKER, saved)
-    assert got_jvm == got_py != set()
+    assert got_jvm and got_jvm <= got_py
+    gated = {ft.type_id for ft in cfg.file_types if ft.validator in ("mp3", "bmp", "ico")}
+    assert {ftid for _, _, ftid in got_py - got_jvm} <= gated
 
 
 def test_scan_chunks_jvm_equals_python(spark):
@@ -155,7 +164,7 @@ def test_scan_chunks_jvm_equals_python(spark):
 
 
 def test_evidence_udf_reads_e01_natively(spark, tmp_path):
-    """sb_scan_evidence on an E01 container must yield the same hits as
+    """sb_scan_all on an E01 container must yield the same hits as
     on the raw image — chunk-table parse + zlib decompression + scan all
     inside the JVM, matches straddling EWF chunk boundaries included."""
     from swiftbeaver_spark.ewf import write_ewf
@@ -174,15 +183,8 @@ def test_evidence_udf_reads_e01_natively(spark, tmp_path):
     write_ewf(e01_path, blob)
 
     spec = spec_for(PATTERNS, MAX_HITS_PER_CHUNK)
-
-    def hits(path, length):
-        [row] = spark.sql(
-            f"SELECT sb_scan_evidence('{path}', 0L, {length}L, {length}L, '{spec}') AS h"
-        ).collect()
-        return sorted(int(h) for h in row["h"])
-
-    got_raw = hits(raw_path, len(blob))
-    got_e01 = hits(e01_path, len(blob))
+    got_raw = scan_all_hits(spark, raw_path, len(blob), spec)
+    got_e01 = scan_all_hits(spark, e01_path, len(blob), spec)
     assert got_e01 == got_raw != []
     assert ((cs - 1) << 16) in [h & ~0xFFFF for h in got_e01]  # boundary match found
 
@@ -320,13 +322,15 @@ def test_scan_plan_stays_jvm_side(spark, tmp_path):
         fh.write(blob)
     import dataclasses
 
+    from swiftbeaver_spark.fused_scan import scan_all_from_evidence
+
     cfg = dataclasses.replace(DEFAULT_CONFIG, chunk_size=32 * 1024, overlap=1024)
-    df = scan_evidence(spark, path, cfg)
+    df = scan_all_from_evidence(spark, path, cfg)["hits"]
     jexec = df._jdf.queryExecution()
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     plan = jexec.explainString(mode)
     assert "EvalPython" not in plan, plan
-    assert "sb_scan_evidence" in plan
+    assert "sb_scan_all" in plan
 
 
 def test_simhash_jvm_matches_numpy(spark):

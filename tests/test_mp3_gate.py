@@ -1,7 +1,6 @@
 """Scan-time mp3 bare-sync gate (round 13): the carver's 3-consecutive-
 valid-frames rule (carve_mp3, reference src/carve/mp3.rs:189-330),
-hoisted into the evidence-path scans (ScanGates.java + the Python
-fallback's _mp3_sync_ok). Contract:
+hoisted into the one-pass evidence scan (ScanGates.java). Contract:
 
 - evidence-path hits DROP exactly the bare-sync hits the carver would
   reject (invalid header chain, TAG marker, EOF inside the walk);
@@ -9,7 +8,8 @@ fallback's _mp3_sync_ok). Contract:
 - carved rows are byte-identical with the gate on (evidence-path hits)
   and off (manually supplied ungated hits) — the gate only removes
   hits that carve to None;
-- JVM and Python-fallback scans agree hit-for-hit, raw and E01 alike.
+- the ungated chunk-table scan of a host without the JVM kernel
+  carves the same rows; raw and E01 evidence gate hit-for-hit alike.
 """
 
 from __future__ import annotations
@@ -20,7 +20,9 @@ import random
 import pytest
 
 from swiftbeaver_spark.config import DEFAULT_CONFIG
-from swiftbeaver_spark.scanner import scan_evidence
+from swiftbeaver_spark.fused_scan import scan_all_from_evidence
+
+from tests.fixtures import assert_gates_sound
 
 MP3_CFG = dataclasses.replace(
     DEFAULT_CONFIG,
@@ -73,7 +75,7 @@ def _evidence() -> tuple[bytes, set[int], set[int]]:
 
 
 def _scan_offsets(spark, path: str) -> dict[str, set[int]]:
-    rows = scan_evidence(spark, path, MP3_CFG).collect()
+    rows = scan_all_from_evidence(spark, path, MP3_CFG)["hits"].collect()
     out: dict[str, set[int]] = {}
     for r in rows:
         out.setdefault(r.pattern_id, set()).add(r.global_offset)
@@ -93,26 +95,20 @@ def test_gate_drops_false_syncs_keeps_real(spark, tmp_path):
 
 
 def test_gate_python_fallback_identical(spark, tmp_path):
+    """The JRE-only path scans without gates; its carves must equal the
+    gated scan's."""
     buf, _, _ = _evidence()
     path = str(tmp_path / "mp3.raw")
     with open(path, "wb") as fh:
         fh.write(buf)
-    import swiftbeaver_spark.jvm as jvm_mod
-
-    got_jvm = _scan_offsets(spark, path)
-    saved = getattr(spark, jvm_mod._MARKER, None)
-    try:
-        setattr(spark, jvm_mod._MARKER, False)
-        got_py = _scan_offsets(spark, path)
-    finally:
-        setattr(spark, jvm_mod._MARKER, saved)
-    assert got_jvm == got_py
+    assert_gates_sound(spark, path, MP3_CFG)
 
 
 def test_gate_fuzzed_jvm_equals_python(spark, tmp_path):
     """Random bytes are dense in FF Ex false syncs with arbitrary
     header fields — fuzzes the frame-size table parity between
-    ScanGates.java and carvers/media._mp3_frame_size."""
+    ScanGates.java and carvers/media._mp3_frame_size: every hit the
+    gate drops must carve to nothing in the Python carver."""
     rng = random.Random(13)
     buf = bytearray(rng.randbytes(256 * 1024))
     # a couple of real streams so the keep side is exercised too
@@ -121,17 +117,8 @@ def test_gate_fuzzed_jvm_equals_python(spark, tmp_path):
     path = str(tmp_path / "fuzz.raw")
     with open(path, "wb") as fh:
         fh.write(bytes(buf))
-    import swiftbeaver_spark.jvm as jvm_mod
-
-    got_jvm = _scan_offsets(spark, path)
-    saved = getattr(spark, jvm_mod._MARKER, None)
-    try:
-        setattr(spark, jvm_mod._MARKER, False)
-        got_py = _scan_offsets(spark, path)
-    finally:
-        setattr(spark, jvm_mod._MARKER, saved)
-    assert got_jvm == got_py
-    assert any(got_jvm.values())
+    assert any(_scan_offsets(spark, path).values())
+    assert_gates_sound(spark, path, MP3_CFG)
 
 
 def test_gate_e01_equals_raw(spark, tmp_path):
@@ -168,7 +155,7 @@ def test_carved_rows_identical_gate_on_off(spark, tmp_path):
     ungated = spark.createDataFrame(
         rows, "global_offset long, file_type_id string, pattern_id string"
     )
-    gated = scan_evidence(spark, path, MP3_CFG)
+    gated = scan_all_from_evidence(spark, path, MP3_CFG)["hits"]
     assert gated.count() < len(rows)  # the gate actually dropped some
 
     sel = ["global_start", "global_end", "size", "sha256", "file_type", "errors"]

@@ -1,8 +1,9 @@
 """bmp / ico scan-time gates (round 13, generalizing the mp3 gate —
 see tests/test_mp3_gate.py for the m3 contract). Same soundness rule:
 a gate drops a hit only when the evidence bytes prove the carver would
-return None; carved rows are identical with the gate on or off; JVM
-and Python-fallback scans agree hit-for-hit, raw and E01 alike.
+return None; carved rows are identical with the gate on or off (and on
+the ungated chunk-table scan of a host without the JVM kernel); raw and
+E01 evidence gate hit-for-hit alike.
 """
 
 from __future__ import annotations
@@ -12,8 +13,8 @@ import random
 import struct
 
 from swiftbeaver_spark.config import DEFAULT_CONFIG
-from swiftbeaver_spark.scanner import scan_evidence
-from tests.fixtures import mk_bmp
+from swiftbeaver_spark.fused_scan import scan_all_from_evidence
+from tests.fixtures import assert_gates_sound, fallback_hits, mk_bmp
 
 GATE_CFG = dataclasses.replace(
     DEFAULT_CONFIG,
@@ -73,7 +74,7 @@ def _evidence() -> tuple[bytes, set[int], set[int]]:
 
 def _scan_offsets(spark, path: str) -> dict[str, set[int]]:
     out: dict[str, set[int]] = {}
-    for r in scan_evidence(spark, path, GATE_CFG).collect():
+    for r in scan_all_from_evidence(spark, path, GATE_CFG)["hits"].collect():
         out.setdefault(r.file_type_id, set()).add(r.global_offset)
     return out
 
@@ -104,17 +105,8 @@ def test_gates_python_fallback_and_e01_identical(spark, tmp_path):
     e01 = str(tmp_path / "gate.E01")
     write_ewf(e01, bytes(buf))
 
-    import swiftbeaver_spark.jvm as jvm_mod
-
-    got_jvm = _scan_offsets(spark, path)
-    saved = getattr(spark, jvm_mod._MARKER, None)
-    try:
-        setattr(spark, jvm_mod._MARKER, False)
-        got_py = _scan_offsets(spark, path)
-    finally:
-        setattr(spark, jvm_mod._MARKER, saved)
-    assert got_jvm == got_py
-    assert _scan_offsets(spark, e01) == got_jvm
+    assert_gates_sound(spark, path, GATE_CFG)
+    assert _scan_offsets(spark, e01) == _scan_offsets(spark, path)
 
 
 def test_carved_rows_identical_gates_on_off(spark, tmp_path):
@@ -137,7 +129,7 @@ def test_carved_rows_identical_gates_on_off(spark, tmp_path):
     ungated = spark.createDataFrame(
         rows, "global_offset long, file_type_id string, pattern_id string"
     )
-    gated = scan_evidence(spark, path, GATE_CFG)
+    gated = scan_all_from_evidence(spark, path, GATE_CFG)["hits"]
     assert gated.count() < len(rows)
 
     sel = ["file_type", "global_start", "global_end", "size", "sha256", "errors"]
@@ -157,9 +149,10 @@ def test_bmp_min_size_hoisted_into_gate(spark, tmp_path):
     file_size is below the type's min_size is dropped at scan time —
     finalize()'s min-size rejection (carvers/base.py:219) is a pure
     function of the declared size, which the carved size can only
-    shrink, so the drop is provably what the pipeline would do. JVM
-    and Python-fallback verdicts agree; the ungated hit carves to
-    zero rows, proving soundness directly."""
+    shrink, so the drop is provably what the pipeline would do. The
+    ungated hit carves to
+    zero rows, proving soundness directly; the ungated fallback scan
+    keeps it for the carver to reject."""
     import dataclasses as dc
 
     from swiftbeaver_spark.carve_op import carve_hits_with_evidence
@@ -178,25 +171,11 @@ def test_bmp_min_size_hoisted_into_gate(spark, tmp_path):
     with open(path, "wb") as fh:
         fh.write(bytes(buf))
 
-    import swiftbeaver_spark.jvm as jvm_mod
+    def bmp_offsets(hits):
+        return {r.global_offset for r in hits.collect() if r.file_type_id == "bmp"}
 
-    jvm_hits = {
-        r.global_offset
-        for r in scan_evidence(spark, path, cfg).collect()
-        if r.file_type_id == "bmp"
-    }
-    assert 1_000 not in jvm_hits
-    saved = getattr(spark, jvm_mod._MARKER, None)
-    try:
-        setattr(spark, jvm_mod._MARKER, False)
-        py_hits = {
-            r.global_offset
-            for r in scan_evidence(spark, path, cfg).collect()
-            if r.file_type_id == "bmp"
-        }
-    finally:
-        setattr(spark, jvm_mod._MARKER, saved)
-    assert py_hits == jvm_hits
+    assert 1_000 not in bmp_offsets(scan_all_from_evidence(spark, path, cfg)["hits"])
+    assert 1_000 in bmp_offsets(fallback_hits(spark, path, cfg))
 
     # soundness: the carver itself rejects the very hit the gate dropped
     ungated = spark.createDataFrame(
@@ -205,9 +184,5 @@ def test_bmp_min_size_hoisted_into_gate(spark, tmp_path):
     )
     assert carve_hits_with_evidence(ungated, path, cfg).count() == 0
     # and with min_size back at 5 the same hit survives BOTH stages
-    assert 1_000 in {
-        r.global_offset
-        for r in scan_evidence(spark, path, GATE_CFG).collect()
-        if r.file_type_id == "bmp"
-    }
+    assert 1_000 in bmp_offsets(scan_all_from_evidence(spark, path, GATE_CFG)["hits"])
     assert carve_hits_with_evidence(ungated, path, GATE_CFG).count() == 1

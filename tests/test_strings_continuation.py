@@ -1,14 +1,14 @@
-"""Granule-boundary parity for the fused strings scan.
+"""Granule-boundary parity for the one-pass strings scan.
 
-The fused evidence path plans at a sub-chunk granule for parallelism,
-but row semantics must stay pinned to cfg.chunk_size geometry (the
-chunk-table path / reference build_chunks anchor runs and max_len piece
-grids at chunk starts). These tests drive spans_from_evidence at a
-granule far smaller than chunk_size over content engineered to straddle
-every kind of boundary, and require bit-identical rows to a
-parent-geometry _blob_spans scan — the exact divergence ADVICE r9
-(high) flagged: tail re-emission and piece-grid re-anchoring at sub-
-chunk boundaries.
+The one-pass evidence scan plans at a sub-chunk granule for
+parallelism, but row semantics must stay pinned to cfg.chunk_size
+geometry (the chunk-table path / reference build_chunks anchor runs and
+max_len piece grids at chunk starts). These tests drive
+scan_all_from_evidence at a granule far smaller than chunk_size over
+content engineered to straddle every kind of boundary, and require
+bit-identical rows to a parent-geometry chunk-table scan — the exact
+divergence ADVICE r9 (high) flagged: tail re-emission and piece-grid
+re-anchoring at sub-chunk boundaries.
 """
 
 from __future__ import annotations
@@ -19,7 +19,8 @@ import random
 import pytest
 
 from swiftbeaver_spark.config import DEFAULT_CONFIG
-from swiftbeaver_spark.strings_scan import _blob_spans, spans_from_evidence
+from swiftbeaver_spark.fused_scan import scan_all_from_evidence
+from swiftbeaver_spark.strings_scan import _blob_spans
 
 CFG = dataclasses.replace(
     DEFAULT_CONFIG,
@@ -34,19 +35,26 @@ GRANULE = 512
 
 
 @pytest.fixture(params=["jvm", "python"])
-def kernel_mode(request, monkeypatch):
-    """Run every parity test under BOTH kernels: the JVM span kernel
-    (default) and the pinned Python fallback (SPARK_GRAFT_NO_VEC_KERNEL).
-    On a JRE-only host the 'jvm' param degrades to the Python path."""
+def oracle(request, spark):
+    """The parent-geometry chunk-table scan every parity test compares
+    against, under BOTH chunk-table kernels: the JVM bytes kernel and
+    the Python kernel a host without the JVM kernel runs."""
     if request.param == "python":
-        monkeypatch.setenv("SPARK_GRAFT_NO_VEC_KERNEL", "1")
-    else:
-        monkeypatch.delenv("SPARK_GRAFT_NO_VEC_KERNEL", raising=False)
-    return request.param
+        return reference_rows
+
+    def jvm_rows(data: bytes, cfg) -> list[tuple]:
+        from swiftbeaver_spark.chunking import chunks_from_bytes
+        from swiftbeaver_spark.strings_scan import scan_string_spans
+
+        chunks = chunks_from_bytes(spark, data, cfg.chunk_size, cfg.overlap)
+        return sorted(tuple(r) for r in scan_string_spans(chunks, cfg).collect())
+
+    return jvm_rows
 
 
 def reference_rows(data: bytes, cfg) -> list[tuple]:
-    """Parent-geometry scan: the pinned semantics (chunk-table path)."""
+    """Parent-geometry scan with the Python chunk-table kernel: the
+    pinned semantics."""
     rows: list[tuple] = []
     for c in range(0, len(data), cfg.chunk_size):
         blob = data[c : c + cfg.chunk_size + cfg.overlap]
@@ -63,7 +71,7 @@ def reference_rows(data: bytes, cfg) -> list[tuple]:
 def fused_rows(spark, tmp_path, data: bytes, cfg, granule=GRANULE) -> list[tuple]:
     p = tmp_path / "evidence.bin"
     p.write_bytes(data)
-    df = spans_from_evidence(spark, str(p), cfg, granule=granule)
+    df = scan_all_from_evidence(spark, str(p), cfg, granule=granule)["string_spans"]
     return sorted(tuple(r) for r in df.collect())
 
 
@@ -71,23 +79,23 @@ def place(buf: bytearray, off: int, payload: bytes) -> None:
     buf[off : off + len(payload)] = payload
 
 
-def test_ascii_run_straddles_granule(spark, tmp_path, kernel_mode):
+def test_ascii_run_straddles_granule(spark, tmp_path, oracle):
     data = bytearray(2 * 4096)  # two parent chunks, all NUL
     # 70-byte printable run straddling the 512 granule boundary: pieces
     # must stay anchored at 481 (grid 481, 497, 513, ...), and the
     # 512-start tail fragment the old code emitted must NOT appear
     place(data, 481, b"A" * 70)
     got = fused_rows(spark, tmp_path, bytes(data), CFG)
-    assert got == reference_rows(bytes(data), CFG)
+    assert got == oracle(bytes(data), CFG)
     starts = [r[0] for r in got if r[3] == "ascii"]
     assert 481 in starts and 513 in starts and 512 not in starts
 
 
-def test_long_ascii_run_spans_many_subchunks(spark, tmp_path, kernel_mode):
+def test_long_ascii_run_spans_many_subchunks(spark, tmp_path, oracle):
     data = bytearray(2 * 4096)
     place(data, 100, b"x" * 1500)  # crosses granule boundaries 512 and 1024
     got = fused_rows(spark, tmp_path, bytes(data), CFG)
-    ref = reference_rows(bytes(data), CFG)
+    ref = oracle(bytes(data), CFG)
     assert got == ref
     # piece grid anchored at 100 with step max_len=16
     ascii_starts = sorted(r[0] for r in got if r[3] == "ascii")
@@ -96,57 +104,57 @@ def test_long_ascii_run_spans_many_subchunks(spark, tmp_path, kernel_mode):
     ][: 1 if 1500 % 16 >= CFG.string_min_len else 0]
 
 
-def test_run_crossing_parent_boundary_reanchors(spark, tmp_path, kernel_mode):
+def test_run_crossing_parent_boundary_reanchors(spark, tmp_path, oracle):
     data = bytearray(2 * 4096)
     # run crossing the PARENT boundary at 4096: both paths re-anchor the
     # grid at 4096 (the parent blob truncation/re-anchor IS the pinned
     # semantics) — fused must reproduce the duplicate coverage exactly
     place(data, 4096 - 40, b"B" * 100)
     got = fused_rows(spark, tmp_path, bytes(data), CFG)
-    assert got == reference_rows(bytes(data), CFG)
+    assert got == oracle(bytes(data), CFG)
 
 
-def test_utf8_run_straddles_granule(spark, tmp_path, kernel_mode):
+def test_utf8_run_straddles_granule(spark, tmp_path, oracle):
     data = bytearray(2 * 4096)
     text = ("héllo wörld " * 12).encode("utf-8")  # MB chars both sides
     place(data, 500, text)
     got = fused_rows(spark, tmp_path, bytes(data), CFG)
-    assert got == reference_rows(bytes(data), CFG)
+    assert got == oracle(bytes(data), CFG)
     assert any(r[3] == "utf-8" for r in got)
 
 
-def test_utf8_global_check_kills_across_boundary(spark, tmp_path, kernel_mode):
+def test_utf8_global_check_kills_across_boundary(spark, tmp_path, oracle):
     """A non-printable (soft hyphen, Cf) AFTER the granule boundary must
     kill utf-8 pieces BEFORE it — whole-run semantics across sub-chunks."""
     data = bytearray(2 * 4096)
     run = ("é" * 200).encode("utf-8") + b"\xc2\xad" + ("é" * 20).encode("utf-8")
     place(data, 400, run)  # run covers [400, 400+440+2): crosses 512
     got = fused_rows(spark, tmp_path, bytes(data), CFG)
-    ref = reference_rows(bytes(data), CFG)
+    ref = oracle(bytes(data), CFG)
     assert got == ref
     assert not any(r[3] == "utf-8" for r in got)  # the whole run is dead
 
 
-def test_utf16_runs_straddle_granule(spark, tmp_path, kernel_mode):
+def test_utf16_runs_straddle_granule(spark, tmp_path, oracle):
     data = bytearray(2 * 4096)
     payload = "UTF SIXTEEN DATA EXAMPLE ROW".encode("utf-16-le") * 12
     place(data, 490, payload)  # crosses 512 and 1024
     got = fused_rows(spark, tmp_path, bytes(data), CFG)
-    assert got == reference_rows(bytes(data), CFG)
+    assert got == oracle(bytes(data), CFG)
     assert any(r[3] == "utf-16le" for r in got)
 
 
-def test_zero_fill_and_exact_boundary_runs(spark, tmp_path, kernel_mode):
+def test_zero_fill_and_exact_boundary_runs(spark, tmp_path, oracle):
     data = bytearray(3 * 4096)
     place(data, 512 - 32, b"C" * 32)  # ends exactly at a granule boundary
     place(data, 1024, b"D" * 48)  # starts exactly at a granule boundary
     place(data, 2048 - 8, b"E" * 16)  # 8 bytes each side
     got = fused_rows(spark, tmp_path, bytes(data), CFG)
-    assert got == reference_rows(bytes(data), CFG)
+    assert got == oracle(bytes(data), CFG)
 
 
 @pytest.mark.parametrize("seed", [1, 2, 3])
-def test_differential_fuzz(spark, tmp_path, seed, kernel_mode):
+def test_differential_fuzz(spark, tmp_path, seed, oracle):
     """Random mixture of every content class vs the parent-geometry
     reference — granule chosen NOT to divide chunk_size so the ragged
     last sub-chunk path is exercised too."""
@@ -171,17 +179,17 @@ def test_differential_fuzz(spark, tmp_path, seed, kernel_mode):
     data = bytes(data[:total])
     cfg = dataclasses.replace(CFG, string_min_len=3, string_max_len=7)
     granule = 509  # prime: ragged tiling, boundaries land everywhere
-    assert fused_rows(spark, tmp_path, data, cfg, granule=granule) == reference_rows(
+    assert fused_rows(spark, tmp_path, data, cfg, granule=granule) == oracle(
         data, cfg
     )
 
 
-def test_degenerate_granule_equals_chunk(spark, tmp_path, kernel_mode):
+def test_degenerate_granule_equals_chunk(spark, tmp_path, oracle):
     """granule >= chunk_size reduces to exactly the parent-geometry scan."""
     data = bytes(random.Random(7).randrange(256) for _ in range(6000))
     assert fused_rows(
         spark, tmp_path, data, CFG, granule=1 << 20
-    ) == reference_rows(data, CFG)
+    ) == oracle(data, CFG)
 
 
 @pytest.mark.parametrize("seed", [11, 12])
@@ -216,7 +224,7 @@ def test_bytes_kernel_differential_fuzz(spark, tmp_path, seed):
     assert jvm_rows == reference_rows(data, cfg)
 
 
-def test_utf8_unit_straddles_window_end(spark, tmp_path, kernel_mode):
+def test_utf8_unit_straddles_window_end(spark, tmp_path, oracle):
     """A multibyte char STRADDLING the sub-chunk read-window end (w1 =
     own_end + margin) leaves a dangling lead the structural scan
     excludes; the run-global printability check must still see the
@@ -232,27 +240,26 @@ def test_utf8_unit_straddles_window_end(spark, tmp_path, kernel_mode):
     run += b"\xc2\xad" + "é".encode() * 4  # soft hyphen at 779 kills ALL
     place(data, 490, run)
     got = fused_rows(spark, tmp_path, bytes(data), CFG)
-    ref = reference_rows(bytes(data), CFG)
+    ref = oracle(bytes(data), CFG)
     assert got == ref
     assert not any(r[3] == "utf-8" for r in got)
 
 
-def test_utf8_unit_straddles_window_end_run_survives(spark, tmp_path, kernel_mode):
+def test_utf8_unit_straddles_window_end_run_survives(spark, tmp_path, oracle):
     """Same straddle geometry but the run stays printable — pieces
     owned by every sub-chunk must keep the TRUE (extended) run grid."""
     data = bytearray(2 * 4096)
     run = b"a" + "é".encode() * 200  # [490, 891): crosses 768 mid-unit
     place(data, 490, run)
     got = fused_rows(spark, tmp_path, bytes(data), CFG)
-    assert got == reference_rows(bytes(data), CFG)
+    assert got == oracle(bytes(data), CFG)
     assert any(r[3] == "utf-8" for r in got)
 
 
-def test_e01_container_matches_raw(spark, tmp_path, kernel_mode):
-    """spans_from_evidence over an EWF/E01 container must emit exactly
-    the raw-image rows — the positioned-read primitives (Python
-    EwfReader / JVM EwfImage.readAt) serve the backward-barrier and
-    forward-extension reads through chunk decompression."""
+def test_e01_container_matches_raw(spark, tmp_path, oracle):
+    """The one-pass scan over an EWF/E01 container must emit exactly
+    the raw-image rows — EwfImage.readAt serves the backward-barrier
+    and forward-extension reads through chunk decompression."""
     from swiftbeaver_spark.ewf import write_ewf
 
     data = bytearray(2 * 4096)
@@ -262,43 +269,21 @@ def test_e01_container_matches_raw(spark, tmp_path, kernel_mode):
     raw = bytes(data)
     e01 = tmp_path / "ev.E01"
     write_ewf(str(e01), raw, sectors_per_chunk=2)  # 1 KiB chunks: many
-    df = spans_from_evidence(spark, str(e01), CFG, granule=GRANULE)
+    df = scan_all_from_evidence(spark, str(e01), CFG, granule=GRANULE)["string_spans"]
     got = sorted(tuple(r) for r in df.collect())
-    assert got == reference_rows(raw, CFG)
+    assert got == oracle(raw, CFG)
 
 
 # --- 1 MiB extension-step boundary (ADVICE r10 low) ------------------------
 #
-# _extend_utf8_run reads forward in 1 MiB doubling blocks; a block
+# The forward UTF-8 run extension reads in 1 MiB doubling blocks; a block
 # boundary that cuts a multibyte unit in half leaves a dangling lead the
 # structural re-match excludes, and truncating there makes the run-global
 # printability check cover only a prefix. The small-geometry fuzz above
 # cannot reach the 1 MiB step — these run a >1.3 MiB newline-free run.
 
 
-class _FakeReader:
-    def __init__(self, data: bytes):
-        self.data = data
-
-    def read_at(self, pos: int, n: int) -> bytes:
-        return self.data[pos : pos + n]
-
-
-def test_extend_utf8_run_reassembles_1mib_cut_unit():
-    """Direct unit pin: the first 1 MiB read ends 1 byte into a 3-byte
-    '€' (run is all-€ from offset 1; 3k + 2^20 ≡ 1 mod 3), and the
-    extension must keep reading until the run's TRUE end instead of
-    truncating at the dangling lead."""
-    from swiftbeaver_spark.strings_scan import _extend_utf8_run
-
-    run = ("€" * 400_000).encode("utf-8")  # 1.2 MiB, no barriers inside
-    data = b"\n" + run + b"\n" + b"\x00" * 100
-    tail = data[1 : 1 + 3 * 1000]  # structural prefix at a unit boundary
-    got = _extend_utf8_run(_FakeReader(data), 1, tail, len(data))
-    assert got == run
-
-
-def test_1mib_step_cut_printability_is_run_global(spark, tmp_path, kernel_mode):
+def test_1mib_step_cut_printability_is_run_global(spark, tmp_path, oracle):
     """End to end: a soft hyphen (Cf, non-printable) PAST the 1 MiB
     extension cut must kill every utf-8 piece of the run — the
     truncating code emitted the pre-cut prefix's pieces, which the
@@ -309,12 +294,12 @@ def test_1mib_step_cut_printability_is_run_global(spark, tmp_path, kernel_mode):
     run += b"\xc2\xad" + ("€" * 16).encode("utf-8")
     place(data, 1, b"\n".join([b"", run, b""]))  # barriers both ends
     got = fused_rows(spark, tmp_path, bytes(data), big_cfg, granule=256 << 10)
-    ref = reference_rows(bytes(data), big_cfg)
+    ref = oracle(bytes(data), big_cfg)
     assert got == ref
     assert not any(r[3] == "utf-8" for r in got)
 
 
-def test_1mib_step_cut_run_survives(spark, tmp_path, kernel_mode):
+def test_1mib_step_cut_run_survives(spark, tmp_path, oracle):
     """Same 1 MiB-cut geometry, fully printable run: the reassembled
     extension must reproduce the parent-geometry piece grid exactly."""
     big_cfg = dataclasses.replace(CFG, chunk_size=4 << 20)
@@ -322,107 +307,6 @@ def test_1mib_step_cut_run_survives(spark, tmp_path, kernel_mode):
     run = ("€" * 460_000).encode("utf-8")
     place(data, 1, b"\n".join([b"", run, b""]))
     got = fused_rows(spark, tmp_path, bytes(data), big_cfg, granule=256 << 10)
-    ref = reference_rows(bytes(data), big_cfg)
+    ref = oracle(bytes(data), big_cfg)
     assert got == ref
     assert any(r[3] == "utf-8" for r in got)
-
-
-# --- pure-Python hypothesis differential (no Spark: the continuation
-# logic itself vs the parent-geometry reference, hundreds of examples) -
-
-
-class _BufReader:
-    def __init__(self, data: bytes):
-        self.data = data
-
-    def read_at(self, pos: int, length: int) -> bytes:
-        return self.data[pos : pos + length]
-
-
-def _tile_rows(data: bytes, cfg, granule: int) -> list[tuple]:
-    """Union of _subchunk_spans over the exact sub-chunk tiling the
-    Spark plan produces (subchunk_plan arithmetic, replayed locally)."""
-    import math
-
-    from swiftbeaver_spark.strings_scan import _subchunk_spans
-
-    reader = _BufReader(data)
-    total = len(data)
-    s = cfg.chunk_size
-    n_sub = max(1, math.ceil(s / granule))
-    g2 = math.ceil(s / n_sub)
-    rows: list[tuple] = []
-    for parent in range(max(0, math.ceil(total / s))):
-        for j in range(n_sub):
-            p = parent * s + j * g2
-            vlen = min(g2, s - j * g2, total - p)
-            if vlen > 0:
-                rows.append((p, vlen))
-    out: list[tuple] = []
-    for p, vlen in rows:
-        out.extend(_subchunk_spans(reader, p, vlen, total, cfg))
-    return sorted(out)
-
-
-try:
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-
-    _seg = st.one_of(
-        st.binary(min_size=1, max_size=60),
-        st.text(
-            alphabet=st.characters(min_codepoint=0x20, max_codepoint=0x7E),
-            min_size=1,
-            max_size=80,
-        ).map(str.encode),
-        st.text(
-            alphabet=st.characters(
-                min_codepoint=0x20, max_codepoint=0x2FFFF, exclude_categories=("Cs",)
-            ),
-            min_size=1,
-            max_size=30,
-        ).map(lambda t: t.encode("utf-8")),
-        st.text(
-            alphabet=st.characters(min_codepoint=0x20, max_codepoint=0x7E),
-            min_size=1,
-            max_size=20,
-        ).map(lambda t: t.encode("utf-16-le")),
-        st.text(
-            alphabet=st.characters(min_codepoint=0x20, max_codepoint=0x7E),
-            min_size=1,
-            max_size=20,
-        ).map(lambda t: t.encode("utf-16-be")),
-        st.just(b"\x00" * 17),
-        st.just(b"\xc2\xad"),  # printable-killing Cf char
-        st.just(b"\xed\xa0\x80"),  # structural-but-invalid surrogate
-        st.just(b"\xc3"),  # dangling lead
-    )
-
-    @settings(
-        max_examples=150,
-        deadline=None,
-        suppress_health_check=[HealthCheck.function_scoped_fixture],
-    )
-    @given(
-        segs=st.lists(_seg, min_size=1, max_size=40),
-        granule=st.sampled_from([96, 128, 177, 500]),
-        max_len=st.sampled_from([2, 5, 9, 16]),
-        overlap=st.sampled_from([16, 64, 96]),
-    )
-    def test_hypothesis_continuation_differential(segs, granule, max_len, overlap):
-        """For ANY byte soup, ragged granule, and overlap (including
-        overlaps SMALLER than 4*max_len — the margin term's other
-        branch), the continuation-aware sub-chunk scan must equal the
-        parent-geometry reference."""
-        data = b"".join(segs)[: 3 * 1024]
-        cfg = dataclasses.replace(
-            CFG,
-            chunk_size=1024,
-            overlap=overlap,
-            string_min_len=2,
-            string_max_len=max_len,
-        )
-        assert _tile_rows(data, cfg, granule) == reference_rows(data, cfg)
-
-except ImportError:  # pragma: no cover - hypothesis ships in the image
-    pass

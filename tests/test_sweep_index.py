@@ -126,7 +126,7 @@ def test_evidence_path_sweep_branch_parity(spark, tmp_path):
 
     from swiftbeaver_spark.carve_op import carve_hits_with_evidence
     from swiftbeaver_spark.config import DEFAULT_CONFIG
-    from swiftbeaver_spark.scanner import scan_evidence
+    from swiftbeaver_spark.fused_scan import scan_all_from_evidence
 
     from tests.fixtures import mk_zip
 
@@ -151,7 +151,7 @@ def test_evidence_path_sweep_branch_parity(spark, tmp_path):
             if ft.type_id in ("bzip2", "gzip", "zip")
         ),
     )
-    hits = scan_evidence(spark, str(p), cfg)
+    hits = scan_all_from_evidence(spark, str(p), cfg)["hits"]
     swept = sorted(map(tuple, carve_hits_with_evidence(hits, str(p), cfg).collect()))
     assert len(swept) >= 4
 
@@ -189,7 +189,9 @@ def test_evidence_path_sweep_branch_parity(spark, tmp_path):
         map(
             tuple,
             carve_hits_with_evidence(
-                scan_evidence(spark, str(p), cfg_unbounded), str(p), cfg_unbounded
+                scan_all_from_evidence(spark, str(p), cfg_unbounded)["hits"],
+                str(p),
+                cfg_unbounded,
             ).collect(),
         )
     )

@@ -85,7 +85,7 @@ def main() -> None:
 
     import swiftbeaver_spark.carve_op as carve_mod
     from swiftbeaver_spark.carve_op import carve_hits_with_evidence
-    from swiftbeaver_spark.scanner import scan_evidence
+    from swiftbeaver_spark.fused_scan import scan_all_from_evidence
 
     cfg = dataclasses.replace(
         DEFAULT_CONFIG,
@@ -95,7 +95,7 @@ def main() -> None:
         enable_string_scan=False,
         enable_entropy_detection=False,
     )
-    hits = scan_evidence(spark, path, cfg).cache()
+    hits = scan_all_from_evidence(spark, path, cfg)["hits"].cache()
     total_hits = hits.count()
     print(f"# scanned {total_hits} hits", file=sys.stderr)
 

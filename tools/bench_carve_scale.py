@@ -42,7 +42,7 @@ import duckdb
 from swiftbeaver_spark.carve_op import carve_hits_with_chunks, carve_hits_with_evidence
 from swiftbeaver_spark.chunking import chunks_from_file, materialize_chunks, read_chunks
 from swiftbeaver_spark.config import DEFAULT_CONFIG
-from swiftbeaver_spark.scanner import scan_evidence
+from swiftbeaver_spark.fused_scan import scan_all_from_evidence
 from swiftbeaver_spark.session import get_spark
 
 SF01 = "/root/testdata/sf0.1"
@@ -111,7 +111,7 @@ def main() -> None:
 
         # hits once, via the production fused JVM scan; persisted so the
         # strategy walls below are carve-only + evidence access
-        hits = scan_evidence(spark, img, cfg).persist()
+        hits = scan_all_from_evidence(spark, img, cfg)["hits"].persist()
         t0 = time.time()
         n_hits = hits.count()
         scan_wall = round(time.time() - t0, 3)

@@ -25,18 +25,16 @@ evidence-path plan (each stage re-reads its own byte ranges — the
 positioned-read strategy), then ONE combined run gives the end-to-end
 wall; MiB/s = image_size / wall.
 
-Usage: python tools/bench_engine_1gib.py [mib] [e01] [onepass|multipass]
+Usage: python tools/bench_engine_1gib.py [mib] [e01]
   -> one JSON line {"engine_full_pipeline_1gib": {...}}
 Passing the literal arg `e01` converts the image to an EWF/E01
 container first (write_ewf, zlib per chunk) and runs the WHOLE
 pipeline against the container — the distributed-E01-source stress
-(every stage decompresses only the chunks its reads touch).
-`onepass`/`multipass` force Engine.run(one_pass=True/False); default
-is the engine's auto rule (one-pass for raw AND E01 alike whenever
-the kernel/geometry preconditions hold — the r12 default — with
-multi-pass only as the precondition fallback). The
-JSON records the resolved strategy plus host-load snapshots at run
-start and end (VERDICT r11 task 3 — self-adjudicating rows).
+(every stage decompresses only the chunks its reads touch). The
+engine picks the scan path (one-pass when the JVM kernel registers,
+the chunk table otherwise); the JSON records which one ran plus
+host-load snapshots at run start and end (VERDICT r11 task 3 —
+self-adjudicating rows).
 """
 import dataclasses
 import hashlib
@@ -117,13 +115,6 @@ def build_image(path: str, size_mib: int) -> list[dict]:
 
 def main() -> None:
     host_start = host_snapshot()
-    # resolved one_pass strategy: literal argv flags force it; default
-    # None = the engine's auto rule (one-pass for raw and E01 alike
-    # when the kernel/geometry preconditions hold; multi-pass is the
-    # precondition fallback — _one_pass_auto, default since r12)
-    one_pass = True if "onepass" in sys.argv[2:] else (
-        False if "multipass" in sys.argv[2:] else None
-    )
     spark = get_spark(app_name="swiftbeaver-engine-1gib")
     spark.sparkContext.setLogLevel("ERROR")
     tmp = tempfile.mkdtemp(prefix="sb1gib_")
@@ -167,10 +158,10 @@ def main() -> None:
     # persisted raw metadata frame); later scan stages read the cache —
     # the per-stage split is no longer read-dominated by construction.
     stages = {}
-    run = engine.run(evidence_path=path, one_pass=one_pass)
+    run = engine.run(evidence_path=path)
     resolved_one_pass = bool(run.persisted)
-    print(f"# strategy: {'one-pass' if resolved_one_pass else 'multi-pass'}"
-          f" (arg {one_pass})", file=sys.stderr)
+    print(f"# strategy: {'one-pass' if resolved_one_pass else 'chunk table'}",
+          file=sys.stderr)
     for stage in ("hits", "carved_files", "string_spans", "string_artefacts",
                   "entropy_regions", "browser_history"):
         t0 = time.time()
@@ -211,7 +202,7 @@ def main() -> None:
     # per-stage walls above stay uncached so each stage's own cost is
     # honest)
     t0 = time.time()
-    run2 = engine.run(evidence_path=path, cache_intermediates=True, one_pass=one_pass)
+    run2 = engine.run(evidence_path=path, cache_intermediates=True)
     carved = run2["carved_files"].select("global_start", "size", "sha256").collect()
     for t in ("hits", "string_artefacts", "entropy_regions", "browser_history"):
         run2[t].count()
@@ -226,7 +217,7 @@ def main() -> None:
     # observed wrapper and MISS, the round-10 cache-order pitfall);
     # driving carved_files populates the cache, so the browser action
     # pays only sqlite parse + page recovery
-    run_c = engine.run(evidence_path=path, cache_intermediates=True, one_pass=one_pass)
+    run_c = engine.run(evidence_path=path, cache_intermediates=True)
     run_c["carved_files"].count()
     t0 = time.time()
     browser_cnt = run_c["browser_history"].count()

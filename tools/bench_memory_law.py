@@ -114,8 +114,8 @@ def main() -> None:
         for i in range(REPS):
             load = host_snapshot()["load_1m"]
             t0 = time.time()
-            run = engine.run(evidence_path=path, cache_intermediates=True,
-                             one_pass=True)
+            run = engine.run(evidence_path=path, cache_intermediates=True)
+            assert run.persisted, "the one-pass scan needs the JVM kernel"
             carved = run["carved_files"].select(
                 "global_start", "size", "sha256").collect()
             for t in ("hits", "string_artefacts", "entropy_regions",

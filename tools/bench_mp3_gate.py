@@ -2,7 +2,7 @@
 showed mp3 as the top aggregate carve term — ~10k bare-sync false
 hits/GiB (11-bit frame sync) for ~23 real files, ~6 s of the 1 GiB
 carve stage. Round 13 hoists the carver's 3-consecutive-valid-frames
-rule to hit time (ScanGates.java / scanner._mp3_sync_ok). This tool
+rule to hit time (ScanGates.java). This tool
 measures what that buys, in-session and alternating (host-variance
 discipline):
 
@@ -52,7 +52,7 @@ def main() -> None:
 
     import swiftbeaver_spark.scanner as scanner_mod
     from swiftbeaver_spark.carve_op import carve_hits_with_evidence
-    from swiftbeaver_spark.scanner import scan_evidence
+    from swiftbeaver_spark.fused_scan import scan_all_from_evidence
 
     cfg = dataclasses.replace(
         DEFAULT_CONFIG, enable_string_scan=False, enable_entropy_detection=False
@@ -64,7 +64,7 @@ def main() -> None:
         scanner_mod.mp3_gate_indexes = real_gate if gate_on else (lambda _cfg: [])
         try:
             t0 = time.time()
-            hits = scan_evidence(spark, path, cfg)
+            hits = scan_all_from_evidence(spark, path, cfg)["hits"]
             total = hits.count()
             scan_wall = round(time.time() - t0, 3)
             mp3 = hits.where(hits.file_type_id == "mp3").count()

@@ -61,7 +61,7 @@ def main() -> None:
         }
 
     # JVM kernel single-core: one 256 MiB chunk = one task = one core,
-    # through the registered sb_scan_evidence UDF (includes file read)
+    # through one sb_scan_all call, signature scan only (includes file read)
     from swiftbeaver_spark.jvm import ensure_kernel, spec_for
     from swiftbeaver_spark.scanner import MAX_HITS_PER_CHUNK
 
@@ -78,7 +78,7 @@ def main() -> None:
             path = os.path.join(tmp, f"jvm_{name}.raw")
             with open(path, "wb") as fh:
                 fh.write(data)
-            q = f"SELECT size(sb_scan_evidence('{path}', 0L, {len(data)}L, {len(data)}L, '{spec}')) AS n"
+            q = f"SELECT size(sb_scan_all('{path}', 0L, {len(data)}L, '0\\n{spec}\\n\\n').hits) AS n"
             spark.sql(q).collect()  # warm JIT + page cache
             secs = timeit(lambda q=q: spark.sql(q).collect(), n)
             results[f"jvm_kernel_{name}_256mib_1core"] = {
@@ -93,9 +93,9 @@ def main() -> None:
             fh.write(b"\x00" * (mib * 1024 * 1024))
 
         def scan_only(path=path):
-            from swiftbeaver_spark.scanner import scan_evidence
+            from swiftbeaver_spark.fused_scan import scan_all_from_evidence
 
-            assert scan_evidence(spark, path, cfg).count() == 0
+            assert scan_all_from_evidence(spark, path, cfg)["hits"].count() == 0
 
         secs = timeit(scan_only, n)
         results[f"scan_only_{mib}mib"] = {
@@ -122,9 +122,9 @@ def main() -> None:
     dense_engine = Engine(spark, dense_cfg)
 
     def jpeg_dense():
-        from swiftbeaver_spark.scanner import scan_evidence
+        from swiftbeaver_spark.fused_scan import scan_all_from_evidence
 
-        hits = scan_evidence(spark, dense_path, dense_cfg)
+        hits = scan_all_from_evidence(spark, dense_path, dense_cfg)["hits"]
         carved = dense_engine.carve(hits, evidence_path=dense_path)
         assert carved.count() == 200
 

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from swiftbeaver_spark.carve_op import carve_hits_with_chunks, carve_hits_with_evidence
 from swiftbeaver_spark.chunking import read_chunks
 from swiftbeaver_spark.config import DEFAULT_CONFIG
-from swiftbeaver_spark.scanner import scan_evidence
+from swiftbeaver_spark.fused_scan import scan_all_from_evidence
 from swiftbeaver_spark.session import get_spark
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -50,7 +50,7 @@ def main() -> None:
         overlap=0,
         file_types=tuple(ft for ft in DEFAULT_CONFIG.file_types if ft.type_id == "jpeg"),
     )
-    hits = scan_evidence(spark, img, cfg).persist()
+    hits = scan_all_from_evidence(spark, img, cfg)["hits"].persist()
     n_hits = hits.count()
     chunks = read_chunks(spark, chunk_pq)
     ev_len = os.path.getsize(img)

@@ -42,7 +42,7 @@ def main() -> None:
     build_image(path, SIZE_MIB)
 
     from swiftbeaver_spark.carve_op import carve_hits_with_evidence
-    from swiftbeaver_spark.scanner import scan_evidence
+    from swiftbeaver_spark.fused_scan import scan_all_from_evidence
 
     # ALL default formats, not just the planted six: random/text fill
     # produces false-positive hits for loose signatures, which is the
@@ -52,7 +52,7 @@ def main() -> None:
         enable_string_scan=False,
         enable_entropy_detection=False,
     )
-    hits = scan_evidence(spark, path, cfg).cache()
+    hits = scan_all_from_evidence(spark, path, cfg)["hits"].cache()
     n_hits = hits.count()
     by_type = {
         r["file_type_id"]: r["n"]
