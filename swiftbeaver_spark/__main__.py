@@ -129,14 +129,14 @@ def main(argv: list[str] | None = None) -> int:
         result_tables = {"chunks": chunks, "hits": hits, "carved_files": carved}
         from swiftbeaver_spark.engine import RunResult
 
-        result = RunResult(result_tables)
+        result = RunResult(result_tables, persisted=[chunks])
         result.tables["run_summary"] = engine.run_summary(result_tables)
     else:
         result = engine.run(evidence_path=args.input)
 
-    write_tables(result, args.output, fmt=args.format, run_id=run_id)
-
-    summary = result["run_summary"].collect()[0].asDict()
+    # the summary row write_tables wrote, from its own write counts
+    summary = write_tables(result, args.output, fmt=args.format, run_id=run_id)
+    result.unpersist()
     elapsed = time.time() - t0
     mib = summary["bytes_scanned"] / (1024 * 1024)
     report = {

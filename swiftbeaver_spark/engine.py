@@ -6,8 +6,9 @@ channels. Spark trace of the same plan (SURVEY §3.2):
 
     raw = scan_all(evidence)                   # one read per sub-chunk feeds
     hits/strings/entropy = project(raw)        #   all three scans (JVM UDF)
-    carved = carve(hits)                       # mapInPandas per hit
-    browser_* = parse(carved sqlite)           # sqlite3-in-UDF + joins
+    carved = carve(hits)                       # mapInPandas per hit (persisted)
+    browser_* = parse(carved sqlite)           # one sqlite3-in-UDF pass per DB
+                                               #   (persisted) + joins
     sinks: parquet/jsonl/csv per table
 
 Without the JVM kernel (or with chunk_join) the three scans run over a
@@ -28,7 +29,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from swiftbeaver_spark import chunking, schemas
+from swiftbeaver_spark import chunking
 from swiftbeaver_spark.carve_op import carve_hits_with_chunks, carve_hits_with_evidence
 from swiftbeaver_spark.config import DEFAULT_CONFIG, EngineConfig
 from swiftbeaver_spark.entropy import entropy_regions
@@ -69,9 +70,9 @@ def _observation_filled(obs) -> bool:
 @dataclass
 class RunResult:
     tables: dict[str, DataFrame]
-    # stage frames persisted by run(cache_intermediates=True); the
-    # CALLER owns their lifetime — repeated runs in one session leak
-    # executor storage unless unpersist() frees them (ADVICE r9)
+    # stage frames run() persisted (see Engine.run); the CALLER owns
+    # their lifetime — repeated runs in one session leak executor
+    # storage unless unpersist() frees them (ADVICE r9)
     persisted: list[DataFrame] = field(default_factory=list)
 
     # per-stage Observation objects (CollectMetrics riding the stage
@@ -109,21 +110,14 @@ class RunResult:
         got = {k: int(o.get["n"]) for k, o in self.observations.items()}
         return self._summary_select(got)
 
-    def summary_from_counts(self, counts: dict[str, int]) -> DataFrame | None:
+    def summary_from_counts(self, counts: dict[str, int]) -> DataFrame:
         """run_summary from per-stage row counts the CALLER itself
         produced (one per full stage action — write_tables records the
         count of every stage write via a fresh write-time Observation).
         Unlike observed_summary this cannot be poisoned by a partial
         pre-drive between run() and the write (ADVICE r10 medium): the
-        counts come from the very actions that produced the output.
-        Returns None if any summary-feeding stage table lacks a count."""
-        needed = [
-            n
-            for n in ("hits", "carved_files", "string_spans", "string_artefacts")
-            if n in self.tables
-        ]
-        if any(n not in counts for n in needed):
-            return None
+        counts come from the very actions that produced the output. A
+        stage with no count reads 0."""
         return self._summary_select({k: int(v) for k, v in counts.items()})
 
     def _summary_select(self, got: dict[str, int]) -> DataFrame:
@@ -143,9 +137,9 @@ class RunResult:
         )
 
     def unpersist(self) -> None:
-        """Free the stage caches created by run(cache_intermediates=
-        True). Call once every consumer of the tables has materialised
-        (lazy frames read through the cache while it is live).
+        """Free the stage caches run() created. Call once every
+        consumer of the tables has materialised (lazy frames read
+        through the cache while it is live).
 
         Blocking on purpose (r13): DataFrame.unpersist defaults to
         async block dropping, so back-to-back runs (stress bench,
@@ -279,14 +273,19 @@ class Engine:
         that drive several tables (write_tables, the stress bench);
         OFF by default so single-table uses stay cache-free. Stage
         outputs are metadata rows (spans/hits/carves), orders of
-        magnitude smaller than evidence. On the one-pass path the raw
-        metadata frame is always persisted (that persist is what makes
-        the read happen once) and string_spans is NOT re-persisted — it
-        is a projection of that frame, and double-storing the span
-        content bytes OOMed an 8 GiB heap at 10 GiB evidence (r13).
-        The caches are CALLER-owned: call RunResult.unpersist() when
-        done, or repeated runs in one session accumulate executor
-        storage."""
+        magnitude smaller than evidence. On the one-pass path
+        string_spans is NOT re-persisted — it is a projection of the
+        raw frame below, and double-storing the span content bytes
+        OOMed an 8 GiB heap at 10 GiB evidence (r13).
+
+        Always persisted: the one-pass raw metadata frame (that persist
+        is what makes the read happen once) and, when the run builds
+        browser tables (`evidence_path` set, sqlite among the types),
+        the carve frame and the browser parse frame, so the carve and
+        each DB's parse run once however many tables are driven. All
+        are in RunResult.persisted and CALLER-owned: call
+        RunResult.unpersist() when done, or repeated runs in one
+        session accumulate executor storage."""
         from swiftbeaver_spark.jvm import vec_kernel_active
 
         positioned = evidence_path is not None and not chunk_join
@@ -385,6 +384,10 @@ class Engine:
         cache_intermediates: bool,
         persisted_pre: list[DataFrame] | None = None,
     ) -> RunResult:
+        """Stage tables -> RunResult (persists, counter observations,
+        browser tables, lazy run_summary). RunResult.persisted holds
+        `persisted_pre` (the one-pass raw frame) first and the browser
+        parse frame last; the caller frees them (RunResult.unpersist)."""
         # Persist FIRST (on the raw stage plans), THEN attach the
         # counter observations on top. Order matters: Spark's cache
         # manager substitutes by LOGICAL-PLAN equality, and the derived
@@ -395,6 +398,10 @@ class Engine:
         # cache exists to avoid (caught by round-10 self-review; the
         # raw-vs-observed mismatch was verified real on PySpark 4.1.2).
         persisted: list[DataFrame] = list(persisted_pre or [])
+        parse_browser = evidence_path is not None and any(
+            ft.type_id == "sqlite" for ft in self.cfg.file_types
+        )
+        to_persist: list[str] = []
         if cache_intermediates:
             # Under one-pass (persisted_pre holds the raw metadata
             # frame) string_spans is a cheap PROJECTION of that
@@ -410,18 +417,17 @@ class Engine:
             # per extra drive; real-compute stages (carve, artefact
             # regexes) persist as before.
             skip = {"string_spans"} if persisted_pre else set()
-            for name in (
-                "hits",
-                "carved_files",
-                "string_spans",
-                "string_artefacts",
-                "entropy_regions",
-            ):
-                if name in tables and name not in skip:
-                    tables[name] = tables[name].persist(
-                        StorageLevel.MEMORY_AND_DISK
-                    )
-                    persisted.append(tables[name])
+            stages = ("hits", "carved_files", "string_spans", "string_artefacts", "entropy_regions")
+            to_persist = [n for n in stages if n in tables and n not in skip]
+        if parse_browser and "carved_files" not in to_persist:
+            # the carve feeds both the carved_files sink and the browser
+            # parse; unpersisted, each consumer re-runs it (and
+            # re-writes the carved bytes under cfg.output_dir). One
+            # metadata row per carved file, no payload bytes.
+            to_persist.append("carved_files")
+        for name in to_persist:
+            tables[name] = tables[name].persist(StorageLevel.MEMORY_AND_DISK)
+            persisted.append(tables[name])
         # browser stage reads the (possibly persisted) stage frame, NOT
         # the observation-wrapped one below: a browser-table drive must
         # not fill the carve observation (observed_summary's contract)
@@ -439,29 +445,17 @@ class Engine:
                 obs = Observation()
                 tables[name] = tables[name].observe(obs, F.count(F.lit(1)).alias("n"))
                 observations[name] = obs
-        if evidence_path is not None and any(
-            ft.type_id == "sqlite" for ft in self.cfg.file_types
-        ):
-            from swiftbeaver_spark.parsers.browser import extract_browser_tables
-            from swiftbeaver_spark.parsers.sqlite_pages import recover_history_from_pages
+        if parse_browser:
+            from swiftbeaver_spark.parsers.browser import browser_tables, parse_carved_dbs
 
-            carved_sqlite = carved.where(F.col("file_type") == "sqlite")
-            browser = extract_browser_tables(carved_sqlite, evidence_path)
-            history = browser["browser_history"]
-            if self.cfg.enable_sqlite_page_recovery:
-                # recovery augments history for DBs whose intact parse found
-                # nothing (reference gates per-DB on 0 rows,
-                # src/pipeline/workers.rs:300-368): anti-join on source_file
-                recovered = recover_history_from_pages(carved_sqlite, evidence_path)
-                parsed_sources = history.select("source_file").distinct()
-                history = history.unionByName(
-                    recovered.join(parsed_sources, "source_file", "left_anti").select(
-                        *[f.name for f in schemas.BROWSER_HISTORY.fields]
-                    )
-                )
-            tables["browser_history"] = history
-            tables["browser_cookies"] = browser["browser_cookies"]
-            tables["browser_downloads"] = browser["browser_downloads"]
+            # one parse pass per carved DB, persisted: the three browser
+            # tables (and page recovery's merge) are projections of it
+            recovery = self.cfg.enable_sqlite_page_recovery
+            parsed = parse_carved_dbs(
+                carved.where(F.col("file_type") == "sqlite"), evidence_path, recovery
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+            persisted.append(parsed)
+            tables.update(browser_tables(parsed, recovery))
         # the lazy run_summary DataFrame stays the standalone form
         # (single-table users); multi-table flows use observed_summary()
         tables["run_summary"] = self.run_summary(tables)
@@ -498,42 +492,26 @@ def write_tables(
     out_dir: str,
     fmt: str = "parquet",
     run_id: str | None = None,
-) -> None:
+) -> dict:
     """Sinks (reference src/metadata/{jsonl,csv,parquet}.rs). Parquet is
     the scale path; JSONL/CSV parity formats for the reference's outputs.
 
-    run_summary is built from row counts THIS function's own write
-    actions produced (a fresh write-time Observation per stage write;
-    dryrun uses the count directly) — one arithmetic chunks aggregate
-    instead of re-deriving every subtree (the second-evidence-pass
-    hazard, VERDICT r9 task 3), and immune to the undercount a partial
-    pre-drive between run() and write_tables would plant in the
-    run()-time observations (ADVICE r10 medium)."""
+    Returns the run_summary row it wrote (as a dict; dryrun writes
+    nothing and returns the row it would have written). The row is
+    built from row counts THIS function's own write actions produced
+    (a fresh write-time Observation per stage write; dryrun uses the
+    count directly) plus one arithmetic chunks aggregate, instead of
+    re-deriving every subtree (the second-evidence-pass hazard, VERDICT
+    r9 task 3), and immune to the undercount a partial pre-drive
+    between run() and write_tables would plant in the run()-time
+    observations (ADVICE r10 medium)."""
     from pyspark.sql import Observation
 
     run_id = run_id or make_run_id()
     write_counts: dict[str, int] = {}
-    # summary last: its counts come from the stage writes above it
-    names = sorted(
-        (n for n in result.tables if n != "chunks"),
-        key=lambda n: n == "run_summary",
-    )
-    for name in names:
-        df = result.tables[name]
-        if name == "run_summary":
-            counted = result.summary_from_counts(write_counts)
-            if counted is not None:
-                df = counted
-        if fmt == "dryrun":
-            # reference DryRun sink (src/metadata/mod.rs:129-171):
-            # execute the pipeline, count, write nothing
-            write_counts[name] = df.count()
-            continue
-        obs = None
-        if name != "run_summary":
-            obs = Observation()
-            df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-        out = df.withColumn("run_id", F.lit(run_id))
+
+    def write(name: str, out: DataFrame) -> None:
+        out = out.withColumn("run_id", F.lit(run_id))
         writer = out.write.mode("overwrite")
         path = f"{out_dir}/{name}"
         if fmt == "parquet":
@@ -548,6 +526,22 @@ def write_tables(
             out.write.mode("overwrite").option("header", True).csv(path)
         else:
             raise ValueError(f"unknown sink format: {fmt}")
-        if obs is not None:
-            # the write action just drove the observed frame end to end
-            write_counts[name] = int(obs.get["n"])
+
+    for name in sorted(n for n in result.tables if n not in ("chunks", "run_summary")):
+        df = result.tables[name]
+        if fmt == "dryrun":
+            # reference DryRun sink (src/metadata/mod.rs:129-171):
+            # execute the pipeline, count, write nothing
+            write_counts[name] = df.count()
+            continue
+        obs = Observation()
+        write(name, df.observe(obs, F.count(F.lit(1)).alias("n")))
+        # the write action just drove the observed frame end to end
+        write_counts[name] = int(obs.get["n"])
+
+    # summary last: its counts come from the stage writes above
+    summary = result.summary_from_counts(write_counts)
+    row = summary.collect()[0]
+    if fmt != "dryrun":
+        write("run_summary", summary.sparkSession.createDataFrame([row], summary.schema))
+    return row.asDict()

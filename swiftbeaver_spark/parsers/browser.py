@@ -10,11 +10,14 @@ column-candidate fallbacks, the three relational extractions:
 
 Spark design: the per-file extraction runs sqlite3 inside an Arrow
 mapInPandas (one small carved DB per row — the joins over a single
-70 kB file belong in sqlite, exactly as the reference runs them);
-everything cross-file and everything scalar (timestamp conversion,
-transition/visit-type label decode, state stringification) happens in
-Catalyst expressions so the hot path stays JVM-side and the output
-unions across thousands of carved DBs are plain DataFrames.
+70 kB file belong in sqlite, exactly as the reference runs them). One
+pass per DB reads the blob once, runs all three extractions and the
+optional page scan, and emits one kind-tagged frame that the engine
+persists; the three tables are projections of it. Everything
+cross-file and everything scalar (timestamp conversion, transition/
+visit-type label decode, state stringification) happens in Catalyst
+expressions so the hot path stays JVM-side and the output unions
+across thousands of carved DBs are plain DataFrames.
 """
 
 from __future__ import annotations
@@ -27,60 +30,42 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BooleanType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from swiftbeaver_spark import schemas
+from swiftbeaver_spark.parsers.sqlite_pages import merge_page_records, scan_pages
 from swiftbeaver_spark.parsers.timeconv import (
     unix_micros_to_timestamp,
-    unix_seconds_to_timestamp,
     webkit_micros_to_timestamp,
 )
 
-_RAW_HISTORY = StructType(
-    [
-        StructField("browser", StringType(), False),
-        StructField("url", StringType(), False),
-        StructField("title", StringType(), True),
-        StructField("raw_time", LongType(), True),
-        StructField("raw_kind", LongType(), True),  # transition / visit_type
-        StructField("source_file", StringType(), False),
-    ]
+# One kind-tagged frame carries every record one carved DB yields: the
+# three relational extractions plus, with page recovery on, the
+# page-scan records. Each kind fills its own columns, in its
+# extractor's tuple order; the rest are null.
+_PARSED = (
+    "kind string, browser string, url string, title string, raw_time bigint,"
+    " raw_kind bigint, host string, name string, value string, path string,"
+    " raw_expires bigint, raw_last_access bigint, raw_creation bigint,"
+    " is_secure boolean, is_http_only boolean, target_path string,"
+    " raw_start bigint, raw_end bigint, total_bytes bigint, raw_state bigint,"
+    " visit_time timestamp, scan_order bigint, source_file string"
 )
-
-_RAW_COOKIES = StructType(
-    [
-        StructField("browser", StringType(), False),
-        StructField("host", StringType(), False),
-        StructField("name", StringType(), False),
-        StructField("value", StringType(), True),
-        StructField("path", StringType(), True),
-        StructField("raw_expires", LongType(), True),
-        StructField("raw_last_access", LongType(), True),
-        StructField("raw_creation", LongType(), True),
-        StructField("is_secure", BooleanType(), True),
-        StructField("is_http_only", BooleanType(), True),
-        StructField("source_file", StringType(), False),
-    ]
-)
-
-_RAW_DOWNLOADS = StructType(
-    [
-        StructField("browser", StringType(), False),
-        StructField("url", StringType(), True),
-        StructField("target_path", StringType(), True),
-        StructField("raw_start", LongType(), True),
-        StructField("raw_end", LongType(), True),
-        StructField("total_bytes", LongType(), True),
-        StructField("raw_state", LongType(), True),
-        StructField("source_file", StringType(), False),
-    ]
-)
+_PARSED_COLUMNS = [c.split()[0] for c in _PARSED.split(",")]
+_KIND_COLUMNS = {
+    "history": "browser url title raw_time raw_kind source_file",
+    "cookies": "browser host name value path raw_expires raw_last_access"
+    " raw_creation is_secure is_http_only source_file",
+    "downloads": "browser url target_path raw_start raw_end total_bytes raw_state source_file",
+    "page": "url title visit_time scan_order source_file",
+}
+_KIND_SLOTS = {k: [_PARSED_COLUMNS.index(c) for c in v.split()] for k, v in _KIND_COLUMNS.items()}
+# columns the output tables declare non-null, per kind
+_KIND_REQUIRED = {
+    "history": ("browser", "url", "source_file"),
+    "cookies": ("browser", "host", "name", "source_file"),
+    "downloads": ("browser", "source_file"),
+    "page": ("url", "source_file"),
+}
 
 
 def _table_columns(conn: sqlite3.Connection, table: str) -> set[str]:
@@ -236,19 +221,53 @@ def _extract_downloads(conn: sqlite3.Connection, source: str) -> list[tuple]:
     return rows
 
 
-def _db_iterator(evidence_path: str, kind: str):
-    """mapInPandas worker: rows (global_start, size, path) -> raw records."""
-    extractors = {
-        "history": _extract_history,
-        "cookies": _extract_cookies,
-        "downloads": _extract_downloads,
-    }
-    columns = {
-        "history": [f.name for f in _RAW_HISTORY.fields],
-        "cookies": [f.name for f in _RAW_COOKIES.fields],
-        "downloads": [f.name for f in _RAW_DOWNLOADS.fields],
-    }
-    extract = extractors[kind]
+_EXTRACTORS = (
+    ("history", _extract_history),
+    ("cookies", _extract_cookies),
+    ("downloads", _extract_downloads),
+)
+
+
+def _tagged(kind: str, rows: list[tuple]) -> Iterator[list]:
+    """Per-kind tuples -> full-width _PARSED rows."""
+    slots = _KIND_SLOTS[kind]
+    for row in rows:
+        out = [None] * len(_PARSED_COLUMNS)
+        out[0] = kind
+        for i, v in zip(slots, row):
+            out[i] = v
+        yield out
+
+
+def parse_db(blob: bytes, source: str, page_recovery: bool) -> list[list]:
+    """Every record one carved DB image yields, as _PARSED rows: one
+    temp file and one connection serve the three extractions, and the
+    page scan reads the same blob."""
+    rows: list[list] = []
+    fd, tmp = tempfile.mkstemp(suffix=".sqlite")
+    try:
+        with os.fdopen(fd, "wb") as out:
+            out.write(blob)
+        conn = sqlite3.connect(f"file:{tmp}?mode=ro&immutable=1", uri=True)
+        try:
+            for kind, extract in _EXTRACTORS:
+                try:
+                    rows.extend(_tagged(kind, extract(conn, source)))
+                except sqlite3.Error:
+                    pass
+        finally:
+            conn.close()
+    except sqlite3.Error:
+        pass
+    finally:
+        os.unlink(tmp)
+    if page_recovery:
+        rows.extend(_tagged("page", scan_pages(blob, source)))
+    return rows
+
+
+def _parse_worker(evidence_path: str, page_recovery: bool):
+    """mapInPandas worker: rows (global_start, size, path) -> _PARSED."""
 
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from swiftbeaver_spark.source import open_evidence
@@ -256,27 +275,29 @@ def _db_iterator(evidence_path: str, kind: str):
         reader = open_evidence(evidence_path)
         try:
             for pdf in batches:
-                rows: list[tuple] = []
+                rows: list[list] = []
                 for gstart, size, rel in zip(pdf["global_start"], pdf["size"], pdf["path"]):
                     blob = reader.read_at(int(gstart), int(size))
-                    fd, tmp = tempfile.mkstemp(suffix=".sqlite")
-                    try:
-                        with os.fdopen(fd, "wb") as out:
-                            out.write(blob)
-                        conn = sqlite3.connect(f"file:{tmp}?mode=ro&immutable=1", uri=True)
-                        try:
-                            rows.extend(extract(conn, str(rel)))
-                        finally:
-                            conn.close()
-                    except sqlite3.Error:
-                        pass
-                    finally:
-                        os.unlink(tmp)
-                yield pd.DataFrame(rows, columns=columns[kind])
+                    rows.extend(parse_db(blob, str(rel), page_recovery))
+                # object dtype: a column mixing None with ints would
+                # otherwise coerce to float64 and round webkit µs
+                # (~1.3e16, above 2**53)
+                out = pd.DataFrame(rows, columns=_PARSED_COLUMNS, dtype=object)
+                out["visit_time"] = pd.to_datetime(out["visit_time"])
+                yield out
         finally:
             reader.close()
 
     return work
+
+
+def parse_carved_dbs(
+    carved_sqlite: DataFrame, evidence_path: str, page_recovery: bool
+) -> DataFrame:
+    """carved_files (file_type='sqlite') -> the kind-tagged parse frame:
+    one read and one parse per carved DB (browser_tables projects it)."""
+    src = carved_sqlite.select("global_start", "size", "path")
+    return src.mapInPandas(_parse_worker(evidence_path, page_recovery), _PARSED)
 
 
 _CHROME_TRANSITIONS = [
@@ -313,15 +334,18 @@ def _browser_time(browser: F.Column, raw: F.Column) -> F.Column:
     )
 
 
-def extract_browser_tables(
-    carved_sqlite: DataFrame, evidence_path: str
-) -> dict[str, DataFrame]:
-    """carved_files (file_type='sqlite') -> {browser_history,
-    browser_cookies, browser_downloads} with final schemas."""
-    src = carved_sqlite.select("global_start", "size", "path")
+def browser_tables(parsed: DataFrame, page_recovery: bool) -> dict[str, DataFrame]:
+    """parse_carved_dbs' frame -> {browser_history, browser_cookies,
+    browser_downloads} with final schemas."""
 
-    raw_hist = src.mapInPandas(_db_iterator(evidence_path, "history"), _RAW_HISTORY)
-    history = raw_hist.select(
+    def kind(name: str) -> DataFrame:
+        # coalesce types the kind's required columns non-null, as the
+        # output schemas declare (a malformed DB's NULL there reads "")
+        return parsed.where(F.col("kind") == name).withColumns(
+            {c: F.coalesce(F.col(c), F.lit("")) for c in _KIND_REQUIRED[name]}
+        )
+
+    history = kind("history").select(
         "browser",
         F.lit("Default").alias("profile"),
         "url",
@@ -334,9 +358,19 @@ def extract_browser_tables(
         .alias("visit_source"),
         "source_file",
     )
+    if page_recovery:
+        # recovery augments history for DBs whose intact parse found
+        # nothing (reference gates per-DB on 0 rows,
+        # src/pipeline/workers.rs:300-368): anti-join on source_file
+        recovered = merge_page_records(kind("page"))
+        parsed_sources = history.select("source_file").distinct()
+        history = history.unionByName(
+            recovered.join(parsed_sources, "source_file", "left_anti").select(
+                *[f.name for f in schemas.BROWSER_HISTORY.fields]
+            )
+        )
 
-    raw_cook = src.mapInPandas(_db_iterator(evidence_path, "cookies"), _RAW_COOKIES)
-    cookies = raw_cook.select(
+    cookies = kind("cookies").select(
         "host",
         "name",
         "value",
@@ -356,8 +390,7 @@ def extract_browser_tables(
         "source_file",
     )
 
-    raw_dl = src.mapInPandas(_db_iterator(evidence_path, "downloads"), _RAW_DOWNLOADS)
-    downloads = raw_dl.select(
+    downloads = kind("downloads").select(
         "url",
         "target_path",
         _browser_time(F.col("browser"), F.col("raw_start")).alias("start_time"),

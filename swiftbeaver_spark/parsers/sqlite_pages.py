@@ -6,31 +6,20 @@ record decode, overflow-page reassembly, URL extraction via the string
 pipeline's regex, title heuristic, plausible-time filter; dedupe by URL
 keeping first non-null title/visit_time.
 
-Spark design: the byte-level decode is a Pandas-UDF pass per carved DB;
-the dedupe-merge is the reference's HashMap entry/and_modify expressed
-as a groupBy with min_by over the scan order (deterministic where the
-reference's HashMap iteration was not).
+Spark design: the byte-level decode runs inside the browser parser's
+one pass per carved DB (parsers/browser.py parse_db, on the blob that
+pass already read); the dedupe-merge is the reference's HashMap
+entry/and_modify expressed as a groupBy with min_by over the scan
+order (deterministic where the reference's HashMap iteration was not).
 """
 
 from __future__ import annotations
 
-import os
-import tempfile
-from collections.abc import Iterator
 from datetime import datetime, timedelta
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
-from swiftbeaver_spark import schemas
 from swiftbeaver_spark.parsers.timeconv import (
     python_unix_micro_to_datetime,
     python_webkit_to_datetime,
@@ -38,17 +27,6 @@ from swiftbeaver_spark.parsers.timeconv import (
 from swiftbeaver_spark.strings_scan import URL_RE, normalize_url
 
 _MAX_TEXT_LEN = 4096
-
-_RAW_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("title", StringType(), True),
-        StructField("visit_time", TimestampType(), True),
-        StructField("scan_order", LongType(), False),
-        StructField("source_file", StringType(), False),
-    ]
-)
-
 
 def _read_varint(data: bytes, pos: int) -> tuple[int, int] | None:
     """SQLite big-endian varint (reference sqlite_pages.rs:364-379)."""
@@ -250,31 +228,13 @@ def scan_pages(blob: bytes, source_file: str) -> list[tuple]:
     return out
 
 
-def recover_history_from_pages(
-    carved_sqlite: DataFrame, evidence_path: str
-) -> DataFrame:
-    """carved sqlite rows -> browser_history rows (browser='sqlite_page').
+def merge_page_records(raw: DataFrame) -> DataFrame:
+    """scan_pages records (url, title, visit_time, scan_order,
+    source_file) -> browser_history rows (browser='sqlite_page').
 
     Dedup-by-url with first-non-null merge = groupBy + min_by over scan
     order (reference HashMap entry/and_modify, sqlite_pages.rs:100-127).
     """
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from swiftbeaver_spark.source import open_evidence
-
-        reader = open_evidence(evidence_path)
-        try:
-            for pdf in batches:
-                rows: list[tuple] = []
-                for gstart, size, rel in zip(pdf["global_start"], pdf["size"], pdf["path"]):
-                    rows.extend(scan_pages(reader.read_at(int(gstart), int(size)), str(rel)))
-                yield pd.DataFrame(
-                    rows, columns=["url", "title", "visit_time", "scan_order", "source_file"]
-                )
-        finally:
-            reader.close()
-
-    raw = carved_sqlite.select("global_start", "size", "path").mapInPandas(work, _RAW_SCHEMA)
     merged = raw.groupBy("source_file", "url").agg(
         F.min_by("title", F.when(F.col("title").isNotNull(), F.col("scan_order"))).alias("title"),
         F.min_by(

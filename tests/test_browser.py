@@ -87,29 +87,36 @@ def build_firefox_db(path: str) -> None:
     conn.close()
 
 
+SQLITE_CFG = dataclasses.replace(
+    DEFAULT_CONFIG,
+    chunk_size=64 * 1024,
+    overlap=4096,
+    file_types=tuple(ft for ft in DEFAULT_CONFIG.file_types if ft.type_id == "sqlite"),
+)
+
+
+def plant_dbs(tmp, dbs: list[str]) -> str:
+    """Evidence file holding each DB at a 4096-aligned offset."""
+    evidence = bytearray(b"\x00" * 4096)
+    for p in dbs:
+        blob = open(p, "rb").read()
+        evidence.extend(blob)
+        evidence.extend(b"\x00" * (4096 - len(blob) % 4096))
+    path = str(tmp / "evidence.raw")
+    with open(path, "wb") as fh:
+        fh.write(bytes(evidence))
+    return path
+
+
 @pytest.fixture(scope="module")
 def browser_run(spark, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("browser")
     chrome, firefox = str(tmp / "History"), str(tmp / "places.sqlite")
     build_chrome_db(chrome)
     build_firefox_db(firefox)
-    evidence = bytearray(b"\x00" * 4096)
-    offsets = {}
-    for name, p in (("chrome", chrome), ("firefox", firefox)):
-        blob = open(p, "rb").read()
-        offsets[name] = len(evidence)
-        evidence.extend(blob)
-        evidence.extend(b"\x00" * (4096 - len(blob) % 4096))
-    path = str(tmp / "evidence.raw")
-    with open(path, "wb") as fh:
-        fh.write(bytes(evidence))
-    cfg = dataclasses.replace(
-        DEFAULT_CONFIG,
-        chunk_size=64 * 1024,
-        overlap=4096,
-        file_types=tuple(ft for ft in DEFAULT_CONFIG.file_types if ft.type_id == "sqlite"),
-    )
-    return Engine(spark, cfg).run(evidence_path=path)
+    run = Engine(spark, SQLITE_CFG).run(evidence_path=plant_dbs(tmp, [chrome, firefox]))
+    yield run
+    run.unpersist()
 
 
 def test_chrome_history_join(browser_run):
@@ -176,3 +183,71 @@ def test_page_recovery_scan(tmp_path):
     assert by_url[long_url][2].year == 2022
     assert by_url["https://recovered.example.com/b"][1] == "small"
     assert by_url["https://recovered.example.com/b"][2].year == 2021
+
+
+def test_timestamps_exact_through_parse_frame(spark, tmp_path):
+    """Webkit µs (~1.3e16) sit above 2**53: a parse frame that let a
+    None-bearing int column coerce to float64 would round an odd µs.
+    A Chrome visit and cookie at WEBKIT_TS + 1 and a Firefox visit at
+    an odd µs come back bit-exact, raw and converted."""
+    from datetime import datetime, timedelta
+
+    chrome, firefox = str(tmp_path / "History"), str(tmp_path / "places.sqlite")
+    conn = sqlite3.connect(chrome)
+    conn.executescript(
+        """
+        CREATE TABLE urls(id INTEGER PRIMARY KEY, url TEXT, title TEXT);
+        CREATE TABLE visits(id INTEGER PRIMARY KEY, url INTEGER,
+                            visit_time INTEGER, transition INTEGER);
+        CREATE TABLE cookies(host_key TEXT, name TEXT, value TEXT, path TEXT,
+                             expires_utc INTEGER, last_access_utc INTEGER,
+                             creation_utc INTEGER);
+        """
+    )
+    conn.execute("INSERT INTO urls VALUES (1, 'https://odd.example.com/', NULL)")
+    conn.execute("INSERT INTO visits VALUES (1, 1, ?, 1)", (WEBKIT_TS + 1,))
+    conn.execute(
+        "INSERT INTO cookies VALUES ('odd.example.com', 'c', NULL, '/', ?, ?, ?)",
+        (WEBKIT_TS + 1, WEBKIT_TS + 3, WEBKIT_TS + 5),
+    )
+    conn.commit()
+    conn.close()
+    ff_us = UNIX_TS_US + 7
+    conn = sqlite3.connect(firefox)
+    conn.executescript(
+        """
+        CREATE TABLE moz_places(id INTEGER PRIMARY KEY, url TEXT, title TEXT);
+        CREATE TABLE moz_historyvisits(id INTEGER PRIMARY KEY,
+                                       place_id INTEGER, visit_date INTEGER,
+                                       visit_type INTEGER);
+        """
+    )
+    conn.execute("INSERT INTO moz_places VALUES (1, 'https://odd.mozilla.org/', 'T')")
+    conn.execute("INSERT INTO moz_historyvisits VALUES (1, 1, ?, 1)", (ff_us,))
+    conn.commit()
+    conn.close()
+
+    run = Engine(spark, SQLITE_CFG).run(evidence_path=plant_dbs(tmp_path, [chrome, firefox]))
+    try:
+        webkit = datetime(1601, 1, 1)
+        history = {r.browser: r.visit_time for r in run["browser_history"].collect()}
+        assert history == {
+            "chrome": webkit + timedelta(microseconds=WEBKIT_TS + 1),
+            "firefox": datetime(1970, 1, 1) + timedelta(microseconds=ff_us),
+        }
+        (cookie,) = run["browser_cookies"].collect()
+        assert (cookie.expires_utc, cookie.last_access_utc, cookie.creation_utc) == tuple(
+            webkit + timedelta(microseconds=WEBKIT_TS + d) for d in (1, 3, 5)
+        )
+        parsed = run.persisted[-1]
+        raw = {
+            (r.kind, r.browser): (r.raw_time, r.raw_expires, r.raw_last_access, r.raw_creation)
+            for r in parsed.collect()
+        }
+        assert raw == {
+            ("history", "chrome"): (WEBKIT_TS + 1, None, None, None),
+            ("history", "firefox"): (ff_us, None, None, None),
+            ("cookies", "chrome"): (None, WEBKIT_TS + 1, WEBKIT_TS + 3, WEBKIT_TS + 5),
+        }
+    finally:
+        run.unpersist()

@@ -14,15 +14,17 @@ kernels themselves are differential-pinned in tests/test_fused_scan.py.
 from __future__ import annotations
 
 import dataclasses
+import os
 
 import pytest
 
 from swiftbeaver_spark.config import DEFAULT_CONFIG
-from swiftbeaver_spark.engine import Engine
+from swiftbeaver_spark.engine import Engine, write_tables
 from swiftbeaver_spark.fused_scan import scan_all_from_evidence
 from swiftbeaver_spark.jvm import ensure_kernel
 
 from tests.fixtures import mk_jpeg, mk_png
+from tests.test_browser import build_chrome_db
 from tests.test_fused_scan import CFG as FUSED_CFG
 from tests.test_fused_scan import GRANULE, build_image
 
@@ -126,20 +128,31 @@ def test_misaligned_entropy_window_runs_one_pass(spark, tmp_path, kind):
     assert got["entropy_regions"]
 
 
+def _assert_chunk_table_run(res):
+    """The run scanned the cached chunk table (it carries bytes) and
+    persisted only the carve frame and the browser parse frame — no
+    scan frame."""
+    assert "data" in res["chunks"].columns
+    carve, parse = res.persisted
+    assert carve.schema == res["carved_files"].schema
+    assert parse.columns[0] == "kind"
+
+
 @pytest.mark.parametrize("kind", ["raw", "e01"])
 def test_no_kernel_runs_chunk_table(spark, tmp_path, monkeypatch, kind):
     """Under SPARK_GRAFT_NO_VEC_KERNEL (the JRE-only path) run(evidence_
-    path) scans the cached chunk table — nothing persisted, the chunk
-    table carrying bytes — and yields the kernel run's tables."""
+    path) scans the cached chunk table — no scan frame persisted, the
+    chunk table carrying bytes — and yields the kernel run's tables."""
     p = _evidence(tmp_path, kind, 18, 5 << 20)
     eng = Engine(spark, CFG)
     base = _tables(eng.run(evidence_path=p, chunk_join=True))
     monkeypatch.setenv("SPARK_GRAFT_NO_VEC_KERNEL", "1")
     res = eng.run(evidence_path=p)
-    assert not res.persisted and "data" in res["chunks"].columns
+    _assert_chunk_table_run(res)
     try:
         assert _tables(res) == base
     finally:
+        res.unpersist()
         res["chunks"].unpersist()
 
 
@@ -187,7 +200,9 @@ def test_no_vec_kernel_hatch_disables_fused(spark, tmp_path, monkeypatch):
     with pytest.raises(ValueError, match="JVM kernel"):
         scan_all_from_evidence(spark, str(p), CFG, granule=GRANULE)
     res = Engine(spark, CFG).run(evidence_path=str(p))
-    assert not res.persisted
+    _assert_chunk_table_run(res)
+    res.unpersist()
+    res["chunks"].unpersist()
 
 
 def test_zip_bucket_cache_batch_split_parity(spark, tmp_path):
@@ -257,3 +272,53 @@ def test_one_pass_jpeg_png_carve_content(spark, tmp_path):
         res.unpersist()
     assert rows["jpeg"]["sha256"] == hashlib.sha256(jpeg).hexdigest()
     assert rows["png"]["sha256"] == hashlib.sha256(png).hexdigest()
+
+
+def _mtimes(root: str) -> dict[str, int]:
+    return {
+        os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+        for d, _, files in os.walk(root)
+        for f in files
+    }
+
+
+@pytest.mark.parametrize("kind", ["raw", "e01"])
+def test_analyst_run_carves_once(spark, tmp_path, kind):
+    """An analyst run (run + write_tables) carves each hit once: after
+    the write, driving the browser tables and carved_files again reads
+    the persisted carve and parse frames, so no carved-bytes file under
+    cfg.output_dir is rewritten (a re-carve reopens each with "wb").
+    The returned summary is the row write_tables wrote."""
+    db = tmp_path / "History"
+    build_chrome_db(str(db))
+    jpeg, blob = mk_jpeg(), db.read_bytes()
+    buf = bytearray(1 << 20)
+    buf[4096 : 4096 + len(jpeg)] = jpeg
+    buf[65536 : 65536 + len(blob)] = blob
+    if kind == "e01":
+        from swiftbeaver_spark.ewf import write_ewf
+
+        p = str(tmp_path / "ev.E01")
+        write_ewf(p, bytes(buf), sectors_per_chunk=8)
+    else:
+        p = str(tmp_path / "ev.raw")
+        (tmp_path / "ev.raw").write_bytes(bytes(buf))
+    carved_dir, out = str(tmp_path / "carved"), str(tmp_path / "out")
+    cfg = dataclasses.replace(
+        CFG, output_dir=carved_dir, enable_sqlite_page_recovery=True
+    )
+    res = Engine(spark, cfg).run(evidence_path=p)
+    try:
+        summary = write_tables(res, out)
+        written = _mtimes(carved_dir)
+        assert len(written) == 2  # the jpeg and the sqlite DB
+        for name in ("browser_history", "browser_cookies", "browser_downloads",
+                     "carved_files"):
+            assert res[name].collect()
+        assert _mtimes(carved_dir) == written
+        assert summary["files_carved"] == 2
+        assert summary["hits_found"] >= 2
+        row = spark.read.parquet(f"{out}/run_summary").drop("run_id").collect()
+        assert [r.asDict() for r in row] == [summary]
+    finally:
+        res.unpersist()

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
 import subprocess
 import sys
 
@@ -83,7 +84,7 @@ def test_cli_end_to_end(tmp_path):
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     report = json.loads(proc.stdout.strip().splitlines()[-1])

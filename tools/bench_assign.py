@@ -3,16 +3,18 @@ expression argmax (ivf_cell_dot) vs the Arrow matmul kernel
 (assign_cells_arrow), inside the full semantic_dedup(kernel='arrow')
 pipeline at a paper-shaped nlist. Asserts the outputs are IDENTICAL
 before reporting walls. Usage: python tools/bench_assign.py [nlist]"""
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 from pyspark.sql import SparkSession
 
 from swiftbeaver_spark.llm.similarity import md5_centroids, semantic_dedup
 
 NLIST = int(sys.argv[1]) if len(sys.argv) > 1 else 160
-SF1 = "/root/repo/.scale/sf1"
+SF1 = os.path.join(REPO, ".scale", "sf1")
 
 spark = (
     SparkSession.builder.master("local[32]")

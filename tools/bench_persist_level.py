@@ -67,7 +67,7 @@ def main() -> None:
         engine_mod.ONE_PASS_RAW_STORAGE = LEVELS[level_name]
         t0 = time.time()
         run = engine.run(evidence_path=path, cache_intermediates=True)
-        assert run.persisted, "the one-pass scan needs the JVM kernel"
+        assert "data" not in run["chunks"].columns, "the one-pass scan needs the JVM kernel"
         carved = sorted(
             (r.global_start, r.size, r.sha256)
             for r in run["carved_files"].select("global_start", "size", "sha256").collect()

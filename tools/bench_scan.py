@@ -16,7 +16,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from swiftbeaver_spark.config import DEFAULT_CONFIG
 from swiftbeaver_spark.engine import Engine

@@ -14,7 +14,8 @@ import sys
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 from pyspark.sql import SparkSession
 
 import __spark_entry__ as E

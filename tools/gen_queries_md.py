@@ -1,10 +1,12 @@
 """Regenerate QUERIES.md from __spark_entry__.py (queries() order,
 docstring summaries, hash vs rows-only gate, driver window split)."""
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 import __spark_entry__ as E
 
 qs = E.queries()
@@ -32,6 +34,6 @@ for i, (name, fn) in enumerate(qs.items(), 1):
     win = "window" if i <= 50 else "tail"
     lines.append(f"| {i} | `{name}` | {gate}/{win} | {doc} |")
 
-with open("/root/repo/QUERIES.md", "w") as f:
+with open(os.path.join(REPO, "QUERIES.md"), "w") as f:
     f.write("\n".join(lines) + "\n")
 print(f"wrote {len(qs)} entries")
