@@ -57,7 +57,7 @@ plus the LLM-pipeline surface:
   near-dup cluster resolution
   (connected components)       -> q36_dedup_clusters
   stateful streaming sessions
-  (applyInPandasWithState)     -> q37_stream_sessionize
+  (native session_window)      -> q37_stream_sessionize
 plus the training-pipeline surface (q38-q52):
   sequence packing             -> q38_pack_sequences
   stratified hash sampling     -> q39_hash_sample
@@ -126,6 +126,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from swiftbeaver_spark.parallel import _cached_partition_count, spread
 from swiftbeaver_spark.parsers.timeconv import (
     NTZ_EPOCH_SQL,
     ts_unix_micros,
@@ -223,27 +224,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _widen(df: DataFrame) -> DataFrame:
-    """Compute-parallelism floor for compute-dense stages over
-    byte-small inputs (guide §2.5): a table whose files fit in one
-    parquet split yields 1-2 scan tasks, serializing per-row work
-    (md5-per-shingle fingerprints, n-gram explodes, subword FNV
-    folds) that costs orders of magnitude more CPU per byte than the
-    scan. Repartition up to the session's parallelism ONLY when the
-    natural partitioning is below it — at scale the scan already
-    yields >= parallelism splits and this returns the input unchanged
-    (no added Exchange); per-task compute granularity there is the
-    scan-split knob (spark.sql.files.maxPartitionBytes), not this
-    floor. Only applied where downstream aggregation is
-    order-independent (integer/count aggregates or per-row outputs).
-    """
-    sc = df.sparkSession.sparkContext
-    floor = sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= floor:
-        return df
-    return df.repartition(floor)
-
-
 def _presort(df: DataFrame, *cols: str) -> DataFrame:
     """Range-partition BELOW a heavy projection so the query's final
     global sort costs one execution of the projection instead of two:
@@ -253,9 +233,9 @@ def _presort(df: DataFrame, *cols: str) -> DataFrame:
     .sortWithinPartitions(k)` produces byte-identical rows and order
     (range partitions are collected in key order), samples only the
     narrow scan, and runs the projection once — width floored at the
-    session parallelism for byte-small inputs (see _widen)."""
+    session parallelism for byte-small inputs (see parallel.spread)."""
     sc = df.sparkSession.sparkContext
-    n = max(sc.defaultParallelism, df.rdd.getNumPartitions())
+    n = max(sc.defaultParallelism, _cached_partition_count(df))
     return df.repartitionByRange(n, *cols)
 
 
@@ -330,9 +310,7 @@ def q02_chunked_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from swiftbeaver_spark.config import EngineConfig, FileType, Pattern
     from swiftbeaver_spark.scanner import scan_chunks
 
-    from swiftbeaver_spark.llm.dedup import _spread
-
-    docs = _spread(
+    docs = spread(
         _t(spark, sf_dir, "documents").select("doc_id", "text")
     ).where(F.length("text") > 0)  # see q01: sequence(0,-1) = [0,-1]
     n_chunks = F.ceil(F.length("text") / CHUNK).cast("long")
@@ -1042,10 +1020,10 @@ def q19_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-3-gram Jaccard between consecutive documents (exact int-ratio
     arithmetic -> hash-stable doubles). The gram build (per-position
     array slices + distinct) is compute-dense, so the scan is widened
-    to the session parallelism (_widen) before both join sides derive
-    from it — the gram compute then runs map-side of the join shuffle
+    to the session parallelism (parallel.spread) before both join sides
+    derive from it — the gram compute then runs map-side of the join shuffle
     at full width instead of on the scan's 1-2 splits."""
-    docs = _widen(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
 
     def grams(col):
         toks = F.split(F.trim(F.regexp_replace(F.lower(col), r"\s+", " ")), " ")
@@ -1577,14 +1555,17 @@ def q35_sql() -> str:
 
 
 def q37_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The custom STATEFUL STREAMING operator under the hash gate:
-    streaming.sessionize_stream (applyInPandasWithState, event-time
-    timeout) runs to completion over the events table fed through a file
-    stream, with one far-future sentinel event per user so every real
-    session closes and emits exactly once. The oracle replays the exact
-    gap semantics (microsecond precision) as batch gaps-and-islands —
-    batching cannot change the result because state folds sorted event
-    times identically wherever the micro-batch boundaries fall."""
+    """The STATEFUL STREAMING sessionizer under the hash gate:
+    streaming.sessionize_stream (a native watermarked session_window
+    aggregation, session_end = max(ts)) runs to completion over the
+    events table fed through a file stream, with one far-future
+    sentinel event per user so every real session closes and emits
+    exactly once. The oracle replays the exact gap semantics
+    (microsecond precision) as batch gaps-and-islands — batching cannot
+    change the result because session_window's merge rule (an event at
+    most `gap` after the session's last event joins it; a larger gap
+    starts a new session) yields the same sessions wherever the
+    micro-batch boundaries fall."""
     import tempfile
 
     from swiftbeaver_spark.streaming import sessionize_stream
@@ -1612,7 +1593,7 @@ def q37_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not q.awaitTermination(300):
         q.stop()  # never return a partial out/ dir as the gated answer
         raise TimeoutError("q37 streaming sessionization did not finish in 300s")
-    # availableNow's final wrap-up trigger fires event-time timeouts, so
+    # availableNow's final wrap-up trigger advances the watermark, so
     # sentinel sessions of users whose activity ended long before the
     # global max DO emit — drop everything past the real horizon
     max_real = events.agg(F.max("ts")).collect()[0][0]
@@ -2602,7 +2583,7 @@ def q42_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the training-side n-gram explode is the dense stage — widen it
     # to the session parallelism (the bench side broadcasts)
-    train = _widen(docs.where(F.col("doc_id") >= 20).unionByName(planted))
+    train = spread(docs.where(F.col("doc_id") >= 20).unionByName(planted))
     return decontaminate(train, bench, ngram_n=DECON_N).orderBy("doc_id")
 
 
@@ -2708,7 +2689,7 @@ def q44_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer counts, so partial-aggregation order cannot drift)."""
     from swiftbeaver_spark.llm.pipeline import repetition_metrics
 
-    docs = _widen(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     return repetition_metrics(docs).orderBy("doc_id")
 
 
@@ -3120,7 +3101,7 @@ def q51_crossdoc_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # widen the tokenize+posexplode map stage (integer partial counts
     # only downstream — aggregation order cannot drift)
-    docs = _widen(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     return crossdoc_dup_ngrams(docs, ngram_n=DUPGRAM_N).orderBy("doc_id")
 
 
@@ -4190,7 +4171,7 @@ def q71_edit_distance_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # widen the band-explode map stage feeding the band-key join; the
     # levenshtein verify is per-row, so widening cannot drift results
     pairs = edit_distance_near_dups(
-        _widen(docs.unionByName(mutated)), max_dist=EDIT_MAX_DIST
+        spread(docs.unionByName(mutated)), max_dist=EDIT_MAX_DIST
     )
     return (
         pairs.where(F.col("doc_b") - F.col("doc_a") == 1_000_000)
@@ -5529,7 +5510,7 @@ def q93_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # widen the per-vector plane fold (16 planes x 64 dims per row)
     # off the scan's single split; bucketing/verify are per-row or
     # equi-join, so widening cannot drift results
-    corpus = _widen(emb.select("vec_id", "embedding").unionByName(planted))
+    corpus = spread(emb.select("vec_id", "embedding").unionByName(planted))
     pairs = embedding_near_dups(
         corpus,
         threshold=0.5,
@@ -5595,7 +5576,7 @@ def q94_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fp = (
         # widen the md5-per-shingle fingerprint off the single split
-        _widen(docs.unionByName(copies).unionByName(mutated))
+        spread(docs.unionByName(copies).unionByName(mutated))
         .select("doc_id", fingerprint_pinned(F.col("text")).alias("fp"))
     )
     l, r = fp.alias("l"), fp.alias("r")
@@ -6939,7 +6920,7 @@ def q118_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = docs.where(F.col("doc_id") < 20)
     # widen the gopher/contamination/fingerprint chain off the scan's
     # single split (compute-dense per-row work, integer counts only)
-    train = _widen(docs.where((F.col("doc_id") >= 20) & (F.col("doc_id") < 300)))
+    train = spread(docs.where((F.col("doc_id") >= 20) & (F.col("doc_id") < 300)))
     passed = (
         gopher_quality_flags(train)
         .where(F.col("passes_gopher"))
@@ -10868,7 +10849,7 @@ def q165_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT widened (r14 A/B): the per-row work here is one round+cast,
     # so spreading the single-split scan costs a 600k-row shuffle for
     # nothing — interleaved minima 1.85 s natural vs 2.39 s widened.
-    # _widen pays only for compute-dense rows (md5/n-gram class).
+    # spread pays only for compute-dense rows (md5/n-gram class).
     li = _t(spark, sf_dir, "lineitem").select(
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents")
     )
@@ -11618,7 +11599,7 @@ def q172_fasttext_subword(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the corpus-side subword expansion (per-token char n-grams + FNV
     # folds) is compute-dense; widen the scan feeding both the vocab
     # dedup and the classify stream (integer micro-unit sums only)
-    docs = _widen(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     vocab = _fasttext_vocab(docs, ("__label__", "__bucket__"))
     labels = spark.createDataFrame([(w,) for w in FASTTEXT_LABELS], "word string")
     buckets = spark.range(Q172_BUCKETS).select(

@@ -49,24 +49,6 @@ def make_run_id() -> str:
     return f"{now}_{secrets.token_hex(8)}"
 
 
-def _observation_filled(obs) -> bool:
-    """Non-blocking probe: has this Observation been filled by an
-    action? Uses the private PySpark handle (there is no public
-    non-blocking probe as of 4.1.2); the guard is NARROW — only
-    AttributeError, i.e. the private attribute moved — so any other
-    failure propagates loudly instead of silently degrading every
-    observed summary to the second-evidence-pass fallback (ADVICE r10
-    low). tests/test_engine_features.py pins that the probe returns
-    True after an action, so a PySpark API change fails CI visibly."""
-    try:
-        jo = obs._jo
-    except AttributeError:
-        return False
-    if jo is None:  # observation never attached to a DataFrame
-        return False
-    return bool(jo.getRowOrEmpty().isDefined())
-
-
 @dataclass
 class RunResult:
     tables: dict[str, DataFrame]
@@ -75,54 +57,19 @@ class RunResult:
     # storage unless unpersist() frees them (ADVICE r9)
     persisted: list[DataFrame] = field(default_factory=list)
 
-    # per-stage Observation objects (CollectMetrics riding the stage
-    # plans): counters captured as a BYPRODUCT of whatever action first
-    # drives each table — the Spark analog of the reference's
-    # single-pass counters (src/pipeline/mod.rs:256-264)
-    observations: dict = field(default_factory=dict)
-
     def __getitem__(self, name: str) -> DataFrame:
         return self.tables[name]
-
-    def observed_summary(self) -> DataFrame | None:
-        """run_summary built from the stage observations instead of
-        re-deriving every consumed subtree — with caching OFF that
-        re-derivation is a second full evidence scan on the fused path
-        (round-9: 32.5 s of a 61 s 1 GiB run). Valid only after an
-        action has driven every observed stage table TO COMPLETION:
-        CollectMetrics captures whatever rows flowed through the FIRST
-        action on the observed frame, so a partial pre-drive (show(3)/
-        take — limit short-circuits the scan) fills an observation with
-        an undercount this probe cannot distinguish (ADVICE r10 medium).
-        Callers that fully count every stage themselves (the stress
-        bench) may use this; write_tables does NOT — it builds the
-        summary from row counts its own write actions produced
-        (summary_from_counts). Returns None — callers fall back to the
-        lazy run_summary — if any observation is still unfilled, probed
-        non-blockingly (Observation.get would otherwise wait forever).
-        The chunks-side counters stay a real aggregate — on the fused
-        path the chunk plan is pure range arithmetic (no evidence
-        read), on the chunk-table path the table is cached."""
-        if "hits" not in self.observations:
-            return None
-        if not all(_observation_filled(o) for o in self.observations.values()):
-            return None
-        got = {k: int(o.get["n"]) for k, o in self.observations.items()}
-        return self._summary_select(got)
 
     def summary_from_counts(self, counts: dict[str, int]) -> DataFrame:
         """run_summary from per-stage row counts the CALLER itself
         produced (one per full stage action — write_tables records the
-        count of every stage write via a fresh write-time Observation).
-        Unlike observed_summary this cannot be poisoned by a partial
-        pre-drive between run() and the write (ADVICE r10 medium): the
-        counts come from the very actions that produced the output. A
-        stage with no count reads 0."""
-        return self._summary_select({k: int(v) for k, v in counts.items()})
+        count of every stage write via a fresh write-time Observation),
+        so a partial pre-drive between run() and the write cannot
+        poison it (ADVICE r10 medium), and no consumed subtree is
+        re-derived. A stage with no count reads 0."""
 
-    def _summary_select(self, got: dict[str, int]) -> DataFrame:
         def n(name: str) -> int:
-            return got.get(name, 0)
+            return int(counts.get(name, 0))
 
         return self.tables["chunks"].agg(
             F.coalesce(F.sum("valid_length"), F.lit(0)).cast("long").alias("bytes_scanned"),
@@ -384,19 +331,10 @@ class Engine:
         cache_intermediates: bool,
         persisted_pre: list[DataFrame] | None = None,
     ) -> RunResult:
-        """Stage tables -> RunResult (persists, counter observations,
-        browser tables, lazy run_summary). RunResult.persisted holds
-        `persisted_pre` (the one-pass raw frame) first and the browser
-        parse frame last; the caller frees them (RunResult.unpersist)."""
-        # Persist FIRST (on the raw stage plans), THEN attach the
-        # counter observations on top. Order matters: Spark's cache
-        # manager substitutes by LOGICAL-PLAN equality, and the derived
-        # stages (carve from hits, artefacts from spans, browser from
-        # carved) were built from the RAW frames — persisting a
-        # CollectMetrics-wrapped plan instead would leave those
-        # subtrees cache-MISSING and re-run the full evidence scans the
-        # cache exists to avoid (caught by round-10 self-review; the
-        # raw-vs-observed mismatch was verified real on PySpark 4.1.2).
+        """Stage tables -> RunResult (persists, browser tables, lazy
+        run_summary). RunResult.persisted holds `persisted_pre` (the
+        one-pass raw frame) first and the browser parse frame last; the
+        caller frees them (RunResult.unpersist)."""
         persisted: list[DataFrame] = list(persisted_pre or [])
         parse_browser = evidence_path is not None and any(
             ft.type_id == "sqlite" for ft in self.cfg.file_types
@@ -428,23 +366,6 @@ class Engine:
         for name in to_persist:
             tables[name] = tables[name].persist(StorageLevel.MEMORY_AND_DISK)
             persisted.append(tables[name])
-        # browser stage reads the (possibly persisted) stage frame, NOT
-        # the observation-wrapped one below: a browser-table drive must
-        # not fill the carve observation (observed_summary's contract)
-        carved = tables["carved_files"]
-        # counter observations ride the stage plans (CollectMetrics):
-        # whatever action first drives a table also yields its count,
-        # so multi-table flows (write_tables, the stress bench) can
-        # build run_summary via RunResult.observed_summary() without
-        # re-deriving any subtree. Reads THROUGH the persisted frame.
-        from pyspark.sql import Observation
-
-        observations = {}
-        for name in ("hits", "carved_files", "string_spans", "string_artefacts"):
-            if name in tables:
-                obs = Observation()
-                tables[name] = tables[name].observe(obs, F.count(F.lit(1)).alias("n"))
-                observations[name] = obs
         if parse_browser:
             from swiftbeaver_spark.parsers.browser import browser_tables, parse_carved_dbs
 
@@ -452,14 +373,16 @@ class Engine:
             # tables (and page recovery's merge) are projections of it
             recovery = self.cfg.enable_sqlite_page_recovery
             parsed = parse_carved_dbs(
-                carved.where(F.col("file_type") == "sqlite"), evidence_path, recovery
+                tables["carved_files"].where(F.col("file_type") == "sqlite"),
+                evidence_path,
+                recovery,
             ).persist(StorageLevel.MEMORY_AND_DISK)
             persisted.append(parsed)
             tables.update(browser_tables(parsed, recovery))
         # the lazy run_summary DataFrame stays the standalone form
-        # (single-table users); multi-table flows use observed_summary()
+        # (single-table users); write_tables counts its own writes
         tables["run_summary"] = self.run_summary(tables)
-        return RunResult(tables, persisted, observations)
+        return RunResult(tables, persisted)
 
     def run_summary(self, tables: dict[str, DataFrame]) -> DataFrame:
         """Single-row counters table (reference src/pipeline/mod.rs:256-264,
@@ -502,9 +425,8 @@ def write_tables(
     (a fresh write-time Observation per stage write; dryrun uses the
     count directly) plus one arithmetic chunks aggregate, instead of
     re-deriving every subtree (the second-evidence-pass hazard, VERDICT
-    r9 task 3), and immune to the undercount a partial pre-drive
-    between run() and write_tables would plant in the run()-time
-    observations (ADVICE r10 medium)."""
+    r9 task 3); a partial pre-drive between run() and write_tables
+    cannot undercount it (ADVICE r10 medium)."""
     from pyspark.sql import Observation
 
     run_id = run_id or make_run_id()

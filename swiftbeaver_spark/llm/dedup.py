@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from swiftbeaver_spark.parallel import spread
+
 
 def _shr(col: Column, bits: Column) -> Column:
     """shiftright with a Column bit count (the Python wrapper only
@@ -33,15 +35,6 @@ def _shr(col: Column, bits: Column) -> Column:
 
 def _shl(col: Column, bits: Column) -> Column:
     return F.call_function("shiftleft", col, bits)
-
-
-def _spread(df: DataFrame, target: int | None = None) -> DataFrame:
-    """Pin parallelism for compute-dense, byte-light kernel stages —
-    see swiftbeaver_spark.parallel.spread (the single home; this alias
-    keeps the historical name the dedup docstrings/tests cite)."""
-    from swiftbeaver_spark.parallel import spread
-
-    return spread(df, target)
 
 
 def normalized_text(col: Column) -> Column:
@@ -104,7 +97,7 @@ def minhash_signatures(
     a = (rng.randint(0, 1 << 62, size=num_hashes).astype(np.uint64) << np.uint64(1)) | np.uint64(1)
     b = rng.randint(0, 1 << 62, size=num_hashes).astype(np.uint64)
 
-    src = _spread(
+    src = spread(
         df.select(
             F.col(id_col).cast("long").alias("doc_id"),
             F.col(text_col).cast("string").alias("text"),
@@ -380,7 +373,7 @@ def simhash(
 
     from swiftbeaver_spark.jvm import ensure_kernel
 
-    src = _spread(
+    src = spread(
         df.select(
             F.col(id_col).cast("long").alias("doc_id"),
             F.col(text_col).cast("string").alias("text"),

@@ -1,8 +1,9 @@
 """Parallelism pinning for compute-dense, byte-light kernel stages.
 
-Single home for the repartition-if-fewer pattern (previously copied
-inline in entropy.py / strings_scan.py from llm/dedup._spread — three
-copies that had to evolve together).
+Single home for the repartition-if-fewer pattern: the scan kernels,
+the dedup operators and the compute-dense catalog queries all call
+`spread` (and `_presort` in __spark_entry__ takes its width from the
+same memoised partition count).
 """
 
 from __future__ import annotations

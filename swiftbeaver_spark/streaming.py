@@ -109,97 +109,25 @@ def sessionize_stream(
     user_col: str = "user_id",
     ts_col: str = "ts",
 ) -> DataFrame:
-    """Custom stateful streaming operator: gap-based sessionization over
-    an event stream (the event-time analog of the batch q05 sessionize).
+    """Gap-based sessionization over an event stream (the event-time
+    analog of the batch q05 sessionize), as one native `session_window`
+    aggregation in append mode.
 
-    applyInPandasWithState keeps one (session_start, last_seen, count)
-    record per user: a batch's events fold into the open session,
-    emitting a closed session whenever the gap exceeds `gap_minutes`;
-    the open session closes via EventTimeTimeout once the watermark
-    passes last_seen + gap, so late data within the watermark still
-    extends its session and sessions emit exactly once. State is O(1)
-    per active user — nothing buffers unboundedly.
+    An event at most `gap_minutes` after its user's previous event
+    extends the open session (exactly `gap` merges); a larger gap
+    starts a new one. A session emits once, when the watermark passes
+    its last event + gap, so late data within the watermark still
+    extends it. `session_end` is the last event (`max(ts)`), not the
+    window's end (last event + gap).
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        LongType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    gap_us = gap_minutes * 60 * 1_000_000
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("session_start", TimestampType()),
-            StructField("session_end", TimestampType()),
-            StructField("n_events", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("start_us", LongType()),
-            StructField("last_us", LongType()),
-            StructField("n", LongType()),
-        ]
-    )
-
-    def fn(key, pdfs, state: GroupState):
-        user = int(key[0])
-
-        def session_row(s: int, l: int, n: int):
-            return (
-                user,
-                pd.Timestamp(s, unit="us"),
-                pd.Timestamp(l, unit="us"),
-                n,
-            )
-
-        rows = []
-        if state.hasTimedOut:
-            s, l, n = state.get
-            rows.append(session_row(s, l, n))
-            state.remove()
-        else:
-            stamps: list[int] = []
-            for pdf in pdfs:
-                stamps.extend(int(v.value) // 1000 for v in pdf[ts_col])
-            stamps.sort()
-            if state.exists:
-                s, l, n = state.get
-            else:
-                s, l, n = None, None, 0
-            for tus in stamps:
-                if s is None:
-                    s, l, n = tus, tus, 1
-                elif tus - l > gap_us:
-                    rows.append(session_row(s, l, n))
-                    s, l, n = tus, tus, 1
-                else:
-                    l, n = max(l, tus), n + 1
-            if s is not None:
-                state.update((s, l, n))
-                # close the open session once the watermark passes the gap
-                timeout_ms = (l + gap_us) // 1000 + 1
-                state.setTimeoutTimestamp(
-                    max(timeout_ms, state.getCurrentWatermarkMs() + 1)
-                )
-        yield pd.DataFrame(
-            rows, columns=["user_id", "session_start", "session_end", "n_events"]
-        )
-
     return (
         events.withWatermark(ts_col, watermark)
-        .groupBy(F.col(user_col))
-        .applyInPandasWithState(
-            fn,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
+        .groupBy(
+            F.col(user_col).cast("long").alias("user_id"),
+            F.session_window(ts_col, f"{gap_minutes} minutes").alias("sw"),
         )
+        .agg(F.max(ts_col).alias("session_end"), F.count("*").alias("n_events"))
+        .select("user_id", F.col("sw.start").alias("session_start"), "session_end", "n_events")
     )
 
 

@@ -260,9 +260,10 @@ def test_category_sink_unpersists_caches(spark, tmp_path):
 
 
 def test_sessionize_stream_stateful(spark, tmp_path):
-    """Custom stateful streaming operator (applyInPandasWithState):
-    gap-based sessions close either by an in-stream gap or by event-time
-    timeout once a later batch advances the watermark."""
+    """Streaming sessionizer (native session_window): gap-based sessions
+    split on an in-stream gap and emit once a later batch advances the
+    watermark past their last event + gap. A gap of exactly 30 min
+    merges; 30 min + 1 us splits."""
     import datetime as dt
 
     from swiftbeaver_spark.streaming import sessionize_stream
@@ -272,18 +273,21 @@ def test_sessionize_stream_stateful(spark, tmp_path):
 
     src = str(tmp_path / "events")
     os.makedirs(src)
-    # batch 1: user 1 has two sessions split by a 40-min gap (closes
-    # in-batch); user 2 has one session left open
+    # batch 1: user 1 has two sessions split by a 40-min gap; user 2
+    # has one; users 3/4 sit on the gap boundary
     spark.createDataFrame(
         [
             (1, ts(0)), (1, ts(5)), (1, ts(10)),   # session A: 0-10, 3 events
-            (1, ts(50)), (1, ts(55)),              # session B: open
-            (2, ts(7)),                            # session C: open
+            (1, ts(50)), (1, ts(55)),              # session B: 50-55
+            (2, ts(7)),                            # session C: 7-7
+            (3, ts(100)), (3, ts(130)),            # exactly gap: one session
+            (4, ts(200)),                          # gap + 1 us: two sessions
+            (4, ts(230) + dt.timedelta(microseconds=1)),
         ],
         "user_id long, ts timestamp",
     ).coalesce(1).write.mode("append").parquet(src)
-    # batch 2: far-future events push the watermark past B and C's
-    # gap+watermark horizon -> they close via EventTimeTimeout
+    # batch 2: far-future events push the watermark past every batch-1
+    # session's last event + gap -> they all emit
     spark.createDataFrame(
         [(1, ts(600)), (2, ts(600))], "user_id long, ts timestamp"
     ).coalesce(1).write.mode("append").parquet(src)
@@ -309,14 +313,20 @@ def test_sessionize_stream_stateful(spark, tmp_path):
          r.session_end.minute + 60 * r.session_end.hour, r.n_events)
         for r in spark.read.parquet(out).collect()
     }
-    assert (1, 0, 10, 3) in got          # closed by in-batch gap
-    assert (1, 50, 55, 2) in got         # closed by event-time timeout
-    assert (2, 7, 7, 1) in got           # closed by event-time timeout
+    assert (1, 0, 10, 3) in got          # split by an in-batch gap
+    assert (1, 50, 55, 2) in got         # emitted once the watermark passed
+    assert (2, 7, 7, 1) in got
+    # exact gap merges, and session_end is the last event (not
+    # 130 + gap); a gap exceeded by 1 us splits
+    assert {g for g in got if g[0] in (3, 4)} == {
+        (3, 100, 130, 2), (4, 200, 200, 1), (4, 230, 230, 1)
+    }
 
 
 def test_sessionize_stream_rocksdb_state_store(spark, tmp_path):
-    """VERDICT r6 item 6: the stateful sessionizer must be semantics-
-    identical under the RocksDB state-store provider (the 100 TB
+    """VERDICT r6 item 6: the streaming sessionizer (native
+    session_window state) must be semantics-identical under the RocksDB
+    state-store provider (the 100 TB
     configuration — state spills to local disk instead of living in
     executor heap; session.get_spark(rocksdb_state=True) /
     SPARK_GRAFT_ROCKSDB=1 wire it at session build, and because it is
@@ -336,6 +346,8 @@ def test_sessionize_stream_rocksdb_state_store(spark, tmp_path):
             (1, ts(0)), (1, ts(5)), (1, ts(10)),
             (1, ts(50)), (1, ts(55)),
             (2, ts(7)),
+            (3, ts(100)), (3, ts(130)),
+            (4, ts(200)), (4, ts(230) + dt.timedelta(microseconds=1)),
         ],
         "user_id long, ts timestamp",
     ).coalesce(1).write.mode("append").parquet(src)
@@ -383,6 +395,9 @@ def test_sessionize_stream_rocksdb_state_store(spark, tmp_path):
     assert (1, 0, 10, 3) in got
     assert (1, 50, 55, 2) in got
     assert (2, 7, 7, 1) in got
+    assert {g for g in got if g[0] in (3, 4)} == {
+        (3, 100, 130, 2), (4, 200, 200, 1), (4, 230, 230, 1)
+    }
     assert len({g for g in got if g[1] != 600}) >= 3
 
 
@@ -455,10 +470,6 @@ def test_run_cache_intermediates_same_tables(spark, tmp_path):
             a = sorted(map(tuple, plain[name].collect()))
             b = sorted(map(tuple, cached[name].collect()))
             assert a == b, name
-        # the table handles are observation wrappers on TOP of the
-        # persisted frames (so derived stages keep matching the cache
-        # by logical-plan equality); storage level shows on the
-        # persisted frames RunResult tracks
         # every tracked frame is persisted with a disk component
         # (stage caches are MEMORY_AND_DISK; the one-pass RAW frame's
         # level is the swappable engine.ONE_PASS_RAW_STORAGE constant
@@ -468,17 +479,11 @@ def test_run_cache_intermediates_same_tables(spark, tmp_path):
             df.storageLevel.useDisk for df in cached.persisted
         )
         assert any(df.storageLevel.useMemory for df in cached.persisted)
-        # ORDER regression pin (round-10 self-review): the CACHE must
-        # register the RAW stage plans (derived stages — carve from
-        # hits, artefacts from spans — were built from the raw frames
-        # and cache-match by logical-plan equality), while the handed-
-        # out tables carry the observation ON TOP
+        # the handed-out stage tables are the persisted frames themselves
         assert all(
-            "CollectMetrics"
-            not in df._jdf.queryExecution().logical().toString()
-            for df in cached.persisted
+            cached[name].is_cached
+            for name in ("hits", "carved_files", "string_artefacts", "entropy_regions")
         )
-        assert "CollectMetrics" in cached["hits"]._jdf.queryExecution().logical().toString()
         # (no negative assertion on `plain`: Spark's cache manager
         # matches by LOGICAL PLAN equality, so the logically-identical
         # uncached frame reports — and reuses — the same cache entry)
@@ -490,15 +495,15 @@ def test_run_cache_intermediates_same_tables(spark, tmp_path):
 
 
 def test_observed_summary_matches_run_summary(spark, tmp_path):
-    """observed_summary (counters captured as a byproduct of the
-    actions that drove the stage tables — no subtree re-derivation)
-    must produce the exact run_summary row; and the cached-run
-    unpersist() helper frees the tracked frames."""
+    """The run_summary row write_tables returns (built from its own
+    write counts, no subtree re-derivation) must equal the lazy
+    run_summary aggregate; and the cached-run unpersist() helper frees
+    the tracked frames."""
     import dataclasses
 
     from tests.fixtures import mk_jpeg
     from tests.test_pipeline import TEST_CFG
-    from swiftbeaver_spark.engine import Engine
+    from swiftbeaver_spark.engine import Engine, write_tables
 
     evidence = bytearray(b"\x00" * 4096)
     evidence[100:130] = b"text with https://example.com " 
@@ -515,65 +520,13 @@ def test_observed_summary_matches_run_summary(spark, tmp_path):
     eng = Engine(spark, cfg)
     run = eng.run(evidence_path=path, cache_intermediates=True)
     try:
-        # drive every observed table (fills the observations)
-        for name in ("hits", "carved_files", "string_spans", "string_artefacts"):
-            run[name].count()
         lazy = run["run_summary"].collect()[0].asDict()
-        observed = run.observed_summary().collect()[0].asDict()
-        assert observed == lazy
+        written = write_tables(run, str(tmp_path / "out"), run_id="r1")
+        assert written == lazy
         assert lazy["hits_found"] >= 1 and lazy["string_spans"] >= 1
     finally:
         run.unpersist()
     assert not run.persisted
-
-
-def test_observed_summary_unfilled_returns_none(spark, tmp_path):
-    """Before any action drives the observed tables, observed_summary
-    must return None (non-blocking probe) — never hang on
-    Observation.get."""
-    import dataclasses
-
-    from tests.fixtures import mk_jpeg
-    from tests.test_pipeline import TEST_CFG
-    from swiftbeaver_spark.engine import Engine
-
-    evidence = bytearray(b"\x00" * 4096)
-    blob = mk_jpeg()
-    evidence[1024 : 1024 + len(blob)] = blob
-    path = str(tmp_path / "ev.raw")
-    with open(path, "wb") as fh:
-        fh.write(bytes(evidence))
-    cfg = dataclasses.replace(
-        TEST_CFG,
-        file_types=tuple(ft for ft in TEST_CFG.file_types if ft.type_id == "jpeg"),
-    )
-    run = Engine(spark, cfg).run(evidence_path=path)
-    assert run.observed_summary() is None
-    run["hits"].count()  # fills hits only; carved still unfilled
-    assert run.observed_summary() is None
-
-
-def test_observation_filled_probe_works(spark):
-    """_observation_filled uses a PRIVATE PySpark handle (no public
-    non-blocking probe exists as of 4.1.2) under a guard narrowed to
-    AttributeError — this test fails LOUDLY if the private API moves,
-    so the regression surfaces in CI instead of silently degrading
-    every observed summary to the lazy fallback (ADVICE r10 low)."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    from swiftbeaver_spark.engine import _observation_filled
-
-    obs = Observation()
-    df = spark.range(10).observe(obs, F.count(F.lit(1)).alias("n"))
-    assert _observation_filled(obs) is False  # attached, not yet driven
-    df.count()
-    assert _observation_filled(obs) is True
-    assert int(obs.get["n"]) == 10
-    # the probe path itself must exist: reach through the same private
-    # attribute directly so an API rename raises here, not inside the
-    # blanket-guard-free helper
-    assert obs._jo.getRowOrEmpty().isDefined()
 
 
 def test_write_tables_summary_immune_to_partial_predrive(spark, tmp_path):

@@ -179,17 +179,15 @@ def main() -> None:
             stages[stage]["note"] = "uncached: includes span-subtree re-derivation"
         print(f"# stage {stage}: {cnt} rows, {stages[stage]['wall_sec']}s",
               file=sys.stderr)
-    # run_summary via the stage observations (counters captured by the
-    # counts above — VERDICT r9 task 3: no subtree re-derivation even
-    # with caching OFF); falls back to the lazy aggregate if unfilled
+    # run_summary from the stage counts taken above (VERDICT r9 task 3:
+    # no subtree re-derivation even with caching OFF)
     t0 = time.time()
-    observed = run.observed_summary()
-    summary_df = observed if observed is not None else run["run_summary"]
+    summary_df = run.summary_from_counts({k: v["rows"] for k, v in stages.items()})
     cnt = summary_df.count()
     stages["run_summary"] = {
         "rows": cnt,
         "wall_sec": round(time.time() - t0, 3),
-        "method": "observed" if observed is not None else "lazy",
+        "method": "from_counts",
     }
     print(f"# stage run_summary ({stages['run_summary']['method']}): "
           f"{stages['run_summary']['wall_sec']}s", file=sys.stderr)
@@ -210,11 +208,8 @@ def main() -> None:
 
     # browser parse-only (AFTER e2e so the extra warm run cannot flatter
     # the cross-round e2e row): a cache_intermediates run persists the
-    # RAW stage plans (the engine owns the persist-before-observe
-    # ordering — persisting run["carved_files"] here would register the
-    # observed wrapper and MISS, the round-10 cache-order pitfall);
-    # driving carved_files populates the cache, so the browser action
-    # pays only sqlite parse + page recovery
+    # stage frames; driving carved_files populates the cache, so the
+    # browser action pays only sqlite parse + page recovery
     run_c = engine.run(evidence_path=path, cache_intermediates=True)
     run_c["carved_files"].count()
     t0 = time.time()

@@ -6,7 +6,7 @@ test scale; the 100 TB claim is about RESIDENCY — the HDFS-backed
 store keeps every state entry in executor heap (state ~ key
 cardinality), RocksDB keeps the working set native/on-SSD with
 changelog checkpointing. This tool runs the q37 sessionizer
-(applyInPandasWithState, one open-session record per user) over
+(native session_window, one open session per user) over
 synthetic event streams with N distinct users under BOTH providers —
 each in its OWN subprocess/JVM so heap numbers don't contaminate each
 other — and records:
