@@ -105,18 +105,23 @@ def main(argv: list[str] | None = None) -> int:
         print("EWF container detected; reading media natively", file=sys.stderr)
     evidence_len = evidence_length(args.input)
 
-    evidence_hash = None
-    if args.evidence_sha256:
-        evidence_hash = evidence_sha256_local(args.input)
-        print(f"evidence sha256: {evidence_hash}", file=sys.stderr)
-
     resume_from = None
     if args.checkpoint:
         state = CheckpointState.load(args.checkpoint)
         if state is not None:
             state.validate(cfg.chunk_size, cfg.overlap, evidence_len)
+            if state.next_offset >= evidence_len:
+                # resuming would scan zero chunks and overwrite the
+                # completed run's tables with empty ones
+                print("checkpoint complete, nothing to resume", file=sys.stderr)
+                return 0
             resume_from = state.next_offset
             print(f"resuming from offset {resume_from}", file=sys.stderr)
+
+    evidence_hash = None
+    if args.evidence_sha256:
+        evidence_hash = evidence_sha256_local(args.input)
+        print(f"evidence sha256: {evidence_hash}", file=sys.stderr)
 
     spark = get_spark(app_name=f"swiftbeaver-{run_id}", master=args.master)
     spark.sparkContext.setLogLevel("WARN")

@@ -13,39 +13,17 @@ Two evidence-access strategies (SURVEY §7.3):
    hits stream through mapInPandas.
 
 2. `carve_hits_with_chunks` — pure-DataFrame over the materialized
-   chunk table (the 100 TB path: no evidence re-read). Two phases:
-
-   a. STREAM pass (default): hit metadata is aggregated per chunk and
-      broadcast onto the chunk scan, and a mapInArrow walks each
-      partition's contiguous chunk runs carving hits whose window
-      completes inside the run. The chunk bytes NEVER shuffle — the
-      only data that moves is O(hits) metadata — and they cross Arrow
-      as zero-copy buffers. Depends on the chunk table holding
-      contiguous evidence runs per file (chunking.py writes it that
-      way); a scattered table just degrades to phase (b).
-   b. COGROUP fallback: hits the stream could not finish (window
-      crossing a partition/run boundary, or scattered table rows) are
-      re-carved by bucketing the chunk table into contiguous spans
-      (each chunk also serves earlier buckets within `reach`, so every
-      hit's window lies in ONE bucket) and cogrouping hits with chunk
-      spans. A broadcast semi-join prunes buckets with no pending
-      hits, so this pass touches only the boundary neighborhoods.
+   chunk table (the 100 TB path: no evidence re-read), as one bucketed
+   cogroup of hits with contiguous chunk spans (see its docstring).
+   Row order in the table does not matter: contiguous, many-file and
+   hash-scattered layouts carve identically.
 
 Strategy selection (engine.py): positioned reads whenever the evidence
 is reachable as a path from executors; the chunk strategy when only
 the materialized chunk table is available (object-store columnar
 copy), EXCEPT for types whose effective window exceeds
-`_WINDOW_CAP_LIMIT` — those must carve via positioned reads (both
-chunk phases buffer up to a full window per hit in executor memory).
-
-At cluster scale the broadcast in phase (a) ships hit metadata (tens
-of bytes per hit) to each executor once — versus re-shuffling the
-chunk bytes themselves, which is what the round-7 collect_list
-reassembly did (measured 3x the strategy-1 wall at sf1; the stream
-pass removes both the 614 MB shuffle and the duplicated Arrow
-transfer, tools/profile_carve_chunkjoin.py). Callers with hit sets
-too large to broadcast can force `strategy="cogroup"`, which shuffles
-chunk bytes exactly once on narrow bucket keys.
+`_WINDOW_CAP_LIMIT` — those must carve via positioned reads (a bucket
+group buffers up to a full window per hit in executor memory).
 """
 
 from __future__ import annotations
@@ -54,27 +32,18 @@ import math
 from collections.abc import Iterator
 
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    BooleanType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from swiftbeaver_spark import schemas
 from swiftbeaver_spark.carvers import build_registry, carve_hit
-from swiftbeaver_spark.carvers.base import FileReader, Reader
+from swiftbeaver_spark.carvers.base import Reader
 from swiftbeaver_spark.config import EngineConfig
 
 _CARVE_COLUMNS = [f.name for f in schemas.CARVED_FILES.fields]
 
-# largest per-type effective window the chunk strategy accepts: both
-# phases hold up to `window + chunk` contiguous bytes per in-flight hit
+# largest per-type effective window the chunk strategy accepts: a
+# bucket group holds up to `window + chunk` contiguous bytes per hit
 # in one Python allocation, so windows past this bound belong on
 # strategy 1 (positioned reads) — see "Strategy selection" above
 _WINDOW_CAP_LIMIT = 3 * (1 << 29)  # 1.5 GiB
@@ -84,47 +53,10 @@ _WINDOW_CAP_LIMIT = 3 * (1 << 29)  # 1.5 GiB
 # bytes per magic, so the bound exists for pathology, not pressure
 _SWEEP_CACHE_BUCKETS = 64
 
-# default contiguous bucket span for the cogroup phase: big enough to
+# contiguous bucket span of the chunk-table carve: big enough to
 # amortize per-group overhead, small enough that one group's buffer is
 # a footnote in executor memory and short scans still parallelize
-_DEFAULT_BUCKET_BYTES = 16 * 1024 * 1024
-
-# kept under its historical name: tests and engine docs refer to the
-# chunk strategy's window bound by this alias
-_ROW_CAP_LIMIT = _WINDOW_CAP_LIMIT
-
-# per-partition byte budget for the stream pass's head stashes +
-# deferred tails (module-level so tests can force the degradation
-# path): past it, stashes strip to key-only pending rows and the
-# cogroup backstop takes over — correctness unchanged, re-scan cost
-# returns. With the default 128 MiB window cap, reach-sized stashes
-# across many runs could otherwise echo a whole partition through
-# worker memory and the metadata output.
-_STASH_BUDGET = 64 << 20
-
-# stream-pass output: carve columns (nullable) + pending-hit columns +
-# run-edge columns. Pending rows carry the un-carved hit key and (when
-# the partition is contiguous) the hit's partial window bytes; edge
-# rows carry a run's head/back byte stashes so the boundary-resolve
-# pass can stitch windows across partitions WITHOUT re-scanning the
-# chunk table; carved rows leave all of those null.
-_STREAM_SCHEMA = StructType(
-    [StructField(f.name, f.dataType, True) for f in schemas.CARVED_FILES.fields]
-    + [
-        StructField("pending", BooleanType(), False),
-        StructField("h_off", LongType(), True),
-        StructField("h_ft", StringType(), True),
-        StructField("h_pat", StringType(), True),
-        StructField("h_wstart", LongType(), True),
-        StructField("h_bytes", BinaryType(), True),
-        StructField("h_lim", LongType(), True),
-        StructField("edge", BooleanType(), False),
-        StructField("e_start", LongType(), True),
-        StructField("e_vend", LongType(), True),
-        StructField("e_head", BinaryType(), True),
-        StructField("e_back", BinaryType(), True),
-    ]
-)
+_BUCKET_BYTES = 16 * 1024 * 1024
 
 
 def _record_to_tuple(rec) -> tuple:
@@ -380,20 +312,13 @@ class WindowReader(Reader):
             else window_start + len(data)
         )
         self.hit_window_end = False
-        # a read below window_start — callers that CLIPPED the window
-        # (stream pass at a run boundary) use this to detect that the
-        # handler wanted backup bytes the run doesn't hold
-        self.read_before_start = False
 
     def length(self) -> int:
         return self._len
 
     def read_at(self, offset: int, length: int) -> bytes:
         rel = offset - self._start
-        if rel < 0:
-            self.read_before_start = True
-            return b""
-        if length <= 0:
+        if rel < 0 or length <= 0:
             return b""
         lim_rel = self._limit - self._start
         # a read wanting bytes past the window while the EVIDENCE
@@ -433,23 +358,26 @@ def carve_hits_with_chunks(
     window_cap: int | None = None,
     evidence_len: int | None = None,
     window_caps: dict[str, int] | None = None,
-    bucket_bytes: int = _DEFAULT_BUCKET_BYTES,
-    strategy: str = "stream",
 ) -> DataFrame:
     """Carve from the chunk table alone (strategy 2, no evidence re-read).
 
-    `strategy="stream"` (default): shuffle-free stream pass over the
-    chunk scan + cogroup fallback for boundary hits (module docstring).
-    `strategy="cogroup"`: the bucketed cogroup alone — for hit sets too
-    large to broadcast (it shuffles chunk bytes once on bucket keys
-    instead of broadcasting hit metadata).
+    The chunk table is bucketed into contiguous spans of
+    `max(_BUCKET_BYTES, worst_window + backup)` bytes; each
+    chunk also serves the preceding bucket(s) whose hits can reach it
+    (the `reach` tail — duplication factor 1 + reach/span, bounded ~2x
+    even when the window dominates). Hits go to the bucket of their
+    first claimed chunk, so every hit's full window is present in
+    exactly one group, and a cogrouped applyInPandas assembles each
+    bucket buffer once and carves all its hits. A broadcast semi-join
+    keeps buckets with no hits out of the shuffle entirely (sparse
+    evidence ships only the buckets it needs). The table's row order
+    and file layout do not matter.
 
     `evidence_len`: total evidence length — the chunk *plan* knows it
     arithmetically, so callers thread it in rather than paying a full
     aggregation job over the chunk table mid-plan. When None, each
     hit uses its own window extent as EOF (same truncation outcome,
-    but over-cap cuts can't be told apart from evidence end, and
-    end-of-run hits take the fallback pass).
+    but over-cap cuts can't be told apart from evidence end).
 
     `window_caps`: per-type overrides of `window_cap` — big-media types
     (mov/webm/wmv, max_size 10 GiB) can be given a larger window than
@@ -458,516 +386,13 @@ def carve_hits_with_chunks(
     truncation (pinned by tests/test_carve_op.py).
     """
     eff, worst, cap = _validate_windows(cfg, window_cap, window_caps)
-    if strategy == "cogroup":
-        return _carve_cogroup(
-            hits, chunks, cfg, eff, worst, cap, evidence_len, bucket_bytes
-        )
-    if strategy != "stream":
-        raise ValueError(f"unknown carve strategy {strategy!r}")
-
-    chunk_size = cfg.chunk_size
-    overlap = cfg.overlap
-    ev_len = evidence_len
-    eff_map = dict(eff)
-    arrow_out = pa.schema(
-        [
-            ("file_type", pa.string()),
-            ("path", pa.string()),
-            ("extension", pa.string()),
-            ("global_start", pa.int64()),
-            ("global_end", pa.int64()),
-            ("size", pa.int64()),
-            ("md5", pa.string()),
-            ("sha256", pa.string()),
-            ("validated", pa.bool_()),
-            ("truncated", pa.bool_()),
-            ("errors", pa.list_(pa.string())),
-            ("pattern_id", pa.string()),
-            ("pending", pa.bool_()),
-            ("h_off", pa.int64()),
-            ("h_ft", pa.string()),
-            ("h_pat", pa.string()),
-            ("h_wstart", pa.int64()),
-            ("h_bytes", pa.binary()),
-            ("h_lim", pa.int64()),
-            ("edge", pa.bool_()),
-            ("e_start", pa.int64()),
-            ("e_vend", pa.int64()),
-            ("e_head", pa.binary()),
-            ("e_back", pa.binary()),
-        ]
-    )
-    n_carve_cols = len(_CARVE_COLUMNS)
-    empty_carve = (None,) * n_carve_cols
-    _NO_HIT = (None, None, None, None, None, None)
-    _NO_EDGE = (False, None, None, None, None)
-    reg_holder: list = []
-
-    # bytes a deferred window may need past its run end: backup +
-    # window + overlap + chunk-alignment slack (also how much of each
-    # run's head is stashed for partition-end stitching)
-    reach_bytes = worst + 512 + overlap + 2 * chunk_size
-
-    def stream_walk(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.compute as pc
-
-        if not reg_holder:
-            reg_holder.append(build_registry(cfg))
-        registry = reg_holder[0]
-        out_rows: list[tuple] = []
-
-        buf = bytearray()
-        buf_start = 0
-        pos: int | None = None  # absolute end of valid coverage
-        last_tail: bytes = b""
-        pending: list[tuple[int, str, str, int]] = []  # off, ft, pat, limit_end
-        # partition-end stitching state: files pack into a scan
-        # partition in arbitrary order, so a window cut at one file's
-        # end usually continues in another run of the SAME partition.
-        # Each run stashes its head; windows still pending at run end
-        # defer with their tail slice and are stitched before anything
-        # falls back to the cogroup pass.
-        head = bytearray()
-        run_start = 0
-        # scattered-table guard: a contiguous chunk table yields few
-        # runs per partition, so stashing per-run edge bytes and
-        # per-pending partial windows is a few MB. A hash-scattered
-        # legacy table yields one run PER ROW — there, emitting bytes
-        # would echo the whole partition through the metadata output,
-        # so past this bound everything strips to key-only pending
-        # rows and the cogroup pass (which handles scattered tables
-        # natively) takes over.
-        _MAX_STASHED_RUNS = 512
-        stash_budget = _STASH_BUDGET  # bound at call time, see module doc
-        stash_used = [0]
-
-        def emit_bytes() -> bool:
-            return len(runs) <= _MAX_STASHED_RUNS
-        # run_start -> (valid_end, head_valid_bytes, overlap_tail,
-        #               back_valid_bytes: the run's last ~512+chunk
-        #               valid bytes, captured before the buf resets —
-        #               what a successor's backward-anchored hit needs)
-        runs: dict[int, tuple[int, bytes, bytes, bytes]] = {}
-        # tail_start, valid_tail_bytes, own_overlap_tail, pending
-        deferred: list[tuple[int, bytes, bytes, list]] = []
-
-        def carve_one(
-            off: int, ft: str, pat: str, limit_end: int, w_start: int, w_buf
-        ) -> None:
-            aligned = (max(0, off - 512) // chunk_size) * chunk_size
-            lo = max(w_start, aligned)
-            hi_cov = w_start + len(w_buf)
-            window = bytes(w_buf[lo - w_start : min(limit_end, hi_cov) - w_start])
-            reader = WindowReader(
-                lo,
-                window,
-                ev_len if ev_len is not None else limit_end,
-                limit_end=limit_end,
-            )
-            rec = carve_hit(reader, off, ft, pat, registry, cfg)
-            if reader.read_before_start and lo > aligned:
-                # the handler wanted header-backup bytes (tar/mobi
-                # anchor the carve start before the hit) that sit in
-                # another run/partition — this run CLIPPED the claimed
-                # window, so the in-stream answer is not faithful.
-                # Defer WITH the in-hand forward window: the boundary-
-                # resolve pass prepends the predecessor run's back
-                # bytes (positioned-read parity). Types that never
-                # read backward (the overwhelming majority) are
-                # unaffected.
-                out_rows.append(
-                    (*empty_carve, True, off, ft, pat,
-                     lo, window if emit_bytes() else None,
-                     limit_end, *_NO_EDGE)
-                )
-                return
-            if rec is not None:
-                if reader.hit_window_end:
-                    rec.errors = [*rec.errors, "over_cap"]
-                out_rows.append(
-                    (*_record_to_tuple(rec), False, *_NO_HIT, *_NO_EDGE)
-                )
-
-        def resolve(at_eof: bool) -> None:
-            if not pending:
-                return
-            coverage = buf_start + len(buf)
-            keep = []
-            for off, ft, pat, lim in pending:
-                if lim <= coverage or at_eof:
-                    carve_one(off, ft, pat, lim, buf_start, buf)
-                else:
-                    keep.append((off, ft, pat, lim))
-            pending[:] = keep
-
-        def end_run() -> None:
-            nonlocal buf, buf_start, pos, last_tail
-            if pos is None:
-                return
-            valid_end = pos
-            tail = last_tail
-            # the run's final chunk contributes its overlap tail
-            if tail:
-                buf += tail
-                last_tail = b""
-            coverage = buf_start + len(buf)
-            resolve(at_eof=ev_len is not None and coverage >= ev_len)
-            # back stash: the handler backup contract is 512 bytes
-            # before the hit — 1 KiB covers it at any chunk size;
-            # deeper backward reads surface read_before_start in the
-            # resolve pass and fall through to the cogroup backstop
-            back_from = max(buf_start, valid_end - 1024)
-            h_stash = bytes(head)
-            if stash_used[0] + len(h_stash) > stash_budget:
-                h_stash = b""  # budget-stripped: chaining/stitching
-                # through this run degrades to the cogroup backstop
-            stash_used[0] += len(h_stash)
-            runs[run_start] = (
-                valid_end,
-                h_stash,
-                tail,
-                bytes(buf[back_from - buf_start : valid_end - buf_start]),
-            )
-            if pending:
-                keep_from = max(
-                    buf_start,
-                    ((min(p[0] for p in pending) - 512) // chunk_size) * chunk_size,
-                )
-                # valid bytes only — stitching re-derives overlap bytes
-                # from successor runs (a tail duplicates its successor's
-                # first `overlap` valid bytes)
-                t_stash = bytes(buf[keep_from - buf_start : valid_end - buf_start])
-                if stash_used[0] + len(t_stash) <= stash_budget:
-                    stash_used[0] += len(t_stash)
-                    deferred.append((keep_from, t_stash, tail, list(pending)))
-                else:
-                    # over budget: key-only pending -> cogroup backstop
-                    for off, ft, pat, _lim in pending:
-                        out_rows.append(
-                            (*empty_carve, True, off, ft, pat,
-                             None, None, None, *_NO_EDGE)
-                        )
-            pending.clear()
-            head.clear()
-            buf = bytearray()
-            pos = None
-
-        def evict() -> None:
-            nonlocal buf, buf_start
-            # future hits land in chunks starting at >= pos; their
-            # chunk-aligned 512-byte backup never reaches below this
-            # (at the production 512 MiB chunk size, retaining a whole
-            # extra chunk here would double per-task residency)
-            keep_from = ((pos - 512) // chunk_size) * chunk_size
-            if pending:
-                keep_from = min(
-                    keep_from,
-                    ((min(p[0] for p in pending) - 512) // chunk_size) * chunk_size,
-                )
-            keep_from = max(keep_from, buf_start)
-            drop = keep_from - buf_start
-            # amortize the memmove: only evict in sizable steps
-            if drop >= max(1 << 20, len(buf) // 2):
-                del buf[:drop]
-                buf_start = keep_from
-
-        def finish_partition() -> None:
-            end_run()
-            for tail_start, tail, own_tail, pend in deferred:
-                # extend the valid tail with successor-run heads
-                # (chaining on valid ends — heads are valid bytes, so
-                # overlap never duplicates); one head is enough unless
-                # a successor run is shorter than the needed reach and
-                # fully captured, in which case keep chaining through
-                ext = bytearray(tail)
-                cur = tail_start + len(tail)
-                grown = 0
-                end_tail = own_tail
-                while grown < reach_bytes:
-                    nxt = runs.get(cur)
-                    if nxt is None:
-                        break
-                    valid_end, nxt_head, nxt_tail, _nxt_back = nxt
-                    ext += nxt_head
-                    grown += len(nxt_head)
-                    if cur + len(nxt_head) < valid_end:
-                        end_tail = b""  # head only partially covers run
-                        cur += len(nxt_head)
-                        break
-                    cur = valid_end  # head IS the whole run; chain on
-                    end_tail = nxt_tail
-                # a true chain end (no successor) may add the last run's
-                # overlap tail — real evidence bytes nothing duplicates
-                if end_tail and runs.get(cur) is None:
-                    ext += end_tail
-                coverage = tail_start + len(ext)
-                at_eof = ev_len is not None and coverage >= ev_len
-                ext_b = None
-                for off, ft, pat, lim in pend:
-                    if lim <= coverage or at_eof:
-                        carve_one(off, ft, pat, lim, tail_start, ext)
-                    else:
-                        # crosses the partition boundary -> the
-                        # boundary-resolve pass stitches this window
-                        # from another partition's edge stash (bytes
-                        # included while the table looks contiguous)
-                        if ext_b is None and emit_bytes():
-                            ext_b = bytes(ext)
-                        out_rows.append(
-                            (*empty_carve, True, off, ft, pat,
-                             tail_start, ext_b, lim, *_NO_EDGE)
-                        )
-            if emit_bytes():
-                for r_start, (valid_end, r_head, r_tail, r_back) in runs.items():
-                    # e_head: the run's first bytes (plus the overlap
-                    # tail when the head covers the whole run — then it
-                    # IS the run); e_back: its last valid bytes
-                    whole = len(r_head) >= valid_end - r_start
-                    out_rows.append(
-                        (*empty_carve, False, *_NO_HIT,
-                         True, r_start, valid_end,
-                         r_head + r_tail if whole else r_head,
-                         r_back)
-                    )
-
-        import numpy as np
-
-        def add_hits(offs, fts, pats, j0: int, j1: int) -> None:
-            for j in range(j0, j1):
-                off, ft = int(offs[j]), fts[j]
-                win = eff_map.get(ft, cap)
-                lim = ((off + win - 1) // chunk_size + 1) * chunk_size + overlap
-                pending.append((off, ft, pats[j], lim))
-
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            starts = batch.column("start").to_numpy()
-            vlens = batch.column("valid_length").to_numpy()
-            data_col = batch.column("data")
-            hs_col = batch.column("hs")
-            # hits, flattened once per batch (no per-row scalar access)
-            parents = pc.list_parent_indices(hs_col).to_numpy()
-            flat = pc.list_flatten(hs_col)
-            h_offs = flat.field("global_offset").to_numpy()
-            h_fts = flat.field("file_type_id").to_pylist()
-            h_pats = flat.field("pattern_id").to_pylist()
-            # contiguous-run segments within the batch
-            seg_bounds = (
-                [0]
-                + (np.nonzero(starts[1:] != starts[:-1] + vlens[:-1])[0] + 1).tolist()
-                + [n]
-            )
-            if overlap == 0:
-                # fast path: data == valid region, so a whole contiguous
-                # segment appends straight from the Arrow value buffer
-                off_buf = data_col.buffers()[1]
-                odt = np.int64 if pa.types.is_large_binary(data_col.type) else np.int32
-                voffs = np.frombuffer(off_buf, dtype=odt)[
-                    data_col.offset : data_col.offset + n + 1
-                ]
-                vb = memoryview(data_col.buffers()[2])
-                for si in range(len(seg_bounds) - 1):
-                    i0, i1 = seg_bounds[si], seg_bounds[si + 1]
-                    start = int(starts[i0])
-                    if pos is None or start != pos:
-                        end_run()
-                        buf_start = start
-                        run_start = start
-                    chunk_bytes = vb[voffs[i0] : voffs[i1]]
-                    buf += chunk_bytes
-                    need = reach_bytes - len(head)
-                    if need > 0 and stash_used[0] < stash_budget:
-                        head += chunk_bytes[:need]
-                    last_tail = b""
-                    pos = int(starts[i1 - 1]) + int(vlens[i1 - 1])
-                    j0, j1 = np.searchsorted(parents, [i0, i1])
-                    if j1 > j0:
-                        add_hits(h_offs, h_fts, h_pats, j0, j1)
-                    if pending:
-                        resolve(at_eof=ev_len is not None and pos >= ev_len)
-                    evict()
-            else:
-                hit_rows = set(parents.tolist())
-                for i in range(n):
-                    start, vlen = int(starts[i]), int(vlens[i])
-                    if pos is None or start != pos:
-                        end_run()
-                        buf_start = start
-                        run_start = start
-                    dbuf = data_col[i].as_buffer()
-                    valid = dbuf[:vlen]
-                    buf += valid
-                    if len(head) < reach_bytes and stash_used[0] < stash_budget:
-                        head += valid
-                    last_tail = bytes(dbuf[vlen:]) if len(dbuf) > vlen else b""
-                    pos = start + vlen
-                    if i in hit_rows:
-                        j0, j1 = np.searchsorted(parents, [i, i + 1])
-                        add_hits(h_offs, h_fts, h_pats, j0, j1)
-                    if pending:
-                        resolve(at_eof=ev_len is not None and pos >= ev_len)
-                    evict()
-        finish_partition()
-        if out_rows:
-            cols = list(zip(*out_rows))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, type=f.type) for c, f in zip(cols, arrow_out)],
-                schema=arrow_out,
-            )
-
-    hit_by_chunk = (
-        hits.select(
-            F.expr(f"global_offset div {chunk_size}").alias("chunk_id"),
-            F.struct("global_offset", "file_type_id", "pattern_id").alias("h"),
-        )
-        .groupBy("chunk_id")
-        .agg(F.collect_list("h").alias("hs"))
-    )
-    joined = chunks.join(F.broadcast(hit_by_chunk), "chunk_id", "left").select(
-        "start", "valid_length", "data", "hs"
-    )
-    # the stream output is near-metadata-only (carve records, pending
-    # hit keys with bounded partial windows, per-run edge stashes —
-    # never the chunk table itself), so persisting it is cheap — and
-    # needed: the carved/pending/edge filters all consume it
-    out = joined.mapInArrow(stream_walk, _STREAM_SCHEMA).persist()
-    carved = out.filter(~F.col("pending") & ~F.col("edge")).select(*_CARVE_COLUMNS)
-    pend = out.filter(F.col("pending"))
-    edges = out.filter(F.col("edge"))
-
-    # boundary-resolve pass: windows cut at a partition boundary are
-    # stitched from OTHER partitions' edge stashes — two broadcast
-    # joins and a mapInPandas over the handful of boundary hits. The
-    # chunk table is NOT re-scanned (the round-7 fallback re-scanned
-    # it per carve call; measured ~0.35 s of the sf1 wall for ~50
-    # boundary hits).
-    p2_in = (
-        pend.select("h_off", "h_ft", "h_pat", "h_wstart", "h_bytes", "h_lim")
-        .withColumn("h_cov", F.col("h_wstart") + F.length("h_bytes"))
-        .join(
-            F.broadcast(
-                edges.select(F.col("e_start").alias("h_cov"), "e_head")
-            ),
-            "h_cov",
-            "left",
-        )
-        .join(
-            F.broadcast(
-                edges.select(F.col("e_vend").alias("h_wstart"), "e_back")
-            ),
-            "h_wstart",
-            "left",
-        )
-    )
-
-    def resolve_boundary(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if not reg_holder:
-            reg_holder.append(build_registry(cfg))
-        registry = reg_holder[0]
-        cols = [*_CARVE_COLUMNS, "pending", "h_off", "h_ft", "h_pat"]
-        for pdf in batches:
-            rows = []
-            for off, ft, pat, wstart, hbytes, lim, ehead, eback in zip(
-                pdf["h_off"], pdf["h_ft"], pdf["h_pat"], pdf["h_wstart"],
-                pdf["h_bytes"], pdf["h_lim"], pdf["e_head"], pdf["e_back"],
-            ):
-                off, ft, pat = int(off), str(ft), str(pat)
-                if hbytes is None:
-                    # stripped (scattered table / stash budget) ->
-                    # straight to the cogroup backstop
-                    rows.append((*empty_carve, True, off, ft, pat))
-                    continue
-                back = bytes(eback) if eback is not None else b""
-                fwd = bytes(ehead) if ehead is not None else b""
-                window = back + bytes(hbytes) + fwd
-                w_start = int(wstart) - len(back)
-                lim = int(lim)
-                aligned = (max(0, off - 512) // chunk_size) * chunk_size
-                lo = max(w_start, aligned)
-                cov = w_start + len(window)
-                at_eof = ev_len is not None and cov >= ev_len
-                if not (lim <= cov or at_eof):
-                    # needs a second forward link -> cogroup pass
-                    rows.append((*empty_carve, True, off, ft, pat))
-                    continue
-                reader = WindowReader(
-                    lo,
-                    window[lo - w_start : max(0, min(lim, cov) - w_start)],
-                    ev_len if ev_len is not None else lim,
-                    limit_end=lim,
-                )
-                rec = carve_hit(reader, off, ft, pat, registry, cfg)
-                if reader.read_before_start and lo > aligned:
-                    # still missing backup bytes -> cogroup pass
-                    rows.append((*empty_carve, True, off, ft, pat))
-                    continue
-                if rec is not None:
-                    if reader.hit_window_end:
-                        rec.errors = [*rec.errors, "over_cap"]
-                    rows.append((*_record_to_tuple(rec), False, None, None, None))
-            yield pd.DataFrame(rows, columns=cols)
-
-    p2_schema = StructType(
-        [StructField(f.name, f.dataType, True) for f in schemas.CARVED_FILES.fields]
-        + [
-            StructField("pending", BooleanType(), False),
-            StructField("h_off", LongType(), True),
-            StructField("h_ft", StringType(), True),
-            StructField("h_pat", StringType(), True),
-        ]
-    )
-    p2_out = p2_in.mapInPandas(resolve_boundary, p2_schema).persist()
-    carved2 = p2_out.filter(~F.col("pending")).select(*_CARVE_COLUMNS)
-
-    # totality backstop: hits the stream could not even stash bytes for
-    # (scattered tables past the run guard) or that phase 2 could not
-    # finish (multi-link chains). Usually EMPTY — AQE's empty-relation
-    # propagation then collapses the semi-join and never scans the
-    # chunk table. MINIMAL bucket spans (span == reach) keep the
-    # shuffle to boundary neighborhoods when it does run.
-    pend_keys = p2_out.filter(F.col("pending")).select(
-        F.col("h_off").alias("global_offset"),
-        F.col("h_ft").alias("file_type_id"),
-        F.col("h_pat").alias("pattern_id"),
-    )
-    fallback = _carve_cogroup(
-        pend_keys, chunks, cfg, eff, worst, cap, evidence_len, cfg.chunk_size
-    )
-    return carved.unionByName(carved2).unionByName(fallback)
-
-
-def _carve_cogroup(
-    hits: DataFrame,
-    chunks: DataFrame,
-    cfg: EngineConfig,
-    eff: dict[str, int],
-    worst: int,
-    cap: int,
-    evidence_len: int | None,
-    bucket_bytes: int,
-) -> DataFrame:
-    """Bucketed-cogroup carve (phase b / standalone `strategy="cogroup"`).
-
-    The chunk table is bucketed into contiguous spans of
-    `max(bucket_bytes, worst_window + backup)` bytes; each chunk also
-    serves the preceding bucket(s) whose hits can reach it (the `reach`
-    tail — duplication factor 1 + reach/span, bounded ~2x even when the
-    window dominates). Hits go to the bucket of their first claimed
-    chunk, so every hit's full window is present in exactly one group,
-    and a cogrouped applyInPandas assembles each bucket buffer once and
-    carves all its hits. A broadcast semi-join keeps buckets with no
-    hits out of the shuffle entirely (sparse evidence ships only the
-    buckets it needs).
-    """
     chunk_size = cfg.chunk_size
     overlap = cfg.overlap
     # chunks a hit can claim beyond its first: header backup (512 B,
     # tar/mobi anchor before the hit) + the per-type window
     reach = math.ceil((512 + worst) / chunk_size) + 1
     span = max(
-        max(1, bucket_bytes // chunk_size),
+        max(1, _BUCKET_BYTES // chunk_size),
         reach,  # keep duplication factor (1 + reach/span) <= 2
     )
 
@@ -995,14 +420,11 @@ def _carve_cogroup(
         ).alias("bucket"),
     )
     # prune buckets nobody hit BEFORE the chunk bytes shuffle: sparse
-    # evidence (and the stream pass's boundary-only fallback) ships
-    # only the buckets it needs
+    # evidence ships only the buckets it needs
     chunk_rows = chunk_rows.join(
         F.broadcast(hit_rows.select("bucket").distinct()), "bucket", "left_semi"
     )
 
-    ev_len = evidence_len
-    eff_map = dict(eff)
     reg_holder: list = []  # registry survives across groups within a task
 
     def carve_bucket(hits_pdf: pd.DataFrame, chunks_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1050,7 +472,7 @@ def _carve_cogroup(
                     break
             if buf is None:
                 continue  # hit's own chunk absent (bounded table edge)
-            win = eff_map.get(ft_id, cap)
+            win = eff.get(ft_id, cap)
             last_claimed = (off + win - 1) // chunk_size
             limit_end = min(
                 buf_start + len(buf), (last_claimed + 1) * chunk_size + overlap
@@ -1058,7 +480,7 @@ def _carve_cogroup(
             reader = WindowReader(
                 buf_start,
                 buf,
-                ev_len if ev_len is not None else limit_end,
+                evidence_len if evidence_len is not None else limit_end,
                 limit_end=limit_end,
             )
             rec = carve_hit(reader, off, ft_id, pat_id, registry, cfg)

@@ -47,9 +47,9 @@ def _plan_range(
     """Chunk geometry for ids [first_chunk, end_chunk) — pure `range`
     arithmetic. `spark.range` splits the id space into CONTIGUOUS
     slices per partition, so downstream parquet files written from this
-    plan hold contiguous evidence runs (the stream-carve strategy in
-    carve_op.py depends on that; a hash repartition here would scatter
-    evidence order across files)."""
+    plan hold contiguous evidence runs (a hash repartition here would
+    scatter evidence order across files; the chunk-table carve in
+    carve_op.py buckets by chunk_id and does not depend on it)."""
     rng = (
         spark.range(first_chunk, end_chunk, 1, num_partitions)
         if num_partitions
@@ -143,8 +143,7 @@ def chunks_from_file(
     # Partition count comes from arithmetic, not a count() job — and
     # partitions are CONTIGUOUS id slices straight from spark.range (no
     # hash repartition), so a materialized chunk table's files hold
-    # contiguous evidence runs in row order, which is what lets the
-    # stream-carve strategy (carve_op.py) walk them shuffle-free.
+    # contiguous evidence runs in row order.
     n_chunks = hi - lo
     if n_chunks == 0:
         return spark.createDataFrame([], schemas.CHUNKS)

@@ -107,16 +107,18 @@ class Engine:
     executors can reach it as a path: local, NFS, fuse-mounted object
     store), with no window cap at all. Pass `chunks` to carve from the
     materialized chunk table alone (the 100 TB path: the one-pass
-    columnar copy replaces all later evidence reads) — a shuffle-free
-    stream pass plus a bucketed-cogroup fallback for windows crossing
-    partition boundaries (carve_op.py). Heap sizing for the chunk-table
-    strategy (run(chunk_join=True) / carve(chunks=...)): the working
-    set is the chunk CACHE plus, per concurrent task, a chunk row AND
-    its Arrow copy crossing the stream-carve boundary — roughly
-    cache_bytes + 3 x concurrent_tasks x chunk_size. Measured on
-    local[32] at 4 GiB evidence: an 8 GiB heap OOMs at 512 MiB chunks
-    (cache unroll), a 16 GiB heap OOMs at 64 MiB chunks (32 concurrent
-    Arrow conversions on top of the 4 GiB cache). This is the CLUSTER
+    columnar copy replaces all later evidence reads) — one bucketed
+    cogroup of hits with contiguous chunk spans (carve_op.py). Heap
+    sizing for the chunk-table strategy (run(chunk_join=True) /
+    carve(chunks=...)): the working set is the chunk CACHE plus, per
+    concurrent task, one bucket group — its bucket's `span` chunks plus
+    the `reach` chunks after them, held once as the cogroup's pandas
+    frame and once as the assembled run buffer — roughly
+    cache_bytes + 2 x concurrent_tasks x (span + reach) x chunk_size,
+    with reach = ceil((512 + window) / chunk_size) + 1 chunks and
+    span = max(16 MiB / chunk_size, reach). At the production 512 MiB
+    chunk and the default 128 MiB window a group is 4 chunks (2 GiB),
+    so each concurrent task needs several GiB of heap. This is the CLUSTER
     strategy — the budget is per-executor on a many-node cluster
     (100 TB / 1000 nodes = 100 GB/node, disk-backed) — single-JVM
     local runs should use the default one-pass path, which
@@ -160,15 +162,11 @@ class Engine:
         evidence_path: str | None = None,
         chunks: DataFrame | None = None,
         evidence_len: int | None = None,
-        chunk_strategy: str = "stream",
     ) -> DataFrame:
-        """`chunk_strategy` (chunks path only): "stream" broadcasts hit
-        metadata onto the chunk scan — right whenever the hit set fits
-        a broadcast (tens of bytes per hit; virtually always).
-        "cogroup" instead shuffles chunk bytes once on bucket keys —
-        the escape hatch for hit sets too large to broadcast (billions
-        of hits), where a forced broadcast would pressure executor
-        memory. Results are identical (differential-tested)."""
+        """Carve by positioned reads when `evidence_path` is given,
+        otherwise from the chunk table `chunks` (one bucketed cogroup;
+        `evidence_len` lets over-cap cuts be told apart from evidence
+        end). See the class docstring for when to use which."""
         if evidence_path is not None:
             carved = carve_hits_with_evidence(hits, evidence_path, self.cfg)
         elif chunks is not None:
@@ -177,7 +175,6 @@ class Engine:
                 chunks,
                 self.cfg,
                 evidence_len=evidence_len,
-                strategy=chunk_strategy,
             )
         else:
             raise ValueError("need evidence_path or chunks")

@@ -16,6 +16,8 @@ Tungsten handles them off-heap; nothing crosses into Python.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -127,9 +129,15 @@ def hyperplane_bucket(
     double-literal, CASE WHEN s > 0 — so codegen, results, and the
     IEEE fold order are unchanged (pinned by
     tests/test_llm.py::test_hyperplane_bucket_sql_path_matches_column_path).
-    The Column form stays supported for arbitrary expressions."""
+    The Column form stays supported for arbitrary expressions, and
+    takes over for a name that is not a bare identifier or a matrix
+    with a non-finite coefficient (neither would parse as SQL)."""
     if plane_matrix is not None:
-        if isinstance(vec, str):
+        if (
+            isinstance(vec, str)
+            and vec.isidentifier()
+            and all(math.isfinite(c) for row in plane_matrix for c in row)
+        ):
             plane_terms = []
             for p, row in enumerate(plane_matrix):
                 s = " + ".join(

@@ -156,11 +156,12 @@ def test_over_cap_type_carves_fully_on_positioned_path(spark, tmp_path):
     assert "over_cap" not in positioned[0].errors
 
 
-def test_stream_and_cogroup_agree_on_scattered_chunk_table(spark, tmp_path):
+def test_scattered_chunk_table_matches_contiguous_and_positioned(spark, tmp_path):
     """A chunk table whose parquet rows are hash-scattered (no
-    contiguous runs — the pre-round-8 materialize layout) must still
-    carve correctly: every stream window breaks, everything defers to
-    the cogroup fallback, and both strategies return identical rows."""
+    contiguous runs — the pre-round-8 materialize layout) must carve
+    exactly like the contiguous table and like positioned reads: each
+    bucket is reassembled in chunk start order, whatever the row
+    order."""
     bmp = big_bmp()
     evidence = bytearray()
     offsets = []
@@ -190,7 +191,7 @@ def test_stream_and_cogroup_agree_on_scattered_chunk_table(spark, tmp_path):
             ).select(*sel).collect(),
         )
     )
-    got_stream = sorted(
+    got = sorted(
         map(
             tuple,
             carve_hits_with_chunks(
@@ -198,18 +199,8 @@ def test_stream_and_cogroup_agree_on_scattered_chunk_table(spark, tmp_path):
             ).select(*sel).collect(),
         )
     )
-    got_cogroup = sorted(
-        map(
-            tuple,
-            carve_hits_with_chunks(
-                hits, scattered, CFG, window_cap=32768,
-                evidence_len=len(evidence), strategy="cogroup",
-            ).select(*sel).collect(),
-        )
-    )
     assert len(want) == 6
-    assert got_stream == want
-    assert got_cogroup == want
+    assert got == want
     ev_path = tmp_path / "ev.raw"
     ev_path.write_bytes(evidence)
     got_positioned = sorted(
@@ -221,11 +212,11 @@ def test_stream_and_cogroup_agree_on_scattered_chunk_table(spark, tmp_path):
     assert got_positioned == want
 
 
-def test_stream_stitches_windows_across_file_boundaries(spark, tmp_path):
-    """Hits whose carve window crosses a parquet-file boundary resolve
-    via partition-end run stitching (or the cogroup fallback when the
-    boundary is also a partition boundary) — outputs must match the
-    single-file table exactly."""
+def test_windows_across_file_boundaries_match_single_file(spark, tmp_path):
+    """Hits whose carve window crosses a parquet-file (and scan
+    partition) boundary must carve exactly as from the single-file
+    table: a hit's bucket gathers its whole window whichever files the
+    chunks live in."""
     bmp = big_bmp()  # 12,342 bytes ~ spans 4 chunks of 4096
     evidence = bytearray()
     offsets = []
@@ -268,11 +259,11 @@ def test_stream_stitches_windows_across_file_boundaries(spark, tmp_path):
     assert got == want
 
 
-def test_stream_defers_backward_anchored_hits_at_run_starts(spark, tmp_path):
+def test_backward_anchored_tar_at_run_start_matches_positioned(spark, tmp_path):
     """A tar's ustar hit sits 257 bytes into its header; when the hit
-    lands at (or near) the start of a parquet run, the in-stream window
-    lacks the backup bytes — the handler's backward read must route the
-    hit to the fallback pass, matching positioned reads exactly."""
+    lands exactly at the start of a parquet run, the carve start backs
+    up into the previous file's chunks — the bucket must hold those
+    backup bytes, matching positioned reads exactly."""
     from tests.fixtures import mk_tar
 
     from swiftbeaver_spark import schemas
@@ -316,14 +307,14 @@ def test_stream_defers_backward_anchored_hits_at_run_starts(spark, tmp_path):
     assert got == want
 
 
-def test_stream_differential_random_layouts(spark, tmp_path):
+def test_random_layouts_match_positioned(spark, tmp_path):
     """Differential totality: random evidence mixing forward-truncating
     (bmp) and backward-anchored (tar) types, random chunk/overlap
     geometry, random parquet layouts (contiguous ranges, hash-scattered,
     many small files) — the chunk strategy must match positioned reads
     on every (start, size, sha256, truncated) tuple, for every layout.
-    Deterministic seeds; exercises in-stream carve, run stitching, the
-    boundary-resolve pass, backward defer, and the cogroup backstop."""
+    Deterministic seeds; exercises windows crossing file and bucket
+    boundaries and header backup across run starts."""
     import random
 
     from tests.fixtures import mk_tar
@@ -389,42 +380,3 @@ def test_stream_differential_random_layouts(spark, tmp_path):
                 )
             )
             assert got == want, f"seed={seed} layout={name}"
-
-
-def test_stash_budget_degrades_to_cogroup(spark, tmp_path, monkeypatch):
-    """Forcing the per-partition stash budget to zero strips every edge
-    stash and deferred tail to key-only pending rows — results must
-    still match positioned reads via the cogroup backstop."""
-    import swiftbeaver_spark.carve_op as C
-
-    monkeypatch.setattr(C, "_STASH_BUDGET", 0)
-    bmp = big_bmp()
-    evidence = bytearray()
-    offsets = []
-    for k in range(4):
-        offsets.append(len(evidence))
-        evidence += bmp
-        evidence += b"\x00" * ((-len(evidence)) % 4096)
-    evidence = bytes(evidence)
-    chunks = chunks_from_bytes(spark, evidence, CFG.chunk_size, CFG.overlap)
-    pq = str(tmp_path / "budget.parquet")
-    chunks.repartitionByRange(5, "chunk_id").write.parquet(pq)
-    from swiftbeaver_spark import schemas
-
-    hits = spark.createDataFrame(
-        [(off, "bmp", "bmp_header") for off in offsets],
-        "global_offset long, file_type_id string, pattern_id string",
-    )
-    got = sorted(
-        map(
-            tuple,
-            C.carve_hits_with_chunks(
-                hits,
-                spark.read.schema(schemas.CHUNKS).parquet(pq),
-                CFG,
-                window_cap=32768,
-                evidence_len=len(evidence),
-            ).select("global_start", "size", "truncated").collect(),
-        )
-    )
-    assert got == [(off, len(bmp), False) for off in offsets]

@@ -8,6 +8,7 @@ import os
 import subprocess
 import sys
 
+import pyarrow.parquet as pq
 import pytest
 
 from swiftbeaver_spark.chunking import chunks_from_bytes
@@ -73,22 +74,33 @@ def test_cli_end_to_end(tmp_path):
         fh.write(bytes(buf))
     out = str(tmp_path / "out")
     cp = str(tmp_path / "cp.json")
-    proc = subprocess.run(
-        [
-            sys.executable, "-m", "swiftbeaver_spark",
-            "--input", ev, "--output", out,
-            "--types", "jpeg", "--chunk-size", "16384", "--overlap", "4096",
-            "--format", "parquet", "--master", "local[2]",
-            "--evidence-sha256", "--checkpoint", cp,
-        ],
-        capture_output=True,
-        text=True,
-        timeout=300,
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    )
+
+    def run_cli():
+        return subprocess.run(
+            [
+                sys.executable, "-m", "swiftbeaver_spark",
+                "--input", ev, "--output", out,
+                "--types", "jpeg", "--chunk-size", "16384", "--overlap", "4096",
+                "--format", "parquet", "--master", "local[2]",
+                "--evidence-sha256", "--checkpoint", cp,
+            ],
+            capture_output=True,
+            text=True,
+            timeout=300,
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
+
+    proc = run_cli()
     assert proc.returncode == 0, proc.stderr[-2000:]
     report = json.loads(proc.stdout.strip().splitlines()[-1])
     assert report["files_carved"] == 1
     assert report["bytes_scanned"] == 65536
     assert report["evidence_sha256"] == hashlib.sha256(bytes(buf)).hexdigest()
     assert json.load(open(cp))["next_offset"] == 65536
+
+    # re-running over the completed checkpoint is a no-op: it must not
+    # overwrite the finished run's tables with an empty resume
+    proc = run_cli()
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "checkpoint complete, nothing to resume" in proc.stderr
+    assert pq.read_table(os.path.join(out, "carved_files")).num_rows == 1

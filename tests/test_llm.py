@@ -2365,3 +2365,19 @@ def test_hyperplane_bucket_sql_path_matches_column_path(spark):
     bad = both.where(F.col("b_sql") != F.col("b_col")).count()
     assert bad == 0
     assert both.where(F.col("b_sql") > 0).count() > 0  # nondegenerate
+
+    # names that are not bare identifiers and non-finite coefficients
+    # cannot be spelled as SQL text: the name form must fall back to
+    # the Column fold instead of failing to parse
+    spaced = both.join(emb.withColumnRenamed("vec", "my vec"), "vec_id").select(
+        "b_col",
+        hyperplane_bucket("my vec", 6, planes).alias("b_name"),
+    )
+    assert spaced.where(F.col("b_name") != F.col("b_col")).count() == 0
+    odd = [list(row) for row in planes]
+    odd[0][0], odd[1][1] = float("inf"), float("nan")
+    nonfinite = emb.select(
+        hyperplane_bucket("vec", 6, odd).alias("b_name"),
+        hyperplane_bucket(F.col("vec"), 6, odd).alias("b_col"),
+    )
+    assert nonfinite.where(F.col("b_name") != F.col("b_col")).count() == 0

@@ -139,8 +139,8 @@ def main() -> None:
         w1s = round(time.time() - t0, 3)
 
         # evidence_len is threaded exactly as engine.py does (the chunk
-        # plan knows it arithmetically) — it lets the stream pass carve
-        # end-of-evidence windows in place instead of deferring them
+        # plan knows it arithmetically) — it lets the carve tell an
+        # over-cap cut from evidence end
         c2 = carve_hits_with_chunks(hits, chunks, cfg, window_cap=2 * BLOCK, evidence_len=size)
         c2 = c2.select(*sel)
         p2_planned = plan_profile(c2, executed=False)
@@ -148,9 +148,6 @@ def main() -> None:
         r2 = sorted(map(tuple, c2.collect()))
         w2 = round(time.time() - t0, 3)
         p2_exec = plan_profile(c2, executed=True)
-        spark.catalog.clearCache()  # drop run-1's internal persist
-        hits.persist()
-        hits.count()  # clearCache dropped it too; re-materialize untimed
         c2b = carve_hits_with_chunks(
             hits, chunks, cfg, window_cap=2 * BLOCK, evidence_len=size
         ).select(*sel)

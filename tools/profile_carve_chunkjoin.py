@@ -1,19 +1,15 @@
-"""Decompose the chunk-strategy carve wall (round-8 architecture).
+"""Decompose the chunk-strategy carve wall.
 
-Measures, over the jpeg-dense artifacts, cumulative walls for prefixes
-of the STREAM strategy so the dominant term stays identified:
+Measures, over the jpeg-dense artifacts, three walls so the
+dominant term stays identified:
 
   scan_only    : parquet chunk scan, JVM-side length sum
-  join_only    : + broadcast of per-chunk hit lists (left join), JVM sum
-  stream_xfer  : + mapInArrow passthrough (Arrow transfer, no carve)
-  full         : the production carve_hits_with_chunks (stream +
-                 boundary-resolve + cogroup backstop)
+  full         : the production carve_hits_with_chunks (one bucketed
+                 cogroup of hits with contiguous chunk spans)
   positioned   : strategy-1 baseline
 
-The round-7 findings this architecture answered: the collect_list
-reassembly shuffled every chunk byte once per claiming hit (~3x table
-size) and crossed Arrow duplicated — both terms are gone; what remains
-is scan + one Arrow crossing + the shared per-hit carve cost.
+`full - scan_only` is the cogroup's shuffle plus the shared per-hit
+carve cost; `positioned` is the same carve with no chunk table at all.
 
 Usage: python tools/profile_carve_chunkjoin.py [sf0.1|sf1]
 """
@@ -25,7 +21,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import pyarrow as pa
 from pyspark.sql import functions as F
 
 from swiftbeaver_spark.carve_op import carve_hits_with_chunks, carve_hits_with_evidence
@@ -62,31 +57,7 @@ def main() -> None:
         out[name] = round(time.time() - t0, 3)
         print(f"# {name}: {out[name]}s ({r})", file=sys.stderr)
 
-    hit_by_chunk = (
-        hits.select(
-            F.expr(f"global_offset div {BLOCK}").alias("chunk_id"),
-            F.struct("global_offset", "file_type_id", "pattern_id").alias("h"),
-        )
-        .groupBy("chunk_id")
-        .agg(F.collect_list("h").alias("hs"))
-    )
-    joined = chunks.join(F.broadcast(hit_by_chunk), "chunk_id", "left").select(
-        "start", "valid_length", "data", "hs"
-    )
-
-    def walk(batches):
-        n = b = 0
-        for tbl in batches:
-            n += tbl.num_rows
-            col = tbl.column("data")
-            for i in range(tbl.num_rows):
-                b += len(col[i].as_buffer())
-        yield pa.RecordBatch.from_pydict({"n": [n], "b": [b]})
-
     timed("scan_only", lambda: chunks.select(F.sum(F.length("data"))).collect()[0][0])
-    timed("join_only", lambda: joined.select(F.sum(F.length("data"))).collect()[0][0])
-    timed("stream_xfer", lambda: joined.mapInArrow(
-        walk, "n long, b long").agg(F.sum("n"), F.sum("b")).collect()[0][0])
     timed("full", lambda: len(
         carve_hits_with_chunks(
             hits, chunks, cfg, window_cap=2 * BLOCK, evidence_len=ev_len
