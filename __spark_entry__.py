@@ -298,7 +298,7 @@ def q02_chunked_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the overlap-dedup semantics (reference workers.rs:136-155).
 
     Routed through the engine's real scan kernel (scanner.scan_chunks,
-    JVM Aho-Corasick / numpy fallback) instead of the round-1
+    JVM Aho-Corasick) instead of the round-1
     interpreted F.aggregate fold. Docs embed into one address space at
     doc_id * _DOC_SPAN so the kernel's (start + local_offset) math
     carries the doc identity through the scan. The chunk table derives
@@ -1198,8 +1198,8 @@ def q23_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
     )
 
-    # shared builder: compiled sb_dot when the JVM kernel is registered
-    # (bit-exact twin of the zip_with/aggregate fold), Catalyst fallback
+    # shared builder: the compiled sb_dot kernel (bit-exact twin of the
+    # zip_with/aggregate fold)
     from swiftbeaver_spark.llm.similarity import dot
 
     # Self-norms are precomputed per ROW before the cross join instead
@@ -11574,10 +11574,9 @@ def q172_fasttext_subword(spark: SparkSession, sf_dir: str) -> DataFrame:
     for word, label AND bucket vectors (the q171 machinery, extended
     with 256 '__bucket__<i>' rows), the n-gram expansion ('<word>'
     wrapping, n in [3, 4], duplicates kept — the compiled sb_subword
-    kernel by default, round 8; the Catalyst subword_ngrams chain as
-    the differential-pinned fallback), the FNV-1a-over-codepoints fold
-    (fnv1a32 == DuckDB's list_reduce of ord()s — pinned vs an
-    independent Python reference in tests/test_weights.py), the
+    kernel), the FNV-1a-over-codepoints fold (== DuckDB's list_reduce
+    of ord()s — sb_subword is pinned vs an independent Python reference
+    in tests/test_weights.py), the
     per-(doc, label) integer micro sums,
     the matched-unit mean (truncating div, both engines), and the
     min_by argmax with the 'und' fallback.
@@ -11697,7 +11696,7 @@ def q172_sql() -> str:
       SELECT CAST(substr(token, 11) AS BIGINT) AS bucket, label, weight_micro
       FROM wts WHERE starts_with(token, '__bucket__')
     ), grams AS (
-      -- subword_ngrams: all n-grams of '<token>' for n in
+      -- subword n-grams: all n-grams of '<token>' for n in
       -- [Q172_MINN, Q172_MAXN], duplicates kept (one row per occurrence)
       SELECT doc_id, substr(w, i, n) AS ngram
       FROM (SELECT doc_id, '<' || token || '>' AS w FROM toks),
@@ -11705,7 +11704,7 @@ def q172_sql() -> str:
            LATERAL unnest(range(1, length(w) - n + 2)) AS u(i)
       WHERE length(w) >= n
     ), gbuckets AS (
-      -- fnv1a32 over codepoints (ord == Spark ascii), mod n_buckets
+      -- FNV-1a-32 over codepoints (sb_subword folds codepoints too), mod n_buckets
       SELECT doc_id, {fnv} % {Q172_BUCKETS} AS bucket FROM grams
     ), hits AS (
       SELECT doc_id, label, weight_micro FROM toks JOIN word_wts USING (token)
@@ -11746,9 +11745,8 @@ def q173_entropy_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     (entropy.entropy_regions = entropy_windows -> merge_regions;
     reference src/entropy.rs:19-91) — the end-to-end driver gate for
     the round-11 JVM kernel (java/src/sbspark/Ent.java), exactly as
-    q35 gates the JVM span kernel. Dispatches to the JVM kernel when
-    registered; SPARK_GRAFT_NO_VEC_KERNEL exercises the pinned numpy
-    fallback (pytest pins the two bit-identical).
+    q35 gates the JVM span kernel (pytest pins it bit-identical to the
+    numpy oracle in tests/oracles/entropy.py).
 
     Per doc a 4096-byte block at doc_id*4096, four 1024-byte quarters
     whose 256-byte windows hold 2^k equi-frequent symbols — every

@@ -67,36 +67,36 @@ def main() -> None:
     # (~2s on a cold tree) isn't charged to the first scan query
     from swiftbeaver_spark.jvm import ensure_kernel
 
-    if ensure_kernel(spark):
-        # EXECUTE each kernel UDF once: registration alone leaves the
-        # first real call to pay C2 JIT compilation (measured: q26's
-        # signature stage 1.6s cold vs 0.8s warm at sf0.1, q27
-        # similar) — a long-lived cluster runs these compiled
-        spark.sql(
-            "SELECT sb_minhash('warm up text', '9;3;1'),"
-            "       sb_simhash('warm up text'),"
-            "       sb_scan_bytes(CAST('xabcx' AS BINARY), '10;616263')"
-        ).collect()
-        # ... and then ~20k more times: ONE call leaves the call sites
-        # interpreted/C1 (C2 needs ~10k invocations), so the r13-era
-        # first-run walls still charged C2 compilation to the first
-        # measured query touching each kernel (q26 first-run ran ~2.3x
-        # its steady wall). r14 A/B/A at sf0.1, fresh JVM per mode:
-        # q02 0.98→0.63/0.79, q26 2.26→1.49/1.82, q27 2.12→1.33/1.35
-        # vs best base — a long-lived cluster runs these compiled, per
-        # the warmup contract above. Methodology change recorded in
-        # OPTIMIZATION_r14.md with the old-warmup bridge numbers.
-        spark.sql(
-            "SELECT count(*) FROM (SELECT"
-            "  sb_minhash(concat('warm ', CAST(id AS STRING)), '9;3;1') h,"
-            "  sb_simhash(concat('warm ', CAST(id AS STRING))) s"
-            " FROM range(20000))"
-        ).collect()
-        spark.sql(
-            "SELECT count(*) FROM (SELECT"
-            "  sb_scan_bytes(CAST(concat('xabcx', CAST(id AS STRING)) AS BINARY),"
-            "                '10;616263') b FROM range(20000))"
-        ).collect()
+    ensure_kernel(spark)
+    # EXECUTE each kernel UDF once: registration alone leaves the
+    # first real call to pay C2 JIT compilation (measured: q26's
+    # signature stage 1.6s cold vs 0.8s warm at sf0.1, q27
+    # similar) — a long-lived cluster runs these compiled
+    spark.sql(
+        "SELECT sb_minhash('warm up text', '9;3;1'),"
+        "       sb_simhash('warm up text'),"
+        "       sb_scan_bytes(CAST('xabcx' AS BINARY), '10;616263')"
+    ).collect()
+    # ... and then ~20k more times: ONE call leaves the call sites
+    # interpreted/C1 (C2 needs ~10k invocations), so the r13-era
+    # first-run walls still charged C2 compilation to the first
+    # measured query touching each kernel (q26 first-run ran ~2.3x
+    # its steady wall). r14 A/B/A at sf0.1, fresh JVM per mode:
+    # q02 0.98→0.63/0.79, q26 2.26→1.49/1.82, q27 2.12→1.33/1.35
+    # vs best base — a long-lived cluster runs these compiled, per
+    # the warmup contract above. Methodology change recorded in
+    # OPTIMIZATION_r14.md with the old-warmup bridge numbers.
+    spark.sql(
+        "SELECT count(*) FROM (SELECT"
+        "  sb_minhash(concat('warm ', CAST(id AS STRING)), '9;3;1') h,"
+        "  sb_simhash(concat('warm ', CAST(id AS STRING))) s"
+        " FROM range(20000))"
+    ).collect()
+    spark.sql(
+        "SELECT count(*) FROM (SELECT"
+        "  sb_scan_bytes(CAST(concat('xabcx', CAST(id AS STRING)) AS BINARY),"
+        "                '10;616263') b FROM range(20000))"
+    ).collect()
     # pre-compile every headline plan at sf0.001: Catalyst analysis,
     # whole-stage codegen classes, and their C2 JIT are keyed by the
     # generated source, which is identical across scale factors for the

@@ -8,8 +8,8 @@ import java.util.concurrent.ConcurrentHashMap;
  * Multi-pattern scan kernel: Aho-Corasick with a dense goto table.
  *
  * One pass over the input finds every (overlapping) occurrence of every
- * pattern — the JVM replacement for the engine's Python/numpy kernel
- * (swiftbeaver_spark/scanner.py scan_blob; reference semantics:
+ * pattern — the engine's signature scan (differential-tested against
+ * the naive per-pattern find in tests/oracles/scan.py; reference semantics:
  * src/scanner/cpu.rs per-pattern memchr scan, all overlapping matches,
  * several patterns may match at one offset).
  *

@@ -6,8 +6,8 @@ import scala.collection.Seq;
 
 /**
  * sb_dot(a, b) -> double: compiled left-fold dot product, bit-exact
- * twin of the Catalyst chain in swiftbeaver_spark/llm/similarity.py
- * (dot(): aggregate(zip_with(a, b, x*y), 0.0, acc+v) — higher-order
+ * twin of the Catalyst chain in tests/oracles/vec.py
+ * (aggregate(zip_with(a, b, x*y), 0.0, acc+v) — higher-order
  * expressions are CodegenFallback-interpreted, so the per-element fold
  * dominated the brute-force/IVF walls). Same IEEE evaluation order
  * (multiply each pair, then accumulate left-to-right — javac/JIT may
@@ -19,8 +19,8 @@ import scala.collection.Seq;
  * Elements arrive as boxed Number (registerJavaFunction declares no
  * input types): array&lt;double&gt; boxes Double, an uncast
  * array&lt;float&gt; boxes Float and is WIDENED per element — slightly
- * more precise than the Catalyst fallback's float-precision multiply,
- * so callers wanting bit-identical kernel-on/off floats should cast to
+ * more precise than the Catalyst fold's float-precision multiply,
+ * so callers wanting bit-identical floats across the two should cast to
  * array&lt;double&gt; first, as every in-repo caller does.
  */
 public class DotUdf implements UDF2<Seq<Number>, Seq<Number>, Double> {

@@ -9,20 +9,21 @@ import org.apache.spark.sql.Row;
 import org.apache.spark.sql.RowFactory;
 
 /**
- * Entropy window scan kernel — the JVM replacement for the numpy
- * bincount fold in swiftbeaver_spark/entropy.py (reference semantics:
+ * Entropy window scan kernel — the engine's only entropy fold
+ * (reference semantics:
  * src/entropy.rs:19-91 — non-overlapping windows of window_size bytes,
  * emit windows with Shannon entropy &gt;= threshold; the region merge
- * stays a Catalyst gaps-and-islands downstream of either kernel).
+ * stays a Catalyst gaps-and-islands downstream).
  *
- * Bit-exact parity with the Python kernel is BY CONSTRUCTION, the same
+ * Bit-exact parity with the numpy oracle (tests/oracles/entropy.py)
+ * is BY CONSTRUCTION, the same
  * strategy as Strs' printability table: the per-count entropy
  * contribution table t[c] = -(c/N * log2(c/N)) is computed IN PYTHON
  * (numpy log2) and exported in the spec string as raw IEEE-754 bits,
  * and the per-window sum over the 256 byte-count contributions
  * replicates numpy's pairwise summation tree (PW_BLOCKSIZE 128,
  * 8-accumulator unrolled inner loop) so the rounding of every partial
- * sum matches. Differential fuzz in tests/test_strings_entropy.py pins
+ * sum matches. Differential fuzz in tests/test_entropy_kernel.py pins
  * exact equality.
  *
  * Spec: "windowSize;threshold;merged;span;tableBits" where tableBits

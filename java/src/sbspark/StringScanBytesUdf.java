@@ -12,7 +12,7 @@ import org.apache.spark.sql.api.java.UDF4;
  * Span scan over a materialised chunk blob — parent-chunk geometry
  * (runs anchor at the blob start, truncate at the blob end, pieces
  * with local offset >= valid_length dropped), identical rows to the
- * Python kernel's _blob_spans.
+ * Python oracle's blob_spans (tests/oracles/strings.py).
  */
 public class StringScanBytesUdf implements UDF4<byte[], Long, Long, String, List<Row>> {
   @Override

@@ -10,13 +10,13 @@ import org.apache.spark.sql.Row;
 import org.apache.spark.sql.RowFactory;
 
 /**
- * String span scan kernel — the JVM replacement for the Python span
- * kernel in swiftbeaver_spark/strings_scan.py (reference semantics:
+ * String span scan kernel — the engine's only span scanner (reference
+ * semantics:
  * src/strings/cpu.rs:42-216 — ASCII printable runs, validated UTF-8
  * runs with at least one multibyte char, UTF-16LE/BE byte-pair runs at
  * both alignments; max_len piece grids anchored at run starts; hint
- * flags). Bit-identical rows to the Python kernel are pinned by
- * differential fuzz tests; UTF-8 printability uses a codepoint table
+ * flags). Bit-identical rows to the Python oracle
+ * (tests/oracles/strings.py) are pinned by differential fuzz tests; UTF-8 printability uses a codepoint table
  * EXPORTED FROM PYTHON (str.isprintable) in the spec string, so parity
  * cannot drift with JVM Unicode versions.
  *

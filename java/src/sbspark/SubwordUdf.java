@@ -9,11 +9,10 @@ import org.apache.spark.sql.api.java.UDF2;
  * sb_subword(token, "minn;maxn;nbuckets") -> array&lt;int&gt; of FNV-1a
  * bucket ids for every character n-gram of "&lt;token&gt;" (angle-bracket
  * boundary markers), n in [minn, maxn] — fastText's subword expansion
- * (Bojanowski et al. 2017) compiled, replacing the interpreted
- * Catalyst higher-order-function chain in
- * swiftbeaver_spark/llm/weights.py (subword_ngrams + fnv1a32 are
- * CodegenFallback expressions, so the per-n-gram fold dominated the
- * q172 wall). Bit-exact mirror of that chain, pinned by test:
+ * (Bojanowski et al. 2017) compiled (an interpreted Catalyst
+ * higher-order-function chain of CodegenFallback expressions
+ * dominated the q172 wall). Pinned by test against an independent
+ * Python reference:
  * codepoints (not UTF-8 bytes) feed the fold, emission order is n
  * ascending then position ascending, duplicates kept, tokens shorter
  * than n contribute nothing for that n, null token -> null.

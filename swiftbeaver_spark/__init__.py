@@ -5,7 +5,7 @@ Re-implements the query/data-processing surface of gaestu/SwiftBeaver
 Spark DataFrame pipeline:
 
     chunks (binary parquet/table)
-      -> signature scan (JVM Aho-Corasick kernel; Arrow mapInPandas fallback)
+      -> signature scan (JVM Aho-Corasick kernel)
       -> hit normalization + overlap dedup (projection + filter)
       -> per-hit carve state machines (Arrow-batched mapInPandas)
       -> relational post-processing (joins, dedup, gaps-and-islands)

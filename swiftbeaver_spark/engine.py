@@ -11,8 +11,9 @@ channels. Spark trace of the same plan (SURVEY §3.2):
                                                #   (persisted) + joins
     sinks: parquet/jsonl/csv per table
 
-Without the JVM kernel (or with chunk_join) the three scans run over a
-cached chunk table instead (mapInPandas ranged reads), same rows.
+With chunk_join (or bytes input) the same three JVM kernels scan a
+cached chunk table instead, and the carve reads the chunk table; same
+rows.
 
 Thread boundaries become stage boundaries; bounded-channel
 backpressure becomes Spark scheduling; the single-writer metadata
@@ -193,16 +194,13 @@ class Engine:
         chunk_join: bool = False,
         cache_intermediates: bool = False,
     ) -> RunResult:
-        """Scan path: with `evidence_path` and the JVM kernel active, the
-        one-pass multi-scan (fused_scan.scan_all_from_evidence): ONE
-        positioned read per sub-chunk feeds signature + strings +
-        entropy, and carving does targeted positioned reads. Otherwise —
-        `chunk_join=True`, `evidence_bytes`, or a host without the
-        kernel (JRE-only, or SPARK_GRAFT_NO_VEC_KERNEL set) — the scans
-        run over the cached chunk table. On that path `evidence_path`
-        runs still carve from positioned reads (no window cap);
-        `chunk_join=True` carves from the chunk table itself. Every
-        path yields the same rows (differential-pinned in
+        """Scan path: with `evidence_path`, the one-pass multi-scan
+        (fused_scan.scan_all_from_evidence): ONE positioned read per
+        sub-chunk feeds signature + strings + entropy, and carving does
+        targeted positioned reads. With `chunk_join=True` or
+        `evidence_bytes`, the scans run over the cached chunk table and
+        the carve reads the chunk table itself. Both paths yield the
+        same rows (differential-pinned in
         tests/test_engine_one_pass.py and tests/test_fused_scan.py),
         except that only the one-pass scan drops loose-signature hits
         at scan time (scanner.scan_gate_indexes) — hits the carver
@@ -230,10 +228,7 @@ class Engine:
         are in RunResult.persisted and CALLER-owned: call
         RunResult.unpersist() when done, or repeated runs in one
         session accumulate executor storage."""
-        from swiftbeaver_spark.jvm import vec_kernel_active
-
-        positioned = evidence_path is not None and not chunk_join
-        if positioned and vec_kernel_active(self.spark):
+        if evidence_path is not None and not chunk_join:
             return self._run_one_pass(evidence_path, cache_intermediates)
         if evidence_path is not None:
             from swiftbeaver_spark.source import evidence_length
@@ -248,22 +243,18 @@ class Engine:
         chunks = chunks.cache()  # one pass feeds scan, strings, entropy, carve
 
         hits = self.hits(chunks)
-        if positioned:
-            carved = self.carve(hits, evidence_path=evidence_path)
-        else:
-            # evidence_len from the plan's arithmetic — no aggregation
-            # job. Scan limits truncate the chunk table, so the byte
-            # horizon for over_cap-vs-EOF attribution is the last
-            # INCLUDED chunk's end, not the full media length (else a
-            # limit-cut carve would claim withheld-by-cap bytes that
-            # were never scanned).
-            horizon = total
-            if self.cfg.max_bytes is not None and self.cfg.max_bytes < total:
-                last = (max(self.cfg.max_bytes, 1) - 1) // self.cfg.chunk_size
-                horizon = min(horizon, (last + 1) * self.cfg.chunk_size)
-            if self.cfg.max_chunks is not None:
-                horizon = min(horizon, self.cfg.max_chunks * self.cfg.chunk_size)
-            carved = self.carve(hits, chunks=chunks, evidence_len=horizon)
+        # evidence_len from the plan's arithmetic — no aggregation job.
+        # Scan limits truncate the chunk table, so the byte horizon for
+        # over_cap-vs-EOF attribution is the last INCLUDED chunk's end,
+        # not the full media length (else a limit-cut carve would claim
+        # withheld-by-cap bytes that were never scanned).
+        horizon = total
+        if self.cfg.max_bytes is not None and self.cfg.max_bytes < total:
+            last = (max(self.cfg.max_bytes, 1) - 1) // self.cfg.chunk_size
+            horizon = min(horizon, (last + 1) * self.cfg.chunk_size)
+        if self.cfg.max_chunks is not None:
+            horizon = min(horizon, self.cfg.max_chunks * self.cfg.chunk_size)
+        carved = self.carve(hits, chunks=chunks, evidence_len=horizon)
         tables = {"chunks": chunks, "hits": hits, "carved_files": carved}
         if self.cfg.enable_string_scan:
             spans = scan_string_spans(chunks, self.cfg)

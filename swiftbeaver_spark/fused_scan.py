@@ -4,8 +4,8 @@ entropy window scan (java/src/sbspark/ScanAllEvidenceUdf.java) — the
 reference's ScanChunk loop, where one buffer feeds every scanner.
 
 This is the evidence-path scan of every `Engine.run(evidence_path=...)`
-on a host where the JVM kernel registers. It avoids both costs of the
-alternatives: no evidence byte is read twice (one pass per scan would
+without `chunk_join`. It avoids both costs of the alternatives: no
+evidence byte is read twice (one pass per scan would
 be 3x corpus egress against object storage, and 3x re-decompression
 on E01), and no chunk BYTES are materialized (the chunk-table strategy,
 `Engine.run(chunk_join=True)`, caches them — see the Engine docstring's
@@ -109,14 +109,9 @@ def scan_all_from_evidence(
     With `cfg.enable_string_scan` / `cfg.enable_entropy_detection`
     False the UDF skips that kernel (empty spec line) and the returned
     dict has no span / entropy tables.
-
-    Requires the JVM kernel — a host without it (or with the
-    SPARK_GRAFT_NO_VEC_KERNEL hatch set) scans the cached chunk table
-    instead, which Engine.run selects on its own; calling this there
-    raises ValueError.
     """
     from swiftbeaver_spark.entropy import _entropy_spec, merge_regions
-    from swiftbeaver_spark.jvm import spec_for, vec_kernel_active
+    from swiftbeaver_spark.jvm import ensure_kernel, spec_for
     from swiftbeaver_spark.scanner import (
         MAX_HITS_PER_CHUNK,
         _decode_packed_hits,
@@ -127,12 +122,7 @@ def scan_all_from_evidence(
     from swiftbeaver_spark.source import evidence_length
     from swiftbeaver_spark.strings_scan import _strings_spec
 
-    if not vec_kernel_active(spark):
-        raise ValueError(
-            "scan_all_from_evidence requires the JVM kernel (and is "
-            "disabled by SPARK_GRAFT_NO_VEC_KERNEL); scan the chunk "
-            "table instead (Engine.run does)"
-        )
+    ensure_kernel(spark)
     total = evidence_length(path)
     g = min(cfg.chunk_size, granule if granule is not None else SUBCHUNK_GRANULE)
     # entropy windows restart at each parent start (the chunk table's

@@ -3,19 +3,20 @@
 Five strategies, all DataFrame-native:
 
 - exact_dedup:       hash-groupBy on content digest (one shuffle)
-- minhash_signatures/minhash_lsh_pairs: shingle -> k minhashes (xxhash64
-  with per-function seeds, JVM-side) -> banding -> bucket equi-join.
-  The classic MinHash+LSH near-dup pipeline; candidate verification via
-  exact shingle Jaccard.
-- simhash: 64-bit sign-aggregated token hashes per doc; near-dups share
-  simhash within small Hamming distance
+- minhash_signatures/minhash_lsh_pairs: shingle -> k minhashes (JVM
+  kernel sb_minhash) -> banding -> bucket equi-join. The classic
+  MinHash+LSH near-dup pipeline; candidate verification via exact
+  shingle Jaccard (JVM kernel sb_jaccard).
+- simhash: 64-bit sign-aggregated token hashes per doc (JVM kernel
+  sb_simhash); near-dups share simhash within small Hamming distance
 - ngram_jaccard_pairs: exact n-gram Jaccard on candidate pairs
 - embedding_near_dup: cosine >= threshold over LSH-bucketed embeddings
 
 Scale notes: every strategy shuffles on narrow keys (band hash, bucket
 id, digest), never on document text; signatures are fixed-width arrays
-computed in whole-stage codegen (xxhash64 + higher-order array
-functions, no Python). Banding keeps the candidate join linear in
+computed by the compiled JVM kernels (java/src/sbspark/ — text never
+crosses into Python; the numpy twins they are pinned bit-exact against
+live in tests/oracles/dedup.py). Banding keeps the candidate join linear in
 near-duplicate count rather than O(n^2).
 """
 
@@ -64,6 +65,18 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 _MERSENNE61 = (1 << 61) - 1
 
 
+def _minhash_family(num_hashes: int):
+    """The fixed (a, b) uint64 arrays of the affine hash family: odd
+    multipliers and offsets from seed 42, so signatures are
+    deterministic across runs and executors."""
+    import numpy as np
+
+    rng = np.random.RandomState(42)
+    a = (rng.randint(0, 1 << 62, size=num_hashes).astype(np.uint64) << np.uint64(1)) | np.uint64(1)
+    b = rng.randint(0, 1 << 62, size=num_hashes).astype(np.uint64)
+    return a, b
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -74,79 +87,32 @@ def minhash_signatures(
     """doc -> minhash signature array<bigint> of length num_hashes.
 
     Hash family: affine transforms (a_i*h + b_i) over uint64 wraparound
-    of one base CRC per distinct shingle. Two bit-identical kernels
-    share the family (seeds travel to both): the JVM UDF
-    (java/src/sbspark/MinHashUdf.java — text never crosses into Python,
-    ~5x the throughput) when jvm.ensure_kernel registers, else the
-    vectorized numpy Arrow kernel. Spark's higher-order array lambdas
-    are interpreted (not codegen'd), so an O(k x shingles) nested
-    transform would be ~50x slower than either. Seeds are fixed ->
-    deterministic across runs, executors, and kernels."""
-    import zlib
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
-
+    of one base CRC per distinct shingle, computed by the JVM UDF
+    (java/src/sbspark/MinHashUdf.java — text never crosses into
+    Python). Spark's higher-order array lambdas are interpreted (not
+    codegen'd), so an O(k x shingles) nested transform would be ~50x
+    slower. Null and empty (after normalization) text drops."""
     from swiftbeaver_spark.jvm import ensure_kernel
 
-    rng = np.random.RandomState(42)
-    # multiply-add family over uint64 wraparound (odd multipliers):
-    # vectorized wraparound is ~100x faster than big-int modular math
-    a = (rng.randint(0, 1 << 62, size=num_hashes).astype(np.uint64) << np.uint64(1)) | np.uint64(1)
-    b = rng.randint(0, 1 << 62, size=num_hashes).astype(np.uint64)
-
+    ensure_kernel(df.sparkSession)
+    a, b = _minhash_family(num_hashes)
     src = spread(
         df.select(
             F.col(id_col).cast("long").alias("doc_id"),
             F.col(text_col).cast("string").alias("text"),
         )
     )
-    if ensure_kernel(df.sparkSession):
-        spec = (
-            f"{shingle_k};"
-            + ",".join(str(int(x)) for x in a)
-            + ";"
-            + ",".join(str(int(x)) for x in b)
-        )
-        sig = F.call_udf("sb_minhash", F.col("text"), F.lit(spec))
-        return (
-            src.select(F.col("doc_id"), sig.alias("signature"))
-            .where(F.col("signature").isNotNull())
-        )
-
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType(), False),
-            StructField("signature", ArrayType(LongType()), False),
-        ]
+    spec = (
+        f"{shingle_k};"
+        + ",".join(str(int(x)) for x in a)
+        + ";"
+        + ",".join(str(int(x)) for x in b)
     )
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                if text is None:  # match the JVM kernel: null text drops
-                    continue
-                norm = " ".join(str(text).lower().split())
-                n = len(norm)
-                if n == 0:
-                    continue
-                upper = max(n - shingle_k + 1, 1)
-                shingles = {norm[i : i + shingle_k] for i in range(upper)}
-                base = np.fromiter(
-                    (zlib.crc32(s.encode()) for s in shingles),
-                    dtype=np.uint64,
-                    count=len(shingles),
-                )
-                with np.errstate(over="ignore"):
-                    mins = (a[:, None] * base[None, :] + b[:, None]).min(axis=1)
-                sig = mins.astype(np.int64).tolist()
-                rows.append((int(did), sig))
-            yield pd.DataFrame(rows, columns=["doc_id", "signature"])
-
-    return src.mapInPandas(work, out_schema)
+    sig = F.call_udf("sb_minhash", F.col("text"), F.lit(spec))
+    return (
+        src.select(F.col("doc_id"), sig.alias("signature"))
+        .where(F.col("signature").isNotNull())
+    )
 
 
 def minhash_band_index(
@@ -304,124 +270,40 @@ def minhash_near_dups(
 def _verify_jaccard(joined: DataFrame, shingle_k: int, threshold: float) -> DataFrame:
     """Exact shingle-Jaccard verify over candidate pairs carrying
     (doc_a, doc_b, text_a, text_b): the bit-exact JVM shingle-set
-    kernel (sb_jaccard — candidates never cross into Python) when it
-    registers, else the same computation as a vectorized Arrow pass.
-    Either way, python set ops / JVM HashSets beat interpreted array
-    lambdas ~10x here."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
+    kernel (sb_jaccard — candidates never cross into Python; JVM
+    HashSets beat interpreted array lambdas ~10x here)."""
     from swiftbeaver_spark.jvm import ensure_kernel
 
-    if ensure_kernel(joined.sparkSession):
-        jac = F.call_udf(
-            "sb_jaccard", F.col("text_a"), F.col("text_b"), F.lit(int(shingle_k))
-        )
-        return (
-            joined.select("doc_a", "doc_b", jac.alias("jaccard"))
-            .where(F.col("jaccard") >= threshold)
-        )
-    out_schema = StructType(
-        [
-            StructField("doc_a", LongType(), False),
-            StructField("doc_b", LongType(), False),
-            StructField("jaccard", DoubleType(), False),
-        ]
+    ensure_kernel(joined.sparkSession)
+    jac = F.call_udf(
+        "sb_jaccard", F.col("text_a"), F.col("text_b"), F.lit(int(shingle_k))
+    )
+    return (
+        joined.select("doc_a", "doc_b", jac.alias("jaccard"))
+        .where(F.col("jaccard") >= threshold)
     )
 
-    def _shingle_set(text: str) -> set[str]:
-        norm = " ".join(str(text).lower().split())
-        upper = max(len(norm) - shingle_k + 1, 1)
-        return {norm[i : i + shingle_k] for i in range(upper)}
 
-    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for a, b, ta, tb in zip(
-                pdf["doc_a"], pdf["doc_b"], pdf["text_a"], pdf["text_b"]
-            ):
-                sa, sb = _shingle_set(ta), _shingle_set(tb)
-                union = len(sa | sb)
-                j = len(sa & sb) / union if union else 0.0
-                if j >= threshold:
-                    rows.append((int(a), int(b), j))
-            yield pd.DataFrame(rows, columns=["doc_a", "doc_b", "jaccard"])
-
-    return joined.mapInPandas(verify, out_schema)
-
-
-def simhash(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 64
-) -> DataFrame:
-    """Per-doc SimHash: sign-aggregate token hashes per bit position.
-
-    Two bit-identical kernels (crc32 base hash mixed to 64 bits via
-    splitmix64, one ±1 vote per bit): the JVM UDF
-    (java/src/sbspark/SimHashUdf.java — text never crosses into Python)
-    when jvm.ensure_kernel registers, else the vectorized numpy Arrow
-    kernel. Spark's higher-order array lambdas are interpreted, making
-    the expression form O(bits x tokens) in slow per-element calls.
-    Null/empty text hashes to 0 on both paths."""
-    import zlib
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import LongType, StructField, StructType
-
+def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """Per-doc 64-bit SimHash: sign-aggregate token hashes per bit —
+    crc32 base hash mixed to 64 bits via splitmix64, one ±1 vote per
+    bit, in the JVM UDF (java/src/sbspark/SimHashUdf.java — text never
+    crosses into Python). Spark's higher-order array lambdas are
+    interpreted, making the expression form O(bits x tokens) in slow
+    per-element calls. Null/empty text hashes to 0."""
     from swiftbeaver_spark.jvm import ensure_kernel
 
+    ensure_kernel(df.sparkSession)
     src = spread(
         df.select(
             F.col(id_col).cast("long").alias("doc_id"),
             F.col(text_col).cast("string").alias("text"),
         )
     )
-    if ensure_kernel(df.sparkSession):
-        return src.select(
-            F.col("doc_id"),
-            F.call_udf("sb_simhash", F.col("text")).alias("simhash"),
-        )
-
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType(), False),
-            StructField("simhash", LongType(), False),
-        ]
+    return src.select(
+        F.col("doc_id"),
+        F.call_udf("sb_simhash", F.col("text")).alias("simhash"),
     )
-    bit_idx = np.arange(bits, dtype=np.uint64)
-
-    def mix(h: "np.ndarray") -> "np.ndarray":
-        with np.errstate(over="ignore"):
-            z = h + np.uint64(0x9E3779B97F4A7C15)
-            z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-            z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-            return z ^ (z >> np.uint64(31))
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = [] if text is None else str(text).lower().split()
-                if not toks:
-                    rows.append((int(did), 0))
-                    continue
-                base = np.fromiter(
-                    (zlib.crc32(t.encode()) for t in toks), dtype=np.uint64, count=len(toks)
-                )
-                h = mix(base)
-                votes = (2 * ((h[:, None] >> bit_idx[None, :]) & np.uint64(1)).astype(
-                    np.int64
-                ) - 1).sum(axis=0)
-                packed = np.uint64(0)
-                sign_bits = (votes > 0).astype(np.uint64)
-                packed = (sign_bits << bit_idx).sum(dtype=np.uint64)
-                rows.append((int(did), int(packed.astype(np.int64))))
-            yield pd.DataFrame(rows, columns=["doc_id", "simhash"])
-
-    return src.mapInPandas(work, out_schema)
 
 
 def hamming64(a: Column, b: Column) -> Column:

@@ -1,7 +1,10 @@
 """Similarity search over embedding columns (array<float>).
 
-- cosine_similarity / dot: JVM-side zip_with + aggregate (index-ordered
-  fold — deterministic float results independent of partitioning)
+- cosine_similarity / dot: the compiled sb_dot kernel (index-ordered
+  fold — deterministic float results independent of partitioning); the
+  IVF/PQ distance tables use its siblings sb_sqdists, sb_dots and
+  sb_adc (java/src/sbspark/; their Catalyst-fold oracles live in
+  tests/oracles/vec.py)
 - brute_force_topk: broadcast queries x corpus, window rank — the exact
   baseline; one shuffle of k rows per query
 - hyperplane_bucket: deterministic random-hyperplane LSH (signs derived
@@ -21,28 +24,16 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _kernel_active() -> bool:
-    """True when the active session's JVM kernel jar is registered —
-    resolved at PLAN-BUILD time on the driver (these are Column
-    builders, so the owning session isn't reachable; see
-    jvm.vec_kernel_active for the multi-session contract). The
-    compiled folds are bit-exact twins of the Catalyst chains (same
-    IEEE order, same null algebra — differential-pinned by test), so
-    the gate can never change a result, only which engine folds.
-    SPARK_GRAFT_NO_VEC_KERNEL=1 forces the Catalyst path (A/B
-    measurement + fallback testing)."""
-    from swiftbeaver_spark.jvm import vec_kernel_active
-
-    return vec_kernel_active()
+from swiftbeaver_spark.jvm import ensure_kernel
 
 
 def dot(a: Column, b: Column) -> Column:
-    if _kernel_active():
-        return F.call_udf("sb_dot", a, b)
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
+    """Index-ordered dot product (compiled sb_dot kernel: deterministic
+    IEEE results; null array, null element or dim mismatch -> null).
+    Column builder: registers the kernel in the ACTIVE session (see
+    jvm.ensure_kernel for the multi-session contract)."""
+    ensure_kernel()
+    return F.call_udf("sb_dot", a, b)
 
 
 def norm(a: Column) -> Column:
@@ -281,19 +272,10 @@ def _centroid_spec(centroids: list[list[float]]) -> str:
 
 def _sq_dists(vec: Column, centroids: list[list[float]]) -> Column:
     """Squared L2 distance from `vec` to every centroid, as one
-    array<double>. Index-ordered zip_with/aggregate folds — deterministic
-    IEEE results; compact HOF plan (an unrolled 16x64 fold overflows
-    Janino's 64 KB codegen method limit)."""
-    if _kernel_active():
-        return F.call_udf("sb_sqdists", vec, F.lit(_centroid_spec(centroids)))
-    return F.transform(
-        _centroid_lit(centroids),
-        lambda c: F.aggregate(
-            F.zip_with(vec, c, lambda v, cc: (v - cc) * (v - cc)),
-            F.lit(0.0),
-            lambda s, x: s + x,
-        ),
-    )
+    array<double>: the compiled sb_sqdists kernel's index-ordered folds
+    — deterministic IEEE results, one spec literal in the plan."""
+    ensure_kernel()
+    return F.call_udf("sb_sqdists", vec, F.lit(_centroid_spec(centroids)))
 
 
 def ivf_cell(
@@ -379,24 +361,13 @@ def md5_centroids(nlist: int, dim: int, tag: str = "ivfcent") -> list[list[float
 
 def _dots(vec: Column, centroids: list[list[float]], round_dp: int) -> Column:
     """round(dot(vec, centroid), dp) for every centroid, as one array.
-    The zip_with/aggregate fold is the q23-proven construct that agrees
-    with DuckDB's list_dot_product at >= 6 dp. Kernel path: sb_dots
-    folds compiled, rounding stays in Catalyst (k ops/row)."""
-    if _kernel_active():
-        return F.transform(
-            F.call_udf("sb_dots", vec, F.lit(_centroid_spec(centroids))),
-            lambda d: F.round(d, round_dp),
-        )
+    The index-ordered fold agrees with DuckDB's list_dot_product at
+    >= 6 dp. The sb_dots kernel folds compiled; rounding stays in
+    Catalyst (k ops/row)."""
+    ensure_kernel()
     return F.transform(
-        _centroid_lit(centroids),
-        lambda c: F.round(
-            F.aggregate(
-                F.zip_with(vec, c, lambda v, cc: v * cc),
-                F.lit(0.0),
-                lambda s, x: s + x,
-            ),
-            round_dp,
-        ),
+        F.call_udf("sb_dots", vec, F.lit(_centroid_spec(centroids))),
+        lambda d: F.round(d, round_dp),
     )
 
 
@@ -672,20 +643,10 @@ def _adc_lut(query_vec_col: str, codebooks: list[list[list[float]]]) -> Column:
 
 def _adc_score(code_col: str, codebooks: list[list[list[float]]]) -> Column:
     """SUM of m `_lut` lookups selected by the stored code array —
-    the asymmetric distance of one code against the query's LUT."""
-    m = len(codebooks)
-    kk = len(codebooks[0])
-    if _kernel_active():
-        return F.call_udf("sb_adc", F.col("_lut"), F.col(code_col), F.lit(kk))
-    return F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda s, j: s
-        + F.element_at(
-            F.col("_lut"),
-            (j * kk + F.element_at(F.col(code_col), j + 1) + 1).cast("int"),
-        ),
-    )
+    the asymmetric distance of one code against the query's LUT
+    (compiled sb_adc kernel)."""
+    ensure_kernel()
+    return F.call_udf("sb_adc", F.col("_lut"), F.col(code_col), F.lit(len(codebooks[0])))
 
 
 def pq_topk(

@@ -316,67 +316,6 @@ def classify_documents(
     )
 
 
-def subword_ngrams(col: Column, minn: int = 3, maxn: int = 5) -> Column:
-    """All character n-grams of '<word>' (angle-bracket boundary
-    markers) for n in [minn, maxn] — fastText's subword expansion
-    (Bojanowski et al. 2017, "Enriching Word Vectors with Subword
-    Information"; fastText Dictionary::computeSubwords). Duplicates are
-    KEPT, as fastText keeps them (a repeated n-gram contributes its
-    vector once per occurrence). Pure Catalyst: one NESTED
-    transform(n, transform(i, substring)) flattened — stays in
-    whole-stage codegen, no Python. Nested (not a Python loop of
-    sibling transforms sharing the `wrapped` subtree: sibling lambdas
-    over a shared subexpression collide on generated lambda-variable
-    names and silently mis-resolve — observed on 4.1, pinned by
-    test_subword_ngrams_pinned)."""
-    if not 1 <= minn <= maxn:
-        raise ValueError(f"need 1 <= minn <= maxn, got {minn}..{maxn}")
-    wrapped = F.concat(F.lit("<"), col, F.lit(">"))
-    length = F.length(wrapped)
-    return F.flatten(
-        F.transform(
-            F.sequence(F.lit(minn), F.lit(maxn)),
-            lambda n: F.when(
-                length >= n,
-                F.transform(
-                    F.sequence(F.lit(1), length - n + 1),
-                    lambda i: F.substring(wrapped, i, n),
-                ),
-            ).otherwise(F.array().cast("array<string>")),
-        )
-    )
-
-
-def fnv1a32(col: Column) -> Column:
-    """32-bit FNV-1a over the string's CODEPOINTS, as a Catalyst fold
-    (offset basis 2166136261, prime 16777619 — the public FNV spec,
-    also fastText's subword hash). Codepoints, not utf-8 bytes: both
-    Spark's ascii() and DuckDB's ord() return the codepoint, so the
-    fold replays identically in the SQL oracle; for pure-ASCII input
-    the two are the same, and for multi-byte input the deviation from
-    fastText's byte-wise fold only permutes bucket assignments (the
-    buckets stay uniform — pinned vs an independent Python reference in
-    tests). NULL input folds to NULL (joins drop it); the empty string
-    folds to the offset basis (sequence(1, 0) is DESCENDING [1, 0] in
-    Spark, so the empty case needs the explicit guard)."""
-    codes = (
-        F.when(col.isNull(), F.lit(None).cast("array<long>"))
-        .when(
-            F.length(col) > 0,
-            F.transform(
-                F.sequence(F.lit(1), F.length(col)),
-                lambda i: F.ascii(F.substring(col, i, F.lit(1))).cast("long"),
-            ),
-        )
-        .otherwise(F.array().cast("array<long>"))
-    )
-    return F.aggregate(
-        codes,
-        F.lit(2166136261).cast("long"),
-        lambda h, b: (h.bitwiseXOR(b) * 16777619) % F.lit(4294967296).cast("long"),
-    )
-
-
 def classify_documents_subword(
     df: DataFrame,
     word_weights: DataFrame,
@@ -396,8 +335,11 @@ def classify_documents_subword(
     token still has n-grams, so it still scores).
 
     Units of a token: the token itself (if present in `word_weights`)
-    plus every subword n-gram's FNV bucket (fnv1a32 % n_buckets) that
-    is present in `bucket_weights` — in real fastText the bucket table
+    plus every subword n-gram's FNV bucket that is present in
+    `bucket_weights` (32-bit FNV-1a over the n-gram's CODEPOINTS, mod
+    n_buckets — codepoints, not utf-8 bytes, so DuckDB's ord() replays
+    the fold in the SQL oracle; for multi-byte input the deviation from
+    fastText's byte-wise fold only permutes bucket assignments) — in real fastText the bucket table
     is dense (every bucket id exists), so "present" = all. Per (doc,
     label): score_micro = sum of matched unit weight_micros div
     n_units, where n_units counts the doc's matched units
@@ -411,11 +353,10 @@ def classify_documents_subword(
     weights in four separate branches, re-evaluating the whole weight
     subtree per consumer — 4x the vocab scan and a 10x slower plan);
     the n-gram expansion runs in the compiled JVM kernel (sb_subword —
-    the Catalyst subword_ngrams + fnv1a32 chain is higher-order
-    expressions, CodegenFallback-interpreted per n-gram, and dominated
-    the wall: 4.7 s -> 1.5 s at sf0.1; the Catalyst chain remains the
-    pinned-identical fallback for JRE-only hosts), so the explode ->
-    hash -> join pipeline never leaves the JVM; one shuffle on doc_id
+    a Catalyst n-gram + FNV chain is higher-order expressions,
+    CodegenFallback-interpreted per n-gram, and dominated the wall:
+    4.7 s -> 1.5 s at sf0.1), so the explode -> hash -> join pipeline
+    never leaves the JVM; one shuffle on doc_id
     for the map-side-combinable sums. n_buckets bounds the subword
     table regardless of corpus n-gram diversity — fastText's own answer
     to unbounded subword vocabularies (2M buckets at production scale).
@@ -442,38 +383,26 @@ def classify_documents_subword(
     # (measured: the whole sf0.1 pipeline ran on one task, ~20 s, vs
     # ~2 s spread); a no-op at scale where splits >> cores. The
     # exchange is reused by both unit branches (ReuseExchange).
-    from swiftbeaver_spark.jvm import vec_kernel_active
+    from swiftbeaver_spark.jvm import ensure_kernel
 
-    # validate here (not only inside subword_ngrams): the kernel path
-    # never builds the Catalyst expansion, and a bad spec must raise in
-    # Python, not as an executor-side exception. The upper bound is the
-    # kernel's int parse AND the fallback's .cast("int") wrap point —
-    # fastText production tables are ~2M buckets, nowhere near it
+    # validate here: a bad spec must raise in Python, not as an
+    # executor-side exception. The upper bound is the kernel's int
+    # parse — fastText production tables are ~2M buckets, nowhere
+    # near it
     if not 1 <= minn <= maxn:
         raise ValueError(f"need 1 <= minn <= maxn, got {minn}..{maxn}")
     if not 1 <= n_buckets <= 2**31 - 1:
         raise ValueError(f"need 1 <= n_buckets <= 2^31-1, got {n_buckets}")
 
+    ensure_kernel(df.sparkSession)
     toks = spread(_doc_tokens(df, text_col, id_col))
-    if vec_kernel_active(df.sparkSession):
-        # compiled expansion: subword_ngrams + fnv1a32 are higher-order
-        # Catalyst expressions (CodegenFallback — interpreted per
-        # n-gram), and their fold dominated the q172 wall; the JVM
-        # kernel emits the same bucket stream (order, duplicates,
-        # codepoint fold — differential-pinned by test) in one
-        # compiled pass per token
-        buckets = F.explode(
-            F.call_udf(
-                "sb_subword", F.col("token"), F.lit(f"{minn};{maxn};{n_buckets}")
-            )
-        ).alias("bucket")
-    else:
-        buckets = F.explode(
-            F.transform(
-                subword_ngrams(F.col("token"), minn, maxn),
-                lambda g: (fnv1a32(g) % n_buckets).cast("int"),
-            )
-        ).alias("bucket")
+    # sb_subword: per token, the FNV-1a-over-codepoints bucket of every
+    # character n-gram of '<token>' for n in [minn, maxn] (n ascending,
+    # position ascending, duplicates kept — fastText's
+    # Dictionary::computeSubwords), in one compiled pass per token
+    buckets = F.explode(
+        F.call_udf("sb_subword", F.col("token"), F.lit(f"{minn};{maxn};{n_buckets}"))
+    ).alias("bucket")
     units = toks.select(
         "doc_id", F.concat(F.lit("w:"), F.col("token")).alias("unit")
     ).unionByName(

@@ -4,11 +4,10 @@ Reference parity: src/strings/cpu.rs (ascii/utf8/utf16 span scans,
 hint flags), src/strings/mod.rs:100-322 (regexes, normalizers,
 decode_span, artefact building).
 
-Spark design: on evidence runs the span scan is the JVM Strs kernel
-inside the one-pass scan (fused_scan.py), sharing each sub-chunk read
-with the signature and entropy scans. Over a chunk table it is one pass
-per chunk — the JVM bytes kernel, or the Python kernel below on hosts
-without it. Artefact extraction is *gated by the
+Spark design: the span scan is the JVM Strs kernel — inside the
+one-pass scan (fused_scan.py) on evidence runs, sharing each sub-chunk
+read with the signature and entropy scans, and one sb_scan_strings_bytes
+pass per chunk over a chunk table. Artefact extraction is *gated by the
 cheap hint flags* exactly like the reference (predicate gating,
 SURVEY §4): the regex only runs on spans whose flag is set, expressed
 as a DataFrame `where` before the extraction UDF so Catalyst prunes
@@ -28,8 +27,6 @@ from pyspark.sql import functions as F
 from swiftbeaver_spark import schemas
 from swiftbeaver_spark.config import EngineConfig
 from swiftbeaver_spark.parallel import spread
-
-_ASCII_RE_TMPL = rb"[\t\x20-\x7E]{%d,}"
 
 URL_RE = re.compile(r"\b(?:https?://|www\.)[^\s\"'<>]+", re.IGNORECASE)
 EMAIL_RE = re.compile(r"\b[A-Z0-9._%+-]+@[A-Z0-9.-]+\.[A-Z]{2,}\b", re.IGNORECASE)
@@ -96,105 +93,6 @@ def is_plausible_phone(value: str) -> bool:
     return 10 <= len(digits) <= 15 and len(set(digits)) >= 4
 
 
-def _flags(content: bytes) -> tuple[bool, bool, bool]:
-    low = content.lower()
-    url_like = b"http" in low or b"www." in low
-    email_like = b"@" in content
-    phone_like = sum(1 for b in content if 0x30 <= b <= 0x39) >= 10
-    return url_like, email_like, phone_like
-
-
-def _scan_ascii(data: bytes, min_len: int, max_len: int) -> list[tuple[int, bytes]]:
-    """Printable runs [\\t\\x20-\\x7E], split at max_len
-    (reference src/strings/cpu.rs:42-80)."""
-    out = []
-    for m in re.finditer(_ASCII_RE_TMPL % 1, data):
-        s, e = m.start(), m.end()
-        pos = s
-        while pos < e:
-            piece = data[pos : min(pos + max_len, e)]
-            if len(piece) >= min_len:
-                out.append((pos, piece))
-            pos += max_len
-    return out
-
-
-_UTF8_MB = rb"(?:[\xC2-\xDF][\x80-\xBF]|[\xE0-\xEF][\x80-\xBF]{2}|[\xF0-\xF4][\x80-\xBF]{3})"
-_UTF8_RUN = re.compile(rb"(?:[\t\x20-\x7E]|%s)+" % _UTF8_MB)
-_HAS_MB = re.compile(_UTF8_MB)
-
-
-def _scan_utf8(data: bytes, min_len: int, max_len: int) -> list[tuple[int, bytes]]:
-    """Validated UTF-8 printable runs containing >=1 multibyte char;
-    min/max are char counts (reference src/strings/cpu.rs:82-141)."""
-    out = []
-    for m in _UTF8_RUN.finditer(data):
-        raw = m.group(0)
-        if not _HAS_MB.search(raw):
-            continue
-        try:
-            text = raw.decode("utf-8")
-        except UnicodeDecodeError:
-            continue
-        if not all(c == "\t" or c.isprintable() for c in text):
-            continue
-        # split at max_len chars
-        pos_chars = 0
-        byte_pos = m.start()
-        while pos_chars < len(text):
-            piece = text[pos_chars : pos_chars + max_len]
-            piece_bytes = piece.encode("utf-8")
-            if len(piece) >= min_len and _HAS_MB.search(piece_bytes):
-                out.append((byte_pos, piece_bytes))
-            byte_pos += len(piece_bytes)
-            pos_chars += max_len
-    return out
-
-
-_UTF16LE_RUN = re.compile(rb"(?:[\t\x20-\x7E]\x00)+")
-_UTF16BE_RUN = re.compile(rb"(?:\x00[\t\x20-\x7E])+")
-
-
-def _scan_utf16(
-    data: bytes, min_len: int, max_len: int, little_endian: bool
-) -> list[tuple[int, bytes]]:
-    """Byte-pair runs at both alignments; span bytes = 2x chars
-    (reference src/strings/cpu.rs:143-216).
-
-    One regex pass replaces the earlier per-byte Python state machine
-    (round-7 10x measurement: q35 ran ~1.5 MB/s with the loop — the
-    whole strings family's bottleneck). Equivalence to the two-
-    alignment state machine is structural: within ONE endianness two
-    runs can never overlap across alignments (an LE pair ends in 0x00
-    and 0x00 is not printable, so no byte can simultaneously end one
-    pair and start the next; mirror argument for BE), hence maximal
-    regex matches over the whole blob are exactly the union of the
-    even- and odd-alignment maximal runs. Long runs split into
-    consecutive max_len-char segments, each emitted iff >= min_len —
-    the same segmentation the loop produced (pytest + the q35 oracle
-    pin it)."""
-    out = []
-    pat = _UTF16LE_RUN if little_endian else _UTF16BE_RUN
-    step = 2 * max_len
-    for m in pat.finditer(data):
-        s, e = m.start(), m.end()
-        pos = s
-        while pos < e:
-            piece = data[pos : min(pos + step, e)]
-            if len(piece) // 2 >= min_len:
-                out.append((pos, piece))
-            pos += step
-    return out
-
-
-def _decode_span(raw: bytes, encoding: str) -> str:
-    if encoding == "utf-16le":
-        return raw[0::2].decode("utf-8", "replace")
-    if encoding == "utf-16be":
-        return raw[1::2].decode("utf-8", "replace")
-    return raw.decode("utf-8", "replace")
-
-
 @functools.lru_cache(maxsize=1)
 def _printable_intervals() -> str:
     """Python's str.isprintable() truth for codepoints >= 0x80, as hex
@@ -225,96 +123,21 @@ def _strings_spec(cfg: EngineConfig) -> str:
 
 
 def scan_string_spans(chunks: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """chunks -> string spans with hint flags, overlap-deduped.
+    """chunks -> string spans with hint flags, overlap-deduped: one JVM
+    span-kernel pass per chunk (chunk bytes never cross into Python),
+    spread across cores when the chunk source collapsed to fewer input
+    splits than the cluster has slots (a no-op at scale)."""
+    from swiftbeaver_spark.jvm import ensure_kernel
 
-    Dispatches to the JVM span kernel when it registers into this
-    session (chunk bytes never cross into Python; ~an order of
-    magnitude over the Python kernel — see SCALE.md r10); the Python
-    mapInPandas pass below is the pinned fallback
-    (SPARK_GRAFT_NO_VEC_KERNEL=1 forces it)."""
-    from swiftbeaver_spark.jvm import vec_kernel_active
-
-    min_len, max_len = cfg.string_min_len, cfg.string_max_len
-    scan_utf16 = cfg.string_scan_utf16
-    if vec_kernel_active(chunks.sparkSession):
-        rows = F.call_udf(
-            "sb_scan_strings_bytes",
-            F.col("data"),
-            F.col("start").cast("long"),
-            F.col("valid_length").cast("long"),
-            F.lit(_strings_spec(cfg)),
-        )
-        return spread(chunks).select(F.inline(rows))
-    # spread the compute-dense scan across cores when the chunk source
-    # collapsed to fewer input splits than the cluster has slots
-    # (measured 2 of 32 cores busy on the 10x q35 corpus, whose 100 MB
-    # of synthesized chunks arrive as 2 file splits); a no-op at scale
-    # where splits >> cores
-    chunks = spread(chunks)
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for start, vlen, data in zip(pdf["start"], pdf["valid_length"], pdf["data"]):
-                rows.extend(
-                    _blob_spans(bytes(data), int(start), int(vlen), min_len, max_len, scan_utf16)
-                )
-            yield pd.DataFrame(rows, columns=_SPAN_COLUMNS)
-
-    return chunks.mapInPandas(scan, schemas.STRING_SPANS)
-
-
-_SPAN_COLUMNS = [
-    "global_start",
-    "byte_length",
-    "content",
-    "encoding",
-    "url_like",
-    "email_like",
-    "phone_like",
-]
-
-
-def _blob_spans(
-    blob: bytes, start: int, vlen: int, min_len: int, max_len: int, scan_utf16: bool
-) -> list[tuple]:
-    """All span rows for one chunk blob — the Python chunk-table kernel
-    and the reference rows the JVM kernels are differential-tested
-    against."""
-    found: list[tuple[int, bytes, str]] = []
-    for pos, raw in _scan_ascii(blob, min_len, max_len):
-        found.append((pos, raw, "ascii"))
-    for pos, raw in _scan_utf8(blob, min_len, max_len):
-        found.append((pos, raw, "utf-8"))
-    if scan_utf16:
-        for pos, raw in _scan_utf16(blob, min_len, max_len, True):
-            found.append((pos, raw, "utf-16le"))
-        for pos, raw in _scan_utf16(blob, min_len, max_len, False):
-            found.append((pos, raw, "utf-16be"))
-    rows = []
-    for pos, raw, enc in found:
-        if pos >= vlen:  # overlap dedup, same rule as hits
-            continue
-        rows.append(_span_row(start + pos, raw, enc))
-    return rows
-
-
-def _span_row(global_start: int, raw: bytes, enc: str) -> tuple:
-    """One STRING_SPANS row: decode + hint flags."""
-    if enc.startswith("utf-16"):
-        flag_src = raw[0::2] if enc == "utf-16le" else raw[1::2]
-    else:
-        flag_src = raw
-    url_like, email_like, phone_like = _flags(flag_src)
-    return (
-        global_start,
-        len(raw),
-        _decode_span(raw, enc),
-        enc,
-        url_like,
-        email_like,
-        phone_like,
+    ensure_kernel(chunks.sparkSession)
+    rows = F.call_udf(
+        "sb_scan_strings_bytes",
+        F.col("data"),
+        F.col("start").cast("long"),
+        F.col("valid_length").cast("long"),
+        F.lit(_strings_spec(cfg)),
     )
+    return spread(chunks).select(F.inline(rows))
 
 
 _ARTEFACT_COLUMNS = [f.name for f in schemas.STRING_ARTEFACTS.fields]

@@ -314,31 +314,25 @@ def scan_all_hits(spark, path: str, length: int, ac_spec: str) -> list[int]:
     return sorted(int(h) for h in row["h"])
 
 
-def fallback_hits(spark, path: str, cfg):
-    """Hits of the chunk-table scan under the Python kernel — what a
-    host without the JVM kernel runs. It has no scan-time gates: the
-    carver alone rejects loose-signature false hits there."""
-    import swiftbeaver_spark.jvm as jvm_mod
+def ungated_hits(spark, path: str, cfg):
+    """Hits of the chunk-table scan (scanner.scan_and_normalize). It has
+    no scan-time gates: the carver alone rejects loose-signature false
+    hits there."""
     from swiftbeaver_spark.chunking import chunks_from_file
     from swiftbeaver_spark.scanner import scan_and_normalize
 
-    saved = getattr(spark, jvm_mod._MARKER, None)
-    try:
-        setattr(spark, jvm_mod._MARKER, False)
-        chunks = chunks_from_file(spark, path, cfg.chunk_size, cfg.overlap)
-        return scan_and_normalize(chunks, cfg)
-    finally:
-        setattr(spark, jvm_mod._MARKER, saved)
+    chunks = chunks_from_file(spark, path, cfg.chunk_size, cfg.overlap)
+    return scan_and_normalize(chunks, cfg)
 
 
 def assert_gates_sound(spark, path: str, cfg) -> None:
     """The one-pass scan's gated hits are a subset of the ungated
-    fallback hits, and both hit sets carve to identical rows."""
+    chunk-table hits, and both hit sets carve to identical rows."""
     from swiftbeaver_spark.carve_op import carve_hits_with_evidence
     from swiftbeaver_spark.fused_scan import scan_all_from_evidence
 
     gated = scan_all_from_evidence(spark, path, cfg)["hits"]
-    ungated = fallback_hits(spark, path, cfg)
+    ungated = ungated_hits(spark, path, cfg)
 
     def offsets(df):
         return {(r.global_offset, r.pattern_id) for r in df.collect()}

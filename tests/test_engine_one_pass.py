@@ -1,8 +1,6 @@
 """Engine.run's evidence scan path.
 
-With the JVM kernel active, Engine.run(evidence_path=...) always runs
-the one-pass multi-scan; without it (a JRE-only host, or the
-SPARK_GRAFT_NO_VEC_KERNEL hatch) it scans the cached chunk table. Both
+Engine.run(evidence_path=...) always runs the one-pass multi-scan; it
 must produce IDENTICAL tables to the chunk-table strategy
 (chunk_join=True) on raw and E01 evidence — with scan limits, with
 string scan on and off, and with entropy windows that divide neither
@@ -128,37 +126,9 @@ def test_misaligned_entropy_window_runs_one_pass(spark, tmp_path, kind):
     assert got["entropy_regions"]
 
 
-def _assert_chunk_table_run(res):
-    """The run scanned the cached chunk table (it carries bytes) and
-    persisted only the carve frame and the browser parse frame — no
-    scan frame."""
-    assert "data" in res["chunks"].columns
-    carve, parse = res.persisted
-    assert carve.schema == res["carved_files"].schema
-    assert parse.columns[0] == "kind"
-
-
-@pytest.mark.parametrize("kind", ["raw", "e01"])
-def test_no_kernel_runs_chunk_table(spark, tmp_path, monkeypatch, kind):
-    """Under SPARK_GRAFT_NO_VEC_KERNEL (the JRE-only path) run(evidence_
-    path) scans the cached chunk table — no scan frame persisted, the
-    chunk table carrying bytes — and yields the kernel run's tables."""
-    p = _evidence(tmp_path, kind, 18, 5 << 20)
-    eng = Engine(spark, CFG)
-    base = _tables(eng.run(evidence_path=p, chunk_join=True))
-    monkeypatch.setenv("SPARK_GRAFT_NO_VEC_KERNEL", "1")
-    res = eng.run(evidence_path=p)
-    _assert_chunk_table_run(res)
-    try:
-        assert _tables(res) == base
-    finally:
-        res.unpersist()
-        res["chunks"].unpersist()
-
-
 def test_auto_selects_one_pass_when_ready(spark, tmp_path):
-    """With the kernel active every evidence run goes one-pass — raw
-    and E01, string scan off, any entropy window."""
+    """Every evidence run without chunk_join goes one-pass — raw and
+    E01, string scan off, any entropy window."""
     raw = _evidence(tmp_path, "raw", 14, 2 << 20)
     e01 = _evidence(tmp_path, "e01", 14, 2 << 20)
     for path, cfg in (
@@ -188,21 +158,6 @@ def test_detection_off_omits_entropy_tables(spark, tmp_path):
         assert t["string_spans"].count() > 0
     finally:
         t["raw"].unpersist()
-
-
-def test_no_vec_kernel_hatch_disables_fused(spark, tmp_path, monkeypatch):
-    """ADVICE r11: the whole-kernel-family escape hatch must disable
-    sb_scan_all loudly (no Python fallback exists to mix in); Engine.run
-    routes around it to the chunk table."""
-    p = tmp_path / "ev.raw"
-    p.write_bytes(b"\x00" * (1 << 20))
-    monkeypatch.setenv("SPARK_GRAFT_NO_VEC_KERNEL", "1")
-    with pytest.raises(ValueError, match="JVM kernel"):
-        scan_all_from_evidence(spark, str(p), CFG, granule=GRANULE)
-    res = Engine(spark, CFG).run(evidence_path=str(p))
-    _assert_chunk_table_run(res)
-    res.unpersist()
-    res["chunks"].unpersist()
 
 
 def test_zip_bucket_cache_batch_split_parity(spark, tmp_path):

@@ -133,20 +133,6 @@ def test_misaligned_entropy_window_tiles_aligned(spark, tmp_path):
     _cmp(spark, str(p), cfg)
 
 
-def test_requires_jvm_kernel(spark, tmp_path):
-    import swiftbeaver_spark.jvm as jvm_mod
-
-    p = tmp_path / "ev.raw"
-    p.write_bytes(b"\x00" * (1 << 20))
-    saved = getattr(spark, jvm_mod._MARKER, None)
-    try:
-        setattr(spark, jvm_mod._MARKER, False)
-        with pytest.raises(ValueError, match="JVM kernel"):
-            scan_all_from_evidence(spark, str(p), CFG, granule=GRANULE)
-    finally:
-        setattr(spark, jvm_mod._MARKER, saved)
-
-
 def test_partition_count_scales_with_corpus_bytes(spark, tmp_path):
     """r14: the one-pass scan's partition count must grow with corpus
     bytes (ONE_PASS_PARTITION_BYTES of evidence per partition), not

@@ -1,10 +1,11 @@
-"""JVM Aho-Corasick kernel equivalence: sb_scan_bytes / sb_scan_all
-must produce exactly the Python kernel's hits (overlapping matches,
-shared-prefix patterns, window-straddling matches, chunk geometry).
+"""JVM kernel equivalence: sb_scan_bytes / sb_scan_all must produce
+exactly the naive per-pattern find's hits (overlapping matches,
+shared-prefix patterns, window-straddling matches, chunk geometry), and
+the minhash / simhash / Jaccard / vector kernels must be bit-exact with
+their oracles in tests/oracles/.
 
-The JVM kernel registers into any session (jvm.ensure_kernel); these
-tests hard-require it — the build environment ships a JDK, so a silent
-fallback here would mask a real regression.
+The JVM kernel is required (jvm.ensure_kernel raises when it cannot
+build or register); the build-failure path is pinned here too.
 """
 
 from __future__ import annotations
@@ -19,23 +20,20 @@ from swiftbeaver_spark.jvm import ensure_kernel, spec_for
 from swiftbeaver_spark.scanner import (
     MAX_HITS_PER_CHUNK,
     compile_patterns,
-    find_all,
     scan_and_normalize,
     scan_chunks,
-    scan_chunks_jvm,
 )
 
 from tests.fixtures import ALL_FIXTURES, scan_all_hits
+from tests.oracles import dedup as dedup_oracle
+from tests.oracles import vec as vec_oracle
+from tests.oracles.scan import blob_hits, chunk_hits, find_all, normalized_hits
 
 PATTERNS = compile_patterns(DEFAULT_CONFIG)
 
 
 def naive(blob: bytes) -> set[tuple[int, str, str]]:
-    out = set()
-    for pat, pid, ftid in PATTERNS:
-        for o in find_all(blob, pat):
-            out.add((o, pid, ftid))
-    return out
+    return blob_hits(blob, PATTERNS)
 
 
 def planted_blob(seed: int, size: int = 200_000) -> bytes:
@@ -60,7 +58,24 @@ def jvm_scan_bytes(spark, blob: bytes) -> set[tuple[int, str, str]]:
 
 
 def test_kernel_registers(spark):
-    assert ensure_kernel(spark), "JVM kernel failed to build/register"
+    assert ensure_kernel(spark) is True
+
+
+def test_broken_source_build_raises(tmp_path, monkeypatch):
+    """A failed javac build is loud: kernel_jar raises RuntimeError
+    carrying javac's own `error:` diagnostics instead of degrading."""
+    import shutil
+
+    import swiftbeaver_spark.jvm as jvm_mod
+
+    java_dir = tmp_path / "java"
+    shutil.copytree(jvm_mod._JAVA_DIR + "/src", java_dir / "src")
+    broken = java_dir / "src" / "sbspark" / "Ac.java"
+    broken.write_text(broken.read_text() + "\nthis is not java\n")
+    monkeypatch.setattr(jvm_mod, "_JAVA_DIR", str(java_dir))
+    with pytest.raises(RuntimeError, match="error:"):
+        jvm_mod.kernel_jar()
+    assert not (java_dir / jvm_mod._JAR_NAME).exists()
 
 
 @pytest.mark.parametrize("seed", [11, 12, 13])
@@ -78,6 +93,14 @@ def test_bytes_udf_overlap_and_shared_prefix(spark):
     assert got == naive(blob)
     assert {o for (o, pid, _) in got if pid == "jpeg_soi"} == {0, 2}
     assert {ftid for (o, _, ftid) in got if o == 45} == {"webp", "wav", "avi"}
+
+
+def test_bytes_udf_zero_region_and_pattern_at_end(spark):
+    assert jvm_scan_bytes(spark, b"\x00" * 100_000) == set()
+    blob = b"\x00" * 100 + bytes.fromhex("FFD8FF")
+    got = jvm_scan_bytes(spark, blob)
+    assert got == naive(blob)
+    assert {o for (o, pid, _) in got if pid == "jpeg_soi"} == {100}
 
 
 def test_evidence_udf_streams_across_io_windows(spark, tmp_path):
@@ -109,8 +132,8 @@ def _hit_set(df) -> set[tuple[int, str, str]]:
 
 
 def test_scan_evidence_jvm_equals_python(spark, tmp_path):
-    """Full fused operator: the one-pass JVM scan's hits == the Python
-    chunk-table kernel's (the JRE-only path) on the same chunk geometry
+    """Full fused operator: the one-pass JVM scan's hits == the naive
+    find over the chunk table's bytes on the same chunk geometry
     (including overlap dedup at sub-chunk and parent edges), except the
     loose-signature hits the scan-time gates drop."""
     import dataclasses
@@ -124,19 +147,13 @@ def test_scan_evidence_jvm_equals_python(spark, tmp_path):
         fh.write(blob)
     cfg = dataclasses.replace(DEFAULT_CONFIG, chunk_size=64 * 1024, overlap=4096)
     got_jvm = _hit_set(scan_all_from_evidence(spark, path, cfg, granule=16 * 1024)["hits"])
-    # force the Python kernel by monkeypatching availability
-    import swiftbeaver_spark.jvm as jvm_mod
-
-    saved = getattr(spark, jvm_mod._MARKER, None)
-    try:
-        setattr(spark, jvm_mod._MARKER, False)
-        chunks = chunks_from_file(spark, path, cfg.chunk_size, cfg.overlap)
-        got_py = _hit_set(scan_and_normalize(chunks, cfg))
-    finally:
-        setattr(spark, jvm_mod._MARKER, saved)
-    assert got_jvm and got_jvm <= got_py
+    chunks = chunks_from_file(spark, path, cfg.chunk_size, cfg.overlap)
+    rows = chunks.select("start", "valid_length", "data").collect()
+    want = normalized_hits(rows, compile_patterns(cfg))
+    assert _hit_set(scan_and_normalize(chunks, cfg)) == want
+    assert got_jvm and got_jvm <= want
     gated = {ft.type_id for ft in cfg.file_types if ft.validator in ("mp3", "bmp", "ico")}
-    assert {ftid for _, _, ftid in got_py - got_jvm} <= gated
+    assert {ftid for _, _, ftid in want - got_jvm} <= gated
 
 
 def test_scan_chunks_jvm_equals_python(spark):
@@ -144,23 +161,12 @@ def test_scan_chunks_jvm_equals_python(spark):
 
     blob = planted_blob(7, size=150_000)
     chunks = chunks_from_bytes(spark, blob, 32 * 1024, 2048)
-    assert ensure_kernel(spark)
     got_jvm = {
         (r.chunk_id, r.local_offset, r.pattern_id, r.file_type_id)
-        for r in scan_chunks_jvm(chunks, DEFAULT_CONFIG).collect()
+        for r in scan_chunks(chunks, DEFAULT_CONFIG).collect()
     }
-    import swiftbeaver_spark.jvm as jvm_mod
-
-    saved = getattr(spark, jvm_mod._MARKER, None)
-    try:
-        setattr(spark, jvm_mod._MARKER, False)
-        got_py = {
-            (r.chunk_id, r.local_offset, r.pattern_id, r.file_type_id)
-            for r in scan_chunks(chunks, DEFAULT_CONFIG).collect()
-        }
-    finally:
-        setattr(spark, jvm_mod._MARKER, saved)
-    assert got_jvm == got_py != set()
+    want = chunk_hits(chunks.select("chunk_id", "data").collect(), PATTERNS)
+    assert got_jvm == want != set()
 
 
 def test_evidence_udf_reads_e01_natively(spark, tmp_path):
@@ -190,25 +196,22 @@ def test_evidence_udf_reads_e01_natively(spark, tmp_path):
 
 
 def _minhash_both_ways(spark, rows):
-    """Signatures via the JVM kernel and the numpy kernel for the same
+    """Signatures via the JVM kernel and the numpy oracle for the same
     input rows: {doc_id: signature_tuple} for each."""
-    import swiftbeaver_spark.jvm as jvm_mod
     from swiftbeaver_spark.llm.dedup import minhash_signatures
 
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    assert ensure_kernel(spark)
     jvm = {r.doc_id: tuple(r.signature) for r in minhash_signatures(df).collect()}
-    saved = getattr(spark, jvm_mod._MARKER, None)
-    try:
-        setattr(spark, jvm_mod._MARKER, False)
-        py = {r.doc_id: tuple(r.signature) for r in minhash_signatures(df).collect()}
-    finally:
-        setattr(spark, jvm_mod._MARKER, saved)
+    py = {
+        did: sig
+        for did, text in rows
+        if (sig := dedup_oracle.minhash_signature(text)) is not None
+    }
     return jvm, py
 
 
 def test_minhash_jvm_matches_numpy(spark):
-    """The JVM minhash kernel must be BIT-exact with the numpy kernel
+    """The JVM minhash kernel must be BIT-exact with the numpy oracle
     (same CRC32 base, same uint64 affine wrap, same unsigned min) —
     otherwise LSH bucket assignments silently change with the kernel."""
     import random
@@ -334,11 +337,10 @@ def test_scan_plan_stays_jvm_side(spark, tmp_path):
 
 
 def test_simhash_jvm_matches_numpy(spark):
-    """The JVM simhash kernel must be BIT-exact with the numpy kernel
+    """The JVM simhash kernel must be BIT-exact with the numpy oracle
     (crc32 + splitmix64 + bit votes), nulls and whitespace included."""
     import random
 
-    import swiftbeaver_spark.jvm as jvm_mod
     from swiftbeaver_spark.llm.dedup import simhash
 
     rng = random.Random(17)
@@ -348,24 +350,18 @@ def test_simhash_jvm_matches_numpy(spark):
         for i in range(150)
     ] + [(900, None), (901, ""), (902, "one one one two")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    assert ensure_kernel(spark)
     jvm = {r.doc_id: r.simhash for r in simhash(df).collect()}
-    saved = getattr(spark, jvm_mod._MARKER, None)
-    try:
-        setattr(spark, jvm_mod._MARKER, False)
-        py = {r.doc_id: r.simhash for r in simhash(df).collect()}
-    finally:
-        setattr(spark, jvm_mod._MARKER, saved)
+    py = {did: dedup_oracle.simhash(text) for did, text in rows}
     assert jvm == py and len(jvm) == 153
     assert jvm[900] == 0 and jvm[901] == 0
 
 
 def test_vec_kernels_match_catalyst_folds(spark):
     """sb_dot / sb_sqdists / sb_dots / sb_adc must be bit-exact twins
-    of the Catalyst zip_with/aggregate folds they replace (same IEEE
-    order, same null algebra: null array / null element / dim mismatch
-    -> null (per entry for the table kernels), empty arrays -> the 0.0
-    init)."""
+    of the Catalyst zip_with/aggregate folds in tests/oracles/vec.py
+    (same IEEE order, same null algebra: null array / null element /
+    dim mismatch -> null (per entry for the table kernels), empty
+    arrays -> the 0.0 init)."""
     from swiftbeaver_spark.llm.similarity import _centroid_lit, _centroid_spec
 
     assert ensure_kernel(spark)
@@ -378,9 +374,7 @@ def test_vec_kernels_match_catalyst_folds(spark):
         ([1.0, None, 3.0], [1.0, 2.0, 3.0]),  # null element -> null
     ]
     df = spark.createDataFrame(rows, "a array<double>, b array<double>")
-    cat_dot = F.aggregate(
-        F.zip_with("a", "b", lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v
-    )
+    cat_dot = vec_oracle.dot("a", "b")
     for r in df.select(F.call_udf("sb_dot", "a", "b").alias("j"), cat_dot.alias("c")).collect():
         assert r.j == r.c or (r.j is None and r.c is None)
 
@@ -392,28 +386,16 @@ def test_vec_kernels_match_catalyst_folds(spark):
     ]
     cl = _centroid_lit(cents)
     spec = F.lit(_centroid_spec(cents))
-    cat_sq = F.transform(
-        cl,
-        lambda c: F.aggregate(
-            F.zip_with("a", c, lambda v, cc: (v - cc) * (v - cc)),
-            F.lit(0.0),
-            lambda s, x: s + x,
-        ),
-    )
-    cat_dots = F.transform(
-        cl,
-        lambda c: F.aggregate(
-            F.zip_with("a", c, lambda v, cc: v * cc), F.lit(0.0), lambda s, x: s + x
-        ),
-    )
     vdf = spark.createDataFrame(
         [([1.0, 2.0, 3.0],), ([0.1, 0.2, 0.30000000000000004],), (None,),
          ([1.0, None, 2.0],), ([1.0, 2.0],)],
         "a array<double>",
     )
     out = vdf.select(
-        F.call_udf("sb_sqdists", "a", spec).alias("js"), cat_sq.alias("cs"),
-        F.call_udf("sb_dots", "a", spec).alias("jd"), cat_dots.alias("cd"),
+        F.call_udf("sb_sqdists", "a", spec).alias("js"),
+        vec_oracle.sq_dists("a", cl).alias("cs"),
+        F.call_udf("sb_dots", "a", spec).alias("jd"),
+        vec_oracle.dots("a", cl).alias("cd"),
     ).collect()
     for r in out:
         assert list(r.js or []) == list(r.cs or [])
@@ -423,60 +405,8 @@ def test_vec_kernels_match_catalyst_folds(spark):
     cdf = spark.createDataFrame(
         [([0, 3],), ([1, 2],), ([3, 3],), (None,), ([None, 1],)], "code array<int>"
     ).withColumn("_lut", F.array(*[F.lit(x) for x in lut]))
-    cat_adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(1)),
-        F.lit(0.0),
-        lambda s, j: s
-        + F.element_at(
-            F.col("_lut"), (j * 4 + F.element_at(F.col("code"), j + 1) + 1).cast("int")
-        ),
-    )
     for r in cdf.select(
-        F.call_udf("sb_adc", "_lut", "code", F.lit(4)).alias("j"), cat_adc.alias("c")
+        F.call_udf("sb_adc", "_lut", "code", F.lit(4)).alias("j"),
+        vec_oracle.adc("_lut", "code", 2, 4).alias("c"),
     ).collect():
         assert r.j == r.c or (r.j is None and r.c is None)
-
-
-def test_ann_results_identical_kernel_on_off(spark, monkeypatch):
-    """End-to-end: IVF cell assignment + PQ encode + brute-force top-k
-    return IDENTICAL rows with the vec kernels on and off (the
-    SPARK_GRAFT_NO_VEC_KERNEL escape hatch is also the JRE-only path)."""
-    import random
-
-    from swiftbeaver_spark.llm.similarity import (
-        brute_force_topk,
-        ivf_cell,
-        md5_centroids,
-        pq_encode,
-    )
-
-    assert ensure_kernel(spark)
-    rng = random.Random(23)
-    vecs = [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(200)]
-    df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    cents = md5_centroids(8, 16, tag="kerneltest")
-    books = [md5_centroids(4, 4, tag=f"bk{j}") for j in range(4)]
-    queries = df.where(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-
-    def run():
-        cell = {
-            r.vec_id: r.c
-            for r in df.select(
-                "vec_id", ivf_cell(F.col("embedding"), cents, round_dp=6).alias("c")
-            ).collect()
-        }
-        codes = {
-            r.vec_id: list(r.pq_code)
-            for r in pq_encode(df, books, round_dp=6).select("vec_id", "pq_code").collect()
-        }
-        topk = sorted(
-            map(tuple, brute_force_topk(df, queries, k=5).collect())
-        )
-        return cell, codes, topk
-
-    want = run()
-    monkeypatch.setenv("SPARK_GRAFT_NO_VEC_KERNEL", "1")
-    got = run()
-    assert got == want

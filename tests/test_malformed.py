@@ -12,9 +12,10 @@ import pytest
 from swiftbeaver_spark.carvers import build_registry, carve_hit
 from swiftbeaver_spark.carvers.base import BytesReader
 from swiftbeaver_spark.config import DEFAULT_CONFIG
-from swiftbeaver_spark.scanner import MAX_HITS_PER_CHUNK, compile_patterns, scan_blob
+from swiftbeaver_spark.scanner import MAX_HITS_PER_CHUNK, compile_patterns
 
 from tests.fixtures import ALL_FIXTURES
+from tests.oracles.scan import find_all
 
 TEST_CFG = dataclasses.replace(
     DEFAULT_CONFIG,
@@ -78,16 +79,29 @@ def test_zip_declared_geometry_mismatch_rejected():
     assert rec is None  # require_eocd finds no geometrically-valid EOCD
 
 
-def test_scan_budget_cap():
+def test_scan_budget_cap(spark):
     """Pathological hit density respects the per-chunk cap (reference
-    gpu_max_hits_per_chunk)."""
+    gpu_max_hits_per_chunk) in the JVM kernel: sb_scan_bytes stops at
+    exactly `cap` hits, the first `cap` of the uncapped scan."""
+    from pyspark.sql import functions as F
+
+    from swiftbeaver_spark.jvm import ensure_kernel, spec_for
+
+    ensure_kernel(spark)
     blob = bytes.fromhex("FFD8FF") * 50  # dense overlapping jpeg sigs
     pats = compile_patterns(TEST_CFG)
-    hits = scan_blob(blob, pats, budget=10)
-    assert len(hits) <= 10
-    # and unbounded finds them all
-    all_hits = [h for h in scan_blob(blob, pats) if h[1] == "jpeg_soi"]
-    assert len(all_hits) == 50
+    df = spark.createDataFrame([(bytearray(blob),)], "data binary")
+
+    def scan(cap: int) -> list[int]:
+        spec = F.lit(spec_for(pats, cap))
+        [row] = df.select(F.call_udf("sb_scan_bytes", F.col("data"), spec).alias("h")).collect()
+        return list(row["h"])
+
+    uncapped = scan(MAX_HITS_PER_CHUNK)
+    capped = scan(10)
+    assert len(capped) == 10 and capped == uncapped[:10]
+    jpeg = [h for h in uncapped if pats[h & 0xFFFF][1] == "jpeg_soi"]
+    assert len(jpeg) == 50
 
 
 def test_random_noise_no_false_positives_survive_validation(tmp_path):
@@ -97,7 +111,8 @@ def test_random_noise_no_false_positives_survive_validation(tmp_path):
 
     blob = random.Random(99).randbytes(1 << 20)
     pats = compile_patterns(TEST_CFG)
-    for off, pid, ftid in scan_blob(blob, pats)[:200]:
+    hits = [(off, pid, ftid) for pat, pid, ftid in pats for off in find_all(blob, pat)]
+    for off, pid, ftid in hits[:200]:
         rec = carve_hit(BytesReader(blob), off, ftid, pid, REGISTRY, TEST_CFG)
         if rec is not None:
             assert rec.size > 0

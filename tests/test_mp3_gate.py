@@ -8,8 +8,7 @@ hoisted into the one-pass evidence scan (ScanGates.java). Contract:
 - carved rows are byte-identical with the gate on (evidence-path hits)
   and off (manually supplied ungated hits) — the gate only removes
   hits that carve to None;
-- the ungated chunk-table scan of a host without the JVM kernel
-  carves the same rows; raw and E01 evidence gate hit-for-hit alike.
+- the ungated chunk-table scan carves the same rows; raw and E01 evidence gate hit-for-hit alike.
 """
 
 from __future__ import annotations
@@ -95,8 +94,8 @@ def test_gate_drops_false_syncs_keeps_real(spark, tmp_path):
 
 
 def test_gate_python_fallback_identical(spark, tmp_path):
-    """The JRE-only path scans without gates; its carves must equal the
-    gated scan's."""
+    """The chunk-table scan runs without gates; its carves must equal
+    the gated scan's."""
     buf, _, _ = _evidence()
     path = str(tmp_path / "mp3.raw")
     with open(path, "wb") as fh:
@@ -140,7 +139,9 @@ def test_carved_rows_identical_gate_on_off(spark, tmp_path):
     """The gate must only remove hits that carve to None: carving the
     gated evidence-path hits equals carving the full ungated hit set."""
     from swiftbeaver_spark.carve_op import carve_hits_with_evidence
-    from swiftbeaver_spark.scanner import compile_patterns, find_all
+    from swiftbeaver_spark.scanner import compile_patterns
+
+    from tests.oracles.scan import find_all
 
     buf, _, _ = _evidence()
     path = str(tmp_path / "mp3.raw")

@@ -2,7 +2,7 @@
 see tests/test_mp3_gate.py for the m3 contract). Same soundness rule:
 a gate drops a hit only when the evidence bytes prove the carver would
 return None; carved rows are identical with the gate on or off (and on
-the ungated chunk-table scan of a host without the JVM kernel); raw and
+the ungated chunk-table scan); raw and
 E01 evidence gate hit-for-hit alike.
 """
 
@@ -14,7 +14,7 @@ import struct
 
 from swiftbeaver_spark.config import DEFAULT_CONFIG
 from swiftbeaver_spark.fused_scan import scan_all_from_evidence
-from tests.fixtures import assert_gates_sound, fallback_hits, mk_bmp
+from tests.fixtures import assert_gates_sound, mk_bmp, ungated_hits
 
 GATE_CFG = dataclasses.replace(
     DEFAULT_CONFIG,
@@ -111,7 +111,9 @@ def test_gates_python_fallback_and_e01_identical(spark, tmp_path):
 
 def test_carved_rows_identical_gates_on_off(spark, tmp_path):
     from swiftbeaver_spark.carve_op import carve_hits_with_evidence
-    from swiftbeaver_spark.scanner import compile_patterns, find_all
+    from swiftbeaver_spark.scanner import compile_patterns
+
+    from tests.oracles.scan import find_all
 
     rng = random.Random(32)
     buf = bytearray(rng.randbytes(128 * 1024))
@@ -151,7 +153,7 @@ def test_bmp_min_size_hoisted_into_gate(spark, tmp_path):
     function of the declared size, which the carved size can only
     shrink, so the drop is provably what the pipeline would do. The
     ungated hit carves to
-    zero rows, proving soundness directly; the ungated fallback scan
+    zero rows, proving soundness directly; the ungated chunk-table scan
     keeps it for the carver to reject."""
     import dataclasses as dc
 
@@ -175,7 +177,7 @@ def test_bmp_min_size_hoisted_into_gate(spark, tmp_path):
         return {r.global_offset for r in hits.collect() if r.file_type_id == "bmp"}
 
     assert 1_000 not in bmp_offsets(scan_all_from_evidence(spark, path, cfg)["hits"])
-    assert 1_000 in bmp_offsets(fallback_hits(spark, path, cfg))
+    assert 1_000 in bmp_offsets(ungated_hits(spark, path, cfg))
 
     # soundness: the carver itself rejects the very hit the gate dropped
     ungated = spark.createDataFrame(

@@ -20,7 +20,8 @@ import pytest
 
 from swiftbeaver_spark.config import DEFAULT_CONFIG
 from swiftbeaver_spark.fused_scan import scan_all_from_evidence
-from swiftbeaver_spark.strings_scan import _blob_spans
+
+from tests.oracles.strings import blob_spans
 
 CFG = dataclasses.replace(
     DEFAULT_CONFIG,
@@ -37,8 +38,7 @@ GRANULE = 512
 @pytest.fixture(params=["jvm", "python"])
 def oracle(request, spark):
     """The parent-geometry chunk-table scan every parity test compares
-    against, under BOTH chunk-table kernels: the JVM bytes kernel and
-    the Python kernel a host without the JVM kernel runs."""
+    against: the JVM bytes kernel, and the Python oracle."""
     if request.param == "python":
         return reference_rows
 
@@ -53,14 +53,14 @@ def oracle(request, spark):
 
 
 def reference_rows(data: bytes, cfg) -> list[tuple]:
-    """Parent-geometry scan with the Python chunk-table kernel: the
-    pinned semantics."""
+    """Parent-geometry scan with the Python oracle: the pinned
+    semantics."""
     rows: list[tuple] = []
     for c in range(0, len(data), cfg.chunk_size):
         blob = data[c : c + cfg.chunk_size + cfg.overlap]
         vlen = min(cfg.chunk_size, len(data) - c)
         rows.extend(
-            _blob_spans(
+            blob_spans(
                 blob, c, vlen, cfg.string_min_len, cfg.string_max_len,
                 cfg.string_scan_utf16,
             )
@@ -195,13 +195,12 @@ def test_degenerate_granule_equals_chunk(spark, tmp_path, oracle):
 @pytest.mark.parametrize("seed", [11, 12])
 def test_bytes_kernel_differential_fuzz(spark, tmp_path, seed):
     """Chunk-table path: JVM sb_scan_strings_bytes vs the Python
-    _blob_spans kernel, bit-identical rows on random mixed content."""
+    blob_spans oracle, bit-identical rows on random mixed content."""
     from swiftbeaver_spark.chunking import chunks_from_bytes
     from swiftbeaver_spark.jvm import ensure_kernel
     from swiftbeaver_spark.strings_scan import scan_string_spans
 
-    if not ensure_kernel(spark):
-        pytest.skip("JVM kernel unavailable")
+    ensure_kernel(spark)
     rng = random.Random(seed)
     data = bytearray()
     words = ["mixed", "Ascii", "ünïcødé", "桜とコード", "tab\there"]

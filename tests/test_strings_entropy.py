@@ -242,14 +242,14 @@ def test_merge_regions_bucket_edges_misaligned(spark, monkeypatch):
 
 
 def test_utf16_regex_matches_state_machine():
-    """The round-7 regex rewrite of _scan_utf16 must reproduce the
+    """The round-7 regex rewrite of the oracle's scan_utf16 must reproduce the
     original two-alignment per-byte state machine span-for-span
     (reference src/strings/cpu.rs:143-216 semantics): seeded fuzz over
     blobs mixing LE/BE runs at both alignments, boundary runs, and the
     max_len segmentation."""
     import random
 
-    from swiftbeaver_spark.strings_scan import _scan_utf16
+    from tests.oracles.strings import scan_utf16
 
     def reference_scan(data, min_len, max_len, little_endian):
         # the pre-round-7 loop, verbatim
@@ -306,25 +306,21 @@ def test_utf16_regex_matches_state_machine():
         data = bytes(blob)
         for min_len, max_len in ((4, 64), (1, 5), (2, 3)):
             for le in (True, False):
-                got = sorted(_scan_utf16(data, min_len, max_len, le))
+                got = sorted(scan_utf16(data, min_len, max_len, le))
                 want = sorted(reference_scan(data, min_len, max_len, le))
                 assert got == want, (seed, min_len, max_len, le, data.hex())
 
 
 def test_entropy_window_kernel_matches_scalar():
-    """The shared window-entropy kernel must equal the scalar
-    shannon_entropy fold exactly (round-7 review found the batched
-    bincount-key form allocated ~16x the chunk bytes — an executor OOM
-    at the production 512 MiB chunk — and measurement then showed the
-    per-window fold is also FASTER at every window size, so the kernel
-    is now that fold; this pins the equivalence for both the
-    chunk-table and fused-evidence paths that share it)."""
+    """The oracle's per-window fold must equal the scalar
+    shannon_entropy fold exactly — the two numpy forms the JVM kernel
+    is pinned against cannot disagree with each other."""
     import numpy as np
 
-    from swiftbeaver_spark import entropy as ent
+    from tests.oracles.entropy import entropy_all_windows, shannon_entropy
 
     rng = np.random.default_rng(3)
     mat = rng.integers(0, 256, size=(37, 64), dtype=np.uint8)
-    got = ent._entropy_all_windows(mat, 64)
-    scalar = np.array([ent.shannon_entropy(mat[i]) for i in range(37)])
+    got = entropy_all_windows(mat, 64)
+    scalar = np.array([shannon_entropy(mat[i]) for i in range(37)])
     assert (got == scalar).all()

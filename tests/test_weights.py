@@ -199,34 +199,54 @@ def _pyfnv(s: str) -> int:
     return h
 
 
+def _pyngrams(w: str, minn: int, maxn: int) -> list[str]:
+    """fastText subword expansion: all n-grams of '<w>' for n in
+    [minn, maxn], n ascending then position ascending, duplicates kept."""
+    s = f"<{w}>"
+    return [s[i : i + n] for n in range(minn, maxn + 1) for i in range(len(s) - n + 1)]
+
+
+_MAX_BUCKETS = 2**31 - 1
+
+
+def _sb_subword(spark, words, minn: int, maxn: int, nb: int = _MAX_BUCKETS) -> dict:
+    df = spark.createDataFrame([(w,) for w in words], "w string")
+    spec = F.lit(f"{minn};{maxn};{nb}")
+    return {
+        r.w: list(r.b)
+        for r in df.select("w", F.call_udf("sb_subword", F.col("w"), spec).alias("b")).collect()
+    }
+
+
 def test_subword_ngrams_pinned(spark):
     """fastText subword expansion: all n-grams of '<word>' for n in
     [minn, maxn], duplicates kept (fastText Dictionary::computeSubwords
-    keeps them)."""
-    from swiftbeaver_spark.llm.weights import subword_ngrams
+    keeps them) — pinned through sb_subword's bucket stream."""
+    from swiftbeaver_spark.jvm import ensure_kernel
 
-    df = spark.createDataFrame([("ab",), ("aa",), ("x",)], "w string")
-    out = {
-        r.w: r.g
-        for r in df.select("w", subword_ngrams(F.col("w"), 2, 3).alias("g")).collect()
+    ensure_kernel(spark)
+    out = _sb_subword(spark, ["ab", "aa", "x"], 2, 3)
+    want = {
+        "ab": ["<a", "ab", "b>", "<ab", "ab>"],
+        "aa": ["<a", "aa", "a>", "<aa", "aa>"],  # duplicates kept
+        "x": ["<x", "x>", "<x>"],
     }
-    assert out["ab"] == ["<a", "ab", "b>", "<ab", "ab>"]
-    assert out["aa"] == ["<a", "aa", "a>", "<aa", "aa>"]  # duplicates kept
-    assert out["x"] == ["<x", "x>", "<x>"]
+    for w, grams in want.items():
+        assert grams == _pyngrams(w, 2, 3)
+        assert out[w] == [_pyfnv(g) % _MAX_BUCKETS for g in grams], w
 
 
 def test_fnv1a32_matches_reference(spark):
-    """The Catalyst FNV-1a fold must equal the public FNV-1a spec over
-    codepoints (offset 2166136261, prime 16777619), including empty
-    strings and multi-byte codepoints — DuckDB ord() and Spark ascii()
-    both return codepoints, so the oracle replays it exactly."""
-    from swiftbeaver_spark.llm.weights import fnv1a32
+    """sb_subword's FNV-1a fold must equal the public FNV-1a spec over
+    codepoints (offset 2166136261, prime 16777619), including multi-byte
+    codepoints — DuckDB ord() also returns codepoints, so the oracle
+    replays it exactly. One n-gram per word: n = len('<word>')."""
+    from swiftbeaver_spark.jvm import ensure_kernel
 
-    words = ["", "a", "<ab", "hello", "é€", "zzz>"]
-    df = spark.createDataFrame([(w,) for w in words], "w string")
-    got = {r.w: r.h for r in df.select("w", fnv1a32(F.col("w")).alias("h")).collect()}
-    for w in words:
-        assert got[w] == _pyfnv(w), w
+    ensure_kernel(spark)
+    for w in ["", "a", "<ab", "hello", "é€", "zzz>"]:
+        n = len(w) + 2
+        assert _sb_subword(spark, [w], n, n) == {w: [_pyfnv(f"<{w}>") % _MAX_BUCKETS]}, w
 
 
 def test_classify_documents_subword(spark):
@@ -378,69 +398,29 @@ def test_persisted_weights_round_trip(spark, tmp_path):
 
 
 def test_subword_kernel_matches_catalyst(spark):
-    """The compiled JVM subword kernel (sb_subword) must emit the
-    exact bucket stream of the Catalyst chain (subword_ngrams ->
-    fnv1a32 % n_buckets): same order (n ascending, position
-    ascending), duplicates kept, codepoint fold (CJK + non-BMP
+    """The compiled JVM subword kernel (sb_subword) must emit the exact
+    bucket stream of the Python reference (n-grams of '<token>' ->
+    FNV-1a over codepoints % n_buckets): same order (n ascending,
+    position ascending), duplicates kept, codepoint fold (CJK + non-BMP
     emoji pinned), null -> null."""
     from swiftbeaver_spark.jvm import ensure_kernel
-    from swiftbeaver_spark.llm.weights import fnv1a32, subword_ngrams
 
-    if not ensure_kernel(spark):
-        pytest.skip("JVM kernel unavailable")
+    ensure_kernel(spark)
     tokens = [
         "hello", "a", "ab", "abc", "abcd", "übermäßig", "東京都庁",
         "x" * 50, "naïve", "<weird>", "", "🙂emoji🙂",
     ]
-    df = spark.createDataFrame([(t,) for t in tokens], "token string")
     for minn, maxn, nb in [(3, 4, 256), (1, 1, 7), (2, 5, 1000003)]:
-        rows = df.select(
-            "token",
-            F.call_udf(
-                "sb_subword", F.col("token"), F.lit(f"{minn};{maxn};{nb}")
-            ).alias("jvm"),
-            F.transform(
-                subword_ngrams(F.col("token"), minn, maxn),
-                lambda g: (fnv1a32(g) % nb).cast("int"),
-            ).alias("cat"),
-        ).collect()
-        for r in rows:
-            assert list(r.jvm) == list(r.cat), (minn, maxn, nb, r.token)
+        got = _sb_subword(spark, tokens, minn, maxn, nb)
+        for t in tokens:
+            want = [_pyfnv(g) % nb for g in _pyngrams(t, minn, maxn)]
+            assert got[t] == want, (minn, maxn, nb, t)
     null_row = (
         spark.createDataFrame([(None,)], "token string")
         .select(F.call_udf("sb_subword", F.col("token"), F.lit("3;4;256")).alias("j"))
         .collect()[0]
     )
     assert null_row.j is None
-
-
-def test_classify_subword_fallback_matches_kernel(spark, monkeypatch):
-    """classify_documents_subword must return identical rows on the
-    kernel and pure-Catalyst paths (the fallback for JRE-only hosts)."""
-    import swiftbeaver_spark.llm.weights as W
-    from swiftbeaver_spark.llm.weights import classify_documents_subword
-
-    word_w = spark.createDataFrame(
-        [("hello", "en", 4_000_000), ("hello", "de", -1_000_000)],
-        "token string, label string, weight_micro long",
-    )
-    bucket_w = spark.createDataFrame(
-        [(b, lab, (b + 1) * m) for b in range(7) for lab, m in (("en", 250_000), ("de", 400_000))],
-        "bucket long, label string, weight_micro long",
-    )
-    docs = spark.createDataFrame(
-        [(1, "hello world"), (2, "zzzz"), (3, None), (4, "東京 🙂")],
-        "doc_id long, text string",
-    )
-    want = sorted(
-        map(tuple, classify_documents_subword(docs, word_w, bucket_w, n_buckets=7).collect())
-    )
-    monkeypatch.setattr(W, "ensure_kernel", lambda _s: False, raising=False)
-    monkeypatch.setattr("swiftbeaver_spark.jvm.ensure_kernel", lambda _s: False)
-    got = sorted(
-        map(tuple, classify_documents_subword(docs, word_w, bucket_w, n_buckets=7).collect())
-    )
-    assert got == want
 
 
 def test_classify_documents_broadcast_flag_plans_and_matches(spark):

@@ -44,49 +44,33 @@ def main() -> None:
     engine = Engine(spark, cfg)
     results = {}
 
-    # raw single-thread kernel throughput (no Spark): the number that
-    # extrapolates to per-core cluster throughput
-    import random
-
-    from swiftbeaver_spark.scanner import compile_patterns, scan_blob
-
-    pats = compile_patterns(cfg)
-    for name, blob in (
-        ("zero", b"\x00" * (32 << 20)),
-        ("rand", random.Random(7).randbytes(32 << 20)),
-    ):
-        secs = timeit(lambda b=blob: scan_blob(b, pats, budget=1 << 62), n)
-        results[f"kernel_{name}_32mib"] = {
-            "sec": round(secs, 4),
-            "mib_per_s": round(32 / secs, 1),
-        }
-
     # JVM kernel single-core: one 256 MiB chunk = one task = one core,
-    # through one sb_scan_all call, signature scan only (includes file read)
+    # through one sb_scan_all call, signature scan only (includes file
+    # read) — the number that extrapolates to per-core cluster throughput
+    import numpy as np
+
     from swiftbeaver_spark.jvm import ensure_kernel, spec_for
-    from swiftbeaver_spark.scanner import MAX_HITS_PER_CHUNK
+    from swiftbeaver_spark.scanner import MAX_HITS_PER_CHUNK, compile_patterns
 
+    ensure_kernel(spark)
     tmp = tempfile.mkdtemp()
-    if ensure_kernel(spark):
-        import numpy as np
-
-        spec = spec_for(pats, MAX_HITS_PER_CHUNK)
-        rng = np.random.default_rng(7)
-        for name, data in (
-            ("zero", bytes(256 << 20)),
-            ("rand", rng.integers(0, 256, 256 << 20, dtype=np.uint8).tobytes()),
-        ):
-            path = os.path.join(tmp, f"jvm_{name}.raw")
-            with open(path, "wb") as fh:
-                fh.write(data)
-            q = f"SELECT size(sb_scan_all('{path}', 0L, {len(data)}L, '0\\n{spec}\\n\\n').hits) AS n"
-            spark.sql(q).collect()  # warm JIT + page cache
-            secs = timeit(lambda q=q: spark.sql(q).collect(), n)
-            results[f"jvm_kernel_{name}_256mib_1core"] = {
-                "sec": round(secs, 4),
-                "mib_per_s": round(256 / secs, 1),
-            }
-            os.unlink(path)
+    spec = spec_for(compile_patterns(cfg), MAX_HITS_PER_CHUNK)
+    rng = np.random.default_rng(7)
+    for name, data in (
+        ("zero", bytes(256 << 20)),
+        ("rand", rng.integers(0, 256, 256 << 20, dtype=np.uint8).tobytes()),
+    ):
+        path = os.path.join(tmp, f"jvm_{name}.raw")
+        with open(path, "wb") as fh:
+            fh.write(data)
+        q = f"SELECT size(sb_scan_all('{path}', 0L, {len(data)}L, '0\\n{spec}\\n\\n').hits) AS n"
+        spark.sql(q).collect()  # warm JIT + page cache
+        secs = timeit(lambda q=q: spark.sql(q).collect(), n)
+        results[f"jvm_kernel_{name}_256mib_1core"] = {
+            "sec": round(secs, 4),
+            "mib_per_s": round(256 / secs, 1),
+        }
+        os.unlink(path)
 
     for mib in (8, 32, 256):
         path = os.path.join(tmp, f"zero_{mib}.raw")
