@@ -297,18 +297,19 @@ def q02_chunked_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets. The oracle scans the unchunked text directly — equality
     proves the overlap-dedup semantics (reference workers.rs:136-155).
 
-    Routed through the engine's real scan kernel (scanner.scan_chunks,
-    JVM Aho-Corasick) instead of the round-1
-    interpreted F.aggregate fold. Docs embed into one address space at
-    doc_id * _DOC_SPAN so the kernel's (start + local_offset) math
-    carries the doc identity through the scan. The chunk table derives
-    from docs in ONE narrow pass (explode + substring — same geometry
-    as q01_chunk_plan, no join back to the text), with the docs spread
-    to cluster parallelism first: the scan kernel costs per byte
+    Routed through the engine's real scan kernel
+    (fused_scan.scan_all_from_chunks, JVM Aho-Corasick) instead of the
+    round-1 interpreted F.aggregate fold. Docs embed into one address
+    space at doc_id * _DOC_SPAN so the kernel's (start + local_offset)
+    math carries the doc identity through the scan into its normalized
+    global_offset. The chunk table derives from docs in ONE narrow pass
+    (explode + substring — same geometry as q01_chunk_plan, no join
+    back to the text), with the docs spread to cluster parallelism
+    first: the scan kernel costs per byte
     scanned, but a 0.6 MB corpus is 1 file split and AQE would pin the
     whole stage to one core (measured ~30% of q02 at sf0.1)."""
     from swiftbeaver_spark.config import EngineConfig, FileType, Pattern
-    from swiftbeaver_spark.scanner import scan_chunks
+    from swiftbeaver_spark.fused_scan import scan_all_from_chunks
 
     docs = spread(
         _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -321,7 +322,6 @@ def q02_chunked_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_id"),
     )
     chunk_tbl = exploded.select(
-        (F.col("doc_id") * CHUNK + F.col("chunk_id")).alias("chunk_id"),
         (F.col("doc_id") * _DOC_SPAN + F.col("chunk_id") * CHUNK).alias("start"),
         F.least(F.lit(CHUNK), F.col("total_len") - F.col("chunk_id") * CHUNK)
         .cast("long")
@@ -345,10 +345,8 @@ def q02_chunked_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    hits = scan_chunks(chunk_tbl, cfg).where(
-        F.col("local_offset") < F.col("valid_length")
-    )
-    fused = F.col("start") + F.col("local_offset")
+    hits = scan_all_from_chunks(chunk_tbl, cfg)["hits"]
+    fused = F.col("global_offset")
     return (
         hits.select(
             (fused / _DOC_SPAN).cast("long").alias("doc_id"),
@@ -1487,9 +1485,11 @@ def q28_sql() -> str:
 
 
 def q35_string_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The REAL byte-level strings scanner (strings_scan.scan_string_spans
-    — ASCII run + UTF-16LE/BE state machines at both alignments + hint
-    flags; reference src/strings/cpu.rs:42-216) under the SQL oracle.
+    """The REAL byte-level strings scanner (the span leg of
+    fused_scan.scan_all_from_chunks — ASCII run + UTF-16LE/BE state
+    machines at both alignments + hint flags; reference
+    src/strings/cpu.rs:42-216) under the SQL oracle. Each 2048-byte row is its own parent chunk under the
+    default 512 MiB chunk_size.
 
     Per doc a 2048-byte block at doc_id*2048:
       [16 x 00][A: 64-ch ASCII][16 x 00][B: 40-ch as UTF-16LE][00 pad]
@@ -1503,7 +1503,7 @@ def q35_string_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     import dataclasses
 
     from swiftbeaver_spark.config import DEFAULT_CONFIG
-    from swiftbeaver_spark.strings_scan import scan_string_spans
+    from swiftbeaver_spark.fused_scan import scan_all_from_chunks
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     a = F.rpad(F.substring("text", 1, 64), 64, "x")
@@ -1518,8 +1518,11 @@ def q35_string_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             zeros16, F.encode(a, "utf-8"), zeros16, F.encode(b, "UTF-16LE"), pad
         ).alias("data"),
     )
-    cfg = dataclasses.replace(DEFAULT_CONFIG, string_scan_utf16=True)
-    return scan_string_spans(chunks, cfg).orderBy("global_start", "encoding")
+    cfg = dataclasses.replace(
+        DEFAULT_CONFIG, enable_string_scan=True, string_scan_utf16=True
+    )
+    spans = scan_all_from_chunks(chunks, cfg)["string_spans"]
+    return spans.orderBy("global_start", "encoding")
 
 
 def q35_sql() -> str:
@@ -1880,7 +1883,7 @@ def q30_carve_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from swiftbeaver_spark.carve_op import carve_hits_with_chunks
     from swiftbeaver_spark.config import DEFAULT_CONFIG
-    from swiftbeaver_spark.scanner import scan_and_normalize
+    from swiftbeaver_spark.fused_scan import scan_all_from_chunks
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     interior = F.rpad(F.col("text"), 600, "x")
@@ -1902,7 +1905,7 @@ def q30_carve_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             ft for ft in DEFAULT_CONFIG.file_types if ft.type_id == "jpeg"
         ),
     )
-    hits = scan_and_normalize(chunks, cfg)
+    hits = scan_all_from_chunks(chunks, cfg)["hits"]
     # window_cap bounds each hit's chunk claim (files here are < 4 KiB;
     # without it every hit would claim max_size/chunk_size = 25k chunks)
     carved = carve_hits_with_chunks(hits, chunks, cfg, window_cap=8192)
@@ -2254,7 +2257,7 @@ def _carve_synth_query(
 
     from swiftbeaver_spark.carve_op import carve_hits_with_chunks
     from swiftbeaver_spark.config import DEFAULT_CONFIG
-    from swiftbeaver_spark.scanner import scan_and_normalize
+    from swiftbeaver_spark.fused_scan import scan_all_from_chunks
 
     norm = [t if len(t) == 4 else (*t, "") for t in templates]
     n = len(norm)
@@ -2299,7 +2302,7 @@ def _carve_synth_query(
         chunk_size=_Q31_CHUNK,
         overlap=0,
     )
-    hits = scan_and_normalize(chunks, cfg)
+    hits = scan_all_from_chunks(chunks, cfg)["hits"]
     carved = carve_hits_with_chunks(hits, chunks, cfg, window_cap=2 * _Q31_CHUNK)
     expected = docs.select(
         (F.col("doc_id") * _Q31_CHUNK).alias("global_start"),
@@ -11742,8 +11745,8 @@ def q172_sql() -> str:
 
 def q173_entropy_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REAL windowed-entropy scanner under the SQL oracle
-    (entropy.entropy_regions = entropy_windows -> merge_regions;
-    reference src/entropy.rs:19-91) — the end-to-end driver gate for
+    (the entropy leg of fused_scan.scan_all_from_chunks ->
+    entropy.merge_regions; reference src/entropy.rs:19-91) — the end-to-end driver gate for
     the round-11 JVM kernel (java/src/sbspark/Ent.java), exactly as
     q35 gates the JVM span kernel (pytest pins it bit-identical to the
     numpy oracle in tests/oracles/entropy.py).
@@ -11763,7 +11766,7 @@ def q173_entropy_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import dataclasses
 
     from swiftbeaver_spark.config import DEFAULT_CONFIG
-    from swiftbeaver_spark.entropy import entropy_regions
+    from swiftbeaver_spark.fused_scan import scan_all_from_chunks
 
     q0 = "00" * 1024
     q1 = "6162" * 512  # 'ab' alternating: 2 symbols per window
@@ -11792,7 +11795,8 @@ def q173_entropy_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
         entropy_window_size=256,
         entropy_threshold=3.0,
     )
-    return entropy_regions(chunks, cfg).orderBy("global_start")
+    regions = scan_all_from_chunks(chunks, cfg)["entropy_regions"]
+    return regions.orderBy("global_start")
 
 
 def q173_sql() -> str:

@@ -75,7 +75,8 @@ def main() -> None:
     spark.sql(
         "SELECT sb_minhash('warm up text', '9;3;1'),"
         "       sb_simhash('warm up text'),"
-        "       sb_scan_bytes(CAST('xabcx' AS BINARY), '10;616263')"
+        "       sb_scan_all_bytes(CAST('xabcx' AS BINARY), 0L, 5L,"
+        "                         '0\\n10;616263\\n\\n')"
     ).collect()
     # ... and then ~20k more times: ONE call leaves the call sites
     # interpreted/C1 (C2 needs ~10k invocations), so the r13-era
@@ -94,8 +95,8 @@ def main() -> None:
     ).collect()
     spark.sql(
         "SELECT count(*) FROM (SELECT"
-        "  sb_scan_bytes(CAST(concat('xabcx', CAST(id AS STRING)) AS BINARY),"
-        "                '10;616263') b FROM range(20000))"
+        "  sb_scan_all_bytes(CAST(concat('xabcx', CAST(id AS STRING)) AS BINARY),"
+        "                    0L, 5L, '0\\n10;616263\\n\\n') b FROM range(20000))"
     ).collect()
     # pre-compile every headline plan at sf0.001: Catalyst analysis,
     # whole-stage codegen classes, and their C2 JIT are keyed by the

@@ -24,7 +24,8 @@ import org.apache.spark.sql.api.java.UDF4;
  * valid_length + overlap) loads once into a BlockIo; the three kernels
  * run unchanged against it (Strs' rare backward-barrier / forward-
  * extension reads outside the block fall through to the underlying
- * source). Rows equal the chunk-table scans' (differential-pinned in
+ * source). Rows equal sb_scan_all_bytes' over cfg.chunk_size chunk rows
+ * (ScanAllBytesUdf, the chunk-table entry; differential-pinned in
  * tests/test_fused_scan.py).
  *
  * Per-kernel semantics:

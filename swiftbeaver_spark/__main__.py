@@ -125,19 +125,7 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark(app_name=f"swiftbeaver-{run_id}", master=args.master)
     spark.sparkContext.setLogLevel("WARN")
-    engine = Engine(spark, cfg)
-    if resume_from is not None:
-        chunks = engine.chunks_from_file(args.input, resume_from=resume_from)
-        chunks = chunks.cache()
-        hits = engine.hits(chunks)
-        carved = engine.carve(hits, evidence_path=args.input)
-        result_tables = {"chunks": chunks, "hits": hits, "carved_files": carved}
-        from swiftbeaver_spark.engine import RunResult
-
-        result = RunResult(result_tables, persisted=[chunks])
-        result.tables["run_summary"] = engine.run_summary(result_tables)
-    else:
-        result = engine.run(evidence_path=args.input)
+    result = Engine(spark, cfg).run(evidence_path=args.input, resume_from=resume_from)
 
     # the summary row write_tables wrote, from its own write counts
     summary = write_tables(result, args.output, fmt=args.format, run_id=run_id)

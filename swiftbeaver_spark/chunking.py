@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from swiftbeaver_spark import schemas
-from swiftbeaver_spark.config import DEFAULT_CHUNK_SIZE, DEFAULT_OVERLAP
+from swiftbeaver_spark.config import DEFAULT_CHUNK_SIZE, DEFAULT_OVERLAP, EngineConfig
 
 # minimum chunk bytes fetched per task when chunk_size is small; one
 # chunk per task whenever chunk_size >= this (see chunks_from_file)
@@ -88,6 +88,24 @@ def plan_chunks(
     return _plan_range(spark, 0, n, evidence_len, chunk_size, overlap, num_partitions)
 
 
+def keep_parents(
+    plan: DataFrame, cfg: EngineConfig, resume_from: int | None = None
+) -> DataFrame:
+    """Rows of a chunk or sub-chunk plan whose PARENT chunk (the
+    cfg.chunk_size chunk holding `start`) is scanned: parent start <
+    cfg.max_bytes, parent id < cfg.max_chunks (the reference's bounded
+    reads, src/pipeline/mod.rs:328-416) and parent start >= resume_from
+    (the checkpoint watermark: skip chunks already scanned, mod.rs:343-345)."""
+    parent = F.floor(F.col("start") / cfg.chunk_size)
+    if cfg.max_bytes is not None:
+        plan = plan.where(parent * cfg.chunk_size < int(cfg.max_bytes))
+    if cfg.max_chunks is not None:
+        plan = plan.where(parent < int(cfg.max_chunks))
+    if resume_from is not None:
+        plan = plan.where(parent * cfg.chunk_size >= int(resume_from))
+    return plan
+
+
 def chunks_from_file(
     spark: SparkSession,
     path: str,
@@ -95,28 +113,24 @@ def chunks_from_file(
     overlap: int = DEFAULT_OVERLAP,
     max_bytes: int | None = None,
     max_chunks: int | None = None,
-    min_offset: int | None = None,
 ) -> DataFrame:
     """Evidence file -> chunks DataFrame with bytes fetched executor-side.
 
     The plan DataFrame is tiny (one row per chunk); bytes never touch the
     driver. Limits mirror the reference's bounded-read semantics
     (src/pipeline/mod.rs:328-416): max_bytes caps which chunk starts are
-    read, max_chunks caps chunk count. min_offset is the resume
-    watermark (skip chunks already scanned, reference mod.rs:343-345).
+    read, max_chunks caps chunk count.
     """
     from swiftbeaver_spark.source import evidence_length, open_evidence
 
     total = evidence_length(path)
     # bounds become the range endpoints directly (not post-filters), so
     # partitions stay contiguous AND evenly sized over surviving ids
-    lo = 0 if min_offset is None else math.ceil(min_offset / chunk_size)
     hi = math.ceil(total / chunk_size)
     if max_bytes is not None:
         hi = min(hi, math.ceil(max_bytes / chunk_size))
     if max_chunks is not None:
         hi = min(hi, max_chunks)
-    hi = max(lo, hi)
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         reader = open_evidence(path)
@@ -144,11 +158,10 @@ def chunks_from_file(
     # partitions are CONTIGUOUS id slices straight from spark.range (no
     # hash repartition), so a materialized chunk table's files hold
     # contiguous evidence runs in row order.
-    n_chunks = hi - lo
-    if n_chunks == 0:
+    if hi <= 0:
         return spark.createDataFrame([], schemas.CHUNKS)
-    n = min(n_chunks, math.ceil(n_chunks * chunk_size / _MIN_TASK_BYTES))
-    plan = _plan_range(spark, lo, hi, total, chunk_size, overlap, n)
+    n = min(hi, math.ceil(hi * chunk_size / _MIN_TASK_BYTES))
+    plan = _plan_range(spark, 0, hi, total, chunk_size, overlap, n)
     return plan.mapInPandas(fetch, schemas.CHUNKS)
 
 

@@ -5,15 +5,16 @@ scan workers -> carve workers -> metadata writer, over bounded
 channels. Spark trace of the same plan (SURVEY §3.2):
 
     raw = scan_all(evidence)                   # one read per sub-chunk feeds
-    hits/strings/entropy = project(raw)        #   all three scans (JVM UDF)
+    hits/strings/entropy = project(raw)        #   all three scans (JVM UDF,
+                                               #   persisted)
     carved = carve(hits)                       # mapInPandas per hit (persisted)
     browser_* = parse(carved sqlite)           # one sqlite3-in-UDF pass per DB
                                                #   (persisted) + joins
     sinks: parquet/jsonl/csv per table
 
-With chunk_join (or bytes input) the same three JVM kernels scan a
-cached chunk table instead, and the carve reads the chunk table; same
-rows.
+With chunk_join (or bytes input) the same fused kernel scans each row
+of a cached chunk table once instead, and the carve reads the chunk
+table; same rows, same table graph.
 
 Thread boundaries become stage boundaries; bounded-channel
 backpressure becomes Spark scheduling; the single-writer metadata
@@ -22,7 +23,6 @@ thread becomes parallel columnar writes.
 
 from __future__ import annotations
 
-import os
 import secrets
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
@@ -33,15 +33,9 @@ from pyspark.sql import functions as F
 from swiftbeaver_spark import chunking
 from swiftbeaver_spark.carve_op import carve_hits_with_chunks, carve_hits_with_evidence
 from swiftbeaver_spark.config import DEFAULT_CONFIG, EngineConfig
-from swiftbeaver_spark.entropy import entropy_regions
-from swiftbeaver_spark.scanner import scan_and_normalize
-from swiftbeaver_spark.strings_scan import scan_string_artefacts, scan_string_spans
+from swiftbeaver_spark.strings_scan import scan_string_artefacts
 
 from pyspark.storagelevel import StorageLevel
-
-# Storage level for the one-pass raw metadata frame (see _run_one_pass);
-# module-level so tools/bench_persist_level.py can A/B levels in-session.
-ONE_PASS_RAW_STORAGE = StorageLevel.MEMORY_AND_DISK
 
 
 def make_run_id() -> str:
@@ -103,6 +97,11 @@ class RunResult:
 class Engine:
     """Public API analog of `run_pipeline` (reference src/pipeline/mod.rs:98-129).
 
+    `run` builds one table graph: a fused scan (fused_scan.py — one
+    positioned read per evidence sub-chunk, or one kernel call per
+    chunk-table row) whose persisted raw frame feeds hits, spans and
+    entropy, then the carve.
+
     Carve strategy selection (`carve`): pass `evidence_path` to use
     positioned reads — each task re-opens the evidence (right whenever
     executors can reach it as a path: local, NFS, fuse-mounted object
@@ -134,28 +133,7 @@ class Engine:
         self.spark = spark
         self.cfg = cfg
 
-    # -- ingestion -----------------------------------------------------------
-
-    def chunks_from_file(self, path: str, resume_from: int | None = None) -> DataFrame:
-        """resume_from: checkpoint next_offset (skip already-scanned
-        chunks; see swiftbeaver_spark.checkpoint)."""
-        return chunking.chunks_from_file(
-            self.spark,
-            path,
-            self.cfg.chunk_size,
-            self.cfg.overlap,
-            max_bytes=self.cfg.max_bytes,
-            max_chunks=self.cfg.max_chunks,
-            min_offset=resume_from,
-        )
-
-    def chunks_from_bytes(self, data: bytes) -> DataFrame:
-        return chunking.chunks_from_bytes(self.spark, data, self.cfg.chunk_size, self.cfg.overlap)
-
     # -- stages ---------------------------------------------------------------
-
-    def hits(self, chunks: DataFrame) -> DataFrame:
-        return scan_and_normalize(chunks, self.cfg)
 
     def carve(
         self,
@@ -193,18 +171,26 @@ class Engine:
         evidence_bytes: bytes | None = None,
         chunk_join: bool = False,
         cache_intermediates: bool = False,
+        resume_from: int | None = None,
     ) -> RunResult:
         """Scan path: with `evidence_path`, the one-pass multi-scan
         (fused_scan.scan_all_from_evidence): ONE positioned read per
         sub-chunk feeds signature + strings + entropy, and carving does
         targeted positioned reads. With `chunk_join=True` or
-        `evidence_bytes`, the scans run over the cached chunk table and
-        the carve reads the chunk table itself. Both paths yield the
-        same rows (differential-pinned in
+        `evidence_bytes`, the fused kernel scans each row of the cached
+        chunk table once (fused_scan.scan_all_from_chunks) and the carve
+        reads the chunk table itself. Either way the scan's raw metadata
+        frame is persisted (that persist is what makes the scan run
+        once) and every stage table derives from it in ONE table graph.
+        Both paths yield the same rows (differential-pinned in
         tests/test_engine_one_pass.py and tests/test_fused_scan.py),
         except that only the one-pass scan drops loose-signature hits
         at scan time (scanner.scan_gate_indexes) — hits the carver
         rejects anyway, so carved_files is the same.
+
+        `resume_from` (a checkpoint's next_offset; evidence path only)
+        skips every parent chunk that starts before it: the scan, the
+        `chunks` table and so the run summary cover the rest.
 
         `cache_intermediates=True` persists each stage output
         (MEMORY_AND_DISK — recomputable on executor loss, unlike
@@ -213,138 +199,96 @@ class Engine:
         for free, but the Spark analog's run_summary otherwise
         re-derives every consumed subtree. The setting for full runs
         that drive several tables (write_tables, the stress bench);
-        OFF by default so single-table uses stay cache-free. Stage
-        outputs are metadata rows (spans/hits/carves), orders of
-        magnitude smaller than evidence. On the one-pass path
-        string_spans is NOT re-persisted — it is a projection of the
-        raw frame below, and double-storing the span content bytes
-        OOMed an 8 GiB heap at 10 GiB evidence (r13).
+        OFF by default so single-table uses stay cache-free.
 
-        Always persisted: the one-pass raw metadata frame (that persist
-        is what makes the read happen once) and, when the run builds
-        browser tables (`evidence_path` set, sqlite among the types),
-        the carve frame and the browser parse frame, so the carve and
-        each DB's parse run once however many tables are driven. All
-        are in RunResult.persisted and CALLER-owned: call
-        RunResult.unpersist() when done, or repeated runs in one
-        session accumulate executor storage."""
-        if evidence_path is not None and not chunk_join:
-            return self._run_one_pass(evidence_path, cache_intermediates)
-        if evidence_path is not None:
-            from swiftbeaver_spark.source import evidence_length
-
-            chunks = self.chunks_from_file(evidence_path)
-            total = evidence_length(evidence_path)
-        elif evidence_bytes is not None:
-            chunks = self.chunks_from_bytes(evidence_bytes)
-            total = len(evidence_bytes)
-        else:
-            raise ValueError("need evidence_path or evidence_bytes")
-        chunks = chunks.cache()  # one pass feeds scan, strings, entropy, carve
-
-        hits = self.hits(chunks)
-        # evidence_len from the plan's arithmetic — no aggregation job.
-        # Scan limits truncate the chunk table, so the byte horizon for
-        # over_cap-vs-EOF attribution is the last INCLUDED chunk's end,
-        # not the full media length (else a limit-cut carve would claim
-        # withheld-by-cap bytes that were never scanned).
-        horizon = total
-        if self.cfg.max_bytes is not None and self.cfg.max_bytes < total:
-            last = (max(self.cfg.max_bytes, 1) - 1) // self.cfg.chunk_size
-            horizon = min(horizon, (last + 1) * self.cfg.chunk_size)
-        if self.cfg.max_chunks is not None:
-            horizon = min(horizon, self.cfg.max_chunks * self.cfg.chunk_size)
-        carved = self.carve(hits, chunks=chunks, evidence_len=horizon)
-        tables = {"chunks": chunks, "hits": hits, "carved_files": carved}
-        if self.cfg.enable_string_scan:
-            spans = scan_string_spans(chunks, self.cfg)
-            tables["string_spans"] = spans
-            tables["string_artefacts"] = scan_string_artefacts(spans, self.cfg)
-        if self.cfg.enable_entropy_detection:
-            tables["entropy_regions"] = entropy_regions(chunks, self.cfg)
-        return self._finish(tables, evidence_path, cache_intermediates)
-
-    def _run_one_pass(self, evidence_path: str, cache_intermediates: bool) -> RunResult:
-        """One-pass table graph: scan_all_from_evidence's raw metadata
-        frame (persisted — that persist IS the single read) feeds hits/
-        spans/entropy; carve stays on targeted positioned reads (hit
-        windows only — the one stage whose reads are sparse)."""
-        from swiftbeaver_spark.chunking import plan_chunks
-        from swiftbeaver_spark.fused_scan import scan_all_from_evidence
+        Always persisted: the raw metadata frame (RunResult.persisted[0]),
+        the chunk table on the chunk-table path, and, when the run
+        builds browser tables (`evidence_path` set, sqlite among the
+        types), the carve frame and the browser parse frame, so the
+        carve and each DB's parse run once however many tables are
+        driven. All are CALLER-owned: call RunResult.unpersist() when
+        done, or repeated runs in one session accumulate executor
+        storage."""
+        from swiftbeaver_spark.fused_scan import scan_all_from_chunks, scan_all_from_evidence
         from swiftbeaver_spark.source import evidence_length
 
-        total = evidence_length(evidence_path)
-        scans = scan_all_from_evidence(
-            self.spark,
-            evidence_path,
-            self.cfg,
-            max_bytes=self.cfg.max_bytes,
-            max_chunks=self.cfg.max_chunks,
-        )
-        # the persist is what makes the evidence read happen ONCE: every
-        # derived table reads through this metadata cache (one row per
-        # sub-chunk: packed hits + span rows + entropy islands). The
-        # frame is the one SIZE-PROPORTIONAL intermediate (span content
-        # ~ the text share of the corpus); MEMORY_AND_DISK lets Spark
-        # degrade it to disk partition-by-partition when it outgrows
-        # the storage pool — the in-session persist-level A/B
-        # (tools/bench_persist_level.py, r13) measured MEMORY_AND_DISK
-        # vs DISK_ONLY within noise at 4 GiB on local[32], so the
-        # graceful default keeps the memory-hit fast path where the
-        # frame fits and the disk shape where it does not. Module
-        # constant so the A/B tool can swap levels in one session.
-        raw = scans["raw"].persist(ONE_PASS_RAW_STORAGE)
-        plan = plan_chunks(self.spark, total, self.cfg.chunk_size, self.cfg.overlap)
-        if self.cfg.max_bytes is not None:
-            plan = plan.where(F.col("start") < int(self.cfg.max_bytes))
-        if self.cfg.max_chunks is not None:
-            plan = plan.where(F.col("chunk_id") < int(self.cfg.max_chunks))
+        cfg = self.cfg
+        if evidence_path is not None and not chunk_join:
+            total = evidence_length(evidence_path)
+            plan = chunking.plan_chunks(self.spark, total, cfg.chunk_size, cfg.overlap)
+            chunks = chunking.keep_parents(plan, cfg, resume_from)
+            scans = scan_all_from_evidence(
+                self.spark, evidence_path, cfg, resume_from=resume_from
+            )
+            carve_from: dict = {"evidence_path": evidence_path}
+            cached: list[DataFrame] = []
+        else:
+            if resume_from is not None:
+                raise ValueError("resume_from needs the one-pass evidence path")
+            if evidence_path is not None:
+                total = evidence_length(evidence_path)
+                chunks = chunking.chunks_from_file(
+                    self.spark,
+                    evidence_path,
+                    cfg.chunk_size,
+                    cfg.overlap,
+                    max_bytes=cfg.max_bytes,
+                    max_chunks=cfg.max_chunks,
+                )
+            elif evidence_bytes is not None:
+                total = len(evidence_bytes)
+                chunks = chunking.chunks_from_bytes(
+                    self.spark, evidence_bytes, cfg.chunk_size, cfg.overlap
+                )
+            else:
+                raise ValueError("need evidence_path or evidence_bytes")
+            # one cache feeds the scan and the carve
+            chunks = chunks.cache()
+            cached = [chunks]
+            scans = scan_all_from_chunks(chunks, cfg)
+            # evidence_len from the plan's arithmetic — no aggregation
+            # job. Scan limits truncate the chunk table, so the byte
+            # horizon for over_cap-vs-EOF attribution is the last
+            # INCLUDED chunk's end, not the full media length (else a
+            # limit-cut carve would claim withheld-by-cap bytes that were
+            # never scanned).
+            horizon = total
+            if cfg.max_bytes is not None and cfg.max_bytes < total:
+                last = (max(cfg.max_bytes, 1) - 1) // cfg.chunk_size
+                horizon = min(horizon, (last + 1) * cfg.chunk_size)
+            if cfg.max_chunks is not None:
+                horizon = min(horizon, cfg.max_chunks * cfg.chunk_size)
+            carve_from = {"chunks": chunks, "evidence_len": horizon}
+        # the persist is what makes the scan run ONCE: every derived
+        # table reads through this metadata cache (one row per sub-chunk
+        # or chunk row: packed hits + span rows + entropy islands). It is
+        # the one SIZE-PROPORTIONAL intermediate (span content ~ the text
+        # share of the corpus); MEMORY_AND_DISK degrades it to disk
+        # partition by partition when it outgrows the storage pool (an
+        # r13 A/B measured it within noise of DISK_ONLY at 4 GiB).
+        persisted = [scans["raw"].persist(StorageLevel.MEMORY_AND_DISK), *cached]
         hits = scans["hits"]
-        carved = self.carve(hits, evidence_path=evidence_path)
-        tables = {"chunks": plan, "hits": hits, "carved_files": carved}
-        if self.cfg.enable_string_scan:
-            spans = scans["string_spans"]
-            tables["string_spans"] = spans
-            tables["string_artefacts"] = scan_string_artefacts(spans, self.cfg)
-        if self.cfg.enable_entropy_detection:
+        tables = {"chunks": chunks, "hits": hits, "carved_files": self.carve(hits, **carve_from)}
+        if cfg.enable_string_scan:
+            tables["string_spans"] = scans["string_spans"]
+            tables["string_artefacts"] = scan_string_artefacts(scans["string_spans"], cfg)
+        if cfg.enable_entropy_detection:
             tables["entropy_regions"] = scans["entropy_regions"]
-        return self._finish(
-            tables, evidence_path, cache_intermediates, persisted_pre=[raw]
-        )
 
-    def _finish(
-        self,
-        tables: dict[str, DataFrame],
-        evidence_path: str | None,
-        cache_intermediates: bool,
-        persisted_pre: list[DataFrame] | None = None,
-    ) -> RunResult:
-        """Stage tables -> RunResult (persists, browser tables, lazy
-        run_summary). RunResult.persisted holds `persisted_pre` (the
-        one-pass raw frame) first and the browser parse frame last; the
-        caller frees them (RunResult.unpersist)."""
-        persisted: list[DataFrame] = list(persisted_pre or [])
         parse_browser = evidence_path is not None and any(
-            ft.type_id == "sqlite" for ft in self.cfg.file_types
+            ft.type_id == "sqlite" for ft in cfg.file_types
         )
         to_persist: list[str] = []
         if cache_intermediates:
-            # Under one-pass (persisted_pre holds the raw metadata
-            # frame) string_spans is a cheap PROJECTION of that
-            # already-persisted frame, and it carries the dominant
-            # cache bytes (the span content strings — ~1.4M rows/GiB
-            # on text-heavy evidence). Re-persisting it stores those
-            # bytes TWICE (raw struct arrays + exploded rows); at
-            # 10 GiB the doubled residency OOMed an 8 GiB heap (r13).
-            # Skipping it costs one cached-columnar re-read + explode
-            # per drive — no evidence I/O. hits / entropy_regions stay
-            # persisted: they are metadata-small (thousands of rows
-            # per GiB) and their caches save a decode/merge-shuffle
-            # per extra drive; real-compute stages (carve, artefact
-            # regexes) persist as before.
-            skip = {"string_spans"} if persisted_pre else set()
-            stages = ("hits", "carved_files", "string_spans", "string_artefacts", "entropy_regions")
-            to_persist = [n for n in stages if n in tables and n not in skip]
+            # string_spans is NOT re-persisted: it is a cheap PROJECTION
+            # of the raw frame and carries the dominant cache bytes (the
+            # span content strings — ~1.4M rows/GiB on text-heavy
+            # evidence); storing them twice OOMed an 8 GiB heap at 10 GiB
+            # (r13). hits / entropy_regions are metadata-small and their
+            # caches save a decode/merge-shuffle per extra drive;
+            # real-compute stages (carve, artefact regexes) persist too.
+            stages = ("hits", "carved_files", "string_artefacts", "entropy_regions")
+            to_persist = [n for n in stages if n in tables]
         if parse_browser and "carved_files" not in to_persist:
             # the carve feeds both the carved_files sink and the browser
             # parse; unpersisted, each consumer re-runs it (and
@@ -359,7 +303,7 @@ class Engine:
 
             # one parse pass per carved DB, persisted: the three browser
             # tables (and page recovery's merge) are projections of it
-            recovery = self.cfg.enable_sqlite_page_recovery
+            recovery = cfg.enable_sqlite_page_recovery
             parsed = parse_carved_dbs(
                 tables["carved_files"].where(F.col("file_type") == "sqlite"),
                 evidence_path,

@@ -5,7 +5,8 @@ Reference parity: src/entropy.rs:19-91 — non-overlapping windows of
 when contiguous, region keeps max entropy.
 
 Spark design: window entropy is the JVM kernel (java/src/sbspark/
-Ent.java — byte histogram + a per-count entropy contribution table).
+Ent.java — byte histogram + a per-count entropy contribution table),
+the entropy leg of the fused scan (fused_scan.py).
 Bit-exact parity with numpy is by construction: the contribution table
 t[c] = -(c/N * log2(c/N)) is computed HERE with numpy and exported to
 the JVM in the spec string (the same export strategy as the strings
@@ -32,7 +33,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from swiftbeaver_spark.config import EngineConfig
-from swiftbeaver_spark.parallel import spread
 
 
 @functools.lru_cache(maxsize=8)
@@ -66,29 +66,6 @@ def _entropy_spec(cfg: EngineConfig, merged: bool) -> str:
         f"{cfg.entropy_window_size};{float(cfg.entropy_threshold)!r};"
         f"{1 if merged else 0};{_LEVEL_SPAN};{bits}"
     )
-
-
-def entropy_windows(
-    chunks: DataFrame, cfg: EngineConfig, merged: bool = False
-) -> DataFrame:
-    """Per-chunk full windows with entropy >= threshold (merged=True:
-    per-chunk islands of contiguous qualifying windows, split at
-    level-1 merge-bucket boundaries — what entropy_regions feeds the
-    distributed merge): one JVM entropy-kernel pass per chunk (chunk
-    bytes never cross into Python; see Ent.java), spread across cores
-    when the chunk source arrives in fewer input splits than the
-    cluster has slots (a no-op at scale)."""
-    from swiftbeaver_spark.jvm import ensure_kernel
-
-    ensure_kernel(chunks.sparkSession)
-    rows = F.call_udf(
-        "sb_entropy_bytes",
-        F.col("data"),
-        F.col("start").cast("long"),
-        F.col("valid_length").cast("long"),
-        F.lit(_entropy_spec(cfg, merged)),
-    )
-    return spread(chunks).select(F.inline(rows))
 
 
 def _merge_level(df: DataFrame, span: int, slack: int) -> tuple[DataFrame, DataFrame]:
@@ -182,12 +159,4 @@ def merge_regions(windows: DataFrame, window_size: int) -> DataFrame:
         F.col("end").alias("global_end"),
         "entropy",
         F.lit(window_size).cast("long").alias("window_size"),
-    )
-
-
-def entropy_regions(chunks: DataFrame, cfg: EngineConfig) -> DataFrame:
-    # merged=True: the scan emits per-chunk islands, so the distributed
-    # merge sees ~islands instead of ~windows (identical regions)
-    return merge_regions(
-        entropy_windows(chunks, cfg, merged=True), cfg.entropy_window_size
     )

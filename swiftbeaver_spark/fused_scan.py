@@ -1,27 +1,29 @@
-"""One-pass multi-scan over evidence: a single positioned read per
-sub-chunk feeds the signature scan, the string-span scan AND the
-entropy window scan (java/src/sbspark/ScanAllEvidenceUdf.java) — the
-reference's ScanChunk loop, where one buffer feeds every scanner.
+"""Fused multi-scan: one kernel call feeds the signature scan, the
+string-span scan AND the entropy window scan — the reference's
+ScanChunk loop, where one buffer feeds every scanner. Two entries share
+one table projection:
 
-This is the evidence-path scan of every `Engine.run(evidence_path=...)`
-without `chunk_join`. It avoids both costs of the alternatives: no
-evidence byte is read twice (one pass per scan would
-be 3x corpus egress against object storage, and 3x re-decompression
-on E01), and no chunk BYTES are materialized (the chunk-table strategy,
-`Engine.run(chunk_join=True)`, caches them — see the Engine docstring's
-heap-economics note). The UDF returns the three stages' METADATA rows
-(packed hits, span rows, entropy islands) in one struct, and callers
-persist that small frame instead of the bytes.
+- `scan_all_from_evidence` (sb_scan_all, ScanAllEvidenceUdf.java): one
+  positioned read per evidence sub-chunk — the scan of every
+  `Engine.run(evidence_path=...)` without `chunk_join`. No evidence
+  byte is read twice (one pass per scan would be 3x corpus egress
+  against object storage, and 3x re-decompression on E01), and no chunk
+  BYTES are materialized.
+- `scan_all_from_chunks` (sb_scan_all_bytes, ScanAllBytesUdf.java): one
+  call per chunk-table row — `chunk_join` / bytes runs, the streaming
+  front and the chunk-table catalog queries.
 
-Rows equal the chunk-table scans over cfg.chunk_size chunks (pinned by
+Both return the three stages' METADATA rows (packed hits, span rows,
+entropy islands) as the struct column `r` of a `raw` frame; callers
+persist that small frame instead of the bytes. The evidence rows equal
+the chunk-table rows over cfg.chunk_size chunks (pinned by
 tests/test_fused_scan.py differentials on raw + E01 evidence):
 
 - hits: fresh-state Aho-Corasick over [start, start+vlen+overlap) per
   sub-chunk with ownership dedup (local_offset < valid_length) — the
-  parent-geometry chunk scan's own cross-boundary rule, so the union
-  over sub-chunks equals scanner.scan_chunks (before the scan-time
-  gates, which only drop hits the carver rejects). Reference parity:
-  the same scan loop as src/scanner/cpu.rs:40-69.
+  chunk scan's own cross-boundary rule, so the union over sub-chunks
+  equals the chunk-table hits (before the scan-time gates, which only
+  drop hits the carver rejects). Reference parity: src/scanner/cpu.rs:40-69.
 - spans: Strs.scanEvidence, continuation-aware (backward barrier walk,
   forward UTF-8 run extension), so rows stay pinned to cfg.chunk_size
   geometry whatever the sub-chunk tiling.
@@ -37,11 +39,22 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from swiftbeaver_spark.chunking import keep_parents
 from swiftbeaver_spark.config import (
     EVIDENCE_PARTITION_BYTES,
     SUBCHUNK_GRANULE,
     EngineConfig,
 )
+from swiftbeaver_spark.entropy import _entropy_spec, merge_regions
+from swiftbeaver_spark.jvm import ensure_kernel, spec_for
+from swiftbeaver_spark.parallel import spread
+from swiftbeaver_spark.scanner import (
+    MAX_HITS_PER_CHUNK,
+    compile_patterns,
+    decode_hits,
+    scan_gate_indexes,
+)
+from swiftbeaver_spark.strings_scan import _strings_spec
 
 # Evidence bytes per one-pass scan partition (r14): bounds the persisted
 # raw frame's per-partition cache block — and the unroll/serialization
@@ -79,13 +92,40 @@ def subchunk_plan(
     )
 
 
+def _scan_spec(cfg: EngineConfig, ac_spec: str) -> str:
+    """The fused kernels' spec: overlap, Aho-Corasick spec, strings spec
+    and entropy spec, one per line. An empty line (string scan / entropy
+    detection off) skips that scan, so its array comes back empty."""
+    return "\n".join(
+        [
+            str(cfg.overlap),
+            ac_spec,
+            _strings_spec(cfg) if cfg.enable_string_scan else "",
+            _entropy_spec(cfg, merged=True) if cfg.enable_entropy_detection else "",
+        ]
+    )
+
+
+def _scan_tables(raw: DataFrame, patterns, cfg: EngineConfig) -> dict[str, DataFrame]:
+    """The stage tables both entries derive from their raw frame
+    (start, valid_length, r): decoded + overlap-deduped hits, and the
+    span / entropy rows of the enabled scans."""
+    out = {"raw": raw, "hits": decode_hits(raw, patterns)}
+    if cfg.enable_string_scan:
+        out["string_spans"] = raw.select(F.inline("r.spans"))
+    if cfg.enable_entropy_detection:
+        ents = raw.select(F.inline("r.ents"))
+        out["entropy_windows"] = ents
+        out["entropy_regions"] = merge_regions(ents, cfg.entropy_window_size)
+    return out
+
+
 def scan_all_from_evidence(
     spark,
     path: str,
     cfg: EngineConfig,
     granule: int | None = None,
-    max_bytes: int | None = None,
-    max_chunks: int | None = None,
+    resume_from: int | None = None,
 ) -> dict[str, DataFrame]:
     """Build the one-pass multi-scan frame and its derived stage tables.
     Returns {"raw", "hits", "string_spans", "entropy_windows",
@@ -101,26 +141,17 @@ def scan_all_from_evidence(
         finally:
             tables["raw"].unpersist()
 
-    `max_bytes`/`max_chunks` truncate the PARENT chunk plan exactly as
-    the chunk table does (a parent whose start clears the byte limit is
-    included whole), so the derived tables match the limit-filtered
-    chunk-table scans row for row.
+    `cfg.max_bytes` / `cfg.max_chunks` and `resume_from` (a checkpoint
+    watermark) select PARENT chunks exactly as the chunk table does (a
+    parent whose start clears the byte limit is included whole; see
+    chunking.keep_parents), so the derived tables match the
+    limit-filtered chunk-table scans row for row.
 
     With `cfg.enable_string_scan` / `cfg.enable_entropy_detection`
     False the UDF skips that kernel (empty spec line) and the returned
     dict has no span / entropy tables.
     """
-    from swiftbeaver_spark.entropy import _entropy_spec, merge_regions
-    from swiftbeaver_spark.jvm import ensure_kernel, spec_for
-    from swiftbeaver_spark.scanner import (
-        MAX_HITS_PER_CHUNK,
-        _decode_packed_hits,
-        compile_patterns,
-        normalize_hits,
-        scan_gate_indexes,
-    )
     from swiftbeaver_spark.source import evidence_length
-    from swiftbeaver_spark.strings_scan import _strings_spec
 
     ensure_kernel(spark)
     total = evidence_length(path)
@@ -129,27 +160,12 @@ def scan_all_from_evidence(
     # grid); sub-chunks starting at window multiples keep that grid
     align = cfg.entropy_window_size if cfg.enable_entropy_detection else 1
     patterns = compile_patterns(cfg)
-    spec = "\n".join(
-        [
-            str(cfg.overlap),
-            spec_for(patterns, MAX_HITS_PER_CHUNK, scan_gate_indexes(cfg)),
-            _strings_spec(cfg) if cfg.enable_string_scan else "",
-            _entropy_spec(cfg, merged=True) if cfg.enable_entropy_detection else "",
-        ]
+    spec = _scan_spec(
+        cfg, spec_for(patterns, MAX_HITS_PER_CHUNK, scan_gate_indexes(cfg))
     )
-    plan = subchunk_plan(spark, total, cfg.chunk_size, g, align)
-    # parent-chunk limit rules, identical to the chunk table's: it keeps
-    # chunks with start < max_bytes / chunk_id < max_chunks, so
-    # sub-chunks filter on their PARENT's start/id
-    if max_bytes is not None:
-        plan = plan.where(
-            F.floor(F.col("start") / cfg.chunk_size) * cfg.chunk_size
-            < int(max_bytes)
-        )
-    if max_chunks is not None:
-        plan = plan.where(
-            F.floor(F.col("start") / cfg.chunk_size) < int(max_chunks)
-        )
+    plan = keep_parents(
+        subchunk_plan(spark, total, cfg.chunk_size, g, align), cfg, resume_from
+    )
     # Partition count scales with CORPUS SIZE, floored at the thread
     # count (r14): a fixed defaultParallelism split makes each
     # partition's evidence share — and therefore the persisted raw
@@ -162,7 +178,7 @@ def scan_all_from_evidence(
     # makes the per-executor memory law size-independent — the same
     # rule a 1000-executor/100 TB run needs, since corpus bytes per
     # executor grow there too.
-    scan_span = min(total, max_bytes) if max_bytes is not None else total
+    scan_span = min(total, cfg.max_bytes) if cfg.max_bytes is not None else total
     n_parts = max(
         spark.sparkContext.defaultParallelism,
         1,
@@ -179,22 +195,37 @@ def scan_all_from_evidence(
             F.lit(spec),
         ).alias("r"),
     )
+    return _scan_tables(raw, patterns, cfg)
 
-    # hits: sub-chunk rows satisfy the same normalize contract as the
-    # chunk-planned scan (local offsets relative to `start`, ownership
-    # = valid_length), so decode+normalize are shared verbatim
-    hit_cols = raw.select(
-        F.floor(F.col("start") / cfg.chunk_size).alias("chunk_id"),
+
+def scan_all_from_chunks(chunks: DataFrame, cfg: EngineConfig) -> dict[str, DataFrame]:
+    """Chunk-table rows (start, valid_length, data) -> the same dict as
+    scan_all_from_evidence, one sb_scan_all_bytes call per row. PERSIST
+    `raw` before driving more than one derived table.
+
+    Each row is its own parent chunk whatever cfg.chunk_size is (runs
+    anchor at the row start and truncate at its end; windows tile from
+    the row start). The hit spec carries no scan-time gates (they need
+    evidence reads past the row): the carver stays the authority.
+    Hits-only callers leave the string scan and entropy detection off
+    in `cfg`, so the kernel runs the hit scan alone."""
+    ensure_kernel(chunks.sparkSession)
+    patterns = compile_patterns(cfg)
+    spec = _scan_spec(cfg, spec_for(patterns, MAX_HITS_PER_CHUNK))
+    if cfg.enable_string_scan or cfg.enable_entropy_detection:
+        # the span and entropy scans cost per byte: spread a chunk table
+        # that arrived in fewer partitions than the cluster has slots
+        # (a no-op at scale)
+        chunks = spread(chunks)
+    raw = chunks.select(
         "start",
         "valid_length",
-        F.col("r.hits").alias("hits"),
+        F.call_udf(
+            "sb_scan_all_bytes",
+            F.col("data"),
+            F.col("start").cast("long"),
+            F.col("valid_length").cast("long"),
+            F.lit(spec),
+        ).alias("r"),
     )
-    hits = normalize_hits(_decode_packed_hits(hit_cols, F.col("hits"), patterns))
-    out = {"raw": raw, "hits": hits}
-    if cfg.enable_string_scan:
-        out["string_spans"] = raw.select(F.inline("r.spans"))
-    if cfg.enable_entropy_detection:
-        ents = raw.select(F.inline("r.ents"))
-        out["entropy_windows"] = ents
-        out["entropy_regions"] = merge_regions(ents, cfg.entropy_window_size)
-    return out
+    return _scan_tables(raw, patterns, cfg)

@@ -17,8 +17,9 @@ against live in tests/oracles/.
 
 The jar compiles lazily with the JDK (javac against pyspark's own jars)
 and registers into ANY session via ADD JAR + registerJavaFunction. The
-three scans run fused in sb_scan_all (one positioned read per
-sub-chunk, fused_scan.py) on evidence runs. A JDK is required: a
+three scans always run fused (fused_scan.py): sb_scan_all over one
+positioned read per evidence sub-chunk, sb_scan_all_bytes over each
+chunk-table row. A JDK is required: a
 failed build, registration or probe raises RuntimeError carrying
 javac's stderr or the registration error.
 """
@@ -41,16 +42,14 @@ _SOURCES = (
     "DotUdf.java",
     "DotsUdf.java",
     "Ent.java",
-    "EntropyBytesUdf.java",
     "EwfImage.java",
     "JaccardUdf.java",
     "MinHashUdf.java",
     "ScanGates.java",
     "SqDistsUdf.java",
+    "ScanAllBytesUdf.java",
     "ScanAllEvidenceUdf.java",
-    "ScanBytesUdf.java",
     "SimHashUdf.java",
-    "StringScanBytesUdf.java",
     "Strs.java",
     "SubwordUdf.java",
 )
@@ -71,7 +70,6 @@ _SCAN_ALL_TYPE = (
 
 # (SQL name, sbspark class, return type) of every registered kernel UDF
 _UDFS = (
-    ("sb_scan_bytes", "ScanBytesUdf", "array<bigint>"),
     ("sb_minhash", "MinHashUdf", "array<bigint>"),
     ("sb_simhash", "SimHashUdf", "bigint"),
     ("sb_jaccard", "JaccardUdf", "double"),
@@ -80,9 +78,8 @@ _UDFS = (
     ("sb_dots", "DotsUdf", "array<double>"),
     ("sb_sqdists", "SqDistsUdf", "array<double>"),
     ("sb_adc", "AdcUdf", "double"),
-    ("sb_scan_strings_bytes", "StringScanBytesUdf", _SPAN_ROWS_TYPE),
-    ("sb_entropy_bytes", "EntropyBytesUdf", _ENT_ROWS_TYPE),
     ("sb_scan_all", "ScanAllEvidenceUdf", _SCAN_ALL_TYPE),
+    ("sb_scan_all_bytes", "ScanAllBytesUdf", _SCAN_ALL_TYPE),
 )
 
 # cache attribute stashed on the SparkSession object itself: id() keys
@@ -153,8 +150,8 @@ def kernel_jar() -> str:
 
 
 def ensure_kernel(spark: SparkSession | None = None) -> bool:
-    """Register the kernel UDFs (sb_scan_bytes, sb_scan_all, the
-    strings/entropy/vector kernels) into `spark` — by default the ACTIVE
+    """Register the kernel UDFs (sb_scan_all, sb_scan_all_bytes and the
+    dedup/vector kernels) into `spark` — by default the ACTIVE
     session, which is what the Column-only builders in llm/similarity.py
     use — and return True. Works on sessions we did not create (an
     outside harness) via ADD JAR. Raises RuntimeError when the build,
@@ -177,7 +174,8 @@ def ensure_kernel(spark: SparkSession | None = None) -> bool:
             spark.udf.registerJavaFunction(name, f"sbspark.{cls}", rtype)
         # probe end-to-end: a miss-then-hit scan through the whole stack
         probe = spark.sql(
-            "SELECT sb_scan_bytes(CAST('xabcx' AS BINARY), '10;616263') AS h"
+            "SELECT sb_scan_all_bytes(CAST('xabcx' AS BINARY), 0L, 5L,"
+            " '0\\n10;616263\\n\\n').hits AS h"
         ).collect()[0]["h"]
     except Exception as exc:
         raise RuntimeError(f"JVM kernel registration failed: {exc}") from exc

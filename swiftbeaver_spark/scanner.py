@@ -1,20 +1,22 @@
-"""Signature scan: chunks -> hits (the engine's core filter operator).
+"""Signature scan: packed kernel hits -> hit rows (the engine's core
+filter operator).
 
 Reference parity: CPU multi-pattern scan (src/scanner/cpu.rs:40-69,
 memchr-skip per pattern) + hit normalization & overlap dedup
 (src/pipeline/workers.rs:136-155).
 
-Spark design: one JVM Aho-Corasick pass per chunk (java/src/sbspark/
-Ac.java, sb_scan_bytes) finds ALL occurrences of every configured
-header pattern — overlapping matches and multiple patterns at one
-offset included, the same output as the reference's per-pattern memchr
-scan — and returns packed hit longs, so chunk bytes never cross into
-Python. Decoding, normalization + overlap dedup stay DataFrame-native
-(explode + projection + filter) so Catalyst sees them.
+Spark design: the hit leg of the fused kernels (fused_scan.py —
+java/src/sbspark/Ac.java inside sb_scan_all / sb_scan_all_bytes) runs
+ONE Aho-Corasick pass per scanned row and finds ALL occurrences of
+every configured header pattern — overlapping matches and multiple
+patterns at one offset included, the same output as the reference's
+per-pattern memchr scan — returning packed hit longs, so evidence bytes
+never cross into Python. Decoding, normalization + overlap dedup stay
+DataFrame-native (explode + projection + filter) so Catalyst sees them.
 
-Scale: scanning is embarrassingly parallel per chunk; no shuffle is
+Scale: scanning is embarrassingly parallel per row; no shuffle is
 introduced — the only data movement is the (tiny) hits output. The
-per-chunk hit cap mirrors the reference's gpu_max_hits_per_chunk
+per-row hit cap mirrors the reference's gpu_max_hits_per_chunk
 backstop against pathological inputs.
 """
 
@@ -64,8 +66,9 @@ def scan_gate_indexes(cfg: EngineConfig) -> dict[str, list[int]]:
     Python-crossed. A gate drops a hit only when the evidence bytes
     prove the carver would return None, so carved output is identical
     with gates on or off (pytest-pinned). Chunk-table scans
-    (scan_chunks) have no evidence reader for the lookahead and stay
-    unfiltered — the carver remains the authority there."""
+    (fused_scan.scan_all_from_chunks) have no evidence reader for the
+    lookahead and stay unfiltered — the carver remains the authority
+    there."""
     gates: dict[str, list[int]] = {"m3": mp3_gate_indexes(cfg)}
     ic = []
     idx = 0
@@ -88,51 +91,24 @@ def scan_gate_indexes(cfg: EngineConfig) -> dict[str, list[int]]:
     return {tag: idxs for tag, idxs in gates.items() if idxs}
 
 
-def _decode_packed_hits(plan_cols: DataFrame, hits_col, patterns) -> DataFrame:
-    """Packed (off<<16|idx) longs -> raw hit rows (chunk_id, start,
-    valid_length, local_offset, pattern_id, file_type_id), entirely in
-    Catalyst (explode + shift/mask + literal-array lookups)."""
+def decode_hits(raw: DataFrame, patterns) -> DataFrame:
+    """Packed (off<<16|idx) longs of a fused scan frame (start,
+    valid_length, r.hits) -> hit rows (global_offset, file_type_id,
+    pattern_id), entirely in Catalyst: explode + shift/mask +
+    literal-array lookups, then the overlap dedup as a plain Filter —
+    a hit whose local offset falls in the overlap tail is owned by the
+    next row and dropped — and globalization."""
     pids = F.array(*[F.lit(pid) for _, pid, _ in patterns])
     ftids = F.array(*[F.lit(ftid) for _, _, ftid in patterns])
-    packed = F.explode(hits_col).alias("packed")
-    exploded = plan_cols.select("chunk_id", "start", "valid_length", packed)
-    idx = F.col("packed").bitwiseAND(F.lit(0xFFFF)).cast("int")
-    return exploded.select(
-        F.col("chunk_id").cast("long").alias("chunk_id"),
+    exploded = raw.select(
         F.col("start").cast("long").alias("start"),
-        F.col("valid_length").cast("long").alias("valid_length"),
-        F.shiftright("packed", 16).cast("long").alias("local_offset"),
-        F.element_at(pids, idx + F.lit(1)).alias("pattern_id"),
-        F.element_at(ftids, idx + F.lit(1)).alias("file_type_id"),
+        "valid_length",
+        F.explode("r.hits").alias("packed"),
     )
-
-
-def scan_chunks(chunks: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """chunks(chunk_id, start, valid_length, data) -> raw hits: one
-    Aho-Corasick pass per chunk inside the executor JVM — no Python
-    workers, no Arrow transfer of chunk bytes."""
-    from swiftbeaver_spark.jvm import ensure_kernel, spec_for
-
-    ensure_kernel(chunks.sparkSession)
-    patterns = compile_patterns(cfg)
-    spec = spec_for(patterns, MAX_HITS_PER_CHUNK)
-    hits = F.call_udf("sb_scan_bytes", F.col("data"), F.lit(spec))
-    return _decode_packed_hits(chunks, hits, patterns)
-
-
-def normalize_hits(raw_hits: DataFrame) -> DataFrame:
-    """Overlap dedup + globalization: drop hits whose local offset falls in
-    the overlap tail (owned by the next chunk), project to global offsets.
-    Pure projection+filter — fully Catalyst-visible."""
-    return (
-        raw_hits.where(F.col("local_offset") < F.col("valid_length"))
-        .select(
-            (F.col("start") + F.col("local_offset")).alias("global_offset"),
-            F.col("file_type_id"),
-            F.col("pattern_id"),
-        )
+    local = F.shiftright("packed", 16)
+    idx = F.col("packed").bitwiseAND(F.lit(0xFFFF)).cast("int") + F.lit(1)
+    return exploded.where(local < F.col("valid_length")).select(
+        (F.col("start") + local).alias("global_offset"),
+        F.element_at(ftids, idx).alias("file_type_id"),
+        F.element_at(pids, idx).alias("pattern_id"),
     )
-
-
-def scan_and_normalize(chunks: DataFrame, cfg: EngineConfig) -> DataFrame:
-    return normalize_hits(scan_chunks(chunks, cfg))

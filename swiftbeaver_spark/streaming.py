@@ -16,6 +16,7 @@ mapInPandas fan-out plus multi-table writes — both batch-only APIs.
 
 from __future__ import annotations
 
+import dataclasses
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,8 +26,8 @@ from pyspark.sql.streaming import StreamingQuery
 from swiftbeaver_spark import schemas
 from swiftbeaver_spark.carve_op import carve_hits_with_chunks
 from swiftbeaver_spark.config import EngineConfig
+from swiftbeaver_spark.fused_scan import scan_all_from_chunks
 from swiftbeaver_spark.progress import ProgressSnapshot, ProgressTracker
-from swiftbeaver_spark.scanner import scan_and_normalize
 
 
 def stream_chunks(spark: SparkSession, chunk_dir: str, max_files_per_trigger: int = 4) -> DataFrame:
@@ -60,6 +61,10 @@ def start_scan_stream(
     reference's periodic MiB/s + ETA tick, src/pipeline/mod.rs:526-583);
     pass `total_bytes` (known evidence size) to get pct/ETA.
     """
+    # hits only: the kernel skips the span and entropy scans
+    hits_cfg = dataclasses.replace(
+        cfg, enable_string_scan=False, enable_entropy_detection=False
+    )
     chunks_stream = stream_chunks(spark, chunk_dir)
     tracker = ProgressTracker(total_bytes=total_bytes)
     # cumulative hit count lives driver-side: O(1) per tick like the
@@ -70,7 +75,7 @@ def start_scan_stream(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.persist()
-        hits = scan_and_normalize(batch_df, cfg)
+        hits = scan_all_from_chunks(batch_df, hits_cfg)["hits"]
         if on_batch is not None:
             hits = hits.persist()
         hits.write.mode("append").parquet(f"{out_dir}/hits")

@@ -4,10 +4,10 @@ Reference parity: src/strings/cpu.rs (ascii/utf8/utf16 span scans,
 hint flags), src/strings/mod.rs:100-322 (regexes, normalizers,
 decode_span, artefact building).
 
-Spark design: the span scan is the JVM Strs kernel — inside the
-one-pass scan (fused_scan.py) on evidence runs, sharing each sub-chunk
-read with the signature and entropy scans, and one sb_scan_strings_bytes
-pass per chunk over a chunk table. Artefact extraction is *gated by the
+Spark design: the span scan is the JVM Strs kernel, the span leg of
+the fused scan (fused_scan.py): it shares each evidence sub-chunk read,
+or each chunk-table row, with the signature and entropy scans.
+Artefact extraction is *gated by the
 cheap hint flags* exactly like the reference (predicate gating,
 SURVEY §4): the regex only runs on spans whose flag is set, expressed
 as a DataFrame `where` before the extraction UDF so Catalyst prunes
@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from swiftbeaver_spark import schemas
 from swiftbeaver_spark.config import EngineConfig
-from swiftbeaver_spark.parallel import spread
 
 URL_RE = re.compile(r"\b(?:https?://|www\.)[^\s\"'<>]+", re.IGNORECASE)
 EMAIL_RE = re.compile(r"\b[A-Z0-9._%+-]+@[A-Z0-9.-]+\.[A-Z]{2,}\b", re.IGNORECASE)
@@ -120,24 +119,6 @@ def _strings_spec(cfg: EngineConfig) -> str:
         f"{1 if cfg.string_scan_utf16 else 0};{cfg.chunk_size};{cfg.overlap};"
         f"{_printable_intervals()}"
     )
-
-
-def scan_string_spans(chunks: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """chunks -> string spans with hint flags, overlap-deduped: one JVM
-    span-kernel pass per chunk (chunk bytes never cross into Python),
-    spread across cores when the chunk source collapsed to fewer input
-    splits than the cluster has slots (a no-op at scale)."""
-    from swiftbeaver_spark.jvm import ensure_kernel
-
-    ensure_kernel(chunks.sparkSession)
-    rows = F.call_udf(
-        "sb_scan_strings_bytes",
-        F.col("data"),
-        F.col("start").cast("long"),
-        F.col("valid_length").cast("long"),
-        F.lit(_strings_spec(cfg)),
-    )
-    return spread(chunks).select(F.inline(rows))
 
 
 _ARTEFACT_COLUMNS = [f.name for f in schemas.STRING_ARTEFACTS.fields]

@@ -314,15 +314,36 @@ def scan_all_hits(spark, path: str, length: int, ac_spec: str) -> list[int]:
     return sorted(int(h) for h in row["h"])
 
 
+def bytes_scan(chunks, ac_spec: str, strs_spec: str = "", ent_spec: str = ""):
+    """ONE sb_scan_all_bytes call per chunk row (start, valid_length,
+    data): a frame (start, valid_length, r) like the chunk-table scan's
+    raw frame, `r` the struct (hits, spans, ents). An empty strings /
+    entropy spec skips that scan."""
+    from pyspark.sql import functions as F
+
+    spec = "\n".join(["0", ac_spec, strs_spec, ent_spec])
+    return chunks.select(
+        "start",
+        "valid_length",
+        F.call_udf(
+            "sb_scan_all_bytes",
+            F.col("data"),
+            F.col("start").cast("long"),
+            F.col("valid_length").cast("long"),
+            F.lit(spec),
+        ).alias("r"),
+    )
+
+
 def ungated_hits(spark, path: str, cfg):
-    """Hits of the chunk-table scan (scanner.scan_and_normalize). It has
-    no scan-time gates: the carver alone rejects loose-signature false
-    hits there."""
+    """Hits of the chunk-table scan (fused_scan.scan_all_from_chunks). It
+    has no scan-time gates: the carver alone rejects loose-signature
+    false hits there."""
     from swiftbeaver_spark.chunking import chunks_from_file
-    from swiftbeaver_spark.scanner import scan_and_normalize
+    from swiftbeaver_spark.fused_scan import scan_all_from_chunks
 
     chunks = chunks_from_file(spark, path, cfg.chunk_size, cfg.overlap)
-    return scan_and_normalize(chunks, cfg)
+    return scan_all_from_chunks(chunks, cfg)["hits"]
 
 
 def assert_gates_sound(spark, path: str, cfg) -> None:

@@ -1,5 +1,5 @@
-"""Entropy oracle: the numpy window folds the JVM Ent kernel
-(sb_entropy_bytes, and the entropy leg of sb_scan_all) is pinned
+"""Entropy oracle: the numpy window folds the JVM Ent kernel (the
+entropy leg of sb_scan_all and sb_scan_all_bytes) is pinned
 bit-exact against. Both read the program's contribution table
 (entropy._ent_table), so only the summation tree is under test.
 
@@ -88,7 +88,7 @@ def chunk_windows(
 ) -> list[tuple[int, int, float]]:
     """Sorted (win_start, win_end, entropy) rows over collected chunk
     rows (start, valid_length, data): full windows of each chunk's
-    owned bytes, as entropy.entropy_windows emits them."""
+    owned bytes, as the entropy leg of sb_scan_all_bytes emits them."""
     rows = []
     for start, vlen, data in chunks:
         blob = np.frombuffer(bytes(data)[: int(vlen)], dtype=np.uint8)

@@ -1,6 +1,6 @@
 """Signature-scan oracle: the naive per-pattern find the JVM
-Aho-Corasick kernel (sb_scan_bytes, and the hit leg of sb_scan_all) is
-differential-tested against.
+Aho-Corasick kernel (the hit leg of sb_scan_all and sb_scan_all_bytes)
+is differential-tested against.
 
 Reference parity: src/scanner/cpu.rs:40-69 (per-pattern memchr scan,
 all overlapping matches, several patterns may match at one offset).
@@ -27,8 +27,8 @@ def blob_hits(blob: bytes, patterns) -> set[tuple[int, str, str]]:
 
 
 def chunk_hits(chunks, patterns) -> set[tuple[int, int, str, str]]:
-    """(chunk_id, local_offset, pattern_id, file_type_id) over collected
-    chunk rows (chunk_id, data) — scanner.scan_chunks' raw hits."""
+    """(row key, local_offset, pattern_id, file_type_id) over collected
+    chunk rows (row key, data) — sb_scan_all_bytes' raw hits per row."""
     return {
         (int(cid), o, pid, ftid)
         for cid, data in chunks
@@ -39,7 +39,7 @@ def chunk_hits(chunks, patterns) -> set[tuple[int, int, str, str]]:
 def normalized_hits(chunks, patterns) -> set[tuple[int, str, str]]:
     """(global_offset, pattern_id, file_type_id) over collected chunk rows
     (start, valid_length, data), overlap-tail hits dropped —
-    scanner.scan_and_normalize's rows."""
+    the chunk-table scan's hit rows (fused_scan.scan_all_from_chunks)."""
     return {
         (int(start) + o, pid, ftid)
         for start, vlen, data in chunks

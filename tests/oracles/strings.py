@@ -1,6 +1,6 @@
 """String-span oracle: the Python ascii/utf-8/utf-16 span scanners and
-hint flags that the JVM Strs kernel (sb_scan_strings_bytes, and the span
-leg of sb_scan_all) is differential-tested against.
+hint flags that the JVM Strs kernel (the span leg of sb_scan_all and
+sb_scan_all_bytes) is differential-tested against.
 
 Reference parity: src/strings/cpu.rs:42-216 (span scans, hint flags).
 """

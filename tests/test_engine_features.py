@@ -59,18 +59,59 @@ def test_checkpoint_roundtrip(tmp_path):
 
 
 def test_resume_skips_scanned_chunks(spark, tmp_path):
+    """Engine.run(resume_from=) scans, carves and counts only the parent
+    chunks starting at or after the checkpoint offset; a mid-chunk
+    offset rounds up to the next chunk start."""
     evidence, offsets = _evidence_with_jpegs(4)
     path = str(tmp_path / "ev.raw")
     with open(path, "wb") as fh:
         fh.write(evidence)
     engine = Engine(spark, CFG)
-    # full run finds all 4
-    full = engine.hits(engine.chunks_from_file(path)).collect()
-    assert {h.global_offset for h in full} == set(offsets)
-    # resume from after the second jpeg's chunk -> only later hits
     resume_offset = CFG.chunk_size * 2
-    resumed = engine.hits(engine.chunks_from_file(path, resume_from=resume_offset)).collect()
-    assert {h.global_offset for h in resumed} == {o for o in offsets if o >= resume_offset}
+    runs = [
+        engine.run(evidence_path=path),
+        engine.run(evidence_path=path, resume_from=resume_offset),
+        engine.run(evidence_path=path, resume_from=CFG.chunk_size + 1),
+    ]
+    try:
+        full, resumed, mid = (
+            {h.global_offset for h in r["hits"].collect()} for r in runs
+        )
+        assert full == set(offsets)
+        assert resumed == mid == {o for o in offsets if o >= resume_offset}
+        carved = {c.global_start for c in runs[1]["carved_files"].collect()}
+        assert carved == resumed
+        [summary] = runs[1]["run_summary"].collect()
+        assert summary.bytes_scanned == len(evidence) - resume_offset
+    finally:
+        for r in runs:
+            r.unpersist()
+
+
+@pytest.mark.parametrize("mode", ["evidence_bytes", "chunk_join"])
+def test_chunk_table_run_unpersist_frees_caches(spark, tmp_path, mode):
+    """RunResult.unpersist() frees every cache a chunk-table run made:
+    the raw scan frame AND the chunk cache."""
+    evidence, _ = _evidence_with_jpegs(2)
+    path = str(tmp_path / "ev.raw")
+    with open(path, "wb") as fh:
+        fh.write(evidence)
+    kw = (
+        {"evidence_bytes": evidence}
+        if mode == "evidence_bytes"
+        else {"evidence_path": path, "chunk_join": True}
+    )
+    # earlier tests' localCheckpoint blocks are persistent RDDs too:
+    # count only the ones this run adds
+    rdds = spark.sparkContext._jsc.sc().getPersistentRDDs
+    before = rdds().size()
+    res = Engine(spark, CFG).run(**kw)
+    assert res["carved_files"].count() == 2
+    assert res.persisted[1] is res["chunks"] and res["chunks"].is_cached
+    assert rdds().size() >= before + 2  # at least the raw frame and the chunks
+    res.unpersist()
+    assert not any(df.is_cached for df in res.tables.values())
+    assert rdds().size() == before
 
 
 def test_write_tables_all_formats(spark, tmp_path):
@@ -470,11 +511,8 @@ def test_run_cache_intermediates_same_tables(spark, tmp_path):
             a = sorted(map(tuple, plain[name].collect()))
             b = sorted(map(tuple, cached[name].collect()))
             assert a == b, name
-        # every tracked frame is persisted with a disk component
-        # (stage caches are MEMORY_AND_DISK; the one-pass RAW frame's
-        # level is the swappable engine.ONE_PASS_RAW_STORAGE constant
-        # — default MEMORY_AND_DISK, A/B-measured a wash in r13 — so
-        # this assertion pins only the disk fallback all levels share)
+        # every tracked frame is persisted with a disk component (the
+        # stage caches and the raw scan frame are all MEMORY_AND_DISK)
         assert cached.persisted and all(
             df.storageLevel.useDisk for df in cached.persisted
         )

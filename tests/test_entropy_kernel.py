@@ -1,7 +1,8 @@
 """JVM entropy-window kernel parity (round 11, VERDICT r10 task 1).
 
-The JVM kernel (java/src/sbspark/Ent.java) is the entropy fold on both
-the chunk-table and fused-evidence paths. Parity with the numpy oracle
+The JVM kernel (java/src/sbspark/Ent.java) is the entropy leg of both
+fused scans: sb_scan_all_bytes over chunk-table rows and sb_scan_all
+over evidence. Parity with the numpy oracle
 (tests/oracles/entropy.py) must be BIT-EXACT: the per-count
 contribution table is exported from numpy in the spec string, and the
 JVM per-window sum replicates numpy's pairwise summation tree — these
@@ -18,11 +19,15 @@ import dataclasses
 import numpy as np
 import pytest
 
+from pyspark.sql import functions as F
+
 from swiftbeaver_spark.chunking import chunks_from_bytes
 from swiftbeaver_spark.config import DEFAULT_CONFIG
-from swiftbeaver_spark.entropy import entropy_regions, entropy_windows, merge_regions
-from swiftbeaver_spark.fused_scan import scan_all_from_evidence
+from swiftbeaver_spark.entropy import _entropy_spec, merge_regions
+from swiftbeaver_spark.fused_scan import scan_all_from_chunks, scan_all_from_evidence
+from swiftbeaver_spark.jvm import spec_for
 
+from tests.fixtures import bytes_scan
 from tests.oracles.entropy import chunk_windows, qualifying_rows
 
 
@@ -60,6 +65,22 @@ def mixed_blob(seed: int, size: int) -> bytes:
     return b"".join(parts)[:size]
 
 
+def _windows(chunks, cfg):
+    """Per-window rows of sb_scan_all_bytes' entropy leg (an unmerged
+    entropy spec; no patterns, no span scan)."""
+    ents = bytes_scan(chunks, spec_for([], 1), ent_spec=_entropy_spec(cfg, merged=False))
+    return ents.select(F.inline("r.ents"))
+
+
+def _islands(chunks, cfg):
+    """The chunk-table scan's entropy islands (merged spec)."""
+    return scan_all_from_chunks(chunks, cfg)["entropy_windows"]
+
+
+def _regions(chunks, cfg):
+    return scan_all_from_chunks(chunks, cfg)["entropy_regions"]
+
+
 def _rows(df) -> list[tuple]:
     return sorted((r.win_start, r.win_end, r.entropy) for r in df.collect())
 
@@ -85,7 +106,7 @@ def test_chunk_table_bit_exact(spark, window_size):
     cfg = _cfg(window_size, 0.0)  # threshold 0: EVERY window compared
     data = mixed_blob(window_size, 1 << 19)
     chunks = chunks_from_bytes(spark, data, 1 << 17, 4096)
-    jvm = _rows(entropy_windows(chunks, cfg))
+    jvm = _rows(_windows(chunks, cfg))
     py = _py(chunks, cfg)
     # threshold 0 emits EVERY full window: 4 chunks x floor(vlen/ws)
     assert len(jvm) == (1 << 17) // window_size * 4
@@ -97,7 +118,7 @@ def test_chunk_table_fuzz(spark, seed):
     cfg = _cfg(256, 0.0)
     data = mixed_blob(100 + seed, 1 << 18)
     chunks = chunks_from_bytes(spark, data, 1 << 16, 256)
-    assert _rows(entropy_windows(chunks, cfg)) == _py(chunks, cfg)
+    assert _rows(_windows(chunks, cfg)) == _py(chunks, cfg)
 
 
 def test_threshold_filter_identical(spark):
@@ -108,7 +129,7 @@ def test_threshold_filter_identical(spark):
     data = window * 8 + b"\x00" * 2048 + window * 8
     cfg = _cfg(256, 4.0)
     chunks = chunks_from_bytes(spark, data, 1 << 16, 0)
-    jvm = _rows(entropy_windows(chunks, cfg))
+    jvm = _rows(_windows(chunks, cfg))
     assert jvm and all(r[2] == 4.0 for r in jvm)
     assert jvm == _py(chunks, cfg)
 
@@ -118,7 +139,7 @@ def _evidence_islands(spark, path: str, data: bytes, cfg):
     scan (JVM) and the numpy oracle over the chunk table's bytes."""
     fused = _rows(scan_all_from_evidence(spark, path, cfg)["entropy_windows"])
     chunks = chunks_from_bytes(spark, data, cfg.chunk_size, cfg.overlap)
-    jvm = _rows(entropy_windows(chunks, cfg, merged=True))
+    jvm = _rows(_islands(chunks, cfg))
     return fused, jvm, _py(chunks, cfg, merged=True)
 
 
@@ -153,7 +174,7 @@ def test_trailing_partial_window_dropped(spark):
     cfg = _cfg(256, 0.0)
     data = mixed_blob(13, (1 << 16) + 100)  # 100 trailing bytes
     chunks = chunks_from_bytes(spark, data, 1 << 16, 0)
-    jvm = _rows(entropy_windows(chunks, cfg))
+    jvm = _rows(_windows(chunks, cfg))
     assert jvm[-1][1] < len(data) - 1
     assert jvm == _py(chunks, cfg)
 
@@ -167,16 +188,10 @@ def test_islands_bit_exact_and_equal_regions(spark, seed):
     cfg = _cfg(256, 2.0)  # low threshold: text + random qualify -> long islands
     data = mixed_blob(200 + seed, 1 << 18)
     chunks = chunks_from_bytes(spark, data, 1 << 16, 256)
-    jvm = _rows(entropy_windows(chunks, cfg, merged=True))
-    jvm_regions = sorted(
-        tuple(r)
-        for r in merge_regions(
-            entropy_windows(chunks, cfg, merged=True), 256
-        ).collect()
-    )
+    jvm = _rows(_islands(chunks, cfg))
+    jvm_regions = sorted(tuple(r) for r in _regions(chunks, cfg).collect())
     unmerged_regions = sorted(
-        tuple(r)
-        for r in merge_regions(entropy_windows(chunks, cfg), 256).collect()
+        tuple(r) for r in merge_regions(_windows(chunks, cfg), 256).collect()
     )
     assert jvm == _py(chunks, cfg, merged=True)
     assert jvm_regions == unmerged_regions
@@ -191,8 +206,6 @@ def test_island_spanning_merge_buckets_not_split(spark):
     island ending deep inside the next bucket would strand its
     continuation in an interior (never-escalated) row and split the
     true region; the kernel and the oracle must both emit ONE region."""
-    from swiftbeaver_spark.entropy import entropy_regions as regions
-
     cfg = _cfg(256, 7.5)
     rng = np.random.default_rng(31)
     # per-window permutations (entropy exactly 8.0) from 512 KiB to
@@ -202,7 +215,7 @@ def test_island_spanning_merge_buckets_not_split(spark):
     )  # 1 MiB of qualifying windows
     data = b"\x00" * (512 << 10) + perm + b"\x00" * (512 << 10)
     chunks = chunks_from_bytes(spark, data, 128 << 10, 0)  # mid-bucket edges
-    jvm = sorted(tuple(r) for r in regions(chunks, cfg).collect())
+    jvm = sorted(tuple(r) for r in _regions(chunks, cfg).collect())
     assert jvm == [(512 << 10, (512 << 10) + (1 << 20) - 1, 8.0, 256)]
     assert jvm == _py_regions(spark, chunks, cfg)
 
@@ -219,7 +232,7 @@ def test_regions_identical_through_merge(spark):
     rand = b"".join(bytes(rng.permutation(256).astype(np.uint8)) for _ in range(16))
     data = b"\x00" * 1024 + rand + b"\x00" * 2048 + rand + b"\x00" * 512
     chunks = chunks_from_bytes(spark, data, 2048, 256)
-    jvm = sorted(tuple(r) for r in entropy_regions(chunks, cfg).collect())
+    jvm = sorted(tuple(r) for r in _regions(chunks, cfg).collect())
     assert jvm  # the random spans qualify
     assert jvm == _py_regions(spark, chunks, cfg)
 

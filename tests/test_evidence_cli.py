@@ -64,6 +64,16 @@ def test_ewf_convert_missing_file_raises():
         convert_ewf_to_raw("/nonexistent.E01", "/tmp/out.raw")
 
 
+def _cli(args: list[str]) -> subprocess.CompletedProcess:
+    return subprocess.run(
+        [sys.executable, "-m", "swiftbeaver_spark", *args],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+
+
 @pytest.mark.slow
 def test_cli_end_to_end(tmp_path):
     blob = ALL_FIXTURES["jpeg"][0]
@@ -76,18 +86,13 @@ def test_cli_end_to_end(tmp_path):
     cp = str(tmp_path / "cp.json")
 
     def run_cli():
-        return subprocess.run(
+        return _cli(
             [
-                sys.executable, "-m", "swiftbeaver_spark",
                 "--input", ev, "--output", out,
                 "--types", "jpeg", "--chunk-size", "16384", "--overlap", "4096",
                 "--format", "parquet", "--master", "local[2]",
                 "--evidence-sha256", "--checkpoint", cp,
-            ],
-            capture_output=True,
-            text=True,
-            timeout=300,
-            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            ]
         )
 
     proc = run_cli()
@@ -104,3 +109,49 @@ def test_cli_end_to_end(tmp_path):
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert "checkpoint complete, nothing to resume" in proc.stderr
     assert pq.read_table(os.path.join(out, "carved_files")).num_rows == 1
+
+
+@pytest.mark.slow
+def test_cli_resume_from_partial_checkpoint(tmp_path):
+    """A checkpoint at 2 of 4 chunks: the resumed run writes the same
+    table set as a fresh run, carves only the files at or after the
+    offset and scans exactly the rest of the evidence."""
+    from swiftbeaver_spark.checkpoint import CheckpointState
+
+    blob = ALL_FIXTURES["jpeg"][0]
+    buf = bytearray(b"\x00" * 65536)
+    insert_bytes(buf, 4096, blob)  # chunk 0: already scanned
+    insert_bytes(buf, 40000, blob)  # chunk 2: after the offset
+    buf[20000:20040] = b"mail bob@example.org https://example.com"
+    buf[50000:50040] = b"mail eve@example.org https://example.net"
+    ev = str(tmp_path / "ev.raw")
+    with open(ev, "wb") as fh:
+        fh.write(bytes(buf))
+    offset = 2 * 16384
+    cp = str(tmp_path / "cp.json")
+    CheckpointState(
+        chunk_size=16384, overlap=4096, next_offset=offset,
+        evidence_len=len(buf), run_id="partial",
+    ).save(cp)
+    common = [
+        "--input", ev, "--types", "jpeg,sqlite", "--chunk-size", "16384",
+        "--overlap", "4096", "--master", "local[2]",
+        "--enable-string-scan", "--enable-entropy",
+    ]
+    fresh_out, resumed_out = str(tmp_path / "fresh"), str(tmp_path / "resumed")
+    fresh = _cli([*common, "--output", fresh_out])
+    resumed = _cli([*common, "--output", resumed_out, "--checkpoint", cp])
+    for proc in (fresh, resumed):
+        assert proc.returncode == 0, proc.stderr[-2000:]
+    assert f"resuming from offset {offset}" in resumed.stderr
+    tables = sorted(os.listdir(fresh_out))
+    assert "string_artefacts" in tables and "browser_history" in tables
+    assert sorted(os.listdir(resumed_out)) == tables
+    carved = pq.read_table(os.path.join(resumed_out, "carved_files")).column("global_start")
+    assert carved.to_pylist() == [40000]
+    arts = pq.read_table(os.path.join(resumed_out, "string_artefacts")).column("content")
+    assert sorted(arts.to_pylist()) == ["eve@example.org", "https://example.net"]
+    report = json.loads(resumed.stdout.strip().splitlines()[-1])
+    assert report["bytes_scanned"] == len(buf) - offset
+    assert report["chunks_processed"] == 2
+    assert json.load(open(cp))["next_offset"] == len(buf)

@@ -1,12 +1,12 @@
 """One-pass multi-scan differentials (fused_scan.py).
 
-scan_all_from_evidence must produce BYTE-IDENTICAL results to the
-three chunk-table scans over cfg.chunk_size chunks — signature hits
-(scanner.scan_and_normalize), string spans (strings_scan.
-scan_string_spans) and entropy regions (entropy.entropy_regions) — on
-raw and EWF/E01 evidence, across content engineered to cross every
-sub-chunk boundary class (runs, patterns and high-entropy regions
-straddling granule edges).
+scan_all_from_evidence must produce BYTE-IDENTICAL tables to the
+chunk-table scan over cfg.chunk_size chunks (scan_all_from_chunks) —
+signature hits, string spans and entropy regions — on raw and EWF/E01
+evidence, across content engineered to cross every sub-chunk boundary
+class (runs, patterns and high-entropy regions straddling granule
+edges). The chunk-table scan itself is pinned leg by leg against the
+tests/oracles/ folds on rows whose geometry is not cfg.chunk_size.
 """
 
 from __future__ import annotations
@@ -18,11 +18,8 @@ import pytest
 
 from swiftbeaver_spark.chunking import chunks_from_file
 from swiftbeaver_spark.config import DEFAULT_CONFIG
-from swiftbeaver_spark.entropy import entropy_regions
-from swiftbeaver_spark.fused_scan import scan_all_from_evidence
+from swiftbeaver_spark.fused_scan import scan_all_from_chunks, scan_all_from_evidence
 from swiftbeaver_spark.jvm import ensure_kernel
-from swiftbeaver_spark.scanner import scan_and_normalize
-from swiftbeaver_spark.strings_scan import scan_string_spans
 
 from tests.fixtures import mk_jpeg, mk_png, mk_sqlite
 
@@ -85,20 +82,19 @@ def _rows(df) -> list[tuple]:
 
 
 def _cmp(spark, path, cfg=CFG):
-    """Fused scan vs the chunk-table scans over the same evidence."""
+    """Evidence scan vs the chunk-table scan over the same evidence."""
     t = scan_all_from_evidence(spark, path, cfg, granule=GRANULE)
-    chunks = chunks_from_file(spark, path, cfg.chunk_size, cfg.overlap).cache()
+    chunks = chunks_from_file(spark, path, cfg.chunk_size, cfg.overlap)
+    c = scan_all_from_chunks(chunks, cfg)
     t["raw"].persist()
+    c["raw"].persist()
     try:
-        fused_hits = _rows(t["hits"])
-        assert fused_hits == _rows(scan_and_normalize(chunks, cfg)) and fused_hits
-        fused_spans = _rows(t["string_spans"])
-        assert fused_spans == _rows(scan_string_spans(chunks, cfg)) and fused_spans
-        fr = _rows(t["entropy_regions"])
-        assert fr == _rows(entropy_regions(chunks, cfg)) and fr
+        for name in ("hits", "string_spans", "entropy_regions"):
+            fused = _rows(t[name])
+            assert fused == _rows(c[name]) and fused, name
     finally:
         t["raw"].unpersist()
-        chunks.unpersist()
+        c["raw"].unpersist()
 
 
 @pytest.mark.parametrize("seed", [1, 2])
@@ -158,3 +154,62 @@ def test_partition_count_scales_with_corpus_bytes(spark, tmp_path):
     assert scans["raw"].rdd.getNumPartitions() == want
     assert want == 40  # 5 GiB / 128 MiB > the local[32] floor
     os.unlink(path)
+
+
+def test_bytes_entry_short_rows_match_oracles(spark):
+    """The q35 shape: short chunk-table rows (2 KiB + an overlap tail)
+    under the default 512 MiB chunk_size. Each row is its own parent
+    chunk, so the ONE sb_scan_all_bytes call per row must match all
+    three oracle folds over the row's own bytes: the naive find (raw
+    hits, tail included), blob_spans (spans owned by the row) and the
+    entropy window fold (islands of the owned windows)."""
+    from swiftbeaver_spark.scanner import compile_patterns
+
+    from tests.oracles.entropy import chunk_windows
+    from tests.oracles.scan import chunk_hits
+    from tests.oracles.strings import blob_spans
+
+    row, tail = 2048, 64
+    cfg = dataclasses.replace(
+        DEFAULT_CONFIG,
+        enable_string_scan=True,
+        string_scan_utf16=True,
+        enable_entropy_detection=True,
+        entropy_window_size=256,
+        entropy_threshold=3.0,
+    )
+    assert cfg.chunk_size > 1000 * row
+    rng = np.random.default_rng(21)
+    text = b"see https://example.com/a mail bob@example.org call 415 555 1234 "
+    rows = []
+    for i in range(6):
+        blob = bytearray(row + tail)
+        blob[16 : 16 + len(text)] = text
+        wide = "UTF16 wide text".encode("utf-16-le")
+        blob[300 : 300 + len(wide)] = wide
+        perm = b"".join(bytes(rng.permutation(256).astype(np.uint8)) for _ in range(i % 3 + 1))
+        blob[768 : 768 + len(perm)] = perm  # entropy 8.0 windows
+        sig = mk_jpeg()[:4] if i % 2 else mk_png()[:8]
+        blob[row - 2 : row - 2 + len(sig)] = sig  # straddles the row end
+        blob[row + 8 : row + 8 + len(text)] = text[: tail - 8]  # tail-only run
+        rows.append((i * row, row, bytes(blob)))
+    df = spark.createDataFrame(rows, "start long, valid_length long, data binary")
+    raw = scan_all_from_chunks(df, cfg)["raw"].collect()
+
+    patterns = compile_patterns(cfg)
+    hits = {
+        (r.start, int(h) >> 16, *patterns[int(h) & 0xFFFF][1:]) for r in raw for h in r.r.hits
+    }
+    assert hits == chunk_hits([(s, d) for s, _, d in rows], patterns) != set()
+    spans = sorted(tuple(s) for r in raw for s in r.r.spans)
+    want_spans = sorted(
+        span
+        for s, v, d in rows
+        for span in blob_spans(
+            d, s, v, cfg.string_min_len, cfg.string_max_len, cfg.string_scan_utf16
+        )
+    )
+    assert spans == want_spans and {s[3] for s in spans} >= {"ascii", "utf-16le"}
+    ents = sorted(tuple(e) for r in raw for e in r.r.ents)
+    want_ents = chunk_windows(rows, 256, cfg.entropy_threshold, merged=True)
+    assert ents == want_ents != []

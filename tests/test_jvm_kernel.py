@@ -1,4 +1,4 @@
-"""JVM kernel equivalence: sb_scan_bytes / sb_scan_all must produce
+"""JVM kernel equivalence: sb_scan_all_bytes / sb_scan_all must produce
 exactly the naive per-pattern find's hits (overlapping matches,
 shared-prefix patterns, window-straddling matches, chunk geometry), and
 the minhash / simhash / Jaccard / vector kernels must be bit-exact with
@@ -16,15 +16,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from swiftbeaver_spark.config import DEFAULT_CONFIG
+from swiftbeaver_spark.fused_scan import scan_all_from_chunks
 from swiftbeaver_spark.jvm import ensure_kernel, spec_for
-from swiftbeaver_spark.scanner import (
-    MAX_HITS_PER_CHUNK,
-    compile_patterns,
-    scan_and_normalize,
-    scan_chunks,
-)
+from swiftbeaver_spark.scanner import MAX_HITS_PER_CHUNK, compile_patterns
 
-from tests.fixtures import ALL_FIXTURES, scan_all_hits
+from tests.fixtures import ALL_FIXTURES, bytes_scan, scan_all_hits
 from tests.oracles import dedup as dedup_oracle
 from tests.oracles import vec as vec_oracle
 from tests.oracles.scan import blob_hits, chunk_hits, find_all, normalized_hits
@@ -45,15 +41,16 @@ def planted_blob(seed: int, size: int = 200_000) -> bytes:
     return bytes(blob)
 
 
-def jvm_scan_bytes(spark, blob: bytes) -> set[tuple[int, str, str]]:
-    spec = spec_for(PATTERNS, MAX_HITS_PER_CHUNK)
-    df = spark.createDataFrame([(bytearray(blob),)], "data binary")
-    [row] = df.select(
-        F.call_udf("sb_scan_bytes", F.col("data"), F.lit(spec)).alias("h")
-    ).collect()
+def jvm_scan_bytes(spark, blob: bytes, patterns=PATTERNS) -> set[tuple[int, str, str]]:
+    """The hit leg of ONE sb_scan_all_bytes call over the whole blob."""
+    spec = spec_for(patterns, MAX_HITS_PER_CHUNK)
+    df = spark.createDataFrame(
+        [(0, len(blob), bytearray(blob))], "start long, valid_length long, data binary"
+    )
+    [row] = bytes_scan(df, spec).collect()
     return {
-        (int(h) >> 16, PATTERNS[int(h) & 0xFFFF][1], PATTERNS[int(h) & 0xFFFF][2])
-        for h in row["h"]
+        (int(h) >> 16, patterns[int(h) & 0xFFFF][1], patterns[int(h) & 0xFFFF][2])
+        for h in row.r.hits
     }
 
 
@@ -150,23 +147,31 @@ def test_scan_evidence_jvm_equals_python(spark, tmp_path):
     chunks = chunks_from_file(spark, path, cfg.chunk_size, cfg.overlap)
     rows = chunks.select("start", "valid_length", "data").collect()
     want = normalized_hits(rows, compile_patterns(cfg))
-    assert _hit_set(scan_and_normalize(chunks, cfg)) == want
+    assert _hit_set(scan_all_from_chunks(chunks, cfg)["hits"]) == want
     assert got_jvm and got_jvm <= want
     gated = {ft.type_id for ft in cfg.file_types if ft.validator in ("mp3", "bmp", "ico")}
     assert {ftid for _, _, ftid in want - got_jvm} <= gated
 
 
 def test_scan_chunks_jvm_equals_python(spark):
+    """Chunk-table scan: the bytes entry's raw per-row hits (overlap
+    tails included) equal the naive find per row, and the hits table
+    keeps exactly the owned ones."""
     from swiftbeaver_spark.chunking import chunks_from_bytes
 
     blob = planted_blob(7, size=150_000)
     chunks = chunks_from_bytes(spark, blob, 32 * 1024, 2048)
+    spec = spec_for(PATTERNS, MAX_HITS_PER_CHUNK)
     got_jvm = {
-        (r.chunk_id, r.local_offset, r.pattern_id, r.file_type_id)
-        for r in scan_chunks(chunks, DEFAULT_CONFIG).collect()
+        (r.start, int(h) >> 16, *PATTERNS[int(h) & 0xFFFF][1:])
+        for r in bytes_scan(chunks, spec).collect()
+        for h in r.r.hits
     }
-    want = chunk_hits(chunks.select("chunk_id", "data").collect(), PATTERNS)
+    want = chunk_hits(chunks.select("start", "data").collect(), PATTERNS)
     assert got_jvm == want != set()
+    rows = chunks.select("start", "valid_length", "data").collect()
+    hits = scan_all_from_chunks(chunks, DEFAULT_CONFIG)["hits"]
+    assert _hit_set(hits) == normalized_hits(rows, PATTERNS) != set()
 
 
 def test_evidence_udf_reads_e01_natively(spark, tmp_path):
@@ -304,16 +309,7 @@ def test_fuzz_random_patterns_vs_naive(spark):
         for pat, pid, ftid in pats:
             for o in find_all(data, pat):
                 expected.add((o, pid, ftid))
-        spec = spec_for(pats, MAX_HITS_PER_CHUNK)
-        df = spark.createDataFrame([(bytearray(data),)], "data binary")
-        [row] = df.select(
-            F.call_udf("sb_scan_bytes", F.col("data"), F.lit(spec)).alias("h")
-        ).collect()
-        got = {
-            (int(h) >> 16, pats[int(h) & 0xFFFF][1], pats[int(h) & 0xFFFF][2])
-            for h in row["h"]
-        }
-        assert got == expected, f"seed {seed}"
+        assert jvm_scan_bytes(spark, data, pats) == expected, f"seed {seed}"
 
 
 def test_scan_plan_stays_jvm_side(spark, tmp_path):

@@ -14,7 +14,7 @@ from swiftbeaver_spark.carvers.base import BytesReader
 from swiftbeaver_spark.config import DEFAULT_CONFIG
 from swiftbeaver_spark.scanner import MAX_HITS_PER_CHUNK, compile_patterns
 
-from tests.fixtures import ALL_FIXTURES
+from tests.fixtures import ALL_FIXTURES, bytes_scan
 from tests.oracles.scan import find_all
 
 TEST_CFG = dataclasses.replace(
@@ -81,21 +81,21 @@ def test_zip_declared_geometry_mismatch_rejected():
 
 def test_scan_budget_cap(spark):
     """Pathological hit density respects the per-chunk cap (reference
-    gpu_max_hits_per_chunk) in the JVM kernel: sb_scan_bytes stops at
-    exactly `cap` hits, the first `cap` of the uncapped scan."""
-    from pyspark.sql import functions as F
-
+    gpu_max_hits_per_chunk) in the JVM kernel: the hit leg of
+    sb_scan_all_bytes stops at exactly `cap` hits, the first `cap` of the
+    uncapped scan."""
     from swiftbeaver_spark.jvm import ensure_kernel, spec_for
 
     ensure_kernel(spark)
     blob = bytes.fromhex("FFD8FF") * 50  # dense overlapping jpeg sigs
     pats = compile_patterns(TEST_CFG)
-    df = spark.createDataFrame([(bytearray(blob),)], "data binary")
+    df = spark.createDataFrame(
+        [(0, len(blob), bytearray(blob))], "start long, valid_length long, data binary"
+    )
 
     def scan(cap: int) -> list[int]:
-        spec = F.lit(spec_for(pats, cap))
-        [row] = df.select(F.call_udf("sb_scan_bytes", F.col("data"), spec).alias("h")).collect()
-        return list(row["h"])
+        [row] = bytes_scan(df, spec_for(pats, cap)).collect()
+        return list(row.r.hits)
 
     uncapped = scan(MAX_HITS_PER_CHUNK)
     capped = scan(10)

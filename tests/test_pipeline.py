@@ -13,9 +13,9 @@ import pytest
 from swiftbeaver_spark.chunking import chunks_from_bytes, chunks_from_file, plan_chunks
 from swiftbeaver_spark.config import DEFAULT_CONFIG
 from swiftbeaver_spark.engine import Engine
-from swiftbeaver_spark.scanner import scan_and_normalize
+from swiftbeaver_spark.fused_scan import scan_all_from_chunks
 
-from tests.fixtures import ALL_FIXTURES, insert_bytes
+from tests.fixtures import ALL_FIXTURES, insert_bytes, ungated_hits
 
 TEST_CFG = dataclasses.replace(
     DEFAULT_CONFIG,
@@ -70,8 +70,7 @@ def test_golden_single_type(spark, name, tmp_path):
     path = str(tmp_path / "golden.raw")
     with open(path, "wb") as fh:
         fh.write(evidence)
-    chunks = engine.chunks_from_file(path)
-    hits = engine.hits(chunks)
+    hits = ungated_hits(spark, path, cfg)
     carved = engine.carve(hits, evidence_path=path).collect()
     matches = [
         r
@@ -168,7 +167,7 @@ def test_overlap_dedup_exactly_one_hit(spark):
     insert_bytes(buf, start, blob)
     cfg = dataclasses.replace(TEST_CFG, chunk_size=chunk_size, overlap=4096)
     chunks = chunks_from_bytes(spark, bytes(buf), chunk_size, 4096)
-    hits = scan_and_normalize(chunks, cfg).where("file_type_id = 'jpeg'").collect()
+    hits = scan_all_from_chunks(chunks, cfg)["hits"].where("file_type_id = 'jpeg'").collect()
     assert len(hits) == 1
     assert hits[0].global_offset == start
 
@@ -184,8 +183,8 @@ def test_chunk_join_carve_matches_evidence_carve(spark, tmp_path):
         TEST_CFG, file_types=tuple(ft for ft in TEST_CFG.file_types if ft.type_id in ("jpeg", "png", "sqlite"))
     )
     engine = Engine(spark, cfg)
-    chunks = engine.chunks_from_file(path).cache()
-    hits = engine.hits(chunks)
+    chunks = chunks_from_file(spark, path, cfg.chunk_size, cfg.overlap).cache()
+    hits = scan_all_from_chunks(chunks, cfg)["hits"]
     via_evidence = {
         (r.global_start, r.size, r.sha256)
         for r in engine.carve(hits, evidence_path=path).collect()

@@ -39,34 +39,57 @@ def test_parquet_pushdown_and_pruning(spark):
     assert m and set(re.findall(r"(\w+):", m.group(1))) <= {"l_orderkey", "l_quantity"}
 
 
+def _chunk_hits(spark):
+    from swiftbeaver_spark.chunking import chunks_from_bytes
+    from swiftbeaver_spark.config import DEFAULT_CONFIG
+    from swiftbeaver_spark.fused_scan import scan_all_from_chunks
+
+    chunks = chunks_from_bytes(spark, b"\x00" * 4096, 1024, 64)
+    return scan_all_from_chunks(chunks, DEFAULT_CONFIG)["hits"]
+
+
 def test_scan_pipeline_shuffle_free(spark):
     """chunks -> scan -> normalize introduces no exchange beyond the
     initial chunk distribution."""
-    from swiftbeaver_spark.chunking import chunks_from_bytes
-    from swiftbeaver_spark.config import DEFAULT_CONFIG
-    from swiftbeaver_spark.scanner import scan_and_normalize
-
-    chunks = chunks_from_bytes(spark, b"\x00" * 4096, 1024, 64)
-    hits = scan_and_normalize(chunks, DEFAULT_CONFIG)
-    plan = _formatted(hits)
-    assert "Exchange" not in plan
+    assert "Exchange" not in _formatted(_chunk_hits(spark))
 
 
 def test_overlap_dedup_is_catalyst_filter(spark):
     """The overlap-dedup must appear as a plain Filter (not buried in a
-    kernel stage) so Catalyst can reason about it. On the JVM-kernel
-    path the offset is inlined as shiftright(packed, 16); on the Python
-    path it stays the named local_offset column."""
-    from swiftbeaver_spark.chunking import chunks_from_bytes
-    from swiftbeaver_spark.config import DEFAULT_CONFIG
-    from swiftbeaver_spark.scanner import scan_and_normalize
+    kernel stage) so Catalyst can reason about it; the local offset is
+    inlined as shiftright(packed, 16)."""
+    plan = _formatted(_chunk_hits(spark))
+    assert re.search(r"Filter.*shiftright\(packed.*valid_length", plan, re.DOTALL)
 
-    chunks = chunks_from_bytes(spark, b"\x00" * 4096, 1024, 64)
-    hits = scan_and_normalize(chunks, DEFAULT_CONFIG)
-    plan = _formatted(hits)
-    assert re.search(
-        r"Filter.*(local_offset|shiftright\(packed).*valid_length", plan, re.DOTALL
+
+def test_chunk_table_run_scans_once(spark):
+    """One table graph: a chunk-table Engine.run persists its scan's raw
+    frame, and hits, string_spans and entropy_regions all read it
+    through InMemoryTableScan — the kernel runs once per chunk row."""
+    import dataclasses
+
+    from swiftbeaver_spark.config import DEFAULT_CONFIG
+    from swiftbeaver_spark.engine import Engine
+
+    cfg = dataclasses.replace(
+        DEFAULT_CONFIG,
+        chunk_size=4096,
+        overlap=256,
+        enable_string_scan=True,
+        enable_entropy_detection=True,
+        entropy_window_size=256,
     )
+    res = Engine(spark, cfg).run(evidence_bytes=b"text https://a.example " * 800)
+    try:
+        raw_plan = res.persisted[0]._jdf.queryExecution().analyzed()
+        assert "sb_scan_all_bytes" in raw_plan.toString()
+        for name in ("hits", "string_spans", "entropy_regions"):
+            # the cached relation the table scans is the raw frame
+            plan = _formatted(res[name])
+            raw_rel = r"InMemoryRelation\nArguments: \[start#\w+, valid_length#\w+, r#"
+            assert "InMemoryTableScan" in plan and re.search(raw_rel, plan), name
+    finally:
+        res.unpersist()
 
 
 def test_entropy_merge_windows_are_bucketed(spark):
@@ -79,7 +102,7 @@ def test_entropy_merge_windows_are_bucketed(spark):
 
     from swiftbeaver_spark.chunking import chunks_from_bytes
     from swiftbeaver_spark.config import DEFAULT_CONFIG
-    from swiftbeaver_spark.entropy import entropy_regions
+    from swiftbeaver_spark.fused_scan import scan_all_from_chunks
 
     cfg = dataclasses.replace(
         DEFAULT_CONFIG,
@@ -87,7 +110,8 @@ def test_entropy_merge_windows_are_bucketed(spark):
         entropy_window_size=256,
         entropy_threshold=7.5,
     )
-    df = entropy_regions(chunks_from_bytes(spark, bytes(range(256)) * 8, 1 << 20, 0), cfg)
+    chunks = chunks_from_bytes(spark, bytes(range(256)) * 8, 1 << 20, 0)
+    df = scan_all_from_chunks(chunks, cfg)["entropy_regions"]
     plan = _formatted(df)
     specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
     bucketed = [s for s in specs if "bucket" in s]

@@ -41,15 +41,7 @@ def oracle(request, spark):
     against: the JVM bytes kernel, and the Python oracle."""
     if request.param == "python":
         return reference_rows
-
-    def jvm_rows(data: bytes, cfg) -> list[tuple]:
-        from swiftbeaver_spark.chunking import chunks_from_bytes
-        from swiftbeaver_spark.strings_scan import scan_string_spans
-
-        chunks = chunks_from_bytes(spark, data, cfg.chunk_size, cfg.overlap)
-        return sorted(tuple(r) for r in scan_string_spans(chunks, cfg).collect())
-
-    return jvm_rows
+    return lambda data, cfg: chunk_table_rows(spark, data, cfg)
 
 
 def reference_rows(data: bytes, cfg) -> list[tuple]:
@@ -66,6 +58,17 @@ def reference_rows(data: bytes, cfg) -> list[tuple]:
             )
         )
     return sorted(rows)
+
+
+def chunk_table_rows(spark, data: bytes, cfg) -> list[tuple]:
+    """The chunk-table scan's span rows (fused_scan.scan_all_from_chunks
+    over cfg.chunk_size chunk rows)."""
+    from swiftbeaver_spark.chunking import chunks_from_bytes
+    from swiftbeaver_spark.fused_scan import scan_all_from_chunks
+
+    chunks = chunks_from_bytes(spark, data, cfg.chunk_size, cfg.overlap)
+    df = scan_all_from_chunks(chunks, cfg)["string_spans"]
+    return sorted(tuple(r) for r in df.collect())
 
 
 def fused_rows(spark, tmp_path, data: bytes, cfg, granule=GRANULE) -> list[tuple]:
@@ -194,13 +197,8 @@ def test_degenerate_granule_equals_chunk(spark, tmp_path, oracle):
 
 @pytest.mark.parametrize("seed", [11, 12])
 def test_bytes_kernel_differential_fuzz(spark, tmp_path, seed):
-    """Chunk-table path: JVM sb_scan_strings_bytes vs the Python
+    """Chunk-table path: the span leg of sb_scan_all_bytes vs the Python
     blob_spans oracle, bit-identical rows on random mixed content."""
-    from swiftbeaver_spark.chunking import chunks_from_bytes
-    from swiftbeaver_spark.jvm import ensure_kernel
-    from swiftbeaver_spark.strings_scan import scan_string_spans
-
-    ensure_kernel(spark)
     rng = random.Random(seed)
     data = bytearray()
     words = ["mixed", "Ascii", "ünïcødé", "桜とコード", "tab\there"]
@@ -218,9 +216,7 @@ def test_bytes_kernel_differential_fuzz(spark, tmp_path, seed):
             data += b"\xe0\x80\x80\xf4\x90\x80\x80"  # overlong + >10FFFF
     data = bytes(data[: 3 * 4096])
     cfg = dataclasses.replace(CFG, string_min_len=3, string_max_len=9)
-    chunks = chunks_from_bytes(spark, data, cfg.chunk_size, cfg.overlap)
-    jvm_rows = sorted(tuple(r) for r in scan_string_spans(chunks, cfg).collect())
-    assert jvm_rows == reference_rows(data, cfg)
+    assert chunk_table_rows(spark, data, cfg) == reference_rows(data, cfg)
 
 
 def test_utf8_unit_straddles_window_end(spark, tmp_path, oracle):

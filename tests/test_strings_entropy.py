@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from swiftbeaver_spark.chunking import chunks_from_bytes
 from swiftbeaver_spark.config import DEFAULT_CONFIG
-from swiftbeaver_spark.entropy import entropy_regions
+from swiftbeaver_spark.fused_scan import scan_all_from_chunks
 from swiftbeaver_spark.strings_scan import (
     enrich_emails,
     enrich_urls,
@@ -17,7 +17,6 @@ from swiftbeaver_spark.strings_scan import (
     normalize_email,
     normalize_url,
     scan_string_artefacts,
-    scan_string_spans,
 )
 
 STR_CFG = dataclasses.replace(
@@ -25,9 +24,17 @@ STR_CFG = dataclasses.replace(
 )
 
 
+def _spans(chunks, cfg):
+    return scan_all_from_chunks(chunks, cfg)["string_spans"]
+
+
+def _regions(chunks, cfg):
+    return scan_all_from_chunks(chunks, cfg)["entropy_regions"]
+
+
 def _artefacts(spark, data: bytes, cfg=STR_CFG):
     chunks = chunks_from_bytes(spark, data, chunk_size=1 << 20, overlap=0)
-    spans = scan_string_spans(chunks, cfg)
+    spans = _spans(chunks, cfg)
     return scan_string_artefacts(spans, cfg).collect()
 
 
@@ -70,7 +77,7 @@ def test_utf16le_url(spark):
 def test_utf8_span_detected(spark):
     cfg = dataclasses.replace(STR_CFG, string_min_len=4)
     chunks = chunks_from_bytes(spark, b"\x00\x00caf\xc3\xa9\x00\x00", 1 << 20, 0)
-    spans = scan_string_spans(chunks, cfg).collect()
+    spans = _spans(chunks, cfg).collect()
     utf8 = [s for s in spans if s.encoding == "utf-8"]
     assert len(utf8) == 1
     assert utf8[0].content == "café"
@@ -80,14 +87,14 @@ def test_utf8_span_detected(spark):
 def test_min_len_split(spark):
     cfg = dataclasses.replace(STR_CFG, string_min_len=4, string_max_len=1024)
     chunks = chunks_from_bytes(spark, b"abc\x00defg\nxyz", 1 << 20, 0)
-    spans = scan_string_spans(chunks, cfg).collect()
+    spans = _spans(chunks, cfg).collect()
     assert [(s.global_start, s.byte_length) for s in spans] == [(4, 4)]
 
 
 def test_max_len_split(spark):
     cfg = dataclasses.replace(STR_CFG, string_min_len=4, string_max_len=4)
     chunks = chunks_from_bytes(spark, b"\x00abcdefgh\x00", 1 << 20, 0)
-    spans = scan_string_spans(chunks, cfg).collect()
+    spans = _spans(chunks, cfg).collect()
     assert [(s.global_start, s.byte_length) for s in spans] == [(1, 4), (5, 4)]
 
 
@@ -113,7 +120,7 @@ def test_artefact_positions(spark):
 def test_enriched_projections(spark):
     data = b"x https://example.com:8080/path?q=1#frag y bob@mail.example.org z"
     chunks = chunks_from_bytes(spark, data, 1 << 20, 0)
-    spans = scan_string_spans(chunks, STR_CFG)
+    spans = _spans(chunks, STR_CFG)
     arts = scan_string_artefacts(spans, STR_CFG)
     url = enrich_urls(arts).collect()[0]
     assert (url.scheme, url.host, url.port, url.path) == ("https", "example.com", 8080, "/path")
@@ -132,7 +139,7 @@ ENT_CFG = dataclasses.replace(
 
 def test_entropy_full_range(spark):
     data = bytes(range(256))
-    regions = entropy_regions(chunks_from_bytes(spark, data, 1 << 20, 0), ENT_CFG).collect()
+    regions = _regions(chunks_from_bytes(spark, data, 1 << 20, 0), ENT_CFG).collect()
     assert len(regions) == 1
     r = regions[0]
     assert (r.global_start, r.global_end, r.entropy, r.window_size) == (0, 255, 8.0, 256)
@@ -140,7 +147,7 @@ def test_entropy_full_range(spark):
 
 def test_entropy_zeros_no_regions(spark):
     cfg = dataclasses.replace(ENT_CFG, entropy_threshold=7.0)
-    regions = entropy_regions(chunks_from_bytes(spark, b"\x00" * 1024, 1 << 20, 0), cfg).collect()
+    regions = _regions(chunks_from_bytes(spark, b"\x00" * 1024, 1 << 20, 0), cfg).collect()
     assert regions == []
 
 
@@ -148,7 +155,7 @@ def test_entropy_gap_two_regions(spark):
     win = bytes(range(256))
     data = win + b"\x00" * 256 + win
     regions = (
-        entropy_regions(chunks_from_bytes(spark, data, 1 << 20, 0), ENT_CFG)
+        _regions(chunks_from_bytes(spark, data, 1 << 20, 0), ENT_CFG)
         .orderBy("global_start")
         .collect()
     )
@@ -158,14 +165,14 @@ def test_entropy_gap_two_regions(spark):
 def test_entropy_adjacent_merge(spark):
     win = bytes(range(256))
     data = win + win[::-1]
-    regions = entropy_regions(chunks_from_bytes(spark, data, 1 << 20, 0), ENT_CFG).collect()
+    regions = _regions(chunks_from_bytes(spark, data, 1 << 20, 0), ENT_CFG).collect()
     assert [(r.global_start, r.global_end) for r in regions] == [(0, 511)]
 
 
 def test_entropy_merges_across_chunks(spark):
     win = bytes(range(256))
     data = win * 8  # 2048 bytes, chunked at 1024
-    regions = entropy_regions(chunks_from_bytes(spark, data, 1024, 64), ENT_CFG).collect()
+    regions = _regions(chunks_from_bytes(spark, data, 1024, 64), ENT_CFG).collect()
     assert [(r.global_start, r.global_end) for r in regions] == [(0, 2047)]
 
 
@@ -176,7 +183,7 @@ def test_entropy_merges_across_level_buckets(spark):
     win = bytes(range(256))
     span = 256 * 4096
     data = win * (2 * 4096)  # 2 MiB of qualifying windows
-    regions = entropy_regions(chunks_from_bytes(spark, data, 4 << 20, 0), ENT_CFG).collect()
+    regions = _regions(chunks_from_bytes(spark, data, 4 << 20, 0), ENT_CFG).collect()
     assert [(r.global_start, r.global_end) for r in regions] == [(0, 2 * span - 1)]
 
 
@@ -187,7 +194,7 @@ def test_entropy_gap_at_level_bucket_edge(spark):
     span = 256 * 4096
     data = win * 4096 + b"\x00" * 256 + win * 10
     regions = (
-        entropy_regions(chunks_from_bytes(spark, data, 4 << 20, 0), ENT_CFG)
+        _regions(chunks_from_bytes(spark, data, 4 << 20, 0), ENT_CFG)
         .orderBy("global_start")
         .collect()
     )
