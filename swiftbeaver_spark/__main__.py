@@ -15,7 +15,6 @@ from __future__ import annotations
 import argparse
 import dataclasses
 import json
-import os
 import sys
 import time
 
@@ -52,7 +51,6 @@ def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
 
     from swiftbeaver_spark.checkpoint import CheckpointState
-    from swiftbeaver_spark.config import DEFAULT_CONFIG
     from swiftbeaver_spark.engine import Engine, make_run_id, write_tables
     from swiftbeaver_spark.evidence import evidence_sha256_local
     from swiftbeaver_spark.session import get_spark
@@ -143,10 +141,13 @@ def main(argv: list[str] | None = None) -> int:
     print(json.dumps(report))
 
     if args.checkpoint:
+        from swiftbeaver_spark.chunking import scanned_end
+
         CheckpointState(
             chunk_size=cfg.chunk_size,
             overlap=cfg.overlap,
-            next_offset=evidence_len,
+            # a --max-bytes / --max-chunks run stops at its last chunk
+            next_offset=scanned_end(evidence_len, cfg, resume_from),
             evidence_len=evidence_len,
             run_id=run_id,
         ).save(args.checkpoint)

@@ -12,18 +12,16 @@ Two evidence-access strategies (SURVEY §7.3):
    (local runs, NFS, fuse-mounted object store). No shuffle at all:
    hits stream through mapInPandas.
 
-2. `carve_hits_with_chunks` — pure-DataFrame over the materialized
-   chunk table (the 100 TB path: no evidence re-read), as one bucketed
-   cogroup of hits with contiguous chunk spans (see its docstring).
-   Row order in the table does not matter: contiguous, many-file and
-   hash-scattered layouts carve identically.
+2. `carve_hits_with_chunks` — pure-DataFrame over a chunk table, as
+   one bucketed cogroup of hits with contiguous chunk spans (see its
+   docstring). Row order in the table does not matter: contiguous,
+   many-file and hash-scattered layouts carve identically.
 
-Strategy selection (engine.py): positioned reads whenever the evidence
-is reachable as a path from executors; the chunk strategy when only
-the materialized chunk table is available (object-store columnar
-copy), EXCEPT for types whose effective window exceeds
-`_WINDOW_CAP_LIMIT` — those must carve via positioned reads (a bucket
-group buffers up to a full window per hit in executor memory).
+Engine.run carves by positioned reads. The chunk carve serves the
+callers that hold only a chunk table (the streaming front, the
+chunk-table catalog queries); types whose effective window exceeds
+`_WINDOW_CAP_LIMIT` must carve via positioned reads (a bucket group
+buffers up to a full window per hit in executor memory).
 """
 
 from __future__ import annotations
@@ -45,7 +43,7 @@ _CARVE_COLUMNS = [f.name for f in schemas.CARVED_FILES.fields]
 # largest per-type effective window the chunk strategy accepts: a
 # bucket group holds up to `window + chunk` contiguous bytes per hit
 # in one Python allocation, so windows past this bound belong on
-# strategy 1 (positioned reads) — see "Strategy selection" above
+# strategy 1 (positioned reads) — see the module docstring
 _WINDOW_CAP_LIMIT = 3 * (1 << 29)  # 1.5 GiB
 # per-task LRU of sweep-family bucket indexes, keyed (family, bucket)
 # — every _SWEEP_FAMILIES collector shares it (zip EOCD geometry,
@@ -102,7 +100,7 @@ def _collect_zip_eocds_kw(reader, lo: int, hi: int) -> dict:
 # to any next-own-magic handler (tar, footer-to-next-header shapes).
 #
 # bzip2 is NOT here either (added r12 on the zip analogy, REMOVED r13
-# after the density A/B, tools/bench_bzip2_density.py): on a planted
+# after the density A/B recorded in SCALE.md): on a planted
 # dense-"BZh" text corpus the bucketed branch measured 7.3x slower
 # with end markers every MiB and 8.1x slower with none. The sweep
 # reads the index saves are NOT the dominant term for an early-exit
@@ -332,13 +330,11 @@ class WindowReader(Reader):
 
 
 def _validate_windows(
-    cfg: EngineConfig, window_cap: int | None, window_caps: dict[str, int] | None
+    cfg: EngineConfig, window_cap: int | None
 ) -> tuple[dict[str, int], int, int]:
-    """Effective per-type windows, their max, and the default cap."""
-    registry_types = {ft.type_id: ft.max_size for ft in cfg.file_types}
+    """Effective per-type windows, their max, and the cap."""
     cap = window_cap if window_cap is not None else 128 * 1024 * 1024
-    caps = window_caps or {}
-    eff = {tid: min(ms, caps.get(tid, cap)) for tid, ms in registry_types.items()}
+    eff = {ft.type_id: min(ft.max_size, cap) for ft in cfg.file_types}
     worst = max(eff.values(), default=0)
     if worst > _WINDOW_CAP_LIMIT:
         raise ValueError(
@@ -357,7 +353,6 @@ def carve_hits_with_chunks(
     cfg: EngineConfig,
     window_cap: int | None = None,
     evidence_len: int | None = None,
-    window_caps: dict[str, int] | None = None,
 ) -> DataFrame:
     """Carve from the chunk table alone (strategy 2, no evidence re-read).
 
@@ -379,13 +374,26 @@ def carve_hits_with_chunks(
     hit uses its own window extent as EOF (same truncation outcome,
     but over-cap cuts can't be told apart from evidence end).
 
-    `window_caps`: per-type overrides of `window_cap` — big-media types
-    (mov/webm/wmv, max_size 10 GiB) can be given a larger window than
-    the default. A hit whose per-type window still cuts the carve short
-    gets an explicit `over_cap` error instead of a silent eof-style
-    truncation (pinned by tests/test_carve_op.py).
+    `window_cap` (default 128 MiB) bounds each type's window at
+    min(max_size, window_cap). A hit whose window cuts the carve short
+    while the evidence continues gets an explicit `over_cap` error
+    instead of a silent eof-style truncation (pinned by
+    tests/test_carve_op.py); a window past _WINDOW_CAP_LIMIT (1.5 GiB)
+    is rejected at plan time.
+
+    Heap law: the working set is the chunk CACHE plus, per concurrent
+    task, one bucket group — its bucket's `span` chunks plus the `reach`
+    chunks after them, held once as the cogroup's pandas frame and once
+    as the assembled run buffer — roughly
+    cache + 2 x tasks x (span + reach) x chunk_size, with
+    reach = ceil((512 + window) / chunk_size) + 1 chunks and
+    span = max(16 MiB / chunk_size, reach). At a 512 MiB chunk and the
+    default 128 MiB window a group is 4 chunks (2 GiB), so each
+    concurrent task needs several GiB of heap. Use positioned reads
+    (carve_hits_with_evidence) for multi-GiB windows such as mov/webm
+    at their 10 GiB max_size.
     """
-    eff, worst, cap = _validate_windows(cfg, window_cap, window_caps)
+    eff, worst, cap = _validate_windows(cfg, window_cap)
     chunk_size = cfg.chunk_size
     overlap = cfg.overlap
     # chunks a hit can claim beyond its first: header backup (512 B,

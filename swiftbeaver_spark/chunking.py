@@ -20,7 +20,6 @@ partition pruning on `start`.
 from __future__ import annotations
 
 import math
-import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -35,28 +34,28 @@ from swiftbeaver_spark.config import DEFAULT_CHUNK_SIZE, DEFAULT_OVERLAP, Engine
 _MIN_TASK_BYTES = 4 * 1024 * 1024
 
 
-def _plan_range(
+def plan_chunks(
     spark: SparkSession,
-    first_chunk: int,
-    end_chunk: int,
     evidence_len: int,
-    chunk_size: int,
-    overlap: int,
+    chunk_size: int = DEFAULT_CHUNK_SIZE,
+    overlap: int = DEFAULT_OVERLAP,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Chunk geometry for ids [first_chunk, end_chunk) — pure `range`
-    arithmetic. `spark.range` splits the id space into CONTIGUOUS
-    slices per partition, so downstream parquet files written from this
-    plan hold contiguous evidence runs (a hash repartition here would
-    scatter evidence order across files; the chunk-table carve in
-    carve_op.py buckets by chunk_id and does not depend on it)."""
-    rng = (
-        spark.range(first_chunk, end_chunk, 1, num_partitions)
-        if num_partitions
-        else spark.range(first_chunk, end_chunk)
-    )
+    """Chunk geometry as a DataFrame — pure `range` arithmetic.
+
+    Columns: chunk_id, start, valid_length, read_length (no bytes yet).
+    `spark.range` splits the id space into CONTIGUOUS slices per
+    partition, so downstream parquet files written from this plan hold
+    contiguous evidence runs (a hash repartition here would scatter
+    evidence order across files; the chunk-table carve in carve_op.py
+    buckets by chunk_id and does not depend on it).
+    """
+    if chunk_size <= 0:
+        raise ValueError("chunk_size must be positive")
+    n = max(0, math.ceil(evidence_len / chunk_size))
     return (
-        rng.select(
+        spark.range(0, n, 1, num_partitions)
+        .select(
             F.col("id").alias("chunk_id"),
             (F.col("id") * chunk_size).alias("start"),
         )
@@ -69,23 +68,6 @@ def _plan_range(
             F.least(F.lit(chunk_size + overlap), F.lit(evidence_len) - F.col("start")),
         )
     )
-
-
-def plan_chunks(
-    spark: SparkSession,
-    evidence_len: int,
-    chunk_size: int = DEFAULT_CHUNK_SIZE,
-    overlap: int = DEFAULT_OVERLAP,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Chunk geometry as a DataFrame — pure `range` arithmetic.
-
-    Columns: chunk_id, start, valid_length, read_length (no bytes yet).
-    """
-    if chunk_size <= 0:
-        raise ValueError("chunk_size must be positive")
-    n = max(0, math.ceil(evidence_len / chunk_size))
-    return _plan_range(spark, 0, n, evidence_len, chunk_size, overlap, num_partitions)
 
 
 def keep_parents(
@@ -106,31 +88,37 @@ def keep_parents(
     return plan
 
 
+def scanned_end(
+    evidence_len: int, cfg: EngineConfig, resume_from: int | None = None
+) -> int:
+    """End of the last parent chunk keep_parents keeps, clamped to
+    `evidence_len` and never below `resume_from`: the checkpoint
+    watermark of a run under cfg.max_bytes / cfg.max_chunks, so a
+    limit-cut run does not claim evidence it never scanned."""
+    parents = math.ceil(evidence_len / cfg.chunk_size)
+    if cfg.max_bytes is not None:
+        parents = min(parents, math.ceil(cfg.max_bytes / cfg.chunk_size))
+    if cfg.max_chunks is not None:
+        parents = min(parents, cfg.max_chunks)
+    end = min(parents * cfg.chunk_size, evidence_len)
+    return max(end, resume_from or 0)
+
+
 def chunks_from_file(
     spark: SparkSession,
     path: str,
     chunk_size: int = DEFAULT_CHUNK_SIZE,
     overlap: int = DEFAULT_OVERLAP,
-    max_bytes: int | None = None,
-    max_chunks: int | None = None,
 ) -> DataFrame:
     """Evidence file -> chunks DataFrame with bytes fetched executor-side.
 
     The plan DataFrame is tiny (one row per chunk); bytes never touch the
-    driver. Limits mirror the reference's bounded-read semantics
-    (src/pipeline/mod.rs:328-416): max_bytes caps which chunk starts are
-    read, max_chunks caps chunk count.
+    driver. Scan limits are chunking.keep_parents over this table.
     """
     from swiftbeaver_spark.source import evidence_length, open_evidence
 
     total = evidence_length(path)
-    # bounds become the range endpoints directly (not post-filters), so
-    # partitions stay contiguous AND evenly sized over surviving ids
     hi = math.ceil(total / chunk_size)
-    if max_bytes is not None:
-        hi = min(hi, math.ceil(max_bytes / chunk_size))
-    if max_chunks is not None:
-        hi = min(hi, max_chunks)
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         reader = open_evidence(path)
@@ -161,7 +149,7 @@ def chunks_from_file(
     if hi <= 0:
         return spark.createDataFrame([], schemas.CHUNKS)
     n = min(hi, math.ceil(hi * chunk_size / _MIN_TASK_BYTES))
-    plan = _plan_range(spark, 0, hi, total, chunk_size, overlap, n)
+    plan = plan_chunks(spark, total, chunk_size, overlap, n)
     return plan.mapInPandas(fetch, schemas.CHUNKS)
 
 

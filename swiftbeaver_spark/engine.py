@@ -12,10 +12,6 @@ channels. Spark trace of the same plan (SURVEY §3.2):
                                                #   (persisted) + joins
     sinks: parquet/jsonl/csv per table
 
-With chunk_join (or bytes input) the same fused kernel scans each row
-of a cached chunk table once instead, and the carve reads the chunk
-table; same rows, same table graph.
-
 Thread boundaries become stage boundaries; bounded-channel
 backpressure becomes Spark scheduling; the single-writer metadata
 thread becomes parallel columnar writes.
@@ -31,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from swiftbeaver_spark import chunking
-from swiftbeaver_spark.carve_op import carve_hits_with_chunks, carve_hits_with_evidence
+from swiftbeaver_spark.carve_op import carve_hits_with_evidence
 from swiftbeaver_spark.config import DEFAULT_CONFIG, EngineConfig
 from swiftbeaver_spark.strings_scan import scan_string_artefacts
 
@@ -98,99 +94,37 @@ class Engine:
     """Public API analog of `run_pipeline` (reference src/pipeline/mod.rs:98-129).
 
     `run` builds one table graph: a fused scan (fused_scan.py — one
-    positioned read per evidence sub-chunk, or one kernel call per
-    chunk-table row) whose persisted raw frame feeds hits, spans and
-    entropy, then the carve.
-
-    Carve strategy selection (`carve`): pass `evidence_path` to use
-    positioned reads — each task re-opens the evidence (right whenever
-    executors can reach it as a path: local, NFS, fuse-mounted object
-    store), with no window cap at all. Pass `chunks` to carve from the
-    materialized chunk table alone (the 100 TB path: the one-pass
-    columnar copy replaces all later evidence reads) — one bucketed
-    cogroup of hits with contiguous chunk spans (carve_op.py). Heap
-    sizing for the chunk-table strategy (run(chunk_join=True) /
-    carve(chunks=...)): the working set is the chunk CACHE plus, per
-    concurrent task, one bucket group — its bucket's `span` chunks plus
-    the `reach` chunks after them, held once as the cogroup's pandas
-    frame and once as the assembled run buffer — roughly
-    cache_bytes + 2 x concurrent_tasks x (span + reach) x chunk_size,
-    with reach = ceil((512 + window) / chunk_size) + 1 chunks and
-    span = max(16 MiB / chunk_size, reach). At the production 512 MiB
-    chunk and the default 128 MiB window a group is 4 chunks (2 GiB),
-    so each concurrent task needs several GiB of heap. This is the CLUSTER
-    strategy — the budget is per-executor on a many-node cluster
-    (100 TB / 1000 nodes = 100 GB/node, disk-backed) — single-JVM
-    local runs should use the default one-pass path, which
-    never materializes chunk bytes. The chunk path bounds each
-    in-flight hit's window at carve_op._WINDOW_CAP_LIMIT (1.5 GiB):
-    per-type windows above that are rejected at plan time, and a carve
-    the window cut short (while evidence continues) carries an explicit
-    `over_cap` error — file types that genuinely need multi-GiB windows
-    (mov/webm at 10 GiB max_size) must carve via `evidence_path`."""
+    positioned read per evidence sub-chunk) whose persisted raw frame
+    feeds hits, spans and entropy, then a positioned-read carve.
+    Chunk-table scans and carves (streaming, the chunk-table catalog
+    queries) call fused_scan.scan_all_from_chunks and
+    carve_op.carve_hits_with_chunks directly."""
 
     def __init__(self, spark: SparkSession, cfg: EngineConfig = DEFAULT_CONFIG):
         self.spark = spark
         self.cfg = cfg
 
-    # -- stages ---------------------------------------------------------------
-
-    def carve(
-        self,
-        hits: DataFrame,
-        evidence_path: str | None = None,
-        chunks: DataFrame | None = None,
-        evidence_len: int | None = None,
-    ) -> DataFrame:
-        """Carve by positioned reads when `evidence_path` is given,
-        otherwise from the chunk table `chunks` (one bucketed cogroup;
-        `evidence_len` lets over-cap cuts be told apart from evidence
-        end). See the class docstring for when to use which."""
-        if evidence_path is not None:
-            carved = carve_hits_with_evidence(hits, evidence_path, self.cfg)
-        elif chunks is not None:
-            carved = carve_hits_with_chunks(
-                hits,
-                chunks,
-                self.cfg,
-                evidence_len=evidence_len,
-            )
-        else:
-            raise ValueError("need evidence_path or chunks")
-        if self.cfg.max_files is not None:
-            # global cap is sequential semantics in the reference
-            # (src/pipeline/mod.rs:328-416); distributed approximation
-            carved = carved.orderBy("global_start").limit(self.cfg.max_files)
-        return carved
-
-    # -- full run --------------------------------------------------------------
-
     def run(
         self,
-        evidence_path: str | None = None,
-        evidence_bytes: bytes | None = None,
-        chunk_join: bool = False,
+        evidence_path: str,
         cache_intermediates: bool = False,
         resume_from: int | None = None,
     ) -> RunResult:
-        """Scan path: with `evidence_path`, the one-pass multi-scan
-        (fused_scan.scan_all_from_evidence): ONE positioned read per
-        sub-chunk feeds signature + strings + entropy, and carving does
-        targeted positioned reads. With `chunk_join=True` or
-        `evidence_bytes`, the fused kernel scans each row of the cached
-        chunk table once (fused_scan.scan_all_from_chunks) and the carve
-        reads the chunk table itself. Either way the scan's raw metadata
-        frame is persisted (that persist is what makes the scan run
-        once) and every stage table derives from it in ONE table graph.
-        Both paths yield the same rows (differential-pinned in
-        tests/test_engine_one_pass.py and tests/test_fused_scan.py),
-        except that only the one-pass scan drops loose-signature hits
-        at scan time (scanner.scan_gate_indexes) — hits the carver
-        rejects anyway, so carved_files is the same.
+        """The one-pass multi-scan (fused_scan.scan_all_from_evidence):
+        ONE positioned read per sub-chunk feeds signature + strings +
+        entropy, and carving does targeted positioned reads. The scan's
+        raw metadata frame is persisted (that persist is what makes the
+        scan run once) and every stage table derives from it in ONE
+        table graph. Its rows equal the chunk-table scan and carve over
+        cfg.chunk_size chunks (differential-pinned in
+        tests/test_engine_one_pass.py against tests/oracles/chunk_run.py),
+        except that the one-pass scan drops loose-signature hits at scan
+        time (scanner.scan_gate_indexes) — hits the carver rejects
+        anyway, so carved_files is the same.
 
-        `resume_from` (a checkpoint's next_offset; evidence path only)
-        skips every parent chunk that starts before it: the scan, the
-        `chunks` table and so the run summary cover the rest.
+        `resume_from` (a checkpoint's next_offset) skips every parent
+        chunk that starts before it: the scan, the `chunks` table and so
+        the run summary cover the rest.
 
         `cache_intermediates=True` persists each stage output
         (MEMORY_AND_DISK — recomputable on executor loss, unlike
@@ -201,83 +135,43 @@ class Engine:
         that drive several tables (write_tables, the stress bench);
         OFF by default so single-table uses stay cache-free.
 
-        Always persisted: the raw metadata frame (RunResult.persisted[0]),
-        the chunk table on the chunk-table path, and, when the run
-        builds browser tables (`evidence_path` set, sqlite among the
-        types), the carve frame and the browser parse frame, so the
-        carve and each DB's parse run once however many tables are
-        driven. All are CALLER-owned: call RunResult.unpersist() when
-        done, or repeated runs in one session accumulate executor
-        storage."""
-        from swiftbeaver_spark.fused_scan import scan_all_from_chunks, scan_all_from_evidence
+        Always persisted: the raw metadata frame (RunResult.persisted[0])
+        and, when sqlite is among the types, the carve frame and the
+        browser parse frame, so the carve and each DB's parse run once
+        however many tables are driven. All are CALLER-owned: call
+        RunResult.unpersist() when done, or repeated runs in one session
+        accumulate executor storage."""
+        from swiftbeaver_spark.fused_scan import scan_all_from_evidence
         from swiftbeaver_spark.source import evidence_length
 
         cfg = self.cfg
-        if evidence_path is not None and not chunk_join:
-            total = evidence_length(evidence_path)
-            plan = chunking.plan_chunks(self.spark, total, cfg.chunk_size, cfg.overlap)
-            chunks = chunking.keep_parents(plan, cfg, resume_from)
-            scans = scan_all_from_evidence(
-                self.spark, evidence_path, cfg, resume_from=resume_from
-            )
-            carve_from: dict = {"evidence_path": evidence_path}
-            cached: list[DataFrame] = []
-        else:
-            if resume_from is not None:
-                raise ValueError("resume_from needs the one-pass evidence path")
-            if evidence_path is not None:
-                total = evidence_length(evidence_path)
-                chunks = chunking.chunks_from_file(
-                    self.spark,
-                    evidence_path,
-                    cfg.chunk_size,
-                    cfg.overlap,
-                    max_bytes=cfg.max_bytes,
-                    max_chunks=cfg.max_chunks,
-                )
-            elif evidence_bytes is not None:
-                total = len(evidence_bytes)
-                chunks = chunking.chunks_from_bytes(
-                    self.spark, evidence_bytes, cfg.chunk_size, cfg.overlap
-                )
-            else:
-                raise ValueError("need evidence_path or evidence_bytes")
-            # one cache feeds the scan and the carve
-            chunks = chunks.cache()
-            cached = [chunks]
-            scans = scan_all_from_chunks(chunks, cfg)
-            # evidence_len from the plan's arithmetic — no aggregation
-            # job. Scan limits truncate the chunk table, so the byte
-            # horizon for over_cap-vs-EOF attribution is the last
-            # INCLUDED chunk's end, not the full media length (else a
-            # limit-cut carve would claim withheld-by-cap bytes that were
-            # never scanned).
-            horizon = total
-            if cfg.max_bytes is not None and cfg.max_bytes < total:
-                last = (max(cfg.max_bytes, 1) - 1) // cfg.chunk_size
-                horizon = min(horizon, (last + 1) * cfg.chunk_size)
-            if cfg.max_chunks is not None:
-                horizon = min(horizon, cfg.max_chunks * cfg.chunk_size)
-            carve_from = {"chunks": chunks, "evidence_len": horizon}
+        total = evidence_length(evidence_path)
+        plan = chunking.plan_chunks(self.spark, total, cfg.chunk_size, cfg.overlap)
+        chunks = chunking.keep_parents(plan, cfg, resume_from)
+        scans = scan_all_from_evidence(
+            self.spark, evidence_path, cfg, resume_from=resume_from
+        )
         # the persist is what makes the scan run ONCE: every derived
-        # table reads through this metadata cache (one row per sub-chunk
-        # or chunk row: packed hits + span rows + entropy islands). It is
-        # the one SIZE-PROPORTIONAL intermediate (span content ~ the text
-        # share of the corpus); MEMORY_AND_DISK degrades it to disk
+        # table reads through this metadata cache (one row per sub-chunk:
+        # packed hits + span rows + entropy islands). It is the one
+        # SIZE-PROPORTIONAL intermediate (span content ~ the text share
+        # of the corpus); MEMORY_AND_DISK degrades it to disk
         # partition by partition when it outgrows the storage pool (an
         # r13 A/B measured it within noise of DISK_ONLY at 4 GiB).
-        persisted = [scans["raw"].persist(StorageLevel.MEMORY_AND_DISK), *cached]
-        hits = scans["hits"]
-        tables = {"chunks": chunks, "hits": hits, "carved_files": self.carve(hits, **carve_from)}
+        persisted = [scans["raw"].persist(StorageLevel.MEMORY_AND_DISK)]
+        carved = carve_hits_with_evidence(scans["hits"], evidence_path, cfg)
+        if cfg.max_files is not None:
+            # global cap is sequential semantics in the reference
+            # (src/pipeline/mod.rs:328-416); distributed approximation
+            carved = carved.orderBy("global_start").limit(cfg.max_files)
+        tables = {"chunks": chunks, "hits": scans["hits"], "carved_files": carved}
         if cfg.enable_string_scan:
             tables["string_spans"] = scans["string_spans"]
             tables["string_artefacts"] = scan_string_artefacts(scans["string_spans"], cfg)
         if cfg.enable_entropy_detection:
             tables["entropy_regions"] = scans["entropy_regions"]
 
-        parse_browser = evidence_path is not None and any(
-            ft.type_id == "sqlite" for ft in cfg.file_types
-        )
+        parse_browser = any(ft.type_id == "sqlite" for ft in cfg.file_types)
         to_persist: list[str] = []
         if cache_intermediates:
             # string_spans is NOT re-persisted: it is a cheap PROJECTION

@@ -5,13 +5,12 @@ one table projection:
 
 - `scan_all_from_evidence` (sb_scan_all, ScanAllEvidenceUdf.java): one
   positioned read per evidence sub-chunk — the scan of every
-  `Engine.run(evidence_path=...)` without `chunk_join`. No evidence
-  byte is read twice (one pass per scan would be 3x corpus egress
-  against object storage, and 3x re-decompression on E01), and no chunk
-  BYTES are materialized.
+  `Engine.run(evidence_path=...)`. No evidence byte is read twice (one
+  pass per scan would be 3x corpus egress against object storage, and
+  3x re-decompression on E01), and no chunk BYTES are materialized.
 - `scan_all_from_chunks` (sb_scan_all_bytes, ScanAllBytesUdf.java): one
-  call per chunk-table row — `chunk_join` / bytes runs, the streaming
-  front and the chunk-table catalog queries.
+  call per chunk-table row — the streaming front and the chunk-table
+  catalog queries.
 
 Both return the three stages' METADATA rows (packed hits, span rows,
 entropy islands) as the struct column `r` of a `raw` frame; callers

@@ -1,5 +1,5 @@
 """Chunk-join carve operator mechanics: plan laziness (no driver-side
-action while building the plan), per-type window caps, and the explicit
+action while building the plan), window caps, and the explicit
 `over_cap` error when the reassembly window — not evidence EOF — is what
 cut a carve short (reference parity: the native engine positioned-reads
 the full file, src/pipeline/workers.rs:208-297, so it has no cap at all;
@@ -22,7 +22,7 @@ CFG = dataclasses.replace(DEFAULT_CONFIG, chunk_size=4096, overlap=512)
 
 def big_bmp() -> bytes:
     """Valid BMP declaring 12,342 bytes (64x64x24bpp) — larger than the
-    4 KiB test window cap, smaller than the per-type override."""
+    4 KiB test window cap, smaller than a 32 KiB one."""
     width = height = 64
     row = ((width * 24 + 31) // 32) * 4
     file_size = 54 + row * height
@@ -79,15 +79,14 @@ def test_over_cap_is_explicit(spark):
 
 
 def test_per_type_cap_override_carves_fully(spark):
-    """window_caps lifts the cap for one type without inflating every
-    hit's claimed chunk range."""
+    """A window_cap past the file's size carves it whole: full size,
+    not truncated, no over_cap."""
     chunks = chunks_from_bytes(spark, _evidence(), CFG.chunk_size, CFG.overlap)
     rec = carve_hits_with_chunks(
         chunks=chunks,
         hits=_hits(spark, 0),
         cfg=CFG,
-        window_cap=4096,
-        window_caps={"bmp": 32768},
+        window_cap=32768,
         evidence_len=32768,
     ).collect()
     assert len(rec) == 1
@@ -112,8 +111,8 @@ def test_no_evidence_len_falls_back_to_window_extent(spark):
 
 
 def test_chunk_join_rejects_multi_gib_window(spark):
-    """Per-type caps whose effective window passes the Arrow single-row
-    bound must be rejected loudly — one hit's reassembled window is a
+    """A cap whose effective window passes the Arrow single-row bound
+    must be rejected loudly — one hit's reassembled window is a
     single row, and a >=2 GiB row breaks Arrow record batches (round-7
     review finding); such types belong on positioned reads."""
     chunks = chunks_from_bytes(spark, _evidence(), CFG.chunk_size, CFG.overlap)
@@ -122,7 +121,7 @@ def test_chunk_join_rejects_multi_gib_window(spark):
             _hits(spark, 0),
             chunks,
             CFG,
-            window_caps={"mov": 4 << 30},
+            window_cap=4 << 30,
             evidence_len=32768,
         )
 
@@ -131,7 +130,7 @@ def test_over_cap_type_carves_fully_on_positioned_path(spark, tmp_path):
     """VERDICT r8 task 5: a type whose needed window exceeds the chunk
     path's cap surfaces `over_cap` there (never silent truncation), and
     the SAME hit carves fully via positioned reads — the documented
-    strategy-selection rule (Engine docstring)."""
+    rule in carve_hits_with_chunks's docstring."""
     from swiftbeaver_spark.carve_op import carve_hits_with_evidence
 
     evidence = _evidence()

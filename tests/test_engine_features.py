@@ -16,6 +16,7 @@ from swiftbeaver_spark.engine import Engine, make_run_id, write_tables
 from swiftbeaver_spark.streaming import start_scan_stream
 
 from tests.fixtures import ALL_FIXTURES, insert_bytes
+from tests.oracles.chunk_run import chunk_run
 
 CFG = dataclasses.replace(
     DEFAULT_CONFIG,
@@ -88,24 +89,51 @@ def test_resume_skips_scanned_chunks(spark, tmp_path):
             r.unpersist()
 
 
-@pytest.mark.parametrize("mode", ["evidence_bytes", "chunk_join"])
-def test_chunk_table_run_unpersist_frees_caches(spark, tmp_path, mode):
-    """RunResult.unpersist() frees every cache a chunk-table run made:
-    the raw scan frame AND the chunk cache."""
+def test_run_unpersist_frees_caches(spark, tmp_path):
+    """RunResult.unpersist() frees every cache a run made: with
+    cache_intermediates and sqlite among the types, the raw scan frame,
+    the stage frames, the carve and the browser parse frame."""
     evidence, _ = _evidence_with_jpegs(2)
     path = str(tmp_path / "ev.raw")
     with open(path, "wb") as fh:
         fh.write(evidence)
-    kw = (
-        {"evidence_bytes": evidence}
-        if mode == "evidence_bytes"
-        else {"evidence_path": path, "chunk_join": True}
+    cfg = dataclasses.replace(
+        CFG, enable_string_scan=True, enable_entropy_detection=True
     )
     # earlier tests' localCheckpoint blocks are persistent RDDs too:
     # count only the ones this run adds
     rdds = spark.sparkContext._jsc.sc().getPersistentRDDs
     before = rdds().size()
-    res = Engine(spark, CFG).run(**kw)
+    res = Engine(spark, cfg).run(evidence_path=path, cache_intermediates=True)
+    for df in res.tables.values():  # materialize every cache
+        df.count()
+    assert res["carved_files"].count() == 2
+    stages = ("hits", "carved_files", "string_artefacts", "entropy_regions")
+    assert all(res[name].is_cached for name in stages)
+    # raw frame + four stage frames + the browser parse frame
+    assert len(res.persisted) == 6 and all(df.is_cached for df in res.persisted)
+    assert rdds().size() >= before + 6
+    res.unpersist()
+    assert not any(df.is_cached for df in res.tables.values())
+    assert rdds().size() == before
+
+
+@pytest.mark.parametrize("mode", ["evidence_bytes", "chunk_join"])
+def test_chunk_table_run_unpersist_frees_caches(spark, tmp_path, mode):
+    """RunResult.unpersist() frees every cache a chunk-table run made
+    (the chunk_run oracle, with its chunk table built from in-memory
+    bytes or fetched from the file): the raw scan frame AND the chunk
+    cache."""
+    evidence, _ = _evidence_with_jpegs(2)
+    path = str(tmp_path / "ev.raw")
+    with open(path, "wb") as fh:
+        fh.write(evidence)
+    data = evidence if mode == "evidence_bytes" else None
+    # earlier tests' localCheckpoint blocks are persistent RDDs too:
+    # count only the ones this run adds
+    rdds = spark.sparkContext._jsc.sc().getPersistentRDDs
+    before = rdds().size()
+    res = chunk_run(spark, path, CFG, data)
     assert res["carved_files"].count() == 2
     assert res.persisted[1] is res["chunks"] and res["chunks"].is_cached
     assert rdds().size() >= before + 2  # at least the raw frame and the chunks

@@ -1,12 +1,13 @@
 """Engine.run's evidence scan path.
 
-Engine.run(evidence_path=...) always runs the one-pass multi-scan; it
-must produce IDENTICAL tables to the chunk-table strategy
-(chunk_join=True) on raw and E01 evidence — with scan limits, with
-string scan on and off, and with entropy windows that divide neither
-the sub-chunk granule nor chunk_size. This file pins the ENGINE wiring
-(table graph, limits, persist lifetime, path selection); the scan
-kernels themselves are differential-pinned in tests/test_fused_scan.py.
+Engine.run(evidence_path=...) runs the one-pass multi-scan; it must
+produce IDENTICAL tables to the chunk-table run oracle
+(tests/oracles/chunk_run.py: a cached chunk table, scanned per row and
+carved by the bucketed cogroup) on raw and E01 evidence — with scan
+limits, with string scan on and off, and with entropy windows that
+divide neither the sub-chunk granule nor chunk_size. This file pins the
+ENGINE wiring (table graph, limits, persist lifetime); the scan kernels
+themselves are differential-pinned in tests/test_fused_scan.py.
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ from swiftbeaver_spark.fused_scan import scan_all_from_evidence
 from swiftbeaver_spark.jvm import ensure_kernel
 
 from tests.fixtures import mk_jpeg, mk_png
+from tests.oracles.chunk_run import chunk_run
 from tests.test_browser import build_chrome_db
 from tests.test_fused_scan import CFG as FUSED_CFG
 from tests.test_fused_scan import GRANULE, build_image
@@ -73,15 +75,18 @@ def _evidence(tmp_path, kind: str, seed: int, size: int) -> str:
 
 
 def _assert_same_run(spark, path, cfg=CFG):
-    """run(evidence_path) goes one-pass and equals run(chunk_join=True)."""
-    eng = Engine(spark, cfg)
-    one = eng.run(evidence_path=path)
+    """run(evidence_path) goes one-pass and equals the chunk-table run."""
+    one = Engine(spark, cfg).run(evidence_path=path)
     assert one.persisted, "one-pass must persist the raw metadata frame"
     try:
         got = _tables(one)
     finally:
         one.unpersist()
-    base = _tables(eng.run(evidence_path=path, chunk_join=True))
+    oracle = chunk_run(spark, path, cfg)
+    try:
+        base = _tables(oracle)
+    finally:
+        oracle.unpersist()
     assert got == base
     assert got["hits"] and got["carved_files"]
     return got
@@ -127,8 +132,8 @@ def test_misaligned_entropy_window_runs_one_pass(spark, tmp_path, kind):
 
 
 def test_auto_selects_one_pass_when_ready(spark, tmp_path):
-    """Every evidence run without chunk_join goes one-pass — raw and
-    E01, string scan off, any entropy window."""
+    """Every evidence run goes one-pass — raw and E01, string scan
+    off, any entropy window."""
     raw = _evidence(tmp_path, "raw", 14, 2 << 20)
     e01 = _evidence(tmp_path, "e01", 14, 2 << 20)
     for path, cfg in (

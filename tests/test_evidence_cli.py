@@ -155,3 +155,40 @@ def test_cli_resume_from_partial_checkpoint(tmp_path):
     assert report["bytes_scanned"] == len(buf) - offset
     assert report["chunks_processed"] == 2
     assert json.load(open(cp))["next_offset"] == len(buf)
+
+
+@pytest.mark.slow
+def test_cli_limited_runs_checkpoint_what_they_scanned(tmp_path):
+    """A --max-bytes / --max-chunks run checkpoints the end of the last
+    chunk it scanned, not the evidence end, so resuming without a limit
+    carves exactly the files the limited runs left, and the runs'
+    bytes_scanned sum to the evidence length."""
+    chunk = 16384
+    blob = ALL_FIXTURES["jpeg"][0]
+    buf = bytearray(b"\x00" * (4 * chunk))
+    offsets = [i * chunk + 512 for i in range(4)]  # one jpeg per chunk
+    for off in offsets:
+        insert_bytes(buf, off, blob)
+    ev = str(tmp_path / "ev.raw")
+    with open(ev, "wb") as fh:
+        fh.write(bytes(buf))
+    cp = str(tmp_path / "cp.json")
+    common = [
+        "--input", ev, "--types", "jpeg", "--chunk-size", str(chunk),
+        "--overlap", "4096", "--master", "local[2]", "--checkpoint", cp,
+    ]
+    scanned, carved = 0, []
+    for i, (limit, next_offset) in enumerate(
+        ((["--max-bytes", str(chunk)], chunk),
+         (["--max-chunks", "2"], 2 * chunk),
+         ([], len(buf)))
+    ):
+        out = str(tmp_path / f"out{i}")
+        proc = _cli([*common, *limit, "--output", out])
+        assert proc.returncode == 0, proc.stderr[-2000:]
+        assert json.load(open(cp))["next_offset"] == next_offset
+        scanned += json.loads(proc.stdout.strip().splitlines()[-1])["bytes_scanned"]
+        starts = pq.read_table(os.path.join(out, "carved_files")).column("global_start")
+        carved.append(sorted(starts.to_pylist()))
+    assert carved == [offsets[:1], offsets[1:2], offsets[2:]]
+    assert scanned == len(buf)

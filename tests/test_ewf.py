@@ -133,11 +133,12 @@ def test_convert_and_carve_identical(spark, tmp_path):
 def test_e01_native_distributed_source(spark, tmp_path):
     """Engine.run straight on the .E01 — every task positioned-reads
     decompressed media through source.open_evidence, no conversion.
-    Both the fused path and the chunk-join path must match raw."""
+    Both the one-pass run and the chunk-table run oracle must match raw."""
     import dataclasses
 
     from swiftbeaver_spark.engine import Engine
 
+    from tests.oracles.chunk_run import chunk_run
     from tests.test_pipeline import TEST_CFG, build_golden
 
     evidence, _ = build_golden()
@@ -153,21 +154,20 @@ def test_e01_native_distributed_source(spark, tmp_path):
             ft for ft in TEST_CFG.file_types if ft.type_id in ("jpeg", "png", "gif")
         ),
     )
-    engine = Engine(spark, cfg)
-    for chunk_join in (False, True):
-        got = {
-            (r.global_start, r.size, r.sha256)
-            for r in engine.run(evidence_path=e01_path, chunk_join=chunk_join)[
-                "carved_files"
-            ].collect()
-        }
-        want = {
-            (r.global_start, r.size, r.sha256)
-            for r in engine.run(evidence_path=raw_path, chunk_join=chunk_join)[
-                "carved_files"
-            ].collect()
-        }
-        assert got == want != set(), f"chunk_join={chunk_join}"
+    one_pass = Engine(spark, cfg).run
+    for name, run in (
+        ("one-pass", lambda path: one_pass(evidence_path=path)),
+        ("chunk table", lambda path: chunk_run(spark, path, cfg)),
+    ):
+        carved = []
+        for path in (e01_path, raw_path):
+            res = run(path)
+            carved.append(
+                {(r.global_start, r.size, r.sha256) for r in res["carved_files"].collect()}
+            )
+            res.unpersist()
+        got, want = carved
+        assert got == want != set(), name
 
 
 def test_multi_segment_roundtrip(tmp_path):

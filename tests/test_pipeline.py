@@ -10,7 +10,13 @@ import os
 
 import pytest
 
-from swiftbeaver_spark.chunking import chunks_from_bytes, chunks_from_file, plan_chunks
+from swiftbeaver_spark.carve_op import carve_hits_with_chunks, carve_hits_with_evidence
+from swiftbeaver_spark.chunking import (
+    chunks_from_bytes,
+    chunks_from_file,
+    keep_parents,
+    plan_chunks,
+)
 from swiftbeaver_spark.config import DEFAULT_CONFIG
 from swiftbeaver_spark.engine import Engine
 from swiftbeaver_spark.fused_scan import scan_all_from_chunks
@@ -66,12 +72,11 @@ def test_golden_single_type(spark, name, tmp_path):
         TEST_CFG,
         file_types=tuple(ft for ft in TEST_CFG.file_types if ft.type_id == ftid),
     )
-    engine = Engine(spark, cfg)
     path = str(tmp_path / "golden.raw")
     with open(path, "wb") as fh:
         fh.write(evidence)
     hits = ungated_hits(spark, path, cfg)
-    carved = engine.carve(hits, evidence_path=path).collect()
+    carved = carve_hits_with_evidence(hits, path, cfg).collect()
     matches = [
         r
         for r in carved
@@ -182,17 +187,19 @@ def test_chunk_join_carve_matches_evidence_carve(spark, tmp_path):
     cfg = dataclasses.replace(
         TEST_CFG, file_types=tuple(ft for ft in TEST_CFG.file_types if ft.type_id in ("jpeg", "png", "sqlite"))
     )
-    engine = Engine(spark, cfg)
     chunks = chunks_from_file(spark, path, cfg.chunk_size, cfg.overlap).cache()
     hits = scan_all_from_chunks(chunks, cfg)["hits"]
-    via_evidence = {
-        (r.global_start, r.size, r.sha256)
-        for r in engine.carve(hits, evidence_path=path).collect()
-    }
-    via_chunks = {
-        (r.global_start, r.size, r.sha256)
-        for r in engine.carve(hits, chunks=chunks).collect()
-    }
+    try:
+        via_evidence = {
+            (r.global_start, r.size, r.sha256)
+            for r in carve_hits_with_evidence(hits, path, cfg).collect()
+        }
+        via_chunks = {
+            (r.global_start, r.size, r.sha256)
+            for r in carve_hits_with_chunks(hits, chunks, cfg).collect()
+        }
+    finally:
+        chunks.unpersist()
     assert via_evidence == via_chunks and via_evidence
 
 
@@ -221,8 +228,10 @@ def test_max_bytes_limit(spark, tmp_path):
     path = str(tmp_path / "ev.bin")
     with open(path, "wb") as fh:
         fh.write(data)
-    rows = chunks_from_file(spark, path, chunk_size=10000, overlap=0, max_bytes=25000).collect()
-    assert len(rows) == 3  # starts 0, 10000, 20000
+    cfg = dataclasses.replace(TEST_CFG, chunk_size=10000, overlap=0, max_bytes=25000)
+    chunks = chunks_from_file(spark, path, chunk_size=10000, overlap=0)
+    rows = keep_parents(chunks, cfg).collect()
+    assert sorted(r.start for r in rows) == [0, 10000, 20000]
 
 
 def test_file_ending_exactly_at_chunk_boundary(spark, tmp_path):

@@ -62,10 +62,10 @@ def test_overlap_dedup_is_catalyst_filter(spark):
     assert re.search(r"Filter.*shiftright\(packed.*valid_length", plan, re.DOTALL)
 
 
-def test_chunk_table_run_scans_once(spark):
-    """One table graph: a chunk-table Engine.run persists its scan's raw
-    frame, and hits, string_spans and entropy_regions all read it
-    through InMemoryTableScan — the kernel runs once per chunk row."""
+def test_chunk_table_run_scans_once(spark, tmp_path):
+    """One table graph: Engine.run persists its scan's raw frame, and
+    hits, string_spans and entropy_regions all read it through
+    InMemoryTableScan — the fused kernel runs once per sub-chunk."""
     import dataclasses
 
     from swiftbeaver_spark.config import DEFAULT_CONFIG
@@ -79,10 +79,12 @@ def test_chunk_table_run_scans_once(spark):
         enable_entropy_detection=True,
         entropy_window_size=256,
     )
-    res = Engine(spark, cfg).run(evidence_bytes=b"text https://a.example " * 800)
+    path = tmp_path / "ev.raw"
+    path.write_bytes(b"text https://a.example " * 800)
+    res = Engine(spark, cfg).run(evidence_path=str(path))
     try:
-        raw_plan = res.persisted[0]._jdf.queryExecution().analyzed()
-        assert "sb_scan_all_bytes" in raw_plan.toString()
+        raw_plan = res.persisted[0]._jdf.queryExecution().analyzed().toString()
+        assert re.search(r"sb_scan_all\(", raw_plan), raw_plan
         for name in ("hits", "string_spans", "entropy_regions"):
             # the cached relation the table scans is the raw frame
             plan = _formatted(res[name])

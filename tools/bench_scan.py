@@ -20,7 +20,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from swiftbeaver_spark.config import DEFAULT_CONFIG
-from swiftbeaver_spark.engine import Engine
 from swiftbeaver_spark.session import get_spark
 
 CHUNK = 4 * 1024 * 1024
@@ -41,7 +40,6 @@ def main() -> None:
     spark = get_spark(master="local[2]", shuffle_partitions=2, app_name="bench-scan")
     spark.sparkContext.setLogLevel("ERROR")
     cfg = dataclasses.replace(DEFAULT_CONFIG, chunk_size=CHUNK, overlap=OVERLAP)
-    engine = Engine(spark, cfg)
     results = {}
 
     # JVM kernel single-core: one 256 MiB chunk = one task = one core,
@@ -104,13 +102,15 @@ def main() -> None:
             if ft.type_id == "jpeg"
         ),
     )
-    dense_engine = Engine(spark, dense_cfg)
 
     def jpeg_dense():
+        from swiftbeaver_spark.carve_op import carve_hits_with_evidence
         from swiftbeaver_spark.fused_scan import scan_all_from_evidence
 
         hits = scan_all_from_evidence(spark, dense_path, dense_cfg)["hits"]
-        carved = dense_engine.carve(hits, evidence_path=dense_path)
+        carved = carve_hits_with_evidence(hits, dense_path, dense_cfg)
+        # the max_files cap, as Engine.run applies it
+        carved = carved.orderBy("global_start").limit(dense_cfg.max_files)
         assert carved.count() == 200
 
     results["jpeg_dense_200"] = {"sec": round(timeit(jpeg_dense, n), 4)}
