@@ -7298,14 +7298,7 @@ def q122_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # interleaved minima 1.44 s natural vs 1.79 s widened
     corpus = emb.select("vec_id", "embedding").unionByName(planted)
     cents = md5_centroids(SEMDEDUP_NLIST, 64, tag="semdedup")
-    # arrow kernel + arrow assignment: the production paths (in-cell
-    # gram 66x, matmul assignment vs per-row nlist argmax folds — the
-    # large-nlist lever, SCALE.md); output verified identical to the
-    # expression forms at sf0.1 AND the 10x corpus, pytest-pinned — so
-    # the driver gate checks the path production actually runs
-    return semantic_dedup(
-        corpus, cents, threshold=0.95, kernel="arrow", assign="arrow"
-    ).orderBy("vec_id")
+    return semantic_dedup(corpus, cents, threshold=0.95).orderBy("vec_id")
 
 
 def q122_sql() -> str:
@@ -9987,10 +9980,6 @@ def q157_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=BITEXT_K,
         nprobe=IVFPQ_NPROBE,
         margin_milli=BITEXT_MARGIN_MILLI,
-        # arrow corpus-side cell assignment: the large-nlist production
-        # path (matmul per batch vs nlist folds per row — SCALE.md);
-        # cell-for-cell equivalence pytest-pinned, hash-gated here
-        assign="arrow",
     )
     return out.orderBy("x_id")
 
@@ -10240,9 +10229,6 @@ def q160_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ivfpq_cents(),
         nprobe=IVFPQ_NPROBE,
         broadcast_queries=True,
-        # arrow corpus-side cell assignment (the large-nlist production
-        # path, same rule as q122/q157) — hash-gated here
-        assign="arrow",
     )
     # candidate ranking on MICRO-rounded relevance (desc, vec_id) so
     # the k-cut itself is engine-pinned (unrounded ties could differ)

@@ -46,9 +46,9 @@ _CARVE_COLUMNS = [f.name for f in schemas.CARVED_FILES.fields]
 # strategy 1 (positioned reads) — see the module docstring
 _WINDOW_CAP_LIMIT = 3 * (1 << 29)  # 1.5 GiB
 # per-task LRU of sweep-family bucket indexes, keyed (family, bucket)
-# — every _SWEEP_FAMILIES collector shares it (zip EOCD geometry,
-# bzip2 end markers, ...). Entries are integer position lists, a few
-# bytes per magic, so the bound exists for pathology, not pressure
+# — every _SWEEP_FAMILIES collector shares it (today only zip's EOCD
+# geometry). Entries are position lists, a few bytes per magic, so the
+# bound exists for pathology, not pressure
 _SWEEP_CACHE_BUCKETS = 64
 
 # contiguous bucket span of the chunk-table carve: big enough to
@@ -126,15 +126,7 @@ def _collect_zip_eocds_kw(reader, lo: int, hi: int) -> dict:
 # evidence should drop the bzip2 entry from `file_types` (YAML
 # config override, config_yaml.py) -- every term of the cost is
 # format-rule-mandated output, not overhead.
-#
-# The bool is `early_exit`: whether the per-hit sweep can stop at the
-# first match. Early-exit families only profit from the shared index
-# at density -- a single-hit bucket's tight index read equals the
-# hit's WORST-case sweep -- so they take the index only when a bucket
-# group holds >= 2 hits.
-_SWEEP_FAMILIES = {
-    "zip": (_collect_zip_eocds_kw, False),
-}
+_SWEEP_FAMILIES = {"zip": _collect_zip_eocds_kw}
 
 
 def carve_hits_with_evidence(
@@ -174,18 +166,18 @@ def carve_hits_with_evidence(
         1,
         -(-evidence_length(evidence_path) // (4 * EVIDENCE_PARTITION_BYTES)),
     )
-    # family routing: type_id -> family, family -> (bucket_w, collector,
-    # early_exit). max_size=0 means an UNBOUNDED window (scan to EOF) --
+    # family routing: type_id -> family, family -> (bucket_w,
+    # collector). max_size=0 means an UNBOUNDED window (scan to EOF) --
     # no finite bucket can cover it, so any such type routes its whole
     # family through the per-hit path (correct for any window; the
     # shared index is purely an optimization).
     route: dict[str, str] = {}
-    fam_geom: dict[str, tuple[int, object, bool]] = {}
-    for validator, (collector, early_exit) in _SWEEP_FAMILIES.items():
+    fam_geom: dict[str, tuple[int, object]] = {}
+    for validator, collector in _SWEEP_FAMILIES.items():
         fam = [ft for ft in cfg.file_types if ft.validator == validator]
         if not fam or any(ft.max_size <= 0 for ft in fam):
             continue
-        fam_geom[validator] = (max(ft.max_size for ft in fam), collector, early_exit)
+        fam_geom[validator] = (max(ft.max_size for ft in fam), collector)
         for ft in fam:
             route[ft.type_id] = validator
 
@@ -198,14 +190,12 @@ def carve_hits_with_evidence(
         reader = open_evidence(evidence_path)
         # The index covers the TIGHT range a batch group needs
         # ([first hit, last hit + bucket_w)), not the full 2x
-        # envelope -- always-envelope sweeps regressed sparse
-        # early-exit families (see _SWEEP_FAMILIES). Arrow may
-        # split one offset-bucket's hits across batches (ADVICE
-        # r11), so the cache is coverage-aware: reuse when the
-        # cached range covers this group's need, extend (union of
-        # ranges) otherwise. Bounded LRU keyed (family, bucket);
-        # entries are magic positions (plus 12-byte geometry for
-        # zip), a few bytes each. Handlers filter candidates to
+        # envelope. Arrow may split one offset-bucket's hits across
+        # batches (ADVICE r11), so the cache is coverage-aware: reuse
+        # when the cached range covers this group's need, extend
+        # (union of ranges) otherwise. Bounded LRU keyed (family,
+        # bucket); entries are EOCD positions plus 12-byte geometry,
+        # a few bytes each. Handlers filter candidates to
         # their own window with identical selection rules, so
         # results never depend on which hits shared the sweep
         # (pytest-pinned).
@@ -224,27 +214,24 @@ def carve_hits_with_evidence(
                 for (famname, b), grp in pdf.groupby([fams, buckets], sort=False):
                     kw = None
                     if famname:
-                        bucket_w, collector, early_exit = fam_geom[famname]
-                        # early-exit families only profit from the index
-                        # at density (see _SWEEP_FAMILIES)
-                        if not early_exit or len(grp) >= 2:
-                            ck = (famname, int(b))
-                            need_lo = int(grp["global_offset"].min())
-                            need_hi = min(
-                                int(grp["global_offset"].max()) + bucket_w,
-                                reader.length(),
-                            )
-                            entry = cache.get(ck)
-                            if entry is not None and entry[0] <= need_lo and entry[1] >= need_hi:
-                                cache.move_to_end(ck)
-                                kw = entry[2]
-                            else:
-                                lo = need_lo if entry is None else min(need_lo, entry[0])
-                                hi = need_hi if entry is None else max(need_hi, entry[1])
-                                kw = collector(reader, lo, hi)
-                                cache[ck] = (lo, hi, kw)
-                                if len(cache) > _SWEEP_CACHE_BUCKETS:
-                                    cache.popitem(last=False)
+                        bucket_w, collector = fam_geom[famname]
+                        ck = (famname, int(b))
+                        need_lo = int(grp["global_offset"].min())
+                        need_hi = min(
+                            int(grp["global_offset"].max()) + bucket_w,
+                            reader.length(),
+                        )
+                        entry = cache.get(ck)
+                        if entry is not None and entry[0] <= need_lo and entry[1] >= need_hi:
+                            cache.move_to_end(ck)
+                            kw = entry[2]
+                        else:
+                            lo = need_lo if entry is None else min(need_lo, entry[0])
+                            hi = need_hi if entry is None else max(need_hi, entry[1])
+                            kw = collector(reader, lo, hi)
+                            cache[ck] = (lo, hi, kw)
+                            if len(cache) > _SWEEP_CACHE_BUCKETS:
+                                cache.popitem(last=False)
                     for off, ft_id, pat_id in zip(
                         grp["global_offset"], grp["file_type_id"], grp["pattern_id"]
                     ):
@@ -268,7 +255,7 @@ def carve_hits_with_evidence(
     # one task never owns all the expensive hits, and adding a sweep
     # family costs zero extra passes or shuffles
     key = F.concat(F.lit("r:"), F.col("global_offset").cast("string"))
-    for famname, (bucket_w, _, _) in fam_geom.items():
+    for famname, (bucket_w, _) in fam_geom.items():
         ids = [tid for tid, f in route.items() if f == famname]
         key = F.when(
             F.col("file_type_id").isin(ids),

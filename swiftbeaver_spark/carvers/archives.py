@@ -12,7 +12,6 @@ import zlib
 from swiftbeaver_spark.carvers.base import (
     CarveOutcome,
     Reader,
-    first_candidate,
     scan_forward,
 )
 
@@ -223,21 +222,9 @@ def carve_zip(
 _GZIP_MAGIC = b"\x1f\x8b\x08"
 
 
-def carve_gzip(
-    reader: Reader,
-    offset: int,
-    max_size: int,
-    next_candidates: list[int] | None = None,
-    **_,
-) -> CarveOutcome | None:
+def carve_gzip(reader: Reader, offset: int, max_size: int, **_) -> CarveOutcome | None:
     """Header parse + best-effort scan for next gzip magic or EOF
-    (reference src/carve/gzip.rs:47-170).
-
-    next_candidates: shared per-bucket index of _GZIP_MAGIC positions
-    covering at least [offset, offset+max_size) — replaces the per-hit
-    next-member sweep with the same selection rule (first match at or
-    after the header end, fully inside the window); the FNAME/FCOMMENT
-    cstring scans stay per-hit (1 MiB-bounded, header-local)."""
+    (reference src/carve/gzip.rs:47-170)."""
     head = reader.read_exact(offset, 10)
     if head is None or head[:3] != _GZIP_MAGIC:
         return None
@@ -264,17 +251,9 @@ def carve_gzip(
     header_len = pos - offset
 
     max_end = offset + max_size if max_size > 0 else reader.length()
-    if next_candidates is not None:
-        # scan_forward(start=offset+header_len, search_after=offset+1):
-        # scanning begins at the header end, so the effective floor is
-        # max(start, search_after) = offset + header_len
-        nxt = first_candidate(
-            next_candidates, offset + header_len, max_end, len(_GZIP_MAGIC)
-        )
-    else:
-        nxt = scan_forward(
-            reader, offset + header_len, _GZIP_MAGIC, max_end, search_after=offset + 1
-        )
+    nxt = scan_forward(
+        reader, offset + header_len, _GZIP_MAGIC, max_end, search_after=offset + 1
+    )
     if nxt is not None:
         return CarveOutcome(end=nxt, validated=True)
     if max_end >= reader.length():
@@ -287,29 +266,13 @@ def carve_gzip(
 _BZIP2_END = bytes.fromhex("177245385090")
 
 
-def carve_bzip2(
-    reader: Reader,
-    offset: int,
-    max_size: int,
-    end_candidates: list[int] | None = None,
-    **_,
-) -> CarveOutcome | None:
-    """Scan for the byte-aligned end marker (reference src/carve/bzip2.rs).
-
-    end_candidates: shared per-bucket index of _BZIP2_END positions
-    (collect_magic_positions) covering at least [offset, offset+
-    max_size) — same first-match-in-window rule as the per-hit sweep
-    (first_candidate), so results are bit-identical while co-located
-    hits share one range read (the zip-EOCD pattern, generalized r12
-    after the per-format profile showed bzip2 at 185 ms/hit)."""
+def carve_bzip2(reader: Reader, offset: int, max_size: int, **_) -> CarveOutcome | None:
+    """Scan for the byte-aligned end marker (reference src/carve/bzip2.rs)."""
     head = reader.read_exact(offset, 4)
     if head is None or head[:3] != b"BZh" or not (0x31 <= head[3] <= 0x39):
         return None
     max_end = offset + max_size if max_size > 0 else reader.length()
-    if end_candidates is not None:
-        pos = first_candidate(end_candidates, offset, max_end, len(_BZIP2_END))
-    else:
-        pos = scan_forward(reader, offset, _BZIP2_END, max_end)
+    pos = scan_forward(reader, offset, _BZIP2_END, max_end)
     if pos is not None:
         return CarveOutcome(end=pos + len(_BZIP2_END), validated=True)
     if max_end >= reader.length():

@@ -146,54 +146,6 @@ def scan_forward(
     return None
 
 
-def collect_magic_positions(reader: Reader, lo: int, hi: int, pattern: bytes) -> list[int]:
-    """All occurrences of `pattern` fully inside [lo, hi), ascending —
-    ONE buffered pass with cross-buffer carry (scan_forward's read
-    discipline over a shared range). The r12 generalization of
-    collect_zip_eocds: any handler whose end detection is a forward
-    magic sweep up to max_size (bzip2 end marker, gzip next-member
-    magic) can consume a per-bucket index instead of re-sweeping per
-    hit — N co-located hits cost one range read instead of N window
-    reads. No duplicates from the carry: a match fully inside the
-    (len-1)-byte tail cannot fit the pattern, so every match includes
-    at least one new byte."""
-    out: list[int] = []
-    overlap = len(pattern) - 1
-    offset = lo
-    prev_tail = b""
-    while offset < hi:
-        buf = reader.read_at(offset, min(IO_BUF, hi - offset))
-        if not buf:
-            break
-        hay = prev_tail + buf
-        base = offset - len(prev_tail)
-        idx = hay.find(pattern)
-        while idx != -1:
-            pos = base + idx
-            if pos >= lo:
-                out.append(pos)
-            idx = hay.find(pattern, idx + 1)
-        prev_tail = hay[-overlap:] if overlap else b""
-        offset += len(buf)
-    return out
-
-
-def first_candidate(
-    candidates: list[int], search_start: int, max_end: int, pattern_len: int
-) -> int | None:
-    """First indexed position p with p >= search_start and
-    p + pattern_len <= max_end — exactly scan_forward's match rule
-    (a match must lie fully inside [search_start, max_end)), so a
-    handler consuming the shared index selects the same position the
-    per-hit sweep would find (bisect keeps dense-index buckets cheap)."""
-    import bisect
-
-    i = bisect.bisect_left(candidates, search_start)
-    if i < len(candidates) and candidates[i] + pattern_len <= max_end:
-        return candidates[i]
-    return None
-
-
 def finalize(
     reader: Reader,
     start: int,

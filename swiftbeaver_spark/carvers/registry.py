@@ -79,10 +79,10 @@ def carve_hit(
     truncation clamp). Returns None for rejected false positives.
     `eocd_candidates`: shared zip magic index (collect_zip_eocds) —
     consumed by the zip handler, ignored by every other handler.
-    `sweep_kwargs`: generic shared-index kwargs for the other
-    sweep-bound handlers (e.g. {"end_candidates": [...]} for bzip2,
-    {"next_candidates": [...]} for gzip) — handlers take **_ so an
-    index meant for one validator is ignored by the rest."""
+    `sweep_kwargs`: the shared-index kwargs a _SWEEP_FAMILIES collector
+    built (carve_op; today only zip's {"eocd_candidates": [...]}) —
+    handlers take **_ so an index meant for one validator is ignored
+    by the rest."""
     entry = registry.get(file_type_id)
     if entry is None:
         return None

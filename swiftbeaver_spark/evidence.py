@@ -16,8 +16,10 @@ single-stream computation. Two provenance modes:
   parallel, pinpoints corruption to a chunk); the sequential whole-image
   digest is an ingest-time artifact.
 
-EWF/E01 containers are an ingest-time conversion (libewf/pyewf is not a
-distributed source): `convert_ewf_to_raw` is gated on pyewf presence.
+EWF/E01 containers are read natively: `source.open_evidence` returns an
+`ewf.EwfReader` (pure Python, public EWF spec) over the decompressed
+media, so every scan and carve takes E01 directly. `convert_ewf_to_raw`
+remains for callers that want a raw copy at ingest.
 """
 
 from __future__ import annotations
@@ -89,30 +91,15 @@ def evidence_digest_of_digests(chunks: DataFrame) -> str:
 
 def convert_ewf_to_raw(ewf_path: str, out_path: str) -> None:
     """E01 -> raw conversion for ingest (reference reads E01 via libewf,
-    src/evidence.rs:165-400; distributed scanning wants raw/chunked
-    parquet). Uses pyewf when present, else the pure-Python EWF reader
+    src/evidence.rs:165-400) via the pure-Python EWF reader
     (swiftbeaver_spark.ewf, public EWF spec — no native deps)."""
-    try:
-        import pyewf  # type: ignore
-    except ImportError:
-        from swiftbeaver_spark.ewf import EwfReader
+    from swiftbeaver_spark.ewf import EwfReader
 
-        EwfReader(ewf_path).convert_to_raw(out_path)
-        return
-    filenames = pyewf.glob(ewf_path)  # pragma: no cover
-    handle = pyewf.handle()
-    handle.open(filenames)
-    try:  # pragma: no cover - env without pyewf
-        with open(out_path, "wb") as out:
-            remaining = handle.get_media_size()
-            while remaining > 0:
-                buf = handle.read(min(IO_BUF, remaining))
-                if not buf:
-                    break
-                out.write(buf)
-                remaining -= len(buf)
-    finally:  # pragma: no cover
-        handle.close()
+    reader = EwfReader(ewf_path)
+    try:
+        reader.convert_to_raw(out_path)
+    finally:
+        reader.close()
 
 
 def verify_against_manifest(carved: DataFrame, manifest: DataFrame) -> DataFrame:

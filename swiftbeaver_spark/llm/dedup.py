@@ -28,16 +28,6 @@ from pyspark.sql import functions as F
 from swiftbeaver_spark.parallel import spread
 
 
-def _shr(col: Column, bits: Column) -> Column:
-    """shiftright with a Column bit count (the Python wrapper only
-    accepts int)."""
-    return F.call_function("shiftright", col, bits)
-
-
-def _shl(col: Column, bits: Column) -> Column:
-    return F.call_function("shiftleft", col, bits)
-
-
 def normalized_text(col: Column) -> Column:
     """Lowercase, collapse whitespace — the usual near-dup canonicalizer."""
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))

@@ -415,8 +415,8 @@ def ivf_topk(
     reference has no ANN operator) — this is the training-data-pipeline
     extension, patterned on FAISS IVF-Flat. At paper-scale nlist the
     corpus-side expression argmax is the bottleneck — compose with
-    assign_cells_arrow the way ivf_candidates(assign='arrow') and
-    semantic_dedup(assign='arrow') do (measured in SCALE.md).
+    assign_cells_arrow the way ivf_candidates and semantic_dedup do
+    (measured in SCALE.md).
 
     nlist=None derives the cell count from the MEASURED law
     (auto_nlist: ~8*sqrt(n_queries*nprobe) for this query-driven
@@ -1098,7 +1098,6 @@ def ivf_candidates(
     query_vec_col: str = "query_vec",
     round_dp: int = 6,
     broadcast_queries: bool = True,
-    assign: str = "expr",
     hier: bool | None = None,
     probe_super: int = 8,
 ) -> DataFrame:
@@ -1107,42 +1106,36 @@ def ivf_candidates(
     mining, MMR shortlists, k-NN graph construction) from a cartesian
     into an EQUI-JOIN on the Voronoi cell: each corpus vector is
     assigned to its single nearest pinned centroid (argmax rounded
-    dot, the q34/q88 rule), each query probes its `nprobe` nearest
-    cells, and candidates are exactly `probe JOIN assigned ON cell`.
-    A (query, vector) pair appears at most once because assignment is
-    unique.
+    dot, the q34/q88 rule, via assign_cells_arrow), each query probes
+    its `nprobe` nearest cells, and candidates are exactly
+    `probe JOIN assigned ON cell`. A (query, vector) pair appears at
+    most once because assignment is unique.
 
-    Scale: assignment and probing are map-only projections against a
-    plan-literal centroid table; the only join is the hash equi-join
-    on `cell` (broadcast when `broadcast_queries`, shuffle otherwise
-    for corpus-sized query sides). Candidate volume per query is
+    Scale: assignment (one numpy matmul per Arrow batch) and probing
+    (the sb_dots kernel) are map-only projections; the only join is
+    the hash equi-join on `cell` (broadcast when `broadcast_queries`,
+    shuffle otherwise for corpus-sized query sides). Candidate volume per query is
     ~|corpus| * nprobe / nlist — raise nlist at scale to keep cells
     executor-sized: the measured law (auto_nlist, round-9 sweep) is
     cells ∝ corpus at ~2000 occupancy for corpus-sided query sets and
     ~8*sqrt(n_queries*nprobe) for small broadcast ones. Every step
-    is SQL-replayable (md5-pinned centroids, rounded-dot argmax).
-    assign='arrow' computes the corpus-side assignment via
-    assign_cells_arrow (one matmul per batch vs nlist folds per row —
-    the large-nlist lever, same rule as semantic_dedup; cell-for-cell
-    equivalence pytest-pinned at sub-switch nlist — hier/probe_super
-    pass through, with the same auto-switch and random-quantizer
-    caveat as semantic_dedup; hier=False forces flat).
-    The query side keeps the expression
-    probe list: it needs the nprobe-nearest RANKING, not an argmax,
-    and query counts are the small side.
+    is SQL-replayable (md5-pinned centroids, rounded-dot argmax; the
+    arrow assignment is cell-for-cell pinned against ivf_cell_dot at
+    sub-switch nlist). hier/probe_super pass through to
+    assign_cells_arrow, with the same auto-switch and random-quantizer
+    caveat as semantic_dedup; hier=False forces flat. The query side
+    keeps the expression probe list: it needs the nprobe-nearest
+    RANKING, not an argmax, and query counts are the small side.
 
     Returns (query_id, query_vec, vec_id, vec, cell)."""
     cproj = corpus.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).cast("array<double>").alias("vec"),
     )
-    if assign == "arrow":
-        c = assign_cells_arrow(
-            cproj, centroids, id_col="vec_id", vec_col="vec", round_dp=round_dp,
-            hier=hier, probe_super=probe_super,
-        )
-    else:
-        c = cproj.withColumn("cell", ivf_cell_dot(F.col("vec"), centroids, round_dp))
+    c = assign_cells_arrow(
+        cproj, centroids, id_col="vec_id", vec_col="vec", round_dp=round_dp,
+        hier=hier, probe_super=probe_super,
+    )
     pairs = F.zip_with(
         _dots(F.col("query_vec"), centroids, round_dp),
         F.sequence(F.lit(0), F.lit(len(centroids) - 1)),
@@ -1169,7 +1162,6 @@ def bitext_mine_ivf(
     margin_milli: int = 1050,
     round_dp: int = 6,
     eager: bool = True,
-    assign: str = "expr",
 ) -> DataFrame:
     """Bitext mining with RATIO-margin scoring (Artetxe & Schwenk
     2019) composed with the IVF coarse index: candidate (x, y) pairs
@@ -1196,7 +1188,6 @@ def bitext_mine_ivf(
         nprobe=nprobe,
         round_dp=round_dp,
         broadcast_queries=False,  # src is corpus-sized: shuffle equi-join
-        assign=assign,
     )
     cm = F.round(
         cosine_similarity(F.col("query_vec"), F.col("vec")) * 1_000_000
@@ -1269,8 +1260,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     threshold: float = 0.95,
     round_dp: int = 6,
-    kernel: str = "expr",
-    assign: str = "expr",
     hier: bool | None = None,
     probe_super: int = 8,
 ) -> DataFrame:
@@ -1280,37 +1269,31 @@ def semantic_dedup(
     training examples an exact/minhash dedup can't see (different
     words, same meaning).
 
-    Mechanics (every step engine-replayable, the q34 pinned-quantizer
-    convention):
+    Mechanics (the q34 pinned-quantizer convention):
       1. assign each vector to its cell: argmax of ROUND(dot, round_dp)
          against the pinned equal-norm centroids, ties -> lowest cell
-         (ivf_cell_dot) — a map-only projection;
-      2. pairwise rounded cosine WITHIN cells (self-join on the cell
-         key, id< to halve the pairs);
+         (assign_cells_arrow: one numpy matmul per Arrow batch);
+      2. pairwise rounded cosine WITHIN cells (the blockwise numpy gram
+         per cell, _semantic_dedup_dropped_arrow);
       3. for each pair with cosine >= threshold, drop the member closer
          to its centroid — the paper's keep-the-edge-points policy —
          with (centroid_cos, vec_id) as the deterministic total order
-         (drop the greater struct; ties cannot survive the id tiebreak).
+         (drop the greater; ties cannot survive the id tiebreak).
 
     Output: one row per input vector — (vec_id, cell, centroid_cos as
     %.6f string, dropped) — so keep/drop for the WHOLE corpus is
-    hash-gated, not just the dup pairs.
+    hash-gated, not just the dup pairs. Degenerate vectors (zero-norm
+    or NaN-valued) get a NULL centroid_cos and are never dropped.
 
     Scale: the only shuffle is on the cell key; with nlist cells sized
     so a cell holds O(sqrt(pair budget)) vectors, pair work is
     n^2/nlist per-cell-uniform (the paper runs ~100M docs with k=50k
     clusters). Assignment and the drop-side aggregation are map-local;
-    no all-pairs stage exists anywhere. kernel='expr' (default)
-    evaluates pair cosines as Catalyst expressions — fully
-    engine-replayable, the oracle-gated form; kernel='arrow' runs the
-    in-cell stage as a blockwise numpy gram per cell
-    (_semantic_dedup_dropped_arrow) — ~66x faster at 10x sf0.1
-    (SCALE.md) with verified-identical output; production deployments
-    at real cell occupancies want arrow. assign='arrow' computes the
-    cell assignment itself via assign_cells_arrow (one numpy matmul
-    per batch vs nlist zip_with folds per row) — the large-nlist lever
-    (36 s of the 42 s nlist=160 sf1 run was expression argmax;
-    cell-for-cell equivalence pytest-pinned at sub-switch nlist).
+    no all-pairs stage exists anywhere. The all-Catalyst form (argmax
+    folds, in-cell self-join) is the test oracle
+    (tests/oracles/semdedup.py): it lost everywhere with identical
+    output (SCALE.md r9 — 40.9 vs 13.8 s cell assignment at sf1
+    nlist=160; ~66-70x slower in-cell stage).
     hier/probe_super pass through to assign_cells_arrow: hier=None
     auto-switches to the two-level coarse quantizer at nlist >=
     _HIER_NLIST_MIN (measured crossover), which is APPROXIMATE — fine
@@ -1318,82 +1301,38 @@ def semantic_dedup(
     pinned ones (see assign_cells_arrow); hier=False forces flat
     assignment at any nlist. Every gated query pins nlist far below
     the switch."""
-    proj = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
+    assigned = assign_cells_arrow(
+        embeddings.select(
+            F.col(id_col).alias("vec_id"),
+            F.col(vec_col).cast("array<double>").alias("vec"),
+        ),
+        centroids, id_col="vec_id", vec_col="vec", round_dp=round_dp,
+        hier=hier, probe_super=probe_super,
     )
-    over_budget = (
-        len(centroids) * len(centroids[0]) > _CENTROID_LITERAL_BUDGET
-    )
-    if assign == "arrow":
-        assigned = assign_cells_arrow(
-            proj, centroids, id_col="vec_id", vec_col="vec", round_dp=round_dp,
-            hier=hier, probe_super=probe_super,
-        )
-        if not over_budget:
-            # small-nlist (oracle-gated) path: keep the bit-exact
-            # Catalyst ccos fold below; the arrow pass's own-dot ccos
-            # differs only by the documented ~1 ulp BLAS-order noise,
-            # but the gated rows get the engine-replayable form
-            assigned = assigned.drop("centroid_cos")
-    else:
-        assigned = proj.withColumn(
-            "cell", ivf_cell_dot(F.col("vec"), centroids, round_dp)
-        )
-    if assign != "arrow" or not over_budget:
-        # rounded cosine to the OWN cell's centroid (keep-policy
-        # ordering). This expression embeds an O(nlist x dim) literal
-        # centroid array in the plan — measured to stall the driver
-        # from ~1.4e5 literals and OOM a 16g heap at ~5.7e5 (nlist
-        # 2236/8944 x dim 64, round-9 nlist sweep) — so past
-        # _CENTROID_LITERAL_BUDGET the arrow assignment's own-dot ccos
-        # (already computed by the matmul) is used instead; at that
-        # scale assign='arrow' is the only viable assignment anyway.
+    if len(centroids) * len(centroids[0]) <= _CENTROID_LITERAL_BUDGET:
+        # small-nlist (oracle-gated) path: rounded cosine to the OWN
+        # cell's centroid as the bit-exact Catalyst fold — the matmul's
+        # own-dot ccos differs only by the documented ~1 ulp BLAS-order
+        # noise. The fold embeds an O(nlist x dim) literal centroid
+        # array in the plan — measured to stall the driver from ~1.4e5
+        # literals and OOM a 16g heap at ~5.7e5 (nlist 2236/8944 x dim
+        # 64, round-9 nlist sweep) — so past the budget the matmul's
+        # ccos stands. A zero denominator yields NULL, as the matmul
+        # does, instead of ANSI DIVIDE_BY_ZERO.
         cent = _centroid_lit(centroids)
         own = F.element_at(cent, F.col("cell") + 1)
+        den = norm(F.col("vec")) * norm(own)
         ccos = F.round(
             F.aggregate(
                 F.zip_with(F.col("vec"), own, lambda v, c: v * c),
                 F.lit(0.0),
                 lambda s, x: s + x,
             )
-            / (norm(F.col("vec")) * norm(own)),
+            / F.when(den != 0.0, den),
             round_dp,
         )
         assigned = assigned.withColumn("centroid_cos", ccos)
-    if kernel == "arrow":
-        dropped = _semantic_dedup_dropped_arrow(assigned, threshold, round_dp)
-    else:
-        l, r = assigned.alias("l"), assigned.alias("r")
-        pair_cos = F.round(
-            cosine_similarity(F.col("l.vec"), F.col("r.vec")), round_dp
-        )
-        pairs = (
-            l.join(
-                r,
-                (F.col("l.cell") == F.col("r.cell"))
-                & (F.col("l.vec_id") < F.col("r.vec_id")),
-            )
-            .where(pair_cos >= F.lit(threshold))
-            .select(
-                F.col("l.vec_id").alias("a"),
-                F.col("l.centroid_cos").alias("a_cc"),
-                F.col("r.vec_id").alias("b"),
-                F.col("r.centroid_cos").alias("b_cc"),
-            )
-        )
-        # per pair, the member with the GREATER (centroid_cos, vec_id)
-        # is dropped (closest to the centroid = most redundant; id
-        # breaks ties)
-        dropped = pairs.select(
-            F.when(
-                F.struct(F.col("a_cc").alias("c"), F.col("a").alias("i"))
-                > F.struct(F.col("b_cc").alias("c"), F.col("b").alias("i")),
-                F.col("a"),
-            )
-            .otherwise(F.col("b"))
-            .alias("vec_id")
-        ).distinct()
+    dropped = _semantic_dedup_dropped_arrow(assigned, threshold, round_dp)
     return (
         assigned.join(dropped.withColumn("_d", F.lit(True)), "vec_id", "left")
         .select(
@@ -1472,18 +1411,18 @@ def _spark_round_half_up(arr, round_dp: int):
 def _semantic_dedup_dropped_arrow(
     assigned: DataFrame, threshold: float, round_dp: int
 ) -> DataFrame:
-    """The in-cell pairwise stage as a numpy gram kernel (semantic_dedup
-    kernel='arrow'): one applyInPandas per cell builds the cell matrix
+    """The in-cell pairwise stage of semantic_dedup as a numpy gram
+    kernel: one applyInPandas per cell builds the cell matrix
     and evaluates all upper-triangle cosines blockwise (1024-row tiles,
     so a mega-cell never materializes an n^2 gram), emitting the
-    dropped ids under the same keep-the-edge-points policy. ~100x per
-    pair vs the expression fold — the production path for the 10x scale
-    measurement (SCALE.md); the default expr kernel remains the
-    oracle-gated form. Rounding mirrors Spark ROUND exactly via
-    _spark_round_half_up (repr-faithful on shortest-decimal .5
-    boundaries, not just the binary floor form); outputs verified
-    IDENTICAL to the expr kernel over the sf0.1 and 10x-sf1 embedding
-    corpora and pytest-pinned on the gated q122 configuration."""
+    dropped ids under the keep-the-edge-points policy. ~100x per pair
+    vs the expression self-join (SCALE.md), which survives only as the
+    test oracle (tests/oracles/semdedup.py). Rounding mirrors Spark
+    ROUND exactly via _spark_round_half_up (repr-faithful on
+    shortest-decimal .5 boundaries, not just the binary floor form);
+    outputs verified IDENTICAL to the expression form over the sf0.1
+    and 10x-sf1 embedding corpora and pytest-pinned on the gated q122
+    configuration."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
@@ -1713,9 +1652,9 @@ def assign_cells_arrow(
     exact x.xxxxxx5 HALF_UP boundary (the boundary grid is ~1e-6 apart
     at 6 dp), i.e. ~1e-12 per dot and ~1e-6 per multi-million-dot
     corpus pass. The driver gate evaluates query and oracle on the
-    same host (verified identical tri-SF + sf1 here); the expr forms
-    remain the bit-guaranteed engine-replayable path for cross-engine
-    reproduction.
+    same host (verified identical tri-SF + sf1); the expression forms
+    (ivf_cell_dot, tests/oracles/semdedup.py) remain the bit-guaranteed
+    engine-replayable reference for cross-engine reproduction.
 
     `hier` switches to TWO-LEVEL assignment (the coarse-to-fine wiring
     VERDICT r9 task 4 asked for): centroids group into ~sqrt(nlist)
@@ -1834,12 +1773,12 @@ def assign_cells_arrow(
             # Spark's Arrow ingestion converts float NaN to NULL
             # regardless (pa.Array.from_pandas semantics — a NaN can't
             # cross this boundary at all, which also settles ADVICE
-            # r9's NaN-sorts-above-NULL concern), and the Catalyst
-            # expression path under Spark 4's default ANSI mode
-            # RAISES DIVIDE_BY_ZERO for zero-norm vectors rather than
-            # yielding anything — the arrow kernel is deliberately
-            # total where the expr form fails the job. Gated corpora
-            # contain no degenerate vectors (pytest-pinned behavior).
+            # r9's NaN-sorts-above-NULL concern). An unguarded
+            # Catalyst division would RAISE DIVIDE_BY_ZERO under Spark
+            # 4's default ANSI mode instead; semantic_dedup's
+            # sub-budget ccos fold guards its denominator to match.
+            # Gated corpora contain no degenerate vectors
+            # (pytest-pinned behavior).
             ccos_col = (
                 pd.array(ccos, dtype="Float64") if np.isnan(ccos).any() else ccos
             )

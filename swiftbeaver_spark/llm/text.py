@@ -108,31 +108,15 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def fingerprint(col: Column, num_shingles: int = 8, shingle_k: int = 16) -> Column:
-    """Winnowing-style document fingerprint: the num_shingles smallest
-    xxhash64 values over k-char shingles, hashed into one 64-bit id.
-    Robust to small edits; collision-resistant enough for blocking."""
-    from swiftbeaver_spark.llm.dedup import char_shingles
-
-    mins = F.slice(
-        F.array_sort(F.transform(char_shingles(col, shingle_k), lambda s: F.xxhash64(s))),
-        1,
-        num_shingles,
-    )
-    return F.xxhash64(F.concat_ws(",", F.transform(mins, lambda h: h.cast("string"))))
-
-
 def fingerprint_pinned(col: Column, num_shingles: int = 8, shingle_k: int = 16) -> Column:
     """Engine-pinned winnowing fingerprint: md5-hex each k-char shingle
     of the normalized text, keep the num_shingles lexicographically
     smallest (hex sort == 128-bit numeric sort), md5 the joined mins.
-    Same blocking semantics as `fingerprint` but every step — normalize,
-    shingle, md5, sort, slice, concat — replays verbatim in ANSI SQL /
-    DuckDB, so oracle gates can hash-match the fingerprints themselves
-    rather than just downstream pair identities. Use `fingerprint`
-    (xxhash64, one codegen pass, no hex materialization) in production
-    paths; this variant exists for cross-engine verification and costs
-    one md5 per shingle."""
+    Robust to small edits; collision-resistant enough for blocking.
+    Every step — normalize, shingle, md5, sort, slice, concat — replays
+    verbatim in ANSI SQL / DuckDB, so oracle gates can hash-match the
+    fingerprints themselves rather than just downstream pair
+    identities, at the cost of one md5 per shingle."""
     from swiftbeaver_spark.llm.dedup import char_shingles
 
     mins = F.slice(

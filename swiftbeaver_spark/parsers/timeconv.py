@@ -64,12 +64,6 @@ def unix_micros_to_timestamp(col: Column) -> Column:
     return F.when(col > 0, ntz_from_unix_micros(col))
 
 
-def unix_seconds_to_timestamp(col: Column) -> Column:
-    """Firefox cookie expiry: seconds -> TIMESTAMP_NTZ
-    (reference src/parsers/sqlite_db.rs:412-413)."""
-    return F.when(col > 0, ntz_from_unix_micros(col.cast("long") * F.lit(1_000_000)))
-
-
 def python_webkit_to_datetime(value: int):
     """Python-side variant for page recovery plausibility checks."""
     from datetime import datetime, timedelta, timezone

@@ -19,7 +19,6 @@ from swiftbeaver_spark.llm.multimodal import extract_media_meta, fake_feature
 from swiftbeaver_spark.llm.similarity import brute_force_topk, lsh_topk
 from swiftbeaver_spark.llm.text import (
     detect_language,
-    fingerprint,
     quality_features,
     token_count_bpe_like,
     token_count_whitespace,
@@ -264,15 +263,6 @@ def test_token_counts(spark):
     ).collect()[0]
     assert r.ws == 6
     assert r.bpe >= r.ws  # subword count >= word count
-
-
-def test_fingerprint_stability(spark):
-    df = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog " * 4)], ["id", "text"]
-    )
-    a = df.select(fingerprint(F.col("text")).alias("fp")).collect()[0].fp
-    b = df.select(fingerprint(F.col("text")).alias("fp")).collect()[0].fp
-    assert a == b
 
 
 def test_fingerprint_pinned_blocking(spark):
@@ -1959,14 +1949,16 @@ def test_mp3_walk_id3v24_footer_and_mixed_rates():
 
 
 def test_semantic_dedup_arrow_kernel_matches_expr(spark):
-    """kernel='arrow' (blockwise numpy gram per cell) must reproduce the
-    expression kernel row-for-row — including the HALF_UP rounding and
-    the keep-the-edge-points drop policy — on the gated q122
-    configuration (planted exact dups included)."""
+    """semantic_dedup (arrow matmul assignment + blockwise numpy gram
+    per cell) must reproduce the all-Catalyst oracle row-for-row —
+    including the HALF_UP rounding and the keep-the-edge-points drop
+    policy — on the gated q122 configuration (planted exact dups
+    included)."""
     from pyspark.sql import functions as F
 
     import __spark_entry__ as em
     from swiftbeaver_spark.llm.similarity import md5_centroids, semantic_dedup
+    from tests.oracles.semdedup import semantic_dedup_expr
 
     emb = em._t(spark, "/root/testdata/sf0.001", "embeddings").select(
         "vec_id", "embedding"
@@ -1977,22 +1969,10 @@ def test_semantic_dedup_arrow_kernel_matches_expr(spark):
     )
     corpus = emb.unionByName(planted)
     cents = md5_centroids(em.SEMDEDUP_NLIST, 64, tag="semdedup")
-    expr_rows = sorted(map(tuple, semantic_dedup(corpus, cents).collect()))
-    arrow_rows = sorted(
-        map(tuple, semantic_dedup(corpus, cents, kernel="arrow").collect())
-    )
+    expr_rows = sorted(map(tuple, semantic_dedup_expr(corpus, cents).collect()))
+    arrow_rows = sorted(map(tuple, semantic_dedup(corpus, cents).collect()))
     assert expr_rows == arrow_rows
     assert any(r[3] for r in arrow_rows)  # the planted dups actually drop
-    # full production form (gated q122): arrow assignment + arrow gram
-    full_arrow = sorted(
-        map(
-            tuple,
-            semantic_dedup(
-                corpus, cents, kernel="arrow", assign="arrow"
-            ).collect(),
-        )
-    )
-    assert expr_rows == full_arrow
 
 
 def test_assign_cells_arrow_degenerate_vectors_are_null(spark):
@@ -2021,6 +2001,35 @@ def test_assign_cells_arrow_degenerate_vectors_are_null(spark):
     }
     assert rows[0] is None and rows[2] is None  # NULL, never NaN
     assert rows[1] is not None and rows[1] == rows[1]  # real value, not NaN
+
+
+def test_semantic_dedup_degenerate_vectors_null_at_any_budget(spark, monkeypatch):
+    """A zero-norm or NaN-valued embedding gets a NULL centroid_cos and
+    is never dropped, whether centroid_cos comes from the sub-budget
+    Catalyst fold or from the assignment matmul (budget forced to 1):
+    the operator's output must not depend on nlist x dim. An unguarded
+    fold raises DIVIDE_BY_ZERO on the zero vector under ANSI mode."""
+    import swiftbeaver_spark.llm.similarity as S
+
+    cents = S.md5_centroids(4, 8, tag="semdedup")
+    emb = spark.createDataFrame(
+        [
+            (0, [0.0] * 8),
+            (1, [float("nan")] + [1.0] * 7),
+            (2, [1.0, 0.5, -0.25, 0.75, -1.0, 0.5, 0.25, -0.5]),
+            (3, [2.0, 1.0, -0.5, 1.5, -2.0, 1.0, 0.5, -1.0]),  # 2x of 2
+            (4, [-1.0, 0.25, 1.0, -0.5, 0.75, 0.5, -0.25, 1.0]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    want = sorted(map(tuple, S.semantic_dedup(emb, cents).collect()))
+    monkeypatch.setattr(S, "_CENTROID_LITERAL_BUDGET", 1)
+    got = sorted(map(tuple, S.semantic_dedup(emb, cents).collect()))
+    assert got == want
+    rows = {r[0]: r for r in got}
+    for vid in (0, 1):
+        assert rows[vid][2] == "null" and rows[vid][3] is False, rows[vid]
+    assert rows[3][3] is True and rows[2][3] is False  # the scaled copy drops
 
 
 def test_assign_cells_arrow_matches_expr(spark):
@@ -2256,18 +2265,14 @@ def test_semantic_dedup_arrow_ccos_over_budget_matches_expr(spark, monkeypatch):
     want = sorted(
         map(
             tuple,
-            S.semantic_dedup(
-                emb, cents, threshold=0.95, kernel="arrow", assign="arrow"
-            ).collect(),
+            S.semantic_dedup(emb, cents, threshold=0.95).collect(),
         )
     )
     monkeypatch.setattr(S, "_CENTROID_LITERAL_BUDGET", 1)
     got = sorted(
         map(
             tuple,
-            S.semantic_dedup(
-                emb, cents, threshold=0.95, kernel="arrow", assign="arrow"
-            ).collect(),
+            S.semantic_dedup(emb, cents, threshold=0.95).collect(),
         )
     )
     assert got == want and len(got) == 500

@@ -338,14 +338,12 @@ def test_bitext_mining_no_cartesian(spark):
     tgt = emb.where("label = 1").selectExpr(
         "vec_id AS y_id", "CAST(embedding AS array<double>) AS yv"
     )
-    for assign in ("expr", "arrow"):  # arrow = the gated q157 path
-        lazy = bitext_mine_ivf(
-            src, tgt, md5_centroids(8, 64, tag="ivfpqcent"), eager=False,
-            assign=assign,
-        )
-        plan = _formatted(lazy)
-        assert "CartesianProduct" not in plan, plan
-        assert "BroadcastNestedLoopJoin" not in plan, plan
+    lazy = bitext_mine_ivf(
+        src, tgt, md5_centroids(8, 64, tag="ivfpqcent"), eager=False
+    )
+    plan = _formatted(lazy)
+    assert "CartesianProduct" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
 def test_mmr_candidates_ivf_pruned(spark):
@@ -359,16 +357,12 @@ def test_mmr_candidates_ivf_pruned(spark):
     q = emb.where("vec_id < 3").selectExpr(
         "vec_id AS query_id", "vec AS query_vec"
     )
-    for assign in ("expr", "arrow"):  # arrow = the gated q160 path
-        plan = _formatted(
-            ivf_candidates(
-                emb, q, md5_centroids(8, 64, tag="ivfpqcent"), nprobe=3,
-                assign=assign,
-            )
-        )
-        assert "CartesianProduct" not in plan, plan
-        assert "BroadcastNestedLoopJoin" not in plan, plan
-        assert "BroadcastHashJoin" in plan, plan
+    plan = _formatted(
+        ivf_candidates(emb, q, md5_centroids(8, 64, tag="ivfpqcent"), nprobe=3)
+    )
+    assert "CartesianProduct" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert "BroadcastHashJoin" in plan, plan
 
 
 def test_equidepth_histogram_global_window_only_on_blocks(spark):
@@ -420,7 +414,7 @@ def test_simhash_pairs_no_distinct_aggregate(spark):
 
 
 def test_semantic_dedup_arrow_single_cell_shuffle(spark):
-    """q122 production shape (arrow assign + arrow gram): assignment is
+    """q122 shape (arrow assign + arrow gram): assignment is
     a map-only Python stage (no join against a centroid table), the
     in-cell stage is one hash shuffle on `cell` into applyInPandas, and
     no cartesian/nested-loop node exists anywhere."""
@@ -429,9 +423,7 @@ def test_semantic_dedup_arrow_single_cell_shuffle(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
         "vec_id", "embedding"
     )
-    out = semantic_dedup(
-        emb, md5_centroids(16, 64, tag="semdedup"), kernel="arrow", assign="arrow"
-    )
+    out = semantic_dedup(emb, md5_centroids(16, 64, tag="semdedup"))
     plan = _formatted(out)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan

@@ -472,13 +472,14 @@ def test_bpe_learn_and_tokenize_match_reference(spark, docs, num_merges):
 @_settings
 def test_semantic_dedup_arrow_equals_expr_random_vectors(spark, seed, n, dim, nlist):
     """The arrow kernels (matmul assignment + blockwise gram) must
-    reproduce the expression forms row-for-row on RANDOM embeddings —
+    reproduce the expression oracle row-for-row on RANDOM embeddings —
     an active search for HALF_UP knife-edge divergence between BLAS
     and the Catalyst fold beyond the fixed corpora (planted exact
     duplicates included, so the drop policy path is always exercised)."""
     import numpy as np
 
     from swiftbeaver_spark.llm.similarity import md5_centroids, semantic_dedup
+    from tests.oracles.semdedup import semantic_dedup_expr
 
     rng = np.random.default_rng(seed)
     vecs = rng.normal(size=(n, dim)).round(3)
@@ -487,13 +488,8 @@ def test_semantic_dedup_arrow_equals_expr_random_vectors(spark, seed, n, dim, nl
              for i, v in enumerate(vecs[: max(1, n // 4)])]  # scaled dups
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cents = md5_centroids(nlist, dim, tag="semdedup")
-    expr = sorted(map(tuple, semantic_dedup(emb, cents).collect()))
-    arrow = sorted(
-        map(
-            tuple,
-            semantic_dedup(emb, cents, kernel="arrow", assign="arrow").collect(),
-        )
-    )
+    expr = sorted(map(tuple, semantic_dedup_expr(emb, cents).collect()))
+    arrow = sorted(map(tuple, semantic_dedup(emb, cents).collect()))
     assert expr == arrow
     assert any(r[3] for r in arrow)  # the planted dups drop
 

@@ -1,60 +1,28 @@
-"""Generalized sweep-index parity (round 12): bzip2 end-marker and
-gzip next-member-magic carves over a precollected per-bucket index
-(collect_magic_positions + first_candidate) must be bit-identical to
-the per-hit scan_forward sweeps on every geometry — the same contract
-tests/test_zip_eocd_index.py pins for zip's EOCD index — and the
-end-to-end evidence carve path must agree with the per-hit path when
-the sweep branch handles bzip2/gzip hits.
+"""Sweep-bound carve handlers and the evidence carve's sweep branch.
+
+bzip2 (end marker) and gzip (next-member magic) carve per hit through
+scan_forward: these tests pin the handlers' cut, truncation and window
+rules. zip is the only family carve_hits_with_evidence sweeps through
+a shared per-bucket index (_SWEEP_FAMILIES); the end-to-end test pins
+that branch against the per-hit path on a planted image that also
+carries bzip2/gzip hits, which must pass through unchanged.
 """
 
 from __future__ import annotations
 
 import bz2
 import gzip as gzip_mod
-import random
 
-import pytest
-
-from swiftbeaver_spark.carvers.archives import (
-    _BZIP2_END,
-    _GZIP_MAGIC,
-    carve_bzip2,
-    carve_gzip,
-)
-from swiftbeaver_spark.carvers.base import (
-    BytesReader,
-    collect_magic_positions,
-    first_candidate,
-    scan_forward,
-)
+from swiftbeaver_spark.carvers.archives import _BZIP2_END, carve_bzip2, carve_gzip
+from swiftbeaver_spark.carvers.base import BytesReader
 
 
-def _outcome_tuple(o):
-    if o is None:
-        return None
-    return (o.end, o.validated, o.truncated, tuple(o.errors), o.file_type, o.extension)
+def _bzip2(data: bytes, offset: int, max_size: int):
+    return carve_bzip2(BytesReader(data), offset, max_size)
 
 
-def _both_bzip2(data: bytes, offset: int, max_size: int):
-    reader = BytesReader(data)
-    scanned = carve_bzip2(reader, offset, max_size)
-    cands = collect_magic_positions(
-        reader, offset, min(offset + max_size, len(data)), _BZIP2_END
-    )
-    indexed = carve_bzip2(reader, offset, max_size, end_candidates=cands)
-    assert _outcome_tuple(scanned) == _outcome_tuple(indexed)
-    return scanned
-
-
-def _both_gzip(data: bytes, offset: int, max_size: int):
-    reader = BytesReader(data)
-    scanned = carve_gzip(reader, offset, max_size)
-    cands = collect_magic_positions(
-        reader, offset, min(offset + max_size, len(data)), _GZIP_MAGIC
-    )
-    indexed = carve_gzip(reader, offset, max_size, next_candidates=cands)
-    assert _outcome_tuple(scanned) == _outcome_tuple(indexed)
-    return scanned
+def _gzip(data: bytes, offset: int, max_size: int):
+    return carve_gzip(BytesReader(data), offset, max_size)
 
 
 def test_bzip2_aligned_end_marker_identical():
@@ -62,24 +30,24 @@ def test_bzip2_aligned_end_marker_identical():
     # src/carve/bzip2.rs — real streams are bit-packed, so the aligned
     # marker is a best-effort cut); plant one explicitly
     data = b"\x00" * 40 + b"BZh9" + b"\x11" * 300 + _BZIP2_END + b"\xcc" * 200
-    out = _both_bzip2(data, 40, 4096)
+    out = _bzip2(data, 40, 4096)
     assert out is not None and out.validated
     assert out.end == 40 + 4 + 300 + len(_BZIP2_END)
 
 
 def test_bzip2_no_end_marker_truncates_identically():
     data = b"\x00" * 16 + b"BZh9" + b"\x11" * 500
-    out = _both_bzip2(data, 16, 128)
+    out = _bzip2(data, 16, 128)
     assert out is not None and out.truncated
 
 
 def test_bzip2_marker_past_window_excluded():
     data = b"BZh9" + b"\x00" * 100 + _BZIP2_END + b"\x00" * 50
-    # window ends mid-marker: both paths must exclude it
-    out = _both_bzip2(data, 0, 104 + 3)
+    # window ends mid-marker: the marker is excluded
+    out = _bzip2(data, 0, 104 + 3)
     assert out is not None and out.truncated
-    # window covering the marker: both paths cut there
-    out2 = _both_bzip2(data, 0, 104 + len(_BZIP2_END))
+    # window covering the marker: the carve cuts there
+    out2 = _bzip2(data, 0, 104 + len(_BZIP2_END))
     assert out2 is not None and out2.validated
 
 
@@ -87,7 +55,7 @@ def test_gzip_next_member_identical():
     g1 = gzip_mod.compress(b"first member " * 30)
     g2 = gzip_mod.compress(b"second member")
     data = b"\x00" * 8 + g1 + g2 + b"\x00" * 64
-    out = _both_gzip(data, 8, len(data))
+    out = _gzip(data, 8, len(data))
     assert out is not None and out.validated
     assert out.end == 8 + len(g1)  # cut at the next member's magic
 
@@ -95,32 +63,14 @@ def test_gzip_next_member_identical():
 def test_gzip_no_next_magic_runs_to_eof_identically():
     g1 = gzip_mod.compress(b"only member")
     data = b"\x00" * 4 + g1 + b"\x00" * 32
-    out = _both_gzip(data, 4, len(data))
+    out = _gzip(data, 4, len(data))
     assert out is not None and out.validated and out.end == len(data)
 
 
-def test_collect_matches_scan_forward_fuzzed():
-    """collect_magic_positions + first_candidate == scan_forward for
-    every (search_start, max_end) window over fuzzed magic layouts."""
-    rng = random.Random(7)
-    for _ in range(50):
-        data = bytearray(rng.randbytes(2000))
-        for _ in range(rng.randint(0, 8)):
-            p = rng.randrange(0, 1990)
-            data[p : p + len(_BZIP2_END)] = _BZIP2_END
-        reader = BytesReader(bytes(data))
-        cands = collect_magic_positions(reader, 0, len(data), _BZIP2_END)
-        for _ in range(10):
-            s = rng.randrange(0, len(data))
-            e = rng.randrange(s, len(data) + 10)
-            got = first_candidate(cands, s, e, len(_BZIP2_END))
-            want = scan_forward(reader, s, _BZIP2_END, e)
-            assert got == want, (s, e, got, want)
-
-
 def test_evidence_path_sweep_branch_parity(spark, tmp_path):
-    """End-to-end: the bucketed sweep branch (bzip2+gzip+zip) equals
-    the per-hit path on a planted image, including under one-row Arrow
+    """End-to-end: the bucketed sweep branch (zip, the only swept
+    family; bzip2/gzip hits carve per hit alongside it) equals the
+    per-hit path on a planted image, including under one-row Arrow
     batches (maximal bucket splitting across batches)."""
     import dataclasses
 

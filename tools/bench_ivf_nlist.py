@@ -7,8 +7,8 @@ thumb, not a measurement on this engine. This sweep measures BOTH
 production shapes so the rule can be pinned into `auto_nlist`:
 
 1. **dedup shape** (semantic_dedup / bitext / knn-graph — queries ARE
-   the corpus, nprobe=1): full semantic_dedup(kernel='arrow',
-   assign='arrow') wall across an nlist grid. Cost model under test:
+   the corpus, nprobe=1): full semantic_dedup wall across an nlist
+   grid. Cost model under test:
    assignment ~ n * nlist * dim flops (one matmul per batch against
    the centroid matrix — grows WITH nlist), in-cell gram ~ n * occ *
    dim flops with occ = n/nlist (shrinks with nlist). Flop balance
@@ -122,8 +122,6 @@ def main() -> None:
                     cents,
                     vec_col="vec",
                     threshold=0.9,
-                    kernel="arrow",
-                    assign="arrow",
                 )
                 n_drop = sd.where(F.col("dropped")).count()
                 wall = round(time.time() - t0, 3)
@@ -138,7 +136,7 @@ def main() -> None:
             t0 = time.time()
             cand = ivf_candidates(
                 corpus, sample_q, cents, nprobe=NPROBE,
-                broadcast_queries=True, assign="arrow",
+                broadcast_queries=True,
             )
             w = Window.partitionBy("query_id").orderBy(
                 F.desc("cosine"), F.asc("vec_id")

@@ -168,12 +168,11 @@ def main() -> None:
         )
         results[name] = row
         print(json.dumps({name: row}))
-    # q122's measured ceiling + its two levers, demonstrated: the gated
-    # expr kernel at the oracle-pinned nlist=16 is quadratic in cell
-    # occupancy (the main-loop row); the production configuration is
-    # the Arrow gram kernel (verified-identical output), measured here
-    # at both scales. Skipped under an argv filter that doesn't name it
-    # (a partial re-measure should run only what it asked for).
+    # q122's operator alone (Arrow matmul assignment + in-cell Arrow
+    # gram, no planted rows) at the oracle-pinned nlist=16, measured at
+    # both scales: pair work is quadratic in cell occupancy. Skipped
+    # under an argv filter that doesn't name it (a partial re-measure
+    # should run only what it asked for).
     if run_arrow:
         from swiftbeaver_spark.llm.similarity import md5_centroids, semantic_dedup
 
@@ -181,7 +180,7 @@ def main() -> None:
         row = {}
         for label, sf_dir in (("sf0.1", SF01), ("sf1", SF1)):
             emb = E._t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-            df = semantic_dedup(emb, cents, threshold=0.95, kernel="arrow")
+            df = semantic_dedup(emb, cents, threshold=0.95)
             t0 = time.time()
             n = len(df.collect())
             wall = round(time.time() - t0, 3)
