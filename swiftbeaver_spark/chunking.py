@@ -88,6 +88,27 @@ def keep_parents(
     return plan
 
 
+def kept_extent(
+    evidence_len: int, cfg: EngineConfig, resume_from: int | None = None
+) -> range:
+    """Byte range [start, stop) of the parent chunks keep_parents keeps
+    over `evidence_len` bytes, as driver-side arithmetic: its len() is
+    their summed valid_length (a run's bytes_scanned) and it spans
+    ceil(len / chunk_size) chunks (chunks_processed), with no Spark
+    job. `stop` is not raised to `start`, so an empty extent still ends
+    where the limits cut (scanned_end)."""
+    cs = cfg.chunk_size
+    if cs <= 0:
+        raise ValueError("chunk_size must be positive")
+    stop = -(-evidence_len // cs)
+    if cfg.max_bytes is not None:
+        stop = min(stop, -(-int(cfg.max_bytes) // cs))
+    if cfg.max_chunks is not None:
+        stop = min(stop, int(cfg.max_chunks))
+    start = -(-int(resume_from) // cs) if resume_from else 0
+    return range(max(start, 0) * cs, min(max(stop, 0) * cs, evidence_len))
+
+
 def scanned_end(
     evidence_len: int, cfg: EngineConfig, resume_from: int | None = None
 ) -> int:
@@ -95,13 +116,7 @@ def scanned_end(
     `evidence_len` and never below `resume_from`: the checkpoint
     watermark of a run under cfg.max_bytes / cfg.max_chunks, so a
     limit-cut run does not claim evidence it never scanned."""
-    parents = math.ceil(evidence_len / cfg.chunk_size)
-    if cfg.max_bytes is not None:
-        parents = min(parents, math.ceil(cfg.max_bytes / cfg.chunk_size))
-    if cfg.max_chunks is not None:
-        parents = min(parents, cfg.max_chunks)
-    end = min(parents * cfg.chunk_size, evidence_len)
-    return max(end, resume_from or 0)
+    return max(kept_extent(evidence_len, cfg, resume_from).stop, resume_from or 0)
 
 
 def chunks_from_file(

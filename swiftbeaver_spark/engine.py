@@ -10,7 +10,7 @@ channels. Spark trace of the same plan (SURVEY §3.2):
     carved = carve(hits)                       # mapInPandas per hit (persisted)
     browser_* = parse(carved sqlite)           # one sqlite3-in-UDF pass per DB
                                                #   (persisted) + joins
-    sinks: parquet/jsonl/csv per table
+    sinks: parquet/jsonl/csv per table, then the run_summary row
 
 Thread boundaries become stage boundaries; bounded-channel
 backpressure becomes Spark scheduling; the single-writer metadata
@@ -26,7 +26,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from swiftbeaver_spark import chunking
+from swiftbeaver_spark import chunking, schemas
 from swiftbeaver_spark.carve_op import carve_hits_with_evidence
 from swiftbeaver_spark.config import DEFAULT_CONFIG, EngineConfig
 from swiftbeaver_spark.strings_scan import scan_string_artefacts
@@ -47,32 +47,13 @@ class RunResult:
     # their lifetime — repeated runs in one session leak executor
     # storage unless unpersist() frees them (ADVICE r9)
     persisted: list[DataFrame] = field(default_factory=list)
+    # the run summary's scan counters (chunking.kept_extent): known
+    # on the driver before any job runs
+    bytes_scanned: int = 0
+    chunks_processed: int = 0
 
     def __getitem__(self, name: str) -> DataFrame:
         return self.tables[name]
-
-    def summary_from_counts(self, counts: dict[str, int]) -> DataFrame:
-        """run_summary from per-stage row counts the CALLER itself
-        produced (one per full stage action — write_tables records the
-        count of every stage write via a fresh write-time Observation),
-        so a partial pre-drive between run() and the write cannot
-        poison it (ADVICE r10 medium), and no consumed subtree is
-        re-derived. A stage with no count reads 0."""
-
-        def n(name: str) -> int:
-            return int(counts.get(name, 0))
-
-        return self.tables["chunks"].agg(
-            F.coalesce(F.sum("valid_length"), F.lit(0)).cast("long").alias("bytes_scanned"),
-            F.count("*").alias("chunks_processed"),
-        ).select(
-            "bytes_scanned",
-            "chunks_processed",
-            F.lit(n("hits")).cast("long").alias("hits_found"),
-            F.lit(n("carved_files")).cast("long").alias("files_carved"),
-            F.lit(n("string_spans")).cast("long").alias("string_spans"),
-            F.lit(n("string_artefacts")).cast("long").alias("artefacts_extracted"),
-        )
 
     def unpersist(self) -> None:
         """Free the stage caches run() created. Call once every
@@ -123,17 +104,15 @@ class Engine:
         anyway, so carved_files is the same.
 
         `resume_from` (a checkpoint's next_offset) skips every parent
-        chunk that starts before it: the scan, the `chunks` table and so
-        the run summary cover the rest.
+        chunk that starts before it: the scan and the run's
+        bytes_scanned / chunks_processed cover the rest.
 
         `cache_intermediates=True` persists each stage output
         (MEMORY_AND_DISK — recomputable on executor loss, unlike
         localCheckpoint) so multi-consumer reads evaluate each stage
-        ONCE: the reference's single pass computes its run counters
-        for free, but the Spark analog's run_summary otherwise
-        re-derives every consumed subtree. The setting for full runs
-        that drive several tables (write_tables, the stress bench);
-        OFF by default so single-table uses stay cache-free.
+        ONCE. The setting for runs whose tables are driven more than
+        once (the stress bench, perfbench's traced run); OFF by default
+        so single-table uses stay cache-free.
 
         Always persisted: the raw metadata frame (RunResult.persisted[0])
         and, when sqlite is among the types, the carve frame and the
@@ -146,8 +125,7 @@ class Engine:
 
         cfg = self.cfg
         total = evidence_length(evidence_path)
-        plan = chunking.plan_chunks(self.spark, total, cfg.chunk_size, cfg.overlap)
-        chunks = chunking.keep_parents(plan, cfg, resume_from)
+        extent = chunking.kept_extent(total, cfg, resume_from)
         scans = scan_all_from_evidence(
             self.spark, evidence_path, cfg, resume_from=resume_from
         )
@@ -164,7 +142,7 @@ class Engine:
             # global cap is sequential semantics in the reference
             # (src/pipeline/mod.rs:328-416); distributed approximation
             carved = carved.orderBy("global_start").limit(cfg.max_files)
-        tables = {"chunks": chunks, "hits": scans["hits"], "carved_files": carved}
+        tables = {"hits": scans["hits"], "carved_files": carved}
         if cfg.enable_string_scan:
             tables["string_spans"] = scans["string_spans"]
             tables["string_artefacts"] = scan_string_artefacts(scans["string_spans"], cfg)
@@ -205,35 +183,8 @@ class Engine:
             ).persist(StorageLevel.MEMORY_AND_DISK)
             persisted.append(parsed)
             tables.update(browser_tables(parsed, recovery))
-        # the lazy run_summary DataFrame stays the standalone form
-        # (single-table users); write_tables counts its own writes
-        tables["run_summary"] = self.run_summary(tables)
-        return RunResult(tables, persisted)
-
-    def run_summary(self, tables: dict[str, DataFrame]) -> DataFrame:
-        """Single-row counters table (reference src/pipeline/mod.rs:256-264,
-        434-448). Declarative aggregation — Catalyst folds these into
-        partial aggregates per table."""
-        chunks = tables["chunks"]
-        counts = chunks.agg(
-            F.coalesce(F.sum("valid_length"), F.lit(0)).cast("long").alias("bytes_scanned"),
-            F.count("*").alias("chunks_processed"),
-        )
-        hits_n = tables["hits"].agg(F.count("*").alias("hits_found"))
-        carved_n = tables["carved_files"].agg(F.count("*").alias("files_carved"))
-        spans = tables.get("string_spans")
-        spans_n = (
-            spans.agg(F.count("*").alias("string_spans"))
-            if spans is not None
-            else self.spark.range(1).select(F.lit(0).cast("long").alias("string_spans"))
-        )
-        arts = tables.get("string_artefacts")
-        arts_n = (
-            arts.agg(F.count("*").alias("artefacts_extracted"))
-            if arts is not None
-            else self.spark.range(1).select(F.lit(0).cast("long").alias("artefacts_extracted"))
-        )
-        return counts.crossJoin(hits_n).crossJoin(carved_n).crossJoin(spans_n).crossJoin(arts_n)
+        chunks = -(-len(extent) // cfg.chunk_size)
+        return RunResult(tables, persisted, len(extent), chunks)
 
 
 def write_tables(
@@ -245,14 +196,14 @@ def write_tables(
     """Sinks (reference src/metadata/{jsonl,csv,parquet}.rs). Parquet is
     the scale path; JSONL/CSV parity formats for the reference's outputs.
 
-    Returns the run_summary row it wrote (as a dict; dryrun writes
-    nothing and returns the row it would have written). The row is
-    built from row counts THIS function's own write actions produced
-    (a fresh write-time Observation per stage write; dryrun uses the
-    count directly) plus one arithmetic chunks aggregate, instead of
-    re-deriving every subtree (the second-evidence-pass hazard, VERDICT
-    r9 task 3); a partial pre-drive between run() and write_tables
-    cannot undercount it (ADVICE r10 medium)."""
+    Writes every table of the run, then the run_summary row (reference
+    src/pipeline/mod.rs:256-264,434-448), and returns that row as a
+    dict (dryrun writes nothing and returns the row it would have
+    written). The row's table counts are the rows THIS function's own
+    write actions produced (a fresh write-time Observation per table;
+    dryrun counts directly), so no subtree is re-derived for them and a
+    partial pre-drive between run() and write_tables cannot undercount
+    them; the scan counters are the run's driver-side ints."""
     from pyspark.sql import Observation
 
     run_id = run_id or make_run_id()
@@ -275,7 +226,7 @@ def write_tables(
         else:
             raise ValueError(f"unknown sink format: {fmt}")
 
-    for name in sorted(n for n in result.tables if n not in ("chunks", "run_summary")):
+    for name in sorted(result.tables):
         df = result.tables[name]
         if fmt == "dryrun":
             # reference DryRun sink (src/metadata/mod.rs:129-171):
@@ -287,9 +238,16 @@ def write_tables(
         # the write action just drove the observed frame end to end
         write_counts[name] = int(obs.get["n"])
 
-    # summary last: its counts come from the stage writes above
-    summary = result.summary_from_counts(write_counts)
-    row = summary.collect()[0]
+    # summary last: its counts come from the writes above
+    row = {
+        "bytes_scanned": result.bytes_scanned,
+        "chunks_processed": result.chunks_processed,
+        "hits_found": write_counts["hits"],
+        "files_carved": write_counts["carved_files"],
+        "string_spans": write_counts.get("string_spans", 0),
+        "artefacts_extracted": write_counts.get("string_artefacts", 0),
+    }
     if fmt != "dryrun":
-        write("run_summary", summary.sparkSession.createDataFrame([row], summary.schema))
-    return row.asDict()
+        spark = result["hits"].sparkSession
+        write("run_summary", spark.createDataFrame([row], schemas.RUN_SUMMARY))
+    return row

@@ -32,6 +32,9 @@ import subprocess
 import tempfile
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import ArrayType
+
+from swiftbeaver_spark import schemas
 
 _JAVA_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "java")
 _JAR_NAME = "sb-kernel.jar"
@@ -54,11 +57,8 @@ _SOURCES = (
     "SubwordUdf.java",
 )
 
-# STRING_SPANS as a DDL fragment (must stay in lockstep with schemas.py)
-_SPAN_ROWS_TYPE = (
-    "array<struct<global_start:bigint,byte_length:int,content:string,"
-    "encoding:string,url_like:boolean,email_like:boolean,phone_like:boolean>>"
-)
+# span rows as a DDL fragment
+_SPAN_ROWS_TYPE = ArrayType(schemas.STRING_SPANS).simpleString()
 
 # entropy window rows (win_start, win_end, entropy) as a DDL fragment
 _ENT_ROWS_TYPE = "array<struct<win_start:bigint,win_end:bigint,entropy:double>>"

@@ -323,9 +323,9 @@ def _auto_segments(max_hamming: int, n_docs: int) -> int:
     extra keep unit widens keys ~64/(k+keep) bits but multiplies table
     count combinatorially — per-doc candidates ~ T * n / 2^bits.
 
-    Measured twice: the round-7 full-pipeline A/B
-    (tools/bench_simhash_layout.py, k=3, identical 326/196689-pair
-    outputs — keep=1/2 tie at 5e3-5e4 docs, keep=3 1.4-5x worse) and
+    Measured twice: the round-7 full-pipeline A/B (SCALE.md "Round-7
+    addendum", k=3, identical 326/196689-pair outputs — keep=1/2 tie
+    at 5e3-5e4 docs, keep=3 1.4-5x worse) and
     the round-8 signatures-only keep-regime sweep
     (tools/bench_simhash_scale100.py, k=3, skew-preserving synthetic
     signatures at 5e4 / 5e5 / 5e6 docs, identical pair sets per size):

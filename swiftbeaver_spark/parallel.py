@@ -11,11 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def spread(
-    df: DataFrame,
-    target: int | None = None,
-    known_partitions: int | None = None,
-) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Repartition `df` to cluster parallelism when it arrives in fewer
     partitions than the cluster has slots.
 
@@ -28,21 +24,14 @@ def spread(
     already exceed the core count and this is a no-op — no shuffle is
     added on the scale path.
 
-    Pass `known_partitions` when the caller already knows the input's
-    partition count arithmetically (e.g. chunks_from_file's task
-    sizing): that avoids touching `.rdd` entirely. Without it, the
-    count comes from df.rdd.getNumPartitions() — fine on scan-stage
+    The count comes from df.rdd.getNumPartitions() — fine on scan-stage
     inputs (file reads, unions of reads), but for a df BEHIND a shuffle
     it reports the pre-AQE count and materializing .rdd can force
-    upstream AQE stages to execute early; there, prefer the explicit
-    hint or decide the repartition at the call site.
+    upstream AQE stages to execute early; there, decide the repartition
+    at the call site.
     """
-    sc = df.sparkSession.sparkContext
-    target = target or sc.defaultParallelism
-    current = known_partitions
-    if current is None:
-        current = _cached_partition_count(df)
-    if current < target:
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if _cached_partition_count(df) < target:
         return df.repartition(target)
     return df
 

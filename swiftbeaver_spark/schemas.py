@@ -133,45 +133,3 @@ RUN_SUMMARY = _s(
     _f("string_spans", LongType(), False),
     _f("artefacts_extracted", LongType(), False),
 )
-
-# parquet-enriched artefact tables (reference src/metadata/parquet.rs:917-963)
-ARTEFACTS_URLS = _s(
-    _f("content", StringType(), False),
-    _f("scheme", StringType()),
-    _f("host", StringType()),
-    _f("port", IntegerType()),
-    _f("path", StringType()),
-    _f("query", StringType()),
-    _f("fragment", StringType()),
-    _f("encoding", StringType(), False),
-    _f("global_start", LongType(), False),
-    _f("global_end", LongType(), False),
-    _f("source_kind", StringType(), False),
-    _f("source_detail", StringType(), False),
-    _f("certainty", DoubleType(), False),
-)
-
-ARTEFACTS_EMAILS = _s(
-    _f("content", StringType(), False),
-    _f("local_part", StringType()),
-    _f("domain", StringType()),
-    _f("encoding", StringType(), False),
-    _f("global_start", LongType(), False),
-    _f("global_end", LongType(), False),
-    _f("source_kind", StringType(), False),
-    _f("source_detail", StringType(), False),
-    _f("certainty", DoubleType(), False),
-)
-
-ARTEFACTS_PHONES = _s(
-    _f("content", StringType(), False),
-    _f("phone_raw", StringType(), False),
-    _f("phone_e164", StringType()),
-    _f("country", StringType()),
-    _f("encoding", StringType(), False),
-    _f("global_start", LongType(), False),
-    _f("global_end", LongType(), False),
-    _f("source_kind", StringType(), False),
-    _f("source_detail", StringType(), False),
-    _f("certainty", DoubleType(), False),
-)

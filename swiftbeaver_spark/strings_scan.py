@@ -186,81 +186,3 @@ def scan_string_artefacts(spans: DataFrame, cfg: EngineConfig) -> DataFrame:
             yield pd.DataFrame(rows, columns=_ARTEFACT_COLUMNS)
 
     return spans.where(keep).mapInPandas(extract, schemas.STRING_ARTEFACTS)
-
-
-def enrich_urls(artefacts: DataFrame) -> DataFrame:
-    """URL component split (reference src/metadata/parquet.rs:1635-1688):
-    www.-prefixed URLs are treated as http. Pure Catalyst expressions."""
-    urls = artefacts.where(F.col("artefact_kind") == "Url")
-    full = F.when(
-        F.lower(F.col("content")).startswith("www."), F.concat(F.lit("http://"), F.col("content"))
-    ).otherwise(F.col("content"))
-    return urls.select(
-        "content",
-        F.lower(F.split(full, "://")[0]).alias("scheme"),
-        F.lower(F.parse_url(full, F.lit("HOST"))).alias("host"),
-        F.parse_url(full, F.lit("USERINFO")).alias("_ui"),
-        F.parse_url(full, F.lit("PATH")).alias("path"),
-        F.parse_url(full, F.lit("QUERY")).alias("query"),
-        F.parse_url(full, F.lit("REF")).alias("fragment"),
-        "encoding",
-        "global_start",
-        "global_end",
-    ).withColumn(
-        # reference takes the authority's trailing :digits (rfind after
-        # stripping path/query/fragment), so www.-prefixed URLs and
-        # userinfo@host forms keep their port — extract from `full`'s
-        # authority, not the raw content
-        "port",
-        F.regexp_extract(
-            F.regexp_extract(full, r"^[a-zA-Z]+://([^/?#]*)", 1), r":(\d+)$", 1
-        ).cast("int"),
-    ).select(
-        "content",
-        "scheme",
-        "host",
-        "port",
-        "path",
-        "query",
-        "fragment",
-        "encoding",
-        "global_start",
-        "global_end",
-        F.lit("string_scan").alias("source_kind"),
-        F.lit("span").alias("source_detail"),
-        F.lit(1.0).alias("certainty"),
-    )
-
-
-def enrich_emails(artefacts: DataFrame) -> DataFrame:
-    """local_part/domain split (reference src/metadata/parquet.rs:1691+)."""
-    emails = artefacts.where(F.col("artefact_kind") == "Email")
-    return emails.select(
-        "content",
-        F.substring_index(F.col("content"), "@", 1).alias("local_part"),
-        F.substring_index(F.col("content"), "@", -1).alias("domain"),
-        "encoding",
-        "global_start",
-        "global_end",
-        F.lit("string_scan").alias("source_kind"),
-        F.lit("span").alias("source_detail"),
-        F.lit(1.0).alias("certainty"),
-    )
-
-
-def enrich_phones(artefacts: DataFrame) -> DataFrame:
-    """phone_raw + e164/country placeholders, certainty 1.0
-    (reference src/metadata/parquet.rs:951-963,1591-1631)."""
-    phones = artefacts.where(F.col("artefact_kind") == "Phone")
-    return phones.select(
-        "content",
-        F.col("content").alias("phone_raw"),
-        F.lit(None).cast("string").alias("phone_e164"),
-        F.lit(None).cast("string").alias("country"),
-        "encoding",
-        "global_start",
-        "global_end",
-        F.lit("string_scan").alias("source_kind"),
-        F.lit("span").alias("source_detail"),
-        F.lit(1.0).alias("certainty"),
-    )

@@ -8,6 +8,9 @@ public program function; only the composition lives here, so the
 differentials in tests/ pin the one-pass evidence run against an
 independent scan form (chunk rows, not sub-chunk positioned reads) and
 an independent carve form (bucketed cogroup, not positioned reads).
+Its run summary comes from the same cached chunk table (summed
+valid_length, row count) and one count() per table, not from the
+engine's driver-side arithmetic or write_tables.
 """
 
 from __future__ import annotations
@@ -18,7 +21,7 @@ from pyspark.sql import functions as F
 from swiftbeaver_spark import chunking
 from swiftbeaver_spark.carve_op import carve_hits_with_chunks
 from swiftbeaver_spark.config import EngineConfig
-from swiftbeaver_spark.engine import Engine, RunResult
+from swiftbeaver_spark.engine import RunResult
 from swiftbeaver_spark.fused_scan import scan_all_from_chunks
 from swiftbeaver_spark.source import evidence_length
 from swiftbeaver_spark.strings_scan import scan_string_artefacts
@@ -45,7 +48,7 @@ def chunk_run(
     carved = carve_hits_with_chunks(scans["hits"], chunks, cfg, evidence_len=horizon)
     if cfg.max_files is not None:
         carved = carved.orderBy("global_start").limit(cfg.max_files)
-    tables = {"chunks": chunks, "hits": scans["hits"], "carved_files": carved}
+    tables = {"hits": scans["hits"], "carved_files": carved}
     if cfg.enable_string_scan:
         tables["string_spans"] = scans["string_spans"]
         tables["string_artefacts"] = scan_string_artefacts(scans["string_spans"], cfg)
@@ -57,5 +60,24 @@ def chunk_run(
         recovery = cfg.enable_sqlite_page_recovery
         sqlite = carved.where(F.col("file_type") == "sqlite")
         tables.update(browser_tables(parse_carved_dbs(sqlite, path, recovery), recovery))
-    tables["run_summary"] = Engine(spark, cfg).run_summary(tables)
-    return RunResult(tables, [raw, chunks])
+    scanned, n_chunks = chunks.agg(
+        F.coalesce(F.sum("valid_length"), F.lit(0)), F.count("*")
+    ).first()
+    return RunResult(tables, [raw, chunks], scanned, n_chunks)
+
+
+def summary_row(result: RunResult) -> dict:
+    """The run_summary row `result` must report: its scan counters and
+    one count() per table (0 for a string table the run lacks)."""
+
+    def n(name: str) -> int:
+        return result[name].count() if name in result.tables else 0
+
+    return {
+        "bytes_scanned": result.bytes_scanned,
+        "chunks_processed": result.chunks_processed,
+        "hits_found": n("hits"),
+        "files_carved": n("carved_files"),
+        "string_spans": n("string_spans"),
+        "artefacts_extracted": n("string_artefacts"),
+    }

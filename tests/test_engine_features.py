@@ -16,7 +16,7 @@ from swiftbeaver_spark.engine import Engine, make_run_id, write_tables
 from swiftbeaver_spark.streaming import start_scan_stream
 
 from tests.fixtures import ALL_FIXTURES, insert_bytes
-from tests.oracles.chunk_run import chunk_run
+from tests.oracles.chunk_run import chunk_run, summary_row
 
 CFG = dataclasses.replace(
     DEFAULT_CONFIG,
@@ -82,8 +82,15 @@ def test_resume_skips_scanned_chunks(spark, tmp_path):
         assert resumed == mid == {o for o in offsets if o >= resume_offset}
         carved = {c.global_start for c in runs[1]["carved_files"].collect()}
         assert carved == resumed
-        [summary] = runs[1]["run_summary"].collect()
-        assert summary.bytes_scanned == len(evidence) - resume_offset
+        summary = write_tables(runs[1], os.devnull, fmt="dryrun")
+        assert summary["bytes_scanned"] == len(evidence) - resume_offset
+        # chunks 2, 3 and 4 of five; the mid-chunk resume skips chunk 1
+        assert summary["chunks_processed"] == 3
+        assert (runs[2].bytes_scanned, runs[2].chunks_processed) == (
+            summary["bytes_scanned"],
+            3,
+        )
+        assert (runs[0].bytes_scanned, runs[0].chunks_processed) == (len(evidence), 5)
     finally:
         for r in runs:
             r.unpersist()
@@ -135,7 +142,8 @@ def test_chunk_table_run_unpersist_frees_caches(spark, tmp_path, mode):
     before = rdds().size()
     res = chunk_run(spark, path, CFG, data)
     assert res["carved_files"].count() == 2
-    assert res.persisted[1] is res["chunks"] and res["chunks"].is_cached
+    chunks = res.persisted[1]
+    assert "data" in chunks.columns and chunks.is_cached
     assert rdds().size() >= before + 2  # at least the raw frame and the chunks
     res.unpersist()
     assert not any(df.is_cached for df in res.tables.values())
@@ -273,59 +281,6 @@ def test_with_types_filter():
     assert cfg.ole_allowed_kinds == ("xls",)
     with pytest.raises(ValueError):
         DEFAULT_CONFIG.with_types(["nope"])
-
-
-def test_category_sink_layout(spark, tmp_path):
-    import dataclasses as _dc
-
-    from swiftbeaver_spark.sinks import write_category_tables
-
-    evidence, offsets = _evidence_with_jpegs(2)
-    path = str(tmp_path / "ev.raw")
-    with open(path, "wb") as fh:
-        fh.write(evidence)
-    cfg = _dc.replace(CFG, enable_string_scan=True, enable_entropy_detection=True)
-    result = Engine(spark, cfg).run(evidence_path=path)
-    written = write_category_tables(result.tables, str(tmp_path / "cat"), run_id="r1")
-    assert "files_jpeg" in written and "files_other" in written
-    assert {"artefacts_urls", "artefacts_emails", "artefacts_phones"} <= set(written)
-    jpeg_rows = spark.read.parquet(str(tmp_path / "cat/files_jpeg")).collect()
-    assert {r.global_start for r in jpeg_rows} == set(offsets)
-    assert spark.read.parquet(str(tmp_path / "cat/files_other")).count() == 0
-
-
-def test_category_sink_unpersists_caches(spark, tmp_path):
-    """Cache lifecycle: write_category_tables caches carved/artefact
-    tables to amortize its category scans, but must release them before
-    returning — a long-lived session writing many runs must not
-    accumulate cached tables (VERDICT r6 nit 1)."""
-    import dataclasses as _dc
-
-    from swiftbeaver_spark.sinks import write_category_tables
-
-    evidence, _ = _evidence_with_jpegs(2)
-    path = str(tmp_path / "ev.raw")
-    with open(path, "wb") as fh:
-        fh.write(evidence)
-    cfg = _dc.replace(CFG, enable_string_scan=True, enable_entropy_detection=True)
-    result = Engine(spark, cfg).run(evidence_path=path)
-    spark.catalog.clearCache()
-    # DELTA assertion, not absolute-zero: the session is shared across
-    # the suite and an unrelated earlier test's lazily-evicted cache
-    # can still sit in the registry under host load (observed once in
-    # a full-suite run) — what this test owns is that the SINK adds no
-    # new persistent RDD past its return.
-    jsc = spark.sparkContext._jsc
-
-    def rdd_ids():  # java Map keys, iterated (never parse toString())
-        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
-
-    before = rdd_ids()
-    write_category_tables(result.tables, str(tmp_path / "cat2"), run_id="r2")
-    # unpersist(blocking=False) still removes the RDD from the cache
-    # manager registry synchronously; only block eviction is lazy.
-    after = rdd_ids()
-    assert after <= before, f"cached tables leaked past the sink: {after - before}"
 
 
 def test_sessionize_stream_stateful(spark, tmp_path):
@@ -562,9 +517,10 @@ def test_run_cache_intermediates_same_tables(spark, tmp_path):
 
 def test_observed_summary_matches_run_summary(spark, tmp_path):
     """The run_summary row write_tables returns (built from its own
-    write counts, no subtree re-derivation) must equal the lazy
-    run_summary aggregate; and the cached-run unpersist() helper frees
-    the tracked frames."""
+    write counts and the run's driver-side scan counters) equals the
+    chunk-table oracle's row (summed chunk table, one count() per
+    table) and the row it wrote; and the cached-run unpersist() helper
+    frees the tracked frames."""
     import dataclasses
 
     from tests.fixtures import mk_jpeg
@@ -572,7 +528,7 @@ def test_observed_summary_matches_run_summary(spark, tmp_path):
     from swiftbeaver_spark.engine import Engine, write_tables
 
     evidence = bytearray(b"\x00" * 4096)
-    evidence[100:130] = b"text with https://example.com " 
+    evidence[100:130] = b"text with https://example.com "
     blob = mk_jpeg()
     evidence[1024 : 1024 + len(blob)] = blob
     path = str(tmp_path / "ev.raw")
@@ -583,25 +539,31 @@ def test_observed_summary_matches_run_summary(spark, tmp_path):
         file_types=tuple(ft for ft in TEST_CFG.file_types if ft.type_id == "jpeg"),
         enable_string_scan=True,
     )
-    eng = Engine(spark, cfg)
-    run = eng.run(evidence_path=path, cache_intermediates=True)
+    oracle = chunk_run(spark, path, cfg)
     try:
-        lazy = run["run_summary"].collect()[0].asDict()
-        written = write_tables(run, str(tmp_path / "out"), run_id="r1")
-        assert written == lazy
-        assert lazy["hits_found"] >= 1 and lazy["string_spans"] >= 1
+        expected = summary_row(oracle)
+    finally:
+        oracle.unpersist()
+    assert expected["bytes_scanned"] == len(evidence)
+    assert expected["hits_found"] >= 1 and expected["string_spans"] >= 1
+    run = Engine(spark, cfg).run(evidence_path=path, cache_intermediates=True)
+    out = str(tmp_path / "out")
+    try:
+        written = write_tables(run, out, run_id="r1")
+        assert written == expected
     finally:
         run.unpersist()
     assert not run.persisted
+    got = spark.read.parquet(f"{out}/run_summary").drop("run_id").collect()
+    assert [r.asDict() for r in got] == [expected]
 
 
 def test_write_tables_summary_immune_to_partial_predrive(spark, tmp_path):
     """ADVICE r10 medium: a partial pre-drive between run() and
-    write_tables (take/limit short-circuits the scan) fills the
-    run()-time observations with an UNDERCOUNT. write_tables must
-    still write the correct run_summary — it builds the summary from
-    row counts its own write actions produced, never from the
-    poisoned run()-time observations."""
+    write_tables (take/limit short-circuits the scan) must not change
+    the run_summary row write_tables writes — it builds the row from
+    row counts its own write actions produced. The expected row is the
+    chunk-table oracle's (summed chunk table, one count() per table)."""
     import dataclasses
 
     from tests.fixtures import mk_jpeg
@@ -621,11 +583,15 @@ def test_write_tables_summary_immune_to_partial_predrive(spark, tmp_path):
         overlap=512,
         file_types=tuple(ft for ft in TEST_CFG.file_types if ft.type_id == "jpeg"),
     )
+    oracle = chunk_run(spark, path, cfg)
+    try:
+        expected = summary_row(oracle)
+    finally:
+        oracle.unpersist()
+    assert expected["hits_found"] == 4 and expected["chunks_processed"] == 16
     run = Engine(spark, cfg).run(evidence_path=path)
-    expected = run["run_summary"].collect()[0].asDict()
-    assert expected["hits_found"] == 4
-    # poison: limit(1) short-circuits -> the run()-time hits
-    # observation fills with however many rows the first tasks saw
+    # poison: limit(1) short-circuits -> a count taken from this drive
+    # would hold however many rows the first tasks saw
     assert len(run["hits"].take(1)) == 1
     out = str(tmp_path / "out")
     write_tables(run, out, fmt="parquet", run_id="poisoned")

@@ -23,7 +23,7 @@ from swiftbeaver_spark.fused_scan import scan_all_from_evidence
 from swiftbeaver_spark.jvm import ensure_kernel
 
 from tests.fixtures import mk_jpeg, mk_png
-from tests.oracles.chunk_run import chunk_run
+from tests.oracles.chunk_run import chunk_run, summary_row
 from tests.test_browser import build_chrome_db
 from tests.test_fused_scan import CFG as FUSED_CFG
 from tests.test_fused_scan import GRANULE, build_image
@@ -44,21 +44,15 @@ TABLES = (
     "string_artefacts",
     "entropy_regions",
     "carved_files",
-    "chunks",
-    "run_summary",
 )
 
 
 def _tables(result):
-    out = {}
-    for name in TABLES:
-        if name not in result.tables:
-            continue
-        df = result[name]
-        if name == "chunks":  # plan rows vs byte rows: compare geometry
-            df = df.select("chunk_id", "start", "valid_length")
-        out[name] = sorted(map(tuple, df.collect()))
-    return out
+    return {
+        name: sorted(map(tuple, result[name].collect()))
+        for name in TABLES
+        if name in result.tables
+    }
 
 
 def _evidence(tmp_path, kind: str, seed: int, size: int) -> str:
@@ -75,19 +69,23 @@ def _evidence(tmp_path, kind: str, seed: int, size: int) -> str:
 
 
 def _assert_same_run(spark, path, cfg=CFG):
-    """run(evidence_path) goes one-pass and equals the chunk-table run."""
+    """run(evidence_path) goes one-pass and equals the chunk-table run,
+    tables and the run_summary row write_tables builds."""
     one = Engine(spark, cfg).run(evidence_path=path)
     assert one.persisted, "one-pass must persist the raw metadata frame"
     try:
         got = _tables(one)
+        summary = write_tables(one, os.devnull, fmt="dryrun")
     finally:
         one.unpersist()
     oracle = chunk_run(spark, path, cfg)
     try:
         base = _tables(oracle)
+        want = summary_row(oracle)
     finally:
         oracle.unpersist()
     assert got == base
+    assert summary == want
     assert got["hits"] and got["carved_files"]
     return got
 

@@ -9,16 +9,19 @@ import hashlib
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from swiftbeaver_spark.carve_op import carve_hits_with_chunks, carve_hits_with_evidence
 from swiftbeaver_spark.chunking import (
     chunks_from_bytes,
     chunks_from_file,
     keep_parents,
+    kept_extent,
     plan_chunks,
+    scanned_end,
 )
 from swiftbeaver_spark.config import DEFAULT_CONFIG
-from swiftbeaver_spark.engine import Engine
+from swiftbeaver_spark.engine import Engine, write_tables
 from swiftbeaver_spark.fused_scan import scan_all_from_chunks
 
 from tests.fixtures import ALL_FIXTURES, insert_bytes, ungated_hits
@@ -106,10 +109,10 @@ def test_full_multi_type_run(spark, tmp_path):
         and m["name"] != "mp4"  # mp4 fixture contains a valid mp3 sync too
     ]
     assert not missing, f"missing recoveries: {missing}"
-    summary = result["run_summary"].collect()[0]
-    assert summary.bytes_scanned == len(evidence)
-    assert summary.files_carved == len(carved)
-    assert summary.hits_found > 0
+    summary = write_tables(result, os.devnull, fmt="dryrun")
+    assert summary["bytes_scanned"] == len(evidence)
+    assert summary["files_carved"] == len(carved)
+    assert summary["hits_found"] > 0
 
 
 def test_golden_manifest_verify_e2e(spark, tmp_path):
@@ -234,6 +237,51 @@ def test_max_bytes_limit(spark, tmp_path):
     assert sorted(r.start for r in rows) == [0, 10000, 20000]
 
 
+@pytest.mark.parametrize(
+    "evidence_len, limits, resume_from",
+    [
+        (0, {}, None),  # empty evidence
+        (25_000, {}, None),  # ragged last chunk
+        (30_000, {}, None),  # evidence ends on a chunk boundary
+        (25_000, {"max_bytes": 15_000}, None),  # limit inside chunk 1
+        (50_000, {"max_bytes": 20_000}, None),  # limit on a chunk boundary
+        (50_000, {"max_chunks": 2}, None),
+        (25_000, {"max_chunks": 7}, None),  # limit past the evidence end
+        (25_000, {}, 15_000),  # mid-chunk resume skips chunk 1
+        (50_000, {"max_bytes": 35_000, "max_chunks": 3}, 10_000),
+        (50_000, {"max_chunks": 2}, 30_000),  # resume past the limits
+        (25_000, {}, 25_000),  # resume at the evidence end
+        (25_000, {}, 40_000),  # resume past the evidence end
+    ],
+)
+def test_kept_extent_matches_plan_aggregate(
+    spark, tmp_path, evidence_len, limits, resume_from
+):
+    """The run's driver-side scan counters (chunking.kept_extent, read
+    by Engine.run) equal the Spark aggregate over the kept chunk plan:
+    bytes_scanned is the summed valid_length, chunks_processed the row
+    count, and a non-empty extent spans exactly the kept rows."""
+    cfg = dataclasses.replace(TEST_CFG, chunk_size=10_000, overlap=100, **limits)
+    plan = keep_parents(plan_chunks(spark, evidence_len, 10_000, 100), cfg, resume_from)
+    total, n, lo, hi = plan.agg(
+        F.coalesce(F.sum("valid_length"), F.lit(0)),
+        F.count("*"),
+        F.min("start"),
+        F.max(F.col("start") + F.col("valid_length")),
+    ).first()
+    path = tmp_path / "ev.raw"
+    path.write_bytes(b"\x00" * evidence_len)
+    run = Engine(spark, cfg).run(evidence_path=str(path), resume_from=resume_from)
+    run.unpersist()
+    assert (run.bytes_scanned, run.chunks_processed) == (total, n)
+    extent = kept_extent(evidence_len, cfg, resume_from)
+    if n:
+        assert (extent.start, extent.stop) == (lo, hi)
+        assert scanned_end(evidence_len, cfg, resume_from) == hi
+    else:
+        assert len(extent) == 0
+
+
 def test_file_ending_exactly_at_chunk_boundary(spark, tmp_path):
     """Reference boundary case: a file whose last byte is the last byte
     of a chunk (tests/boundary_conditions.rs)."""
@@ -266,8 +314,6 @@ def test_evidence_exactly_divisible_by_chunk_size(spark):
 
 
 def test_dryrun_sink(spark, tmp_path):
-    from swiftbeaver_spark.engine import write_tables
-
     blob = ALL_FIXTURES["jpeg"][0]
     buf = bytearray(b"\x00" * 32768)
     insert_bytes(buf, 1024, blob)

@@ -11,8 +11,6 @@ from swiftbeaver_spark.chunking import chunks_from_bytes
 from swiftbeaver_spark.config import DEFAULT_CONFIG
 from swiftbeaver_spark.fused_scan import scan_all_from_chunks
 from swiftbeaver_spark.strings_scan import (
-    enrich_emails,
-    enrich_urls,
     is_plausible_phone,
     normalize_email,
     normalize_url,
@@ -115,18 +113,6 @@ def test_artefact_positions(spark):
     url = [r for r in rows if r.artefact_kind == "Url"][0]
     assert url.global_start == 5
     assert url.global_end == 5 + len("https://example.com") - 1
-
-
-def test_enriched_projections(spark):
-    data = b"x https://example.com:8080/path?q=1#frag y bob@mail.example.org z"
-    chunks = chunks_from_bytes(spark, data, 1 << 20, 0)
-    spans = _spans(chunks, STR_CFG)
-    arts = scan_string_artefacts(spans, STR_CFG)
-    url = enrich_urls(arts).collect()[0]
-    assert (url.scheme, url.host, url.port, url.path) == ("https", "example.com", 8080, "/path")
-    assert url.query == "q=1" and url.fragment == "frag"
-    email = enrich_emails(arts).collect()[0]
-    assert (email.local_part, email.domain) == ("bob", "mail.example.org")
 
 
 ENT_CFG = dataclasses.replace(

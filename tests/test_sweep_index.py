@@ -102,7 +102,8 @@ def test_evidence_path_sweep_branch_parity(spark, tmp_path):
         ),
     )
     hits = scan_all_from_evidence(spark, str(p), cfg)["hits"]
-    swept = sorted(map(tuple, carve_hits_with_evidence(hits, str(p), cfg).collect()))
+    swept_rows = carve_hits_with_evidence(hits, str(p), cfg).collect()
+    swept = sorted(map(tuple, swept_rows))
     assert len(swept) >= 4
 
     # per-hit reference: force every family off the sweep branch by
@@ -125,10 +126,10 @@ def test_evidence_path_sweep_branch_parity(spark, tmp_path):
     assert split == swept
 
     # true per-hit reference via unbounded max_size on one member of
-    # each family (routes the family to the per-hit branch); results
-    # must agree on the planted files' (offset, size, sha) rows that
-    # both configs carve identically — here every window fits, so the
-    # outcomes are identical row for row
+    # each family (routes the family to the per-hit branch); every
+    # window fits, so each carve's extent, hashes and validation are
+    # identical row for row
+    key = ("file_type", "global_start", "global_end", "size", "md5", "sha256", "validated")
     cfg_unbounded = dataclasses.replace(
         cfg,
         file_types=tuple(
@@ -142,7 +143,9 @@ def test_evidence_path_sweep_branch_parity(spark, tmp_path):
                 scan_all_from_evidence(spark, str(p), cfg_unbounded)["hits"],
                 str(p),
                 cfg_unbounded,
-            ).collect(),
+            )
+            .select(*key)
+            .collect(),
         )
     )
-    assert len(perhit) == len(swept)
+    assert perhit == sorted(tuple(r[k] for k in key) for r in swept_rows)

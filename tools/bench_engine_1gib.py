@@ -23,17 +23,17 @@ and sha256 (the golden-image contract).
 Stage walls are measured as separate actions over the fused
 evidence-path plan (each stage re-reads its own byte ranges — the
 positioned-read strategy), then ONE combined run gives the end-to-end
-wall; MiB/s = image_size / wall.
+wall: the carve collect plus every table driven through the sink
+(write_tables, fmt="dryrun"), whose run_summary row the JSON reports;
+MiB/s = image_size / wall.
 
 Usage: python tools/bench_engine_1gib.py [mib] [e01]
   -> one JSON line {"engine_full_pipeline_1gib": {...}}
 Passing the literal arg `e01` converts the image to an EWF/E01
 container first (write_ewf, zlib per chunk) and runs the WHOLE
 pipeline against the container — the distributed-E01-source stress
-(every stage decompresses only the chunks its reads touch). The
-engine picks the scan path (one-pass when the JVM kernel registers,
-the chunk table otherwise); the JSON records which one ran plus
-host-load snapshots at run start and end (VERDICT r11 task 3 —
+(every stage decompresses only the chunks its reads touch). The JSON
+records host-load snapshots at run start and end (VERDICT r11 task 3 —
 self-adjudicating rows).
 """
 import dataclasses
@@ -49,7 +49,7 @@ import numpy as np
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from swiftbeaver_spark.config import DEFAULT_CONFIG
-from swiftbeaver_spark.engine import Engine
+from swiftbeaver_spark.engine import Engine, write_tables
 from swiftbeaver_spark.session import get_spark
 from tests.fixtures import mk_bmp, mk_jpeg, mk_pdf, mk_png, mk_sqlite, mk_zip
 from tools.hostinfo import host_snapshot
@@ -159,9 +159,6 @@ def main() -> None:
     # the per-stage split is no longer read-dominated by construction.
     stages = {}
     run = engine.run(evidence_path=path)
-    resolved_one_pass = "data" not in run["chunks"].columns
-    print(f"# strategy: {'one-pass' if resolved_one_pass else 'chunk table'}",
-          file=sys.stderr)
     for stage in ("hits", "carved_files", "string_spans", "string_artefacts",
                   "entropy_regions", "browser_history"):
         t0 = time.time()
@@ -179,30 +176,16 @@ def main() -> None:
             stages[stage]["note"] = "uncached: includes span-subtree re-derivation"
         print(f"# stage {stage}: {cnt} rows, {stages[stage]['wall_sec']}s",
               file=sys.stderr)
-    # run_summary from the stage counts taken above (VERDICT r9 task 3:
-    # no subtree re-derivation even with caching OFF)
-    t0 = time.time()
-    summary_df = run.summary_from_counts({k: v["rows"] for k, v in stages.items()})
-    cnt = summary_df.count()
-    stages["run_summary"] = {
-        "rows": cnt,
-        "wall_sec": round(time.time() - t0, 3),
-        "method": "from_counts",
-    }
-    print(f"# stage run_summary ({stages['run_summary']['method']}): "
-          f"{stages['run_summary']['wall_sec']}s", file=sys.stderr)
     run.unpersist()  # free the one-pass raw cache before the e2e run
 
-    # end-to-end: one fresh run, ALL tables driven to completion —
-    # with stage caching on (the multi-table production setting; the
-    # per-stage walls above stay uncached so each stage's own cost is
-    # honest)
+    # end-to-end: one fresh run, ALL tables driven to completion
+    # through the sink — with stage caching on (the multi-table
+    # production setting; the per-stage walls above stay uncached so
+    # each stage's own cost is honest)
     t0 = time.time()
     run2 = engine.run(evidence_path=path, cache_intermediates=True)
     carved = run2["carved_files"].select("global_start", "size", "sha256").collect()
-    for t in ("hits", "string_artefacts", "entropy_regions", "browser_history"):
-        run2[t].count()
-    summary = run2["run_summary"].collect()[0].asDict()
+    summary = write_tables(run2, tmp, fmt="dryrun")
     e2e = round(time.time() - t0, 3)
     run2.unpersist()
 
@@ -241,7 +224,6 @@ def main() -> None:
     out = {
         "image_mib": size // MIB,
         "container": "e01" if e01 else "raw",
-        "one_pass": resolved_one_pass,
         "host_start": host_start,
         "host_end": host_snapshot(),
         "planted": len(manifest),
@@ -250,9 +232,9 @@ def main() -> None:
         "stages": stages,
         "end_to_end_sec": e2e,
         "mib_per_sec": round(size / MIB / e2e, 1),
-        "bytes_scanned": summary.get("bytes_scanned"),
-        "hits_found": summary.get("hits_found"),
-        "files_carved": summary.get("files_carved"),
+        "bytes_scanned": summary["bytes_scanned"],
+        "hits_found": summary["hits_found"],
+        "files_carved": summary["files_carved"],
     }
     if missing:
         print(f"# MISSING {len(missing)}: {missing[:5]}", file=sys.stderr)

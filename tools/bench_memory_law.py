@@ -53,7 +53,7 @@ os.environ["SPARK_DRIVER_MEMORY"] = HEAP
 import dataclasses  # noqa: E402
 
 from swiftbeaver_spark.config import DEFAULT_CONFIG  # noqa: E402
-from swiftbeaver_spark.engine import Engine  # noqa: E402
+from swiftbeaver_spark.engine import Engine, write_tables  # noqa: E402
 from swiftbeaver_spark.session import get_spark  # noqa: E402
 from tools.bench_engine_1gib import MIB, build_image  # noqa: E402
 from tools.hostinfo import host_snapshot  # noqa: E402
@@ -115,14 +115,9 @@ def main() -> None:
             load = host_snapshot()["load_1m"]
             t0 = time.time()
             run = engine.run(evidence_path=path, cache_intermediates=True)
-            assert "data" not in run["chunks"].columns, (
-                "the one-pass scan needs the JVM kernel")
             carved = run["carved_files"].select(
                 "global_start", "size", "sha256").collect()
-            for t in ("hits", "string_artefacts", "entropy_regions",
-                      "browser_history"):
-                run[t].count()
-            run["run_summary"].collect()
+            write_tables(run, tmp, fmt="dryrun")  # drives every table
             wall = round(time.time() - t0, 3)
             run.unpersist()  # blocking (r13) — next run must not overlap
             got = {(r["global_start"], r["size"], r["sha256"]) for r in carved}

@@ -5,6 +5,15 @@ Usage: python tools/capture_plans.py OUT_DIR SUFFIX [sf_dir] query ...
 Writes OUT_DIR/<query>_<SUFFIX>.txt for each query name (exact match on
 the queries() key). Plans are BUILT, not executed (same caveat as
 plan_audit.py: bounded training collects inside a callable do run).
+
+Eager queries (ones that persist() + count() while building, e.g.
+q157) plan their final stages under AQE from runtime statistics, so
+their captured plan can vary run to run on one tree: q157's
+bitext_mine_ivf join picks BuildLeft or BuildRight for `best ⋈ sum_x`
+and its codegen ids move between captures. Check plan identity on such
+a query with AQE off on both sides (get_spark turns it on; set
+spark.sql.adaptive.enabled=false on the session before capturing), or
+mask build side and codegen ids before diffing.
 """
 import os
 import sys
