@@ -5852,7 +5852,7 @@ def _q99_bmp_hex(color_reps: int, w: int, h: int) -> str:
 
 def q99_resize_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image resize under the oracle (llm/multimodal.py::
-    resize_images / resize_bmp): per doc a solid-color 4x2 24-bit BMP
+    resize_images / bmp_pixels): per doc a solid-color 4x2 24-bit BMP
     is built IN SQL (color = md5(doc_id) prefix, the q30 build-bytes
     trick), the real numpy nearest-neighbor kernel resizes it to 2x2,
     and the oracle predicts the COMPLETE output file byte-for-byte

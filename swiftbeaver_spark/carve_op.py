@@ -18,8 +18,8 @@ Two evidence-access strategies (SURVEY §7.3):
    many-file and hash-scattered layouts carve identically.
 
 Engine.run carves by positioned reads. The chunk carve serves the
-callers that hold only a chunk table (the streaming front, the
-chunk-table catalog queries); types whose effective window exceeds
+callers that hold only a chunk table (the chunk-table catalog
+queries); types whose effective window exceeds
 `_WINDOW_CAP_LIMIT` must carve via positioned reads (a bucket group
 buffers up to a full window per hit in executor memory).
 """

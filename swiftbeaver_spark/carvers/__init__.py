@@ -8,7 +8,6 @@ swiftbeaver_spark.carve_op.
 
 from swiftbeaver_spark.carvers.registry import build_registry, carve_hit  # noqa: F401
 from swiftbeaver_spark.carvers.base import (  # noqa: F401
-    BytesReader,
     CarveOutcome,
     FileReader,
     Reader,

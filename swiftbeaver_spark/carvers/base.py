@@ -35,19 +35,6 @@ class Reader:
         pass
 
 
-class BytesReader(Reader):
-    def __init__(self, data: bytes):
-        self._data = data
-
-    def length(self) -> int:
-        return len(self._data)
-
-    def read_at(self, offset: int, length: int) -> bytes:
-        if offset >= len(self._data) or length <= 0:
-            return b""
-        return self._data[offset : offset + length]
-
-
 class FileReader(Reader):
     """Positioned reads over an evidence file (raw/dd image)."""
 

@@ -5,11 +5,10 @@ chunk_size/overlap/next_offset/evidence_len/run_id; resume validates
 geometry and skips already-scanned chunks
 (src/pipeline/mod.rs:186-231,343-345).
 
-Spark design (SURVEY §2.6): batch resume = a `where(start >= next_offset)`
-filter on the chunk plan — partition pruning makes the skip free on a
-materialized chunk table. The state file is plain JSON (object-store
-friendly); Structured Streaming covers the continuous case (see
-streaming.py).
+Spark design (SURVEY §2.6): batch resume = a parent-start >= next_offset
+filter on the scan plan (chunking.keep_parents), and a limit-cut run
+writes the end of the last chunk it scanned (chunking.scanned_end). The
+state file is plain JSON (object-store friendly).
 """
 
 from __future__ import annotations

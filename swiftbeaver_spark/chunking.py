@@ -1,73 +1,25 @@
-"""Evidence ingest: linear byte space -> chunks DataFrame.
+"""Chunk-plan arithmetic: which parent chunks a run scans.
 
-Semantics parity with reference build_chunks (src/chunk.rs:9-35):
-- chunk i covers [i*chunk_size, min((i+1)*chunk_size, total))
-- each chunk's `data` additionally carries up to `overlap` bytes past its
-  valid region (capped at evidence end) so signatures and carve headers
-  that straddle a boundary are seen by exactly one owner chunk
-- valid_length = min(chunk_size, total - start); hits at
-  local_offset >= valid_length are dropped downstream (overlap dedup)
+Chunk geometry is the reference's build_chunks (src/chunk.rs:9-35):
+chunk i covers [i*chunk_size, min((i+1)*chunk_size, total)), and
+valid_length = min(chunk_size, total - start). A run scans the parent
+chunks its limits keep (cfg.max_bytes, cfg.max_chunks) from its resume
+watermark on (src/pipeline/mod.rs:328-416):
 
-Scale design: chunk *planning* is `spark.range` arithmetic (no driver
-loop, no data movement); chunk *bytes* are fetched executor-side in
-mapInPandas via positioned reads, so a 100 TB image on shared storage
-fans out to as many parallel readers as there are range rows. For
-repeated scans, `materialize_chunks` persists the chunk table to
-parquet once and every later pass is a plain columnar scan with
-partition pruning on `start`.
+- `keep_parents` filters a chunk or sub-chunk plan DataFrame to them
+  (the one-pass scan's sub-chunk plan, fused_scan.py);
+- `kept_extent` is their byte range as driver-side arithmetic, the
+  run summary's bytes_scanned / chunks_processed (engine.py);
+- `scanned_end` is the checkpoint watermark a limit-cut run writes
+  (the CLI's resume file).
 """
 
 from __future__ import annotations
 
-import math
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from swiftbeaver_spark import schemas
-from swiftbeaver_spark.config import DEFAULT_CHUNK_SIZE, DEFAULT_OVERLAP, EngineConfig
-
-# minimum chunk bytes fetched per task when chunk_size is small; one
-# chunk per task whenever chunk_size >= this (see chunks_from_file)
-_MIN_TASK_BYTES = 4 * 1024 * 1024
-
-
-def plan_chunks(
-    spark: SparkSession,
-    evidence_len: int,
-    chunk_size: int = DEFAULT_CHUNK_SIZE,
-    overlap: int = DEFAULT_OVERLAP,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Chunk geometry as a DataFrame — pure `range` arithmetic.
-
-    Columns: chunk_id, start, valid_length, read_length (no bytes yet).
-    `spark.range` splits the id space into CONTIGUOUS slices per
-    partition, so downstream parquet files written from this plan hold
-    contiguous evidence runs (a hash repartition here would scatter
-    evidence order across files; the chunk-table carve in carve_op.py
-    buckets by chunk_id and does not depend on it).
-    """
-    if chunk_size <= 0:
-        raise ValueError("chunk_size must be positive")
-    n = max(0, math.ceil(evidence_len / chunk_size))
-    return (
-        spark.range(0, n, 1, num_partitions)
-        .select(
-            F.col("id").alias("chunk_id"),
-            (F.col("id") * chunk_size).alias("start"),
-        )
-        .withColumn(
-            "valid_length",
-            F.least(F.lit(chunk_size), F.lit(evidence_len) - F.col("start")),
-        )
-        .withColumn(
-            "read_length",
-            F.least(F.lit(chunk_size + overlap), F.lit(evidence_len) - F.col("start")),
-        )
-    )
+from swiftbeaver_spark.config import EngineConfig
 
 
 def keep_parents(
@@ -117,85 +69,3 @@ def scanned_end(
     watermark of a run under cfg.max_bytes / cfg.max_chunks, so a
     limit-cut run does not claim evidence it never scanned."""
     return max(kept_extent(evidence_len, cfg, resume_from).stop, resume_from or 0)
-
-
-def chunks_from_file(
-    spark: SparkSession,
-    path: str,
-    chunk_size: int = DEFAULT_CHUNK_SIZE,
-    overlap: int = DEFAULT_OVERLAP,
-) -> DataFrame:
-    """Evidence file -> chunks DataFrame with bytes fetched executor-side.
-
-    The plan DataFrame is tiny (one row per chunk); bytes never touch the
-    driver. Scan limits are chunking.keep_parents over this table.
-    """
-    from swiftbeaver_spark.source import evidence_length, open_evidence
-
-    total = evidence_length(path)
-    hi = math.ceil(total / chunk_size)
-
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        reader = open_evidence(path)
-        try:
-            for pdf in batches:
-                rows = []
-                for cid, start, vlen, rlen in zip(
-                    pdf["chunk_id"], pdf["start"], pdf["valid_length"], pdf["read_length"]
-                ):
-                    rows.append(
-                        (int(cid), int(start), int(vlen), reader.read_at(int(start), int(rlen)))
-                    )
-                yield pd.DataFrame(rows, columns=["chunk_id", "start", "valid_length", "data"])
-        finally:
-            reader.close()
-
-    # Task sizing: at the production 512 MiB chunk size one chunk per
-    # task is right (each output row is chunk_size+overlap bytes), but
-    # small chunk sizes must NOT fan out to one-task-per-chunk — a
-    # 200 MB image at 4 KiB chunks would schedule 50k near-empty tasks
-    # and pay pure overhead. Target at least _MIN_TASK_BYTES of chunk
-    # bytes per task (the spark.sql.files.maxPartitionBytes idea applied
-    # to the arithmetic plan); big chunks keep exactly one per task.
-    # Partition count comes from arithmetic, not a count() job — and
-    # partitions are CONTIGUOUS id slices straight from spark.range (no
-    # hash repartition), so a materialized chunk table's files hold
-    # contiguous evidence runs in row order.
-    if hi <= 0:
-        return spark.createDataFrame([], schemas.CHUNKS)
-    n = min(hi, math.ceil(hi * chunk_size / _MIN_TASK_BYTES))
-    plan = plan_chunks(spark, total, chunk_size, overlap, n)
-    return plan.mapInPandas(fetch, schemas.CHUNKS)
-
-
-def chunks_from_bytes(
-    spark: SparkSession,
-    data: bytes,
-    chunk_size: int = DEFAULT_CHUNK_SIZE,
-    overlap: int = DEFAULT_OVERLAP,
-) -> DataFrame:
-    """In-memory evidence -> chunks DataFrame (test/fixture path)."""
-    total = len(data)
-    rows = []
-    n = max(0, math.ceil(total / chunk_size))
-    for cid in range(n):
-        start = cid * chunk_size
-        rows.append(
-            (
-                cid,
-                start,
-                min(chunk_size, total - start),
-                data[start : min(start + chunk_size + overlap, total)],
-            )
-        )
-    return spark.createDataFrame(rows, schemas.CHUNKS)
-
-
-def materialize_chunks(chunks: DataFrame, path: str) -> None:
-    """Persist the chunk table for repeated scans (partition pruning on
-    `start` ranges replaces re-reading evidence)."""
-    chunks.write.mode("overwrite").parquet(path)
-
-
-def read_chunks(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.schema(schemas.CHUNKS).parquet(path)

@@ -77,8 +77,8 @@ class Engine:
     `run` builds one table graph: a fused scan (fused_scan.py — one
     positioned read per evidence sub-chunk) whose persisted raw frame
     feeds hits, spans and entropy, then a positioned-read carve.
-    Chunk-table scans and carves (streaming, the chunk-table catalog
-    queries) call fused_scan.scan_all_from_chunks and
+    Chunk-table scans and carves (the chunk-table catalog queries)
+    call fused_scan.scan_all_from_chunks and
     carve_op.carve_hits_with_chunks directly."""
 
     def __init__(self, spark: SparkSession, cfg: EngineConfig = DEFAULT_CONFIG):

@@ -217,15 +217,6 @@ class EwfReader(Reader):
                 pass
         self._handles.clear()
 
-    def convert_to_raw(self, out_path: str) -> None:
-        with open(out_path, "wb") as out:
-            pos = 0
-            while pos < self.media_size:
-                n = min(self.chunk_size * 16, self.media_size - pos)
-                out.write(self.read_at(pos, n))
-                pos += n
-
-
 # -- writer (single-segment fixture/ingest tool) ----------------------------
 
 

@@ -9,8 +9,7 @@ one table projection:
   pass per scan would be 3x corpus egress against object storage, and
   3x re-decompression on E01), and no chunk BYTES are materialized.
 - `scan_all_from_chunks` (sb_scan_all_bytes, ScanAllBytesUdf.java): one
-  call per chunk-table row — the streaming front and the chunk-table
-  catalog queries.
+  call per chunk-table row — the chunk-table catalog queries.
 
 Both return the three stages' METADATA rows (packed hits, span rows,
 entropy islands) as the struct column `r` of a `raw` frame; callers

@@ -41,28 +41,6 @@ def zorder_key(cols: list[Column], bits: int = 16) -> Column:
     return key
 
 
-def zorder_layout(
-    df: DataFrame,
-    by: list[str],
-    bits: int = 16,
-    num_partitions: int | None = None,
-    key_name: str = "_z",
-) -> DataFrame:
-    """Cluster `df` for multi-dimensional locality: compute the Morton
-    key over `by` and range-repartition + sort within partitions by
-    it. A writer downstream (`df.write.parquet`) then produces files
-    whose per-column min/max ranges are tight in ALL `by` columns, so
-    selective filters on any of them prune row groups.
-
-    Scale: rangepartitioning samples the key (one lightweight pass),
-    then a single shuffle; the in-partition sort is the only other
-    cost. This is exactly the OPTIMIZE ZORDER shape.
-    """
-    keyed = df.withColumn(key_name, zorder_key([F.col(c) for c in by], bits))
-    parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    return keyed.repartitionByRange(parts, key_name).sortWithinPartitions(key_name)
-
-
 def compaction_plan(
     files: DataFrame,
     target_bytes: int,
@@ -170,37 +148,3 @@ def with_hilbert_key(
         )
         s >>= 1
     return out.withColumn(out_col, F.col(td)).drop(tx, ty, td)
-
-
-def hilbert_xy2d(n: int, x: int, y: int) -> int:
-    """Driver-side reference of hilbert_key_2d (same public algorithm)
-    for tests and planner-side bucketing decisions."""
-    d = 0
-    s = n >> 1
-    while s > 0:
-        rx = 1 if (x & s) > 0 else 0
-        ry = 1 if (y & s) > 0 else 0
-        d += s * s * ((3 * rx) ^ ry)
-        if ry == 0:
-            if rx == 1:
-                x = n - 1 - x
-                y = n - 1 - y
-            x, y = y, x
-        s >>= 1
-    return d
-
-
-def hilbert_layout(
-    df: DataFrame,
-    x: str,
-    y: str,
-    bits: int = 8,
-    num_partitions: int | None = None,
-    key_name: str = "_h",
-) -> DataFrame:
-    """zorder_layout's Hilbert twin: range-repartition + sort by the
-    Hilbert key of two bucketed columns. Same single-shuffle cost,
-    tighter per-file min/max boxes."""
-    keyed = with_hilbert_key(df, F.col(x), F.col(y), bits, out_col=key_name)
-    parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    return keyed.repartitionByRange(parts, key_name).sortWithinPartitions(key_name)

@@ -94,21 +94,3 @@ def connected_components(
             "(graph diameter exceeds max_iters — raise it for chain-shaped graphs)"
         )
     return labels.select("doc_id", "component")
-
-
-def dedup_keep_canonical(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-) -> DataFrame:
-    """Drop every document whose near-dup component has a smaller
-    member: the kept set is one canonical (minimum-id) doc per cluster
-    plus all unpaired docs. Anti-join keeps the corpus pass shuffle-free
-    on the doc side (components are tiny relative to the corpus)."""
-    comps = connected_components(pairs, a_col, b_col)
-    losers = comps.where(F.col("doc_id") != F.col("component")).select("doc_id")
-    return docs.join(
-        losers.withColumnRenamed("doc_id", id_col), id_col, "left_anti"
-    )

@@ -1,8 +1,7 @@
 """Deduplication operators for document corpora.
 
-Five strategies, all DataFrame-native:
+Four strategies, all DataFrame-native:
 
-- exact_dedup:       hash-groupBy on content digest (one shuffle)
 - minhash_signatures/minhash_lsh_pairs: shingle -> k minhashes (JVM
   kernel sb_minhash) -> banding -> bucket equi-join. The classic
   MinHash+LSH near-dup pipeline; candidate verification via exact
@@ -41,18 +40,6 @@ def char_shingles(col: Column, k: int = 9) -> Column:
     return F.array_distinct(
         F.transform(F.sequence(F.lit(1), n), lambda i: F.substring(norm, i, k))
     )
-
-
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup: keep the lowest id per content digest."""
-    return (
-        df.withColumn("content_hash", F.md5(F.col(text_col)))
-        .groupBy("content_hash")
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("n_copies"))
-    )
-
-
-_MERSENNE61 = (1 << 61) - 1
 
 
 def _minhash_family(num_hashes: int):
@@ -517,11 +504,6 @@ def word_ngrams(col: Column, n: int = 3) -> Column:
     )
 
 
-def ngram_jaccard(a: Column, b: Column, n: int = 3) -> Column:
-    ga, gb = word_ngrams(a, n), word_ngrams(b, n)
-    return F.size(F.array_intersect(ga, gb)) / F.size(F.array_union(ga, gb))
-
-
 def embedding_near_dups(
     embeddings: DataFrame,
     id_col: str = "vec_id",
@@ -610,8 +592,7 @@ def incremental_minhash_near_dups(
     maintained LSH band index (minhash_band_index over the already-
     ingested corpus) instead of re-banding the corpus per batch —
     the production shape for continuous crawls, pairing with
-    incremental_exact_dedup the way minhash_near_dups pairs with
-    exact_dedup.
+    incremental_exact_dedup.
 
     Returns (new_doc_id, doc_id, jaccard): each new doc against each
     corpus doc it near-duplicates (exact shingle Jaccard >= threshold,

@@ -5,13 +5,12 @@ The container has no image/audio CODEC libraries, so decode is real
 exactly where the format needs none: BMP pixels are raw rows
 (bmp_pixels) and PNG is structure + DEFLATE, both fully decodable with
 the standard library (png_pixels: zlib inflate + all five scanline
-filters). Only genuinely codec-requiring formats (JPEG entropy coding,
-video/audio codecs) remain STUBBED: `decode_image` raises
-NotImplementedError by design, and the deterministic fake
-(`fake_decode_meta`) stands in so the Spark-side plumbing — schema,
-partitioning, mapInPandas batch shape, feature columns — is real and
-tested end-to-end. Swap `_DECODERS` entries for Pillow/torchaudio/av
-kernels on a cluster with codecs installed.
+filters). Genuinely codec-requiring formats (JPEG entropy coding,
+video/audio codecs) get an 'unsupported' row (resize_images) or the
+deterministic fake (`fake_decode_meta`), so the Spark-side plumbing —
+schema, partitioning, mapInPandas batch shape, feature columns — is
+real and tested end-to-end; a codec kernel plugs into those branches
+on a cluster with codecs installed.
 
 DIMENSIONS, however, are real where the format allows: BMP/PNG/GIF/
 JPEG headers declare width/height in plain structure (the same header
@@ -40,17 +39,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-# canonical multimodal row: opaque payload + typed metadata
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("modality", StringType(), False),  # image | audio | video
-        StructField("mime", StringType(), True),
-        StructField("payload", BinaryType(), False),
-        StructField("source_uri", StringType(), True),
-    ]
-)
-
 MEDIA_META_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -73,15 +61,6 @@ def _payload_bytes(payload) -> bytes:
     unsupported/None row) instead of bytes(None) raising TypeError and
     failing the whole task."""
     return bytes(payload) if payload is not None else b""
-
-
-def decode_image(payload: bytes) -> tuple[int, int]:
-    """Real image decode — requires an imaging library not present in
-    this container. Plug Pillow here on a real cluster."""
-    raise NotImplementedError(
-        "image decode requires an imaging library (e.g. Pillow); "
-        "wire it into _DECODERS['image'] on a codec-enabled cluster"
-    )
 
 
 def header_image_dims(payload: bytes) -> tuple[int, int] | None:
@@ -223,7 +202,7 @@ def header_media_duration_ms(payload: bytes) -> int | None:
 def bmp_pixels(payload: bytes):
     """Parse an uncompressed 24/32-bit BMP to a top-down (h, w, 3)
     BGR uint8 array; None when the payload isn't one this understands.
-    Shared by resize_bmp and bmp_patch_means."""
+    Shared by resize_images (through image_pixels) and bmp_patch_means."""
     import numpy as np
 
     try:
@@ -276,20 +255,6 @@ def _resample_to_bmp(px, target_w: int, target_h: int) -> bytes:
         b"BM" + struct.pack("<I", fsize) + b"\x00" * 4 + struct.pack("<I", 54)
         + dib_hdr + body.tobytes()
     )
-
-
-def resize_bmp(payload: bytes, target_w: int, target_h: int) -> bytes | None:
-    """REAL nearest-neighbor resize for uncompressed 24/32-bit BMP —
-    raw pixel rows, no codec needed. Returns a well-formed 24-bit BMP
-    of (target_w, target_h), or None when the payload isn't an
-    uncompressed BMP this understands."""
-    try:
-        px = bmp_pixels(payload)
-        if px is None:
-            return None
-        return _resample_to_bmp(px, target_w, target_h)
-    except (struct.error, ValueError):
-        return None
 
 
 RESIZED_SCHEMA = StructType(
@@ -671,50 +636,6 @@ def extract_media_meta(media: DataFrame, feature_dim: int = 8) -> DataFrame:
             )
 
     return media.mapInPandas(work, MEDIA_META_SCHEMA)
-
-
-def carved_files_as_media(carved: DataFrame, evidence_path: str) -> DataFrame:
-    """Bridge: the forensic engine's carved_files table IS a multimodal
-    table — binary payload ranges + typed metadata. Materialize payloads
-    from evidence ranges for downstream media ops."""
-    image_types = ("jpeg", "png", "gif", "bmp", "tiff", "webp", "ico")
-    audio_types = ("mp3", "wav", "ogg")
-    video_types = ("mp4", "mov", "avi", "webm", "wmv")
-    modality = (
-        F.when(F.col("file_type").isin(*image_types), "image")
-        .when(F.col("file_type").isin(*audio_types), "audio")
-        .when(F.col("file_type").isin(*video_types), "video")
-    )
-    rows = carved.withColumn("modality", modality).where(F.col("modality").isNotNull())
-
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from swiftbeaver_spark.source import open_evidence
-
-        reader = open_evidence(evidence_path)
-        try:
-            for pdf in batches:
-                out = []
-                for i, (start, size, ftype, modality) in enumerate(
-                    zip(pdf["global_start"], pdf["size"], pdf["file_type"], pdf["modality"])
-                ):
-                    out.append(
-                        (
-                            int(start),
-                            str(modality),
-                            str(ftype),
-                            reader.read_at(int(start), int(size)),
-                            None,
-                        )
-                    )
-                yield pd.DataFrame(
-                    out, columns=["media_id", "modality", "mime", "payload", "source_uri"]
-                )
-        finally:
-            reader.close()
-
-    return rows.select("global_start", "size", "file_type", "modality").mapInPandas(
-        fetch, MEDIA_SCHEMA
-    )
 
 
 PATCH_SCHEMA = StructType(
@@ -1486,8 +1407,8 @@ def decode_grid_hex(media: DataFrame) -> DataFrame:
 # THESE payloads (MDCT/Huffman for MP3, Vorbis residue coding) is the
 # only thing that still needs a codec library — their spec-appendix
 # data tables (ISO 11172-3 Huffman tables, Vorbis setup conventions)
-# cannot be reproduced verifiably in this container, so `decode_image`'s
-# NotImplementedError convention applies to them, nothing else. Audio
+# cannot be reproduced verifiably in this container, so only their
+# structure is decoded, nothing else. Audio
 # entropy decode ITSELF is real where the spec carries no external
 # tables: llm/flac.py decodes FLAC's Rice/Golomb layer completely
 # (fixed+LPC predictors, partitions, escapes, stereo decorrelation),

@@ -460,35 +460,6 @@ def stratified_fixed_k(
     )
 
 
-def write_shards(
-    df: DataFrame,
-    out_dir: str,
-    num_shards: int,
-    order_col: str = "seq_id",
-    fmt: str = "parquet",
-    max_records_per_file: int | None = None,
-) -> None:
-    """Training-shard writer: the output side of the packing pipeline.
-    Range-repartition on `order_col` into `num_shards` even slices and
-    sort within each, so shard i holds a contiguous, ordered span of
-    sequence ids — the layout data loaders stream sequentially, and a
-    RANGE partitioning (not hash) so curriculum/windowed reads touch
-    few shards.
-
-    Scale: one range shuffle (sampled boundaries) + in-partition
-    sorts; `max_records_per_file` caps file size without another
-    shuffle (Spark splits within the partition). Deterministic layout
-    given deterministic input.
-    """
-    part = df.repartitionByRange(num_shards, order_col).sortWithinPartitions(
-        order_col
-    )
-    writer = part.write.mode("overwrite")
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.format(fmt).save(out_dir)
-
-
 def shard_assign(
     df: DataFrame,
     num_shards: int,
@@ -527,8 +498,8 @@ def write_assigned_shards(
 ) -> None:
     """Training-shard writer over the EXPLICIT shard_assign layout:
     one `shard_id=N/` directory per shard, rows sorted by `order_col`
-    within each. Same one-shuffle cost as write_shards, but the
-    file->content mapping is a deterministic function of the data, so
+    within each. One shuffle, and the file->content mapping is a
+    deterministic function of the data, so
     a manifest read back from the actual files is comparable against
     an independent recomputation (the q90 gate)."""
     assigned = shard_assign(df, num_shards, order_col)

@@ -5,15 +5,13 @@
   IVF/PQ distance tables use its siblings sb_sqdists, sb_dots and
   sb_adc (java/src/sbspark/; their Catalyst-fold oracles live in
   tests/oracles/vec.py)
-- brute_force_topk: broadcast queries x corpus, window rank — the exact
-  baseline; one shuffle of k rows per query
 - hyperplane_bucket: deterministic random-hyperplane LSH (signs derived
   from xxhash64, no RNG state to ship) — the scale path; probing
   neighboring buckets trades recall for cost
 
-Scale: brute force is O(corpus x queries) but embarrassingly parallel
-and broadcast-friendly for <= thousands of queries; LSH buckets cut the
-candidate set by ~2^planes. Both keep vectors as columnar arrays —
+Scale: LSH buckets cut the candidate set of an O(corpus x queries)
+exact scan by ~2^planes (the exact top-k their recall is measured
+against lives in tests/oracles/vec.py). Vectors stay columnar arrays —
 Tungsten handles them off-heap; nothing crosses into Python.
 """
 
@@ -44,37 +42,6 @@ def norm(a: Column) -> Column:
 
 def cosine_similarity(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
-
-
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """Exact top-k by cosine: broadcast the (small) query set, rank per
-    query. Ties broken by corpus id for determinism."""
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("vec")
-    )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).cast("array<double>").alias("query_vec"),
-    )
-    scored = c.join(F.broadcast(q)).select(
-        "query_id",
-        "vec_id",
-        cosine_similarity(F.col("vec"), F.col("query_vec")).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
 
 
 def _plane_component(plane: Column, j: Column) -> Column:
@@ -549,39 +516,6 @@ def label_centroids(
 # -- product quantization (PQ) ------------------------------------------------
 
 
-def pq_train(
-    corpus: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[list[float]]]:
-    """Train PQ codebooks: split the vector into `m` contiguous
-    subvectors and run the SAME deterministic Lloyd's k-means
-    (ivf_train) independently per subspace — `m` codebooks of `k`
-    sub-centroids each. The classic memory-compression ANN path
-    (Jegou et al., IEEE TPAMI 2011): a 64-dim float vector encodes to
-    m log2(k)-bit codes (8 bytes at the defaults vs 256 — 32x).
-
-    Driver memory: m * k * (dim/m) floats — tiny. Each subspace train
-    is the ivf_train distributed pass over a sliced projection."""
-    dim = len(corpus.select(vec_col).first()[0])
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    books = []
-    for j in range(m):
-        sub = corpus.select(
-            F.col(id_col).alias("vec_id"),
-            F.slice(F.col(vec_col).cast("array<double>"), j * dsub + 1, dsub).alias(
-                "vec"
-            ),
-        )
-        books.append(ivf_train(sub, nlist=k, iters=iters))
-    return books
-
-
 def pq_encode(
     df: DataFrame,
     codebooks: list[list[list[float]]],
@@ -907,32 +841,6 @@ def sq8_encode(
         ),
     )
     return df.withColumn(out_col, codes)
-
-
-def sq8_decode(
-    df: DataFrame,
-    lo: list[float],
-    hi: list[float],
-    code_col: str = "sq8",
-    out_col: str = "dequant",
-) -> Column | DataFrame:
-    """Midpoint dequantization: lo + (code + 0.5) * step per dim."""
-    lo_lit = F.array(*[F.lit(float(x)) for x in lo])
-    step_lit = F.array(
-        *[F.lit((float(h) - float(l)) / 256.0) for l, h in zip(lo, hi)]
-    )
-    dim = len(lo)
-    deq = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda i: F.when(
-            F.element_at(step_lit, i + 1) <= 0.0, F.element_at(lo_lit, i + 1)
-        ).otherwise(
-            F.element_at(lo_lit, i + 1)
-            + (F.element_at(F.col(code_col), i + 1) + 0.5)
-            * F.element_at(step_lit, i + 1)
-        ),
-    )
-    return df.withColumn(out_col, deq)
 
 
 # -- binary quantization (1-bit) + Hamming ANN --------------------------------

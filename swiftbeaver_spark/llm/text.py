@@ -30,28 +30,6 @@ def token_count_whitespace(col: Column) -> Column:
     return F.size(tokens(col))
 
 
-def token_count_bpe_like(col: Column) -> Column:
-    """BPE-ish subword estimate: word pieces + digits + punctuation
-    (a GPT-style regex pre-tokenizer count)."""
-    return F.size(
-        F.regexp_extract_all(col, F.lit(r"[A-Za-z]{1,8}|[0-9]|[^A-Za-z0-9\s]"), F.lit(0))
-    )
-
-
-def lang_scores(col: Column) -> Column:
-    """Map<lang, marker-hit-count> per document."""
-    toks = tokens(col)
-    return F.map_from_arrays(
-        F.array(*[F.lit(lang) for lang in LANG_MARKERS]),
-        F.array(
-            *[
-                F.size(F.array_intersect(F.array_distinct(toks), F.array(*[F.lit(w) for w in words])))
-                for words in LANG_MARKERS.values()
-            ]
-        ),
-    )
-
-
 def detect_language(col: Column) -> Column:
     """argmax over marker votes; 'und' (undetermined) when no marker hits."""
     toks = F.array_distinct(tokens(col))
@@ -63,49 +41,6 @@ def detect_language(col: Column) -> Column:
         best_lang = F.when(improves, F.lit(lang)).otherwise(best_lang)
         best_score = F.when(improves, score).otherwise(best_score)
     return best_lang
-
-
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Length / punctuation / stopword / repetition features + a composite
-    quality score in [0,1] (Gopher/C4-style filters as columns)."""
-    c = F.col(text_col)
-    toks = tokens(c)
-    n_chars = F.length(c)
-    n_tokens = F.size(toks)
-    stop_list = F.array(*[F.lit(w) for w in LANG_MARKERS["en"]])
-    return df.select(
-        "*",
-        n_chars.alias("n_chars_q"),
-        n_tokens.alias("n_tokens"),
-        (n_chars / F.greatest(n_tokens, F.lit(1))).alias("mean_token_len"),
-        (
-            F.size(F.regexp_extract_all(c, F.lit(r"[^\w\s]"), F.lit(0)))
-            / F.greatest(n_chars, F.lit(1))
-        ).alias("punct_ratio"),
-        (
-            F.size(F.filter(toks, lambda t: F.array_contains(stop_list, t)))
-            / F.greatest(n_tokens, F.lit(1))
-        ).alias("stopword_ratio"),
-        (F.size(F.array_distinct(toks)) / F.greatest(n_tokens, F.lit(1))).alias(
-            "distinct_token_ratio"
-        ),
-    ).withColumn(
-        "quality_score",
-        F.round(
-            F.least(
-                F.lit(1.0),
-                (F.when(F.col("n_tokens") >= 10, 0.25).otherwise(0.0))
-                + (
-                    F.when(
-                        (F.col("mean_token_len") >= 3) & (F.col("mean_token_len") <= 12), 0.25
-                    ).otherwise(0.0)
-                )
-                + (F.when(F.col("punct_ratio") <= 0.2, 0.25).otherwise(0.0))
-                + (F.when(F.col("distinct_token_ratio") >= 0.3, 0.25).otherwise(0.0)),
-            ),
-            2,
-        ),
-    )
 
 
 def fingerprint_pinned(col: Column, num_shingles: int = 8, shingle_k: int = 16) -> Column:
@@ -127,13 +62,6 @@ def fingerprint_pinned(col: Column, num_shingles: int = 8, shingle_k: int = 16) 
     return F.md5(F.concat_ws(",", mins))
 
 
-def content_digest(col: Column) -> Column:
-    """Stable md5 digest of normalized content (exact-dup key)."""
-    from swiftbeaver_spark.llm.dedup import normalized_text
-
-    return F.md5(normalized_text(col))
-
-
 def linear_quality_score(
     df: DataFrame,
     text_col: str = "text",
@@ -149,7 +77,7 @@ def linear_quality_score(
     — no float drift between engines); REAL weights arrive as the
     optional `weights` DataFrame (token, label='quality', weight_micro
     — e.g. from a fastText .vec file via llm/weights.py's
-    load_fasttext_vec + token_label_weights), which swaps the closed
+    parse_fasttext_vec_lines + token_label_weights), which swaps the closed
     form for a broadcast-joined lookup with the SAME output schema —
     the stand-in -> production switch is this one argument
     (llm/weights.py for the scale notes; detect_language's weighted
@@ -302,7 +230,7 @@ def token_rarity(
 
 def gopher_quality_flags(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Gopher-rule quality flags (Rae et al. 2021, published repetition/
-    format filters; the named sibling of the generic quality_features):
+    format filters):
     per-doc booleans for the word-count window, mean-word-length
     window, alphabetic-word fraction, symbol-to-word ratio, and
     bullet-line fraction, plus the conjunction `passes_gopher`.

@@ -28,7 +28,7 @@ import struct
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
     BooleanType,
@@ -173,8 +173,3 @@ def tfrecord_members(shards: DataFrame) -> DataFrame:
     return shards.select("path", "content").mapInPandas(
         unpack, TFRECORD_MEMBER_SCHEMA
     )
-
-
-def read_tfrecord(spark: SparkSession, path: str) -> DataFrame:
-    """Directory of TFRecord shards -> record rows via binaryFile."""
-    return tfrecord_members(spark.read.format("binaryFile").load(path))

@@ -30,7 +30,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
     LongType,
@@ -148,12 +148,6 @@ def warc_records(archives: DataFrame) -> DataFrame:
             yield pd.DataFrame(rows, columns=[f.name for f in WARC_RECORD_SCHEMA])
 
     return archives.select("path", "content").mapInPandas(walk, WARC_RECORD_SCHEMA)
-
-
-def read_warc(spark: SparkSession, path: str) -> DataFrame:
-    """WARC files under `path` -> record rows (binaryFile source: one
-    task per archive, locality-aware)."""
-    return warc_records(spark.read.format("binaryFile").load(path))
 
 
 def warc_archives(

@@ -25,7 +25,7 @@ import tarfile
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
     LongType,
@@ -59,9 +59,8 @@ def _split_key(name: str) -> tuple[str, str]:
 def untar_members(shards: DataFrame) -> DataFrame:
     """The untar stage alone: (path, content) shard rows -> one row per
     member (shard, sample_key, ext, payload, size). Arrow-batched,
-    per-shard CPU, no shuffle — factored out of read_webdataset so tar
-    bytes from ANY source (binaryFile, a synthesized column, carved
-    output) go through the same reader."""
+    per-shard CPU, no shuffle — tar bytes from ANY source (binaryFile,
+    a synthesized column, carved output) go through the same reader."""
 
     def untar(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -82,13 +81,6 @@ def untar_members(shards: DataFrame) -> DataFrame:
             )
 
     return shards.select("path", "content").mapInPandas(untar, WDS_SCHEMA)
-
-
-def read_webdataset(spark: SparkSession, path: str) -> DataFrame:
-    """tar shards under `path` -> one row per member:
-    (shard, sample_key, ext, payload, size). Group downstream by
-    (shard, sample_key) to reassemble samples."""
-    return untar_members(spark.read.format("binaryFile").load(path))
 
 
 TAR_SHARD_SCHEMA = StructType(

@@ -15,9 +15,9 @@ corpus-sized), broadcasts, and scoring is explode -> broadcast hash
 join -> map-side-combinable sum per (doc, label).
 
 Scale notes:
-- load_fasttext_vec parses DISTRIBUTED (spark.read.text -> split/cast
-  in Catalyst); only the 2-token header line is read on the driver.
-  A 10 GB .vec file fans out like any text source.
+- parse_fasttext_vec_lines parses DISTRIBUTED (split/cast in Catalyst
+  over a text-line DataFrame), so a 10 GB .vec file fans out like any
+  text source.
 - token_label_weights crosses words x labels by driver-collecting the
   label side (#classes rows, tiny) and exploding it as literals per
   token — no join operator (a join form of a tiny cross plans or
@@ -76,40 +76,6 @@ def parse_fasttext_vec_lines(lines: DataFrame, dim: int, value_col: str = "value
         .where((F.col("_n") == dim + 1) & ~F.exists("vector", lambda v: v.isNull()))
         .drop("_n")
     )
-
-
-def load_fasttext_vec(spark, path: str) -> DataFrame:
-    """Load a fastText/word2vec text-format vector file. The header's
-    declared dim drives parsing; the declared word count is advisory
-    (fastText itself tolerates drift). Returns (word, vector).
-
-    Header removal is by SHAPE, not text equality: the header has 2
-    fields while every body row has dim+1 >= 3, so the parse filter in
-    parse_fasttext_vec_lines already excludes it for dim >= 2 — no body
-    line can be deleted by textually colliding with the header, and a
-    re-spaced header can't slip through (round-7 review finding). Only
-    the degenerate dim == 1 layout (where header and body rows are both
-    2 fields) needs positional removal; there the first file line is
-    dropped exactly via zipWithIndex."""
-    lines = spark.read.text(path)
-    first = lines.head(1)
-    if not first:
-        raise ValueError(f"empty .vec file: {path}")
-    header = first[0][0].split()
-    if len(header) != 2 or not all(t.isdigit() for t in header):
-        raise ValueError(f"not a .vec header: {header!r}")
-    dim = int(header[1])
-    if dim == 1:
-        body = (
-            spark.sparkContext.textFile(path)
-            .zipWithIndex()
-            .filter(lambda t: t[1] > 0)
-            .map(lambda t: (t[0],))
-            .toDF(["value"])
-        )
-    else:
-        body = lines
-    return parse_fasttext_vec_lines(body, dim)
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -480,23 +446,6 @@ def classify_documents_subword(
             F.coalesce(n_units_checked, F.lit(0)).cast("long").alias("n_units"),
         )
     )
-
-
-def save_token_label_weights(weights: DataFrame, path: str) -> None:
-    """Persist a (token, label, weight_micro) table to parquet — the
-    q147 index-persistence convention applied to model weights. The
-    weight build (vocabulary x labels dots over a parsed .vec) runs
-    once per MODEL, not once per corpus scored, so production scoring
-    reads this table instead of re-deriving it; the split build/score
-    walls are recorded in SCALE.md (q171 note)."""
-    weights.write.mode("overwrite").parquet(path)
-
-
-def load_token_label_weights(spark, path: str) -> DataFrame:
-    """Read a persisted weight table with the pinned schema (explicit,
-    so a corrupt/foreign parquet fails loudly at plan time rather than
-    surfacing NULL weights)."""
-    return spark.read.schema(_WEIGHTS_DDL).parquet(path)
 
 
 def weighted_quality_score(

@@ -10,7 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     BooleanType,
     DoubleType,
     IntegerType,
@@ -29,14 +28,6 @@ def _s(*fields: StructField) -> StructType:
 def _f(name: str, dtype, nullable: bool = True) -> StructField:
     return StructField(name, dtype, nullable)
 
-
-# engine input: pre-chunked evidence (reference ScanChunk, src/chunk.rs:1-7)
-CHUNKS = _s(
-    _f("chunk_id", LongType(), False),
-    _f("start", LongType(), False),
-    _f("valid_length", LongType(), False),
-    _f("data", BinaryType(), False),
-)
 
 # normalized signature hit (reference src/scanner/mod.rs:17-22)
 HITS = _s(

@@ -1,111 +1,24 @@
-"""Structured Streaming front-end: continuous carving over an arriving
-chunk table.
+"""Structured Streaming query fronts: the catalog's continuous queries.
 
-The reference is a batch engine with streaming mechanics — bounded
-channels, periodic flush, checkpoint/resume (SURVEY §2.6). Spark's
-native continuous analog: the chunk table lands as parquet files (an
-ingest job appends them as evidence is acquired), `readStream` picks
-up new chunk files, the SAME scan/normalize logic runs per micro-batch
-through `foreachBatch`, and the sink appends per-table outputs.
-Checkpointing is Spark's own (`checkpointLocation`) — exactly replaces
-the reference's next_offset resume file, including crash recovery.
+- `sessionize_stream`: gap-based sessionization as one native
+  `session_window` aggregation in append mode;
+- `neardup_probe_stream`: each micro-batch of new documents probes a
+  maintained MinHash-LSH band index and appends its hits;
+- `crawl_ingest_stream`: micro-batches of WARC archives are parsed,
+  content-digested and deduplicated against the ingested corpus and
+  prior batches.
 
-foreachBatch (not a pure streaming DAG) because carving needs the
-mapInPandas fan-out plus multi-table writes — both batch-only APIs.
+The two probe fronts run through `foreachBatch` (not a pure streaming
+DAG) because each batch needs a mapInPandas or Arrow step plus static
+joins, which are batch-only APIs. Checkpointing is Spark's own
+(`checkpointLocation`), with a parquet append sink, so batch replays
+are idempotent.
 """
 
 from __future__ import annotations
 
-import dataclasses
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-
-from swiftbeaver_spark import schemas
-from swiftbeaver_spark.carve_op import carve_hits_with_chunks
-from swiftbeaver_spark.config import EngineConfig
-from swiftbeaver_spark.fused_scan import scan_all_from_chunks
-from swiftbeaver_spark.progress import ProgressSnapshot, ProgressTracker
-
-
-def stream_chunks(spark: SparkSession, chunk_dir: str, max_files_per_trigger: int = 4) -> DataFrame:
-    """Streaming source over an append-only chunk-table directory."""
-    return (
-        spark.readStream.schema(schemas.CHUNKS)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(chunk_dir)
-    )
-
-
-def start_scan_stream(
-    spark: SparkSession,
-    chunk_dir: str,
-    out_dir: str,
-    cfg: EngineConfig,
-    checkpoint_dir: str,
-    carve: bool = True,
-    available_now: bool = False,
-    on_batch: Callable[[int, int], None] | None = None,
-    on_progress: Callable[[ProgressSnapshot], None] | None = None,
-    total_bytes: int | None = None,
-) -> StreamingQuery:
-    """chunks stream -> hits (+ carved files) appended per micro-batch.
-
-    Each micro-batch is a bounded chunk set, so the batch carve path
-    (chunk-range join) applies unchanged — the stream IS the reference's
-    pipelined chunk loop with Spark-managed backpressure and restart.
-
-    `on_progress` receives a ProgressSnapshot per micro-batch (the
-    reference's periodic MiB/s + ETA tick, src/pipeline/mod.rs:526-583);
-    pass `total_bytes` (known evidence size) to get pct/ETA.
-    """
-    # hits only: the kernel skips the span and entropy scans
-    hits_cfg = dataclasses.replace(
-        cfg, enable_string_scan=False, enable_entropy_detection=False
-    )
-    chunks_stream = stream_chunks(spark, chunk_dir)
-    tracker = ProgressTracker(total_bytes=total_bytes)
-    # cumulative hit count lives driver-side: O(1) per tick like the
-    # reference's progress counter (src/pipeline/mod.rs:526-583) — never
-    # re-read the accumulated output directory, which would cost
-    # O(total-written-so-far) per batch (quadratic over a long run)
-    hits_total = [0]
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        hits = scan_all_from_chunks(batch_df, hits_cfg)["hits"]
-        if on_batch is not None:
-            hits = hits.persist()
-        hits.write.mode("append").parquet(f"{out_dir}/hits")
-        if carve:
-            carved = carve_hits_with_chunks(hits, batch_df, cfg)
-            carved.write.mode("append").parquet(f"{out_dir}/carved_files")
-        if on_progress is not None:
-            # partial-agg over the persisted batch — no source re-scan
-            stats = batch_df.agg(
-                F.count("*").alias("n"),
-                F.coalesce(F.sum("valid_length"), F.lit(0)).alias("b"),
-            ).collect()[0]
-            on_progress(tracker.tick(batch_id, stats["n"], stats["b"]))
-        if on_batch is not None:
-            # count THIS batch's hits off the persisted frame (no output
-            # re-scan) and fold into the driver-side running total
-            hits_total[0] += hits.count()
-            on_batch(batch_id, hits_total[0])
-            hits.unpersist()
-        batch_df.unpersist()
-
-    writer = (
-        chunks_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
 
 def sessionize_stream(
     events: DataFrame,
@@ -153,8 +66,8 @@ def neardup_probe_stream(
     only arriving documents compute signatures.
 
     foreachBatch (not a pure streaming DAG) because the probe needs a
-    stream-batch -> static equi-join plus an Arrow/JVM verify — the
-    same reason the scan pipeline uses it (see module docstring).
+    stream-batch -> static equi-join plus an Arrow/JVM verify (see the
+    module docstring).
     Exactly-once: the parquet sink + checkpoint make batch replays
     idempotent."""
     from swiftbeaver_spark.llm.dedup import incremental_minhash_near_dups

@@ -6,6 +6,23 @@ from __future__ import annotations
 import struct
 import zlib
 
+from swiftbeaver_spark.carvers.base import Reader
+
+
+class BytesReader(Reader):
+    """In-memory evidence for driving a carver without a file."""
+
+    def __init__(self, data: bytes):
+        self._data = data
+
+    def length(self) -> int:
+        return len(self._data)
+
+    def read_at(self, offset: int, length: int) -> bytes:
+        if offset >= len(self._data) or length <= 0:
+            return b""
+        return self._data[offset : offset + length]
+
 
 def insert_bytes(buf: bytearray, offset: int, data: bytes) -> None:
     buf[offset : offset + len(data)] = data
@@ -339,8 +356,8 @@ def ungated_hits(spark, path: str, cfg):
     """Hits of the chunk-table scan (fused_scan.scan_all_from_chunks). It
     has no scan-time gates: the carver alone rejects loose-signature
     false hits there."""
-    from swiftbeaver_spark.chunking import chunks_from_file
     from swiftbeaver_spark.fused_scan import scan_all_from_chunks
+    from tests.oracles.chunk_run import chunks_from_file
 
     chunks = chunks_from_file(spark, path, cfg.chunk_size, cfg.overlap)
     return scan_all_from_chunks(chunks, cfg)["hits"]
@@ -367,3 +384,41 @@ def assert_gates_sound(spark, path: str, cfg) -> None:
         )
 
     assert carves(gated) == carves(ungated) != []
+
+
+def verify_against_manifest(carved, manifest):
+    """Golden-manifest check (reference tests/common/mod.rs
+    verify_carved_files): for each manifest row, is there a carved row
+    with matching (offset, size, sha256)? Returns manifest rows with a
+    `recovered` flag."""
+    from pyspark.sql import functions as F
+
+    hits = (
+        carved.select(
+            F.col("global_start").alias("offset"),
+            F.col("size").alias("size"),
+            F.col("sha256").alias("sha256"),
+        )
+        .distinct()
+        .withColumn("recovered", F.lit(True))
+    )
+    return manifest.join(hits, ["offset", "size", "sha256"], "left").withColumn(
+        "recovered", F.coalesce(F.col("recovered"), F.lit(False))
+    )
+
+
+def convert_ewf_to_raw(ewf_path: str, out_path: str) -> None:
+    """E01 -> raw copy of the decompressed media through the program's
+    EWF reader."""
+    from swiftbeaver_spark.ewf import EwfReader
+
+    reader = EwfReader(ewf_path)
+    try:
+        with open(out_path, "wb") as out:
+            pos = 0
+            while pos < reader.media_size:
+                n = min(reader.chunk_size * 16, reader.media_size - pos)
+                out.write(reader.read_at(pos, n))
+                pos += n
+    finally:
+        reader.close()

@@ -1,11 +1,14 @@
 """Vector-kernel oracle: the Catalyst zip_with/aggregate folds the
 compiled sb_dot / sb_sqdists / sb_dots / sb_adc kernels are pinned
-bit-exact against (same IEEE order, same null algebra)."""
+bit-exact against (same IEEE order, same null algebra), and the exact
+top-k the approximate searches' recall is measured against."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from swiftbeaver_spark.llm.similarity import cosine_similarity
 
 
 def dot(a, b) -> Column:
@@ -37,4 +40,35 @@ def adc(lut, code, m: int, k: int) -> Column:
         F.sequence(F.lit(0), F.lit(m - 1)),
         F.lit(0.0),
         lambda s, j: s + F.element_at(lut, (j * k + F.element_at(code, j + 1) + 1).cast("int")),
+    )
+
+
+def brute_force_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_vec",
+) -> DataFrame:
+    """Exact top-k by cosine: broadcast the (small) query set, rank per
+    query. Ties broken by corpus id for determinism."""
+    c = corpus.select(
+        F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("vec")
+    )
+    q = queries.select(
+        F.col(query_id_col).alias("query_id"),
+        F.col(query_vec_col).cast("array<double>").alias("query_vec"),
+    )
+    scored = c.join(F.broadcast(q)).select(
+        "query_id",
+        "vec_id",
+        cosine_similarity(F.col("vec"), F.col("query_vec")).alias("cosine"),
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "vec_id", "cosine", "rank")
     )

@@ -14,8 +14,9 @@ import pytest
 from pyspark.sql import DataFrame
 
 from swiftbeaver_spark.carve_op import carve_hits_with_chunks
-from swiftbeaver_spark.chunking import chunks_from_bytes
 from swiftbeaver_spark.config import DEFAULT_CONFIG
+
+from tests.oracles.chunk_run import CHUNKS, chunks_from_bytes
 
 CFG = dataclasses.replace(DEFAULT_CONFIG, chunk_size=4096, overlap=512)
 
@@ -173,10 +174,9 @@ def test_scattered_chunk_table_matches_contiguous_and_positioned(spark, tmp_path
     chunks = chunks_from_bytes(spark, evidence, CFG.chunk_size, CFG.overlap)
     pq = str(tmp_path / "scattered.parquet")
     chunks.repartition(7, "chunk_id").write.parquet(pq)
-    from swiftbeaver_spark import schemas
     from swiftbeaver_spark.carve_op import carve_hits_with_evidence
 
-    scattered = spark.read.schema(schemas.CHUNKS).parquet(pq)
+    scattered = spark.read.schema(CHUNKS).parquet(pq)
     hits = spark.createDataFrame(
         [(off, "bmp", "bmp_header") for off in offsets],
         "global_offset long, file_type_id string, pattern_id string",
@@ -229,9 +229,7 @@ def test_windows_across_file_boundaries_match_single_file(spark, tmp_path):
     pq = str(tmp_path / "multi.parquet")
     # contiguous ranges, MANY small files: every bmp spans a boundary
     chunks.repartitionByRange(12, "chunk_id").write.parquet(pq)
-    from swiftbeaver_spark import schemas
-
-    multi = spark.read.schema(schemas.CHUNKS).parquet(pq)
+    multi = spark.read.schema(CHUNKS).parquet(pq)
     hits = spark.createDataFrame(
         [(off, "bmp", "bmp_header") for off in offsets],
         "global_offset long, file_type_id string, pattern_id string",
@@ -265,7 +263,6 @@ def test_backward_anchored_tar_at_run_start_matches_positioned(spark, tmp_path):
     backup bytes, matching positioned reads exactly."""
     from tests.fixtures import mk_tar
 
-    from swiftbeaver_spark import schemas
     from swiftbeaver_spark.carve_op import carve_hits_with_evidence
 
     tar = mk_tar()  # 2048 bytes, ustar at +257
@@ -282,7 +279,7 @@ def test_backward_anchored_tar_at_run_start_matches_positioned(spark, tmp_path):
     pq = str(tmp_path / "runs.parquet")
     # 3 contiguous files; run 2 starts at chunk 4 == the hit offset
     chunks.repartitionByRange(3, "chunk_id").write.parquet(pq)
-    multi = spark.read.schema(schemas.CHUNKS).parquet(pq)
+    multi = spark.read.schema(CHUNKS).parquet(pq)
     hits = spark.createDataFrame(
         [(tar_at + 257, "tar", "tar_ustar")],
         "global_offset long, file_type_id string, pattern_id string",
@@ -318,7 +315,6 @@ def test_random_layouts_match_positioned(spark, tmp_path):
 
     from tests.fixtures import mk_tar
 
-    from swiftbeaver_spark import schemas
     from swiftbeaver_spark.carve_op import carve_hits_with_evidence
 
     tar = mk_tar()
@@ -369,7 +365,7 @@ def test_random_layouts_match_positioned(spark, tmp_path):
                     tuple,
                     carve_hits_with_chunks(
                         hits_df,
-                        spark.read.schema(schemas.CHUNKS).parquet(pq),
+                        spark.read.schema(CHUNKS).parquet(pq),
                         cfg,
                         window_cap=len(bmp) + 4 * chunk,
                         evidence_len=len(evidence),

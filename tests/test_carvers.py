@@ -12,10 +12,18 @@ import hashlib
 import pytest
 
 from swiftbeaver_spark.carvers import build_registry, carve_hit
-from swiftbeaver_spark.carvers.base import BytesReader
 from swiftbeaver_spark.config import DEFAULT_CONFIG
 
-from tests.fixtures import ALL_FIXTURES, mk_epub, mk_gzip, mk_jpeg, mk_mov, mk_sqlite, mk_zip
+from tests.fixtures import (
+    ALL_FIXTURES,
+    BytesReader,
+    mk_epub,
+    mk_gzip,
+    mk_jpeg,
+    mk_mov,
+    mk_sqlite,
+    mk_zip,
+)
 
 TEST_CFG = dataclasses.replace(
     DEFAULT_CONFIG,

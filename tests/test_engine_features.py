@@ -1,19 +1,15 @@
-"""Engine features: checkpoint/resume, sinks, streaming, limits."""
+"""Engine features: checkpoint/resume, sinks, limits."""
 
 from __future__ import annotations
 
 import dataclasses
-import json
 import os
-import time
 
 import pytest
 
 from swiftbeaver_spark.checkpoint import CheckpointState
-from swiftbeaver_spark.chunking import chunks_from_bytes, materialize_chunks
 from swiftbeaver_spark.config import DEFAULT_CONFIG
 from swiftbeaver_spark.engine import Engine, make_run_id, write_tables
-from swiftbeaver_spark.streaming import start_scan_stream
 
 from tests.fixtures import ALL_FIXTURES, insert_bytes
 from tests.oracles.chunk_run import chunk_run, summary_row
@@ -177,87 +173,6 @@ def test_run_id_format():
     assert len(date) == 16 and date.endswith("Z") and "T" in date
     assert len(rand) == 16
     int(rand, 16)
-
-
-def test_streaming_scan_carve(spark, tmp_path):
-    """availableNow streaming over an append-only chunk dir produces the
-    same hits/carves as batch."""
-    evidence, offsets = _evidence_with_jpegs(3)
-    chunk_dir = str(tmp_path / "chunks")
-    out_dir = str(tmp_path / "out")
-    cp_dir = str(tmp_path / "cp")
-    chunks = chunks_from_bytes(spark, evidence, CFG.chunk_size, CFG.overlap)
-    materialize_chunks(chunks, chunk_dir)
-    q = start_scan_stream(
-        spark, chunk_dir, out_dir, CFG, cp_dir, carve=True, available_now=True
-    )
-    q.awaitTermination(120)
-    hits = spark.read.parquet(f"{out_dir}/hits").collect()
-    assert {h.global_offset for h in hits} >= set(offsets)
-    carved = spark.read.parquet(f"{out_dir}/carved_files").collect()
-    assert {c.global_start for c in carved} == set(offsets)
-
-
-def test_streaming_progress_snapshots(spark, tmp_path):
-    """Per-batch MiB/s + ETA ticks (reference src/pipeline/mod.rs:526-583):
-    monotone bytes/chunks, sane pct, ETA reaching 0 when done."""
-    evidence, _ = _evidence_with_jpegs(3)
-    chunk_dir = str(tmp_path / "chunks")
-    chunks = chunks_from_bytes(spark, evidence, CFG.chunk_size, CFG.overlap)
-    materialize_chunks(chunks, chunk_dir)
-
-    snaps = []
-    q = start_scan_stream(
-        spark,
-        chunk_dir,
-        str(tmp_path / "out"),
-        CFG,
-        str(tmp_path / "cp"),
-        carve=False,
-        available_now=True,
-        on_progress=snaps.append,
-        total_bytes=len(evidence),
-    )
-    q.awaitTermination(120)
-    assert snaps, "no progress ticks observed"
-    bytes_seq = [s.bytes_scanned for s in snaps]
-    chunk_seq = [s.chunks_done for s in snaps]
-    assert bytes_seq == sorted(bytes_seq) and chunk_seq == sorted(chunk_seq)
-    last = snaps[-1]
-    assert last.bytes_scanned == len(evidence)
-    assert last.pct == 100.0
-    assert last.eta_sec == 0.0
-    assert last.mib_per_s > 0
-    assert all("MiB/s" in str(s) for s in snaps)
-
-
-def test_streaming_on_batch_cumulative_hits(spark, tmp_path):
-    """on_batch receives a driver-side cumulative hit count — O(1) per
-    tick, no re-read of the accumulated output dir (VERDICT r2 #2)."""
-    evidence, offsets = _evidence_with_jpegs(3)
-    chunk_dir = str(tmp_path / "chunks")
-    out_dir = str(tmp_path / "out")
-    chunks = chunks_from_bytes(spark, evidence, CFG.chunk_size, CFG.overlap)
-    materialize_chunks(chunks, chunk_dir)
-
-    ticks = []
-    q = start_scan_stream(
-        spark,
-        chunk_dir,
-        out_dir,
-        CFG,
-        str(tmp_path / "cp"),
-        carve=False,
-        available_now=True,
-        on_batch=lambda bid, total: ticks.append((bid, total)),
-    )
-    q.awaitTermination(120)
-    assert ticks, "no on_batch ticks observed"
-    totals = [t for _, t in ticks]
-    assert totals == sorted(totals)  # cumulative, monotone
-    n_written = spark.read.parquet(f"{out_dir}/hits").count()
-    assert totals[-1] == n_written
-    assert n_written >= len(offsets)
 
 
 def test_max_files_limit(spark, tmp_path):

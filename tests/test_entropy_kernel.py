@@ -21,13 +21,13 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from swiftbeaver_spark.chunking import chunks_from_bytes
 from swiftbeaver_spark.config import DEFAULT_CONFIG
 from swiftbeaver_spark.entropy import _entropy_spec, merge_regions
 from swiftbeaver_spark.fused_scan import scan_all_from_chunks, scan_all_from_evidence
 from swiftbeaver_spark.jvm import spec_for
 
 from tests.fixtures import bytes_scan
+from tests.oracles.chunk_run import chunks_from_bytes
 from tests.oracles.entropy import chunk_windows, qualifying_rows
 
 

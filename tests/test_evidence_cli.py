@@ -11,15 +11,9 @@ import sys
 import pyarrow.parquet as pq
 import pytest
 
-from swiftbeaver_spark.chunking import chunks_from_bytes
-from swiftbeaver_spark.evidence import (
-    chunk_digests,
-    evidence_digest_of_digests,
-    evidence_sha256_local,
-    verify_against_manifest,
-)
+from swiftbeaver_spark.evidence import evidence_sha256_local
 
-from tests.fixtures import ALL_FIXTURES, insert_bytes
+from tests.fixtures import ALL_FIXTURES, convert_ewf_to_raw, insert_bytes, verify_against_manifest
 
 
 def test_evidence_sha256_local(tmp_path):
@@ -28,20 +22,6 @@ def test_evidence_sha256_local(tmp_path):
     with open(p, "wb") as fh:
         fh.write(data)
     assert evidence_sha256_local(p) == hashlib.sha256(data).hexdigest()
-
-
-def test_chunk_digests_compose(spark):
-    data = bytes(range(256)) * 100
-    chunks = chunks_from_bytes(spark, data, chunk_size=4096, overlap=512)
-    rows = chunk_digests(chunks).orderBy("chunk_id").collect()
-    # each digest covers exactly the valid region
-    for r in rows:
-        expected = hashlib.sha256(data[r.start : r.start + r.valid_length]).hexdigest()
-        assert r.chunk_sha256 == expected
-    # digest-of-digests is deterministic
-    d1 = evidence_digest_of_digests(chunks)
-    d2 = evidence_digest_of_digests(chunks)
-    assert d1 == d2 and len(d1) == 64
 
 
 def test_verify_against_manifest(spark):
@@ -58,8 +38,6 @@ def test_verify_against_manifest(spark):
 
 
 def test_ewf_convert_missing_file_raises():
-    from swiftbeaver_spark.evidence import convert_ewf_to_raw
-
     with pytest.raises(FileNotFoundError):
         convert_ewf_to_raw("/nonexistent.E01", "/tmp/out.raw")
 

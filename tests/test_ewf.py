@@ -6,13 +6,13 @@ path needs no native deps)."""
 from __future__ import annotations
 
 import random
-import struct
 import zlib
 
 import pytest
 
-from swiftbeaver_spark.evidence import convert_ewf_to_raw
 from swiftbeaver_spark.ewf import EwfFormatError, EwfReader, write_ewf
+
+from tests.fixtures import convert_ewf_to_raw
 
 
 def mixed_data(n: int = 300_000) -> bytes:

@@ -16,12 +16,12 @@ import dataclasses
 import numpy as np
 import pytest
 
-from swiftbeaver_spark.chunking import chunks_from_file
 from swiftbeaver_spark.config import DEFAULT_CONFIG
 from swiftbeaver_spark.fused_scan import scan_all_from_chunks, scan_all_from_evidence
 from swiftbeaver_spark.jvm import ensure_kernel
 
 from tests.fixtures import mk_jpeg, mk_png, mk_sqlite
+from tests.oracles.chunk_run import chunks_from_file
 
 
 @pytest.fixture(autouse=True)

@@ -135,7 +135,7 @@ def test_scan_evidence_jvm_equals_python(spark, tmp_path):
     loose-signature hits the scan-time gates drop."""
     import dataclasses
 
-    from swiftbeaver_spark.chunking import chunks_from_file
+    from tests.oracles.chunk_run import chunks_from_file
     from swiftbeaver_spark.fused_scan import scan_all_from_evidence
 
     blob = planted_blob(99, size=300_000)
@@ -157,7 +157,7 @@ def test_scan_chunks_jvm_equals_python(spark):
     """Chunk-table scan: the bytes entry's raw per-row hits (overlap
     tails included) equal the naive find per row, and the hits table
     keeps exactly the owned ones."""
-    from swiftbeaver_spark.chunking import chunks_from_bytes
+    from tests.oracles.chunk_run import chunks_from_bytes
 
     blob = planted_blob(7, size=150_000)
     chunks = chunks_from_bytes(spark, blob, 32 * 1024, 2048)

@@ -10,11 +10,10 @@ import struct
 import pytest
 
 from swiftbeaver_spark.carvers import build_registry, carve_hit
-from swiftbeaver_spark.carvers.base import BytesReader
 from swiftbeaver_spark.config import DEFAULT_CONFIG
 from swiftbeaver_spark.scanner import MAX_HITS_PER_CHUNK, compile_patterns
 
-from tests.fixtures import ALL_FIXTURES, bytes_scan
+from tests.fixtures import ALL_FIXTURES, BytesReader, bytes_scan
 from tests.oracles.scan import find_all
 
 TEST_CFG = dataclasses.replace(
@@ -150,12 +149,12 @@ def test_mp4_sample_index_survives_truncation_and_noise():
 def test_resize_bmp_and_wav_span_survive_malformed():
     from tests.test_llm import _mk_bmp24
 
-    from swiftbeaver_spark.llm.multimodal import _wav_data_span, resize_bmp
+    from swiftbeaver_spark.llm.multimodal import _wav_data_span, bmp_pixels
 
     bmp = _mk_bmp24(4, 2, [[(i, j, 0) for i in range(4)] for j in range(2)])
+    assert bmp_pixels(bmp).shape == (2, 4, 3)
     for cut in range(0, len(bmp)):
-        out = resize_bmp(bmp[:cut], 2, 2)
-        assert out is None or isinstance(out, bytes)
+        assert bmp_pixels(bmp[:cut]) is None
     import hashlib
     import struct
 
@@ -170,5 +169,5 @@ def test_resize_bmp_and_wav_span_survive_malformed():
         assert out is None or isinstance(out, tuple)
     for seed in range(50):
         noise = hashlib.sha256(f"m{seed}".encode()).digest() * 4
-        assert resize_bmp(noise, 2, 2) is None
+        assert bmp_pixels(noise) is None
         assert _wav_data_span(noise) is None

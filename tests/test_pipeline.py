@@ -12,19 +12,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from swiftbeaver_spark.carve_op import carve_hits_with_chunks, carve_hits_with_evidence
-from swiftbeaver_spark.chunking import (
-    chunks_from_bytes,
-    chunks_from_file,
-    keep_parents,
-    kept_extent,
-    plan_chunks,
-    scanned_end,
-)
+from swiftbeaver_spark.chunking import keep_parents, kept_extent, scanned_end
 from swiftbeaver_spark.config import DEFAULT_CONFIG
 from swiftbeaver_spark.engine import Engine, write_tables
 from swiftbeaver_spark.fused_scan import scan_all_from_chunks
 
-from tests.fixtures import ALL_FIXTURES, insert_bytes, ungated_hits
+from tests.fixtures import ALL_FIXTURES, insert_bytes, ungated_hits, verify_against_manifest
+from tests.oracles.chunk_run import chunks_from_bytes, chunks_from_file, plan_chunks
 
 TEST_CFG = dataclasses.replace(
     DEFAULT_CONFIG,
@@ -119,8 +113,6 @@ def test_golden_manifest_verify_e2e(spark, tmp_path):
     """The reference's golden-image flow in ONE run (golden_image_test.rs:166):
     pack all formats + manifest, Engine.run, then verify_against_manifest
     joins carved output to the manifest DataFrame — 100% recovered."""
-    from swiftbeaver_spark.evidence import verify_against_manifest
-
     evidence, manifest = build_golden()
     path = str(tmp_path / "golden.raw")
     with open(path, "wb") as fh:

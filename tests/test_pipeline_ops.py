@@ -525,37 +525,6 @@ def test_crossdoc_dup_short_docs_excluded(spark):
     assert got == {3}
 
 
-def test_write_shards_contiguous_ranges(spark, tmp_path):
-    """Each shard file holds a contiguous seq_id span; spans don't
-    interleave across files (range layout, not hash)."""
-    from swiftbeaver_spark.llm.pipeline import pack_sequences, write_shards
-
-    docs = spark.createDataFrame(
-        [(i, "tok " * (10 + i % 37)) for i in range(300)], "doc_id long, text string"
-    )
-    packed = pack_sequences(docs, seq_len=64)
-    out = str(tmp_path / "shards")
-    write_shards(packed, out, num_shards=4)
-
-    import pyspark.sql.functions as FF
-
-    back = spark.read.parquet(out).select(
-        "seq_id", FF.input_file_name().alias("f")
-    )
-    spans = {
-        r["f"]: (r["lo"], r["hi"])
-        for r in back.groupBy("f")
-        .agg(FF.min("seq_id").alias("lo"), FF.max("seq_id").alias("hi"))
-        .collect()
-    }
-    assert 1 < len(spans) <= 4
-    ordered = sorted(spans.values())
-    for (alo, ahi), (blo, bhi) in zip(ordered, ordered[1:]):
-        assert ahi <= blo  # contiguous, non-interleaved ranges
-    total = spark.read.parquet(out).count()
-    assert total == packed.count()
-
-
 def test_pack_tar_parses_with_stdlib_tarfile():
     """The hand-built USTAR bytes must be a valid archive to an
     independent parser: names, sizes, payloads, and fixed metadata all

@@ -40,7 +40,7 @@ def test_parquet_pushdown_and_pruning(spark):
 
 
 def _chunk_hits(spark):
-    from swiftbeaver_spark.chunking import chunks_from_bytes
+    from tests.oracles.chunk_run import chunks_from_bytes
     from swiftbeaver_spark.config import DEFAULT_CONFIG
     from swiftbeaver_spark.fused_scan import scan_all_from_chunks
 
@@ -102,7 +102,7 @@ def test_entropy_merge_windows_are_bucketed(spark):
     global."""
     import dataclasses
 
-    from swiftbeaver_spark.chunking import chunks_from_bytes
+    from tests.oracles.chunk_run import chunks_from_bytes
     from swiftbeaver_spark.config import DEFAULT_CONFIG
     from swiftbeaver_spark.fused_scan import scan_all_from_chunks
 

@@ -321,7 +321,7 @@ def test_hilbert_bijection_random_bits(spark, seed):
     """with_hilbert_key is a bijection [0,2^b)^2 -> [0,4^b) for small
     grids (driver-side reference; the Spark twin is pinned to it by
     the exhaustive 16x16 test)."""
-    from swiftbeaver_spark.layout import hilbert_xy2d
+    from tests.oracles.layout import hilbert_xy2d
 
     bits = 3 + seed % 3
     n = 1 << bits

@@ -575,20 +575,6 @@ def test_zorder_key_values(spark):
     assert got[(2, 2)] == 0b1100
 
 
-def test_zorder_layout_locality(spark):
-    """Range-partitioning by the Morton key keeps 2-d neighborhoods in
-    few partitions: a small x-y box must not scatter over all of them."""
-    from swiftbeaver_spark.layout import zorder_key, zorder_layout
-
-    rows = [(x, y) for x in range(64) for y in range(64)]
-    df = spark.createDataFrame(rows, "x long, y long")
-    laid = zorder_layout(df, ["x", "y"], bits=6, num_partitions=16)
-    pid = laid.withColumn("pid", F.spark_partition_id())
-    box = pid.where((F.col("x") < 8) & (F.col("y") < 8))
-    n_parts = box.select("pid").distinct().count()
-    assert n_parts <= 4, f"8x8 box scattered over {n_parts} partitions"
-
-
 def test_zorder_key_width_guard():
     import pytest
 
@@ -854,7 +840,9 @@ def test_snapshot_diff_null_semantics(spark):
 
 
 def test_hilbert_key_matches_reference_exhaustive(spark):
-    from swiftbeaver_spark.layout import hilbert_xy2d, with_hilbert_key
+    from swiftbeaver_spark.layout import with_hilbert_key
+
+    from tests.oracles.layout import hilbert_xy2d
 
     bits, n = 4, 16
     grid = spark.createDataFrame(
@@ -872,7 +860,7 @@ def test_hilbert_key_matches_reference_exhaustive(spark):
 def test_hilbert_unit_step_locality():
     """The property Z-order lacks: consecutive curve positions are
     ALWAYS grid neighbours (Manhattan distance 1)."""
-    from swiftbeaver_spark.layout import hilbert_xy2d
+    from tests.oracles.layout import hilbert_xy2d
 
     n = 16
     by_d = {}

@@ -63,7 +63,7 @@ def reference_rows(data: bytes, cfg) -> list[tuple]:
 def chunk_table_rows(spark, data: bytes, cfg) -> list[tuple]:
     """The chunk-table scan's span rows (fused_scan.scan_all_from_chunks
     over cfg.chunk_size chunk rows)."""
-    from swiftbeaver_spark.chunking import chunks_from_bytes
+    from tests.oracles.chunk_run import chunks_from_bytes
     from swiftbeaver_spark.fused_scan import scan_all_from_chunks
 
     chunks = chunks_from_bytes(spark, data, cfg.chunk_size, cfg.overlap)

@@ -5,9 +5,6 @@ from __future__ import annotations
 
 import dataclasses
 
-from pyspark.sql import functions as F
-
-from swiftbeaver_spark.chunking import chunks_from_bytes
 from swiftbeaver_spark.config import DEFAULT_CONFIG
 from swiftbeaver_spark.fused_scan import scan_all_from_chunks
 from swiftbeaver_spark.strings_scan import (
@@ -16,6 +13,8 @@ from swiftbeaver_spark.strings_scan import (
     normalize_url,
     scan_string_artefacts,
 )
+
+from tests.oracles.chunk_run import chunks_from_bytes
 
 STR_CFG = dataclasses.replace(
     DEFAULT_CONFIG, enable_string_scan=True, string_scan_utf16=True

@@ -14,7 +14,8 @@ import bz2
 import gzip as gzip_mod
 
 from swiftbeaver_spark.carvers.archives import _BZIP2_END, carve_bzip2, carve_gzip
-from swiftbeaver_spark.carvers.base import BytesReader
+
+from tests.fixtures import BytesReader
 
 
 def _bzip2(data: bytes, offset: int, max_size: int):

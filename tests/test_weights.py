@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from swiftbeaver_spark.llm.weights import (
     classify_documents,
-    load_fasttext_vec,
     parse_fasttext_vec_lines,
     token_label_weights,
     weighted_quality_score,
@@ -20,6 +19,14 @@ und -1.0 0.0 0.5
 __label__en 1.0 0.5 0.0
 __label__de -0.5 1.0 0.25
 """
+
+
+def _vecs(spark, text: str = VEC_TEXT):
+    """(word, vector) rows of a .vec text: the body lines, minus the
+    "<n_words> <dim>" header, through parse_fasttext_vec_lines."""
+    header, *body = text.rstrip("\n").split("\n")
+    lines = spark.createDataFrame([(line,) for line in body], "value string")
+    return parse_fasttext_vec_lines(lines, int(header.split()[1]))
 
 
 def test_parse_fasttext_vec_lines(spark):
@@ -38,22 +45,8 @@ def test_parse_fasttext_vec_lines(spark):
     assert rows["padded"] == [1.0, 2.0, 3.0]
 
 
-def test_load_fasttext_vec_file(spark, tmp_path):
-    p = tmp_path / "model.vec"
-    p.write_text(VEC_TEXT)
-    rows = {r.word: r.vector for r in load_fasttext_vec(spark, str(p)).collect()}
-    assert len(rows) == 4
-    assert rows["__label__en"] == [1.0, 0.5, 0.0]
-    bad = tmp_path / "bad.vec"
-    bad.write_text("not a vec file at all\n")
-    with pytest.raises(ValueError):
-        load_fasttext_vec(spark, str(bad))
-
-
-def test_token_label_weights_dots(spark, tmp_path):
-    p = tmp_path / "model.vec"
-    p.write_text(VEC_TEXT)
-    w = token_label_weights(load_fasttext_vec(spark, str(p)))
+def test_token_label_weights_dots(spark):
+    w = token_label_weights(_vecs(spark))
     got = {(r.token, r.label): r.weight_micro for r in w.collect()}
     # 2 tokens x 2 labels; dots by hand, micro-quantized
     assert got[("the", "en")] == round((0.1 * 1.0 + 0.2 * 0.5 + -0.3 * 0.0) * 1e6)
@@ -147,32 +140,14 @@ def test_weighted_quality_oov_zero_and_length_normalizer(spark):
     assert (r.n_tokens, r.score_sum, r.quality_score_micro) == (4, 4_000_000, 1_000_000)
 
 
-def test_load_fasttext_vec_crlf(spark, tmp_path):
-    """CRLF-terminated (Windows-saved) .vec: the trailing \\r must not
-    shift field counts and silently drop every row (round-7 review —
-    Spark trim() strips only 0x20, and \\s+ split keeps a trailing
-    empty field)."""
-    p = tmp_path / "crlf.vec"
-    p.write_bytes(VEC_TEXT.replace("\n", "\r\n").encode())
-    rows = {r.word: r.vector for r in load_fasttext_vec(spark, str(p)).collect()}
+def test_load_fasttext_vec_crlf(spark):
+    """CRLF-terminated (Windows-saved) .vec lines: the trailing \\r must
+    not shift field counts in parse_fasttext_vec_lines and silently drop
+    every row (round-7 review — Spark trim() strips only 0x20, and \\s+
+    split keeps a trailing empty field)."""
+    rows = {r.word: r.vector for r in _vecs(spark, VEC_TEXT.replace("\n", "\r\n")).collect()}
     assert len(rows) == 4
     assert rows["the"] == [0.1, 0.2, -0.3]
-
-
-def test_load_fasttext_vec_dim1_and_empty(spark, tmp_path):
-    """dim == 1 is the one layout where header and body rows share the
-    2-field shape: the header must be removed positionally, and a body
-    line textually identical to the header must SURVIVE (the old
-    string-equality filter deleted it). An empty file raises ValueError
-    instead of IndexError/empty model."""
-    d1 = tmp_path / "d1.vec"
-    d1.write_text("3 1\nfoo 0.5\n3 1\nbar -2\n")
-    rows = {r.word: r.vector for r in load_fasttext_vec(spark, str(d1)).collect()}
-    assert rows == {"foo": [0.5], "3": [1.0], "bar": [-2.0]}
-    e = tmp_path / "empty.vec"
-    e.write_text("")
-    with pytest.raises(ValueError, match="empty"):
-        load_fasttext_vec(spark, str(e))
 
 
 def test_classify_documents_null_text(spark):
@@ -320,16 +295,14 @@ def test_classify_subword_unit_weights_matches_union(spark):
     assert sorted(map(tuple, base.collect())) == sorted(map(tuple, fast.collect()))
 
 
-def test_token_label_weights_join_fallback_matches_explode(spark, tmp_path, monkeypatch):
+def test_token_label_weights_join_fallback_matches_explode(spark, monkeypatch):
     """ADVICE r7: past the literal budget (labels x dim) the weight
     build must switch from plan-literal explode to a broadcast hash
     join — identical rows, and never a BroadcastNestedLoopJoin (the
     plan a literal-key cross would fold into)."""
     import swiftbeaver_spark.llm.weights as W
 
-    p = tmp_path / "model.vec"
-    p.write_text(VEC_TEXT)
-    vecs = load_fasttext_vec(spark, str(p))
+    vecs = _vecs(spark)
     want = sorted(map(tuple, token_label_weights(vecs).collect()))
 
     monkeypatch.setattr(W, "_LABEL_LITERAL_BUDGET", 1)
@@ -364,37 +337,6 @@ def test_subword_label_density_guard_raises(spark):
     out = classify_documents_subword(docs, word_w, bucket_w, n_buckets=1)
     with pytest.raises(SparkRuntimeException, match="label-dense"):
         out.collect()
-
-
-def test_persisted_weights_round_trip(spark, tmp_path):
-    """VERDICT r8 task 3: the weight build runs once per model; scoring
-    reads the persisted parquet (q147 index-persistence convention) and
-    classifies identically to the freshly-built table."""
-    from swiftbeaver_spark.llm.weights import (
-        load_token_label_weights,
-        save_token_label_weights,
-    )
-
-    p = tmp_path / "model.vec"
-    p.write_text(VEC_TEXT)
-    weights = token_label_weights(load_fasttext_vec(spark, str(p)))
-    wpath = str(tmp_path / "weights.parquet")
-    save_token_label_weights(weights, wpath)
-
-    docs = spark.createDataFrame(
-        [(1, "the the und"), (2, "nothing known")], "doc_id long, text string"
-    )
-    want = sorted(map(tuple, classify_documents(docs, weights).collect()))
-    got = sorted(
-        map(
-            tuple,
-            classify_documents(
-                docs, load_token_label_weights(spark, wpath)
-            ).collect(),
-        )
-    )
-    assert got == want
-    assert len(got) == 2
 
 
 def test_subword_kernel_matches_catalyst(spark):

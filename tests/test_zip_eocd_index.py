@@ -13,14 +13,12 @@ fuzzed layouts.
 from __future__ import annotations
 
 import random
-import struct
 
 import pytest
 
 from swiftbeaver_spark.carvers.archives import carve_zip, collect_zip_eocds
-from swiftbeaver_spark.carvers.base import BytesReader
 
-from tests.fixtures import mk_zip
+from tests.fixtures import BytesReader, mk_zip
 
 
 def _outcome_tuple(o):

@@ -13,7 +13,7 @@ only ever exercised at toy vocab x 4 labels. This tool:
      ASSERTS the plan took the BroadcastHashJoin fallback (150 x 300
      = 45000 literals >> 4096 budget), never the literal explode /
      BroadcastNestedLoopJoin,
-  3. persists the 30M-row weight table (save_token_label_weights) and
+  3. persists the 30M-row weight table to parquet and
      scores the sf0.1 corpus against it twice — broadcast_weights=True
      (the historical forced broadcast) vs False (shuffle join) — so
      the flag's crossover is measured, not asserted,
@@ -35,9 +35,7 @@ from pyspark.sql import functions as F
 from swiftbeaver_spark.llm.weights import (
     classify_documents,
     classify_documents_subword,
-    load_token_label_weights,
     parse_fasttext_vec_lines,
-    save_token_label_weights,
     token_label_weights,
 )
 from swiftbeaver_spark.session import get_spark
@@ -108,9 +106,11 @@ def main() -> None:
     assert "BroadcastNestedLoopJoin" not in plan, "label fallback degraded to BNLJ"
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan, "expected the broadcast-join fallback"
-    save_token_label_weights(weights, wpath)
+    weights.write.mode("overwrite").parquet(wpath)
     build_wall = round(time.time() - t0, 3)
-    persisted = load_token_label_weights(spark, wpath)
+    persisted = spark.read.schema(
+        "token string, label string, weight_micro long"
+    ).parquet(wpath)
     n_weights = persisted.count()
     print(f"# build: {build_wall}s, {n_weights} weight rows, fallback plan OK",
           file=sys.stderr)

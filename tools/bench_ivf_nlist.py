@@ -41,13 +41,13 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from swiftbeaver_spark.llm.similarity import (
-    brute_force_topk,
     cosine_similarity,
     ivf_candidates,
     md5_centroids,
     semantic_dedup,
 )
 from swiftbeaver_spark.session import get_spark
+from tests.oracles.vec import brute_force_topk
 
 SIZES = [int(s) for s in sys.argv[1:]] or [500_000, 5_000_000]
 DIM = 64

@@ -55,7 +55,7 @@ import dataclasses  # noqa: E402
 from swiftbeaver_spark.config import DEFAULT_CONFIG  # noqa: E402
 from swiftbeaver_spark.engine import Engine, write_tables  # noqa: E402
 from swiftbeaver_spark.session import get_spark  # noqa: E402
-from tools.bench_engine_1gib import MIB, build_image  # noqa: E402
+from tools.bench_engine_1gib import build_image  # noqa: E402
 from tools.hostinfo import host_snapshot  # noqa: E402
 
 

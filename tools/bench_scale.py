@@ -46,7 +46,7 @@ HEAVY = [
     # q30-q33 synthesize one file per document, so the 10x documents
     # table drives a 10x carve workload through scan -> overlap dedup ->
     # state-machine carve -> hash finalize (the chunk-equi-join access
-    # strategy; the positioned-reads A/B lives in bench_carve_scale.py)
+    # strategy; the positioned-reads A/B is SCALE.md's round-7 record)
     "q30_carve_roundtrip",
     "q31_carve_declared",
     "q32_carve_structured",
